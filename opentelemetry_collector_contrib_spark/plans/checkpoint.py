@@ -6,9 +6,18 @@ metadata through a storage extension and resumes reading from saved offsets
 `internal/reader/reader.go:50-122`). Dataset restatement: the unit of
 progress is a **chunk of input files** (the offset analog at table
 granularity); a chunk is committed by (1) an idempotent overwrite of that
-chunk's output directory, then (2) appending a checkpoint row. A killed run
-re-processes at most the in-flight chunk, whose partial output the
+chunk's output directories, then (2) appending a checkpoint row. A killed
+run re-processes at most the in-flight chunk, whose partial output the
 overwrite replaces — exactly-once output without a custom commit protocol.
+
+Each chunk is a single pass over its input: the pipeline runs once, inside
+the routed-rows write. Two ``Observation``s ride on that write, one on the
+chunk's input (``rows_in``) and one on the routed rows (the checkpoint row's
+``rows`` and ``tokens``), so counting costs no extra job. The per-chunk
+pre-aggregates are then built by ``aggregate_stage`` from a column-pruned
+read-back of the rows just written (route, source, severity_text, n_tok), so
+grok and the rest of the pipeline never run twice. The checkpoint and
+lineage rows are written from local relations.
 
 At 10^12-row scale each chunk is itself a fully parallel Spark job over
 hundreds of files; the driver loop adds one scheduling round-trip per chunk
@@ -30,16 +39,26 @@ the exactly-once read view holds at all times, not just after resume.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ..datamodel import CHECKPOINT_SCHEMA
+from .pipeline import aggregate_stage
 
 
 class CheckpointedRunner:
+    """Runs ``pipeline_fn`` chunk by chunk with exactly-once commits.
+
+    ``pipeline_fn(df, spark)`` returns ``(routed, aggs)``; only ``routed`` is
+    evaluated. The committed aggregates are ``aggregate_stage`` over the
+    routed rows as written.
+    """
+
     def __init__(
         self,
         out_dir: str,
@@ -82,7 +101,9 @@ class CheckpointedRunner:
         }
 
     def _append(self, spark: SparkSession, sub: str, rows: list[dict], schema) -> None:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
+        # a pandas frame becomes a local relation (Arrow is on): one task,
+        # one file, no parallelized RDD to scan
+        spark.createDataFrame(pd.DataFrame(rows), schema).write.mode("append").parquet(
             f"{self.out_dir}/{sub}"
         )
 
@@ -114,29 +135,27 @@ class CheckpointedRunner:
             if max_chunks is not None and processed >= max_chunks:
                 break
             t0 = time.time()
-            df = spark.read.parquet(*files)
-            rows_in = df.count()
-            routed, aggs = self.pipeline_fn(df, spark)
-
-            # (1) idempotent data commit: overwrite THIS chunk's directory
-            routed.write.mode("overwrite").partitionBy("route").parquet(
-                f"{self.out_dir}/data/chunk={chunk_id}"
+            seen, out = Observation(), Observation()
+            df = spark.read.parquet(*files).observe(seen, F.count(F.lit(1)).alias("rows"))
+            routed = self.pipeline_fn(df, spark)[0].observe(
+                out,
+                F.count(F.lit(1)).alias("rows"),
+                F.coalesce(F.sum("n_tok"), F.lit(0)).alias("tokens"),
             )
-            aggs.write.mode("overwrite").parquet(f"{self.out_dir}/aggs/chunk={chunk_id}")
 
-            totals = (
-                spark.read.parquet(f"{self.out_dir}/aggs/chunk={chunk_id}")
-                .agg(
-                    F.sum("row_count").alias("rows"),
-                    F.sum("token_count").alias("tokens"),
-                )
-                .collect()[0]
-            )
+            # (1) idempotent data commit: overwrite THIS chunk's directories;
+            # the aggregates read back only the columns they group and sum
+            data_dir = f"{self.out_dir}/data/chunk={chunk_id}"
+            routed.write.mode("overwrite").partitionBy("route").parquet(data_dir)
+            aggregate_stage(spark.read.schema(routed.schema).parquet(data_dir)).write.mode(
+                "overwrite"
+            ).parquet(f"{self.out_dir}/aggs/chunk={chunk_id}")
+            # both observations were filled by the routed write above
+            rows_in = seen.get["rows"]
+            totals = out.get
             wall_ms = int((time.time() - t0) * 1000)
 
             # (2) progress commit: checkpoint row appended AFTER data is down
-            from ..datamodel import CHECKPOINT_SCHEMA
-
             self._append(
                 spark,
                 "checkpoint",
@@ -144,8 +163,8 @@ class CheckpointedRunner:
                     {
                         "run_id": run_id,
                         "chunk_id": chunk_id,
-                        "rows": int(totals.rows or 0),
-                        "tokens": int(totals.tokens or 0),
+                        "rows": totals["rows"],
+                        "tokens": totals["tokens"],
                         "wall_ms": wall_ms,
                     }
                 ],
@@ -159,7 +178,7 @@ class CheckpointedRunner:
                         "run_id": run_id,
                         "stage": f"chunk:{chunk_id}",
                         "rows_in": rows_in,
-                        "rows_out": int(totals.rows or 0),
+                        "rows_out": totals["rows"],
                         "wall_ms": wall_ms,
                     }
                 ],
@@ -170,25 +189,23 @@ class CheckpointedRunner:
 
     # ------------------------------------------------------------- results
 
-    def routed(self, spark: SparkSession) -> DataFrame:
-        """Committed chunks only — the chunk= partition column is filtered
-        against the checkpoint table (partition pruning: uncommitted chunk
-        directories are never even listed into tasks)."""
+    def _committed(self, spark: SparkSession, sub: str) -> DataFrame:
+        """``sub``'s rows of committed chunks. The root is read (not a
+        ``chunk=*`` glob), so ``chunk`` is a discovered partition column and
+        uncommitted chunk directories are pruned before any task reads them."""
         committed = sorted(int(c) for c in self.completed_chunks(spark))
-        df = spark.read.option("basePath", f"{self.out_dir}/data").parquet(
-            f"{self.out_dir}/data/chunk=*"
-        )
+        df = spark.read.parquet(f"{self.out_dir}/{sub}")
         return df.filter(F.col("chunk").cast("int").isin(committed))
+
+    def routed(self, spark: SparkSession) -> DataFrame:
+        """Committed chunks' routed rows."""
+        return self._committed(spark, "data")
 
     def aggregates(self, spark: SparkSession) -> DataFrame:
         """Merge per-chunk pre-aggregates (partial-agg pattern: the heavy
         groupBy ran inside each chunk; this is the cheap final combine).
         Committed chunks only, like ``routed()``."""
-        committed = sorted(int(c) for c in self.completed_chunks(spark))
-        per_chunk = spark.read.option("basePath", f"{self.out_dir}/aggs").parquet(
-            f"{self.out_dir}/aggs/chunk=*"
-        )
-        per_chunk = per_chunk.filter(F.col("chunk").cast("int").isin(committed))
+        per_chunk = self._committed(spark, "aggs")
         dims = [
             c for c in per_chunk.columns if c not in ("row_count", "token_count", "chunk")
         ]

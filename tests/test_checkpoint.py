@@ -113,3 +113,81 @@ def test_uncommitted_chunk_invisible(spark, tokens_path, tmp_path):
     # cleanup so the directory doesn't poison later reads
     shutil.rmtree(f"{out}/data/chunk=99999")
     shutil.rmtree(f"{out}/aggs/chunk=99999")
+
+
+def _check_commit_accounting(spark, r, input_path):
+    """Each chunk's checkpoint row sums that chunk's aggs/, and its lineage
+    row's rows_in is the chunk's input row count. Returns Σ rows_out."""
+    from pyspark.sql import functions as F
+
+    ckpt = {x.chunk_id: x for x in spark.read.parquet(f"{r.out_dir}/checkpoint").collect()}
+    lineage = {x.stage: x for x in r.metrics(spark).collect()}
+    chunks = r.plan_chunks(spark, input_path)
+    assert set(ckpt) == {c for c, _ in chunks}
+    for chunk_id, files in chunks:
+        rows, tokens = (
+            spark.read.parquet(f"{r.out_dir}/aggs/chunk={chunk_id}")
+            .agg(F.sum("row_count"), F.sum("token_count"))
+            .first()
+        )
+        assert (ckpt[chunk_id].rows, ckpt[chunk_id].tokens) == (rows, tokens)
+        line = lineage[f"chunk:{chunk_id}"]
+        assert (line.rows_in, line.rows_out) == (spark.read.parquet(*files).count(), rows)
+    return sum(x.rows_out for x in lineage.values())
+
+
+@pytest.mark.parametrize(
+    "kwargs, fewer",
+    [({"with_sampling": True}, True), ({"match_once": False}, False)],
+    ids=["sampled", "multicast"],
+)
+def test_commit_accounting(spark, tokens_path, tmp_path, kwargs, fewer):
+    """rows_in counts the input, rows/tokens the routed rows: a sampling
+    pipeline emits fewer rows than it reads, a multicast one more."""
+    r = CheckpointedRunner(
+        str(tmp_path / "out"), lambda df, s: full_pipeline(df, s, **kwargs), files_per_chunk=4
+    )
+    r.run(spark, tokens_path)
+    rows_out = _check_commit_accounting(spark, r, tokens_path)
+    assert (rows_out < N) if fewer else (rows_out > N)
+    assert r.routed(spark).count() == rows_out
+
+
+def test_pipeline_runs_once_per_chunk(spark, tokens_path, tmp_path):
+    """A counting UDF on n_tok, which routing, the routed rows and the
+    aggregates all read, sees every input row exactly once."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("int")
+    def counted(s: pd.Series) -> pd.Series:
+        seen.add(len(s))
+        return s
+
+    counted = counted.asNondeterministic()
+
+    def pipeline(df, s):
+        return full_pipeline(df.withColumn("n_tok", counted("n_tok")), s)
+
+    r = CheckpointedRunner(str(tmp_path / "out"), pipeline, files_per_chunk=4)
+    r.run(spark, tokens_path)
+    assert seen.value == N
+    _check_commit_accounting(spark, r, tokens_path)
+    want = {tuple(x) for x in full_pipeline(spark.read.parquet(tokens_path), spark)[1].collect()}
+    assert {tuple(x) for x in r.aggregates(spark).collect()} == want
+
+
+def test_empty_chunk_commits_zero(spark, tokens_path, tmp_path):
+    """A chunk of one zero-row parquet file commits rows=0, tokens=0."""
+    src = str(tmp_path / "empty")
+    spark.read.parquet(tokens_path).limit(0).write.parquet(src)
+    out = str(tmp_path / "out")
+    r = CheckpointedRunner(out, _pipeline)
+    r.run(spark, src)
+    (ck,) = spark.read.parquet(f"{out}/checkpoint").collect()
+    assert (ck.rows, ck.tokens) == (0, 0)
+    (line,) = r.metrics(spark).collect()
+    assert (line.rows_in, line.rows_out) == (0, 0)
+    assert r.aggregates(spark).count() == 0
