@@ -10,7 +10,20 @@ pipeline touches repeatedly is a real column; truly dynamic residue lives in a
 
 from __future__ import annotations
 
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """Driver-side rows (tuples in schema order, or dicts by field name) as
+    a DataFrame that plans as a ``LocalTableScan``.
+
+    ``createDataFrame`` over a Python list builds a Python RDD: every job
+    that scans it, a broadcast build included, runs Python-worker tasks
+    just to unpickle constants. A pandas frame under Arrow (on in
+    ``session.get_spark``) becomes a local relation held in the plan."""
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
 # The north-rule input table: pre-tokenized training sequences.
 TOKENS_SCHEMA = T.StructType(
@@ -65,7 +78,8 @@ SOURCE_LOOKUP_SCHEMA = T.StructType(
     ]
 )
 
-# written by plans/checkpoint.py CheckpointedRunner._append — keep in sync
+# checkpoint and lineage rows, written by plans/checkpoint.py
+# CheckpointedRunner._append
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

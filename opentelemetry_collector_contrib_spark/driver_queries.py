@@ -25,7 +25,7 @@ from .functions.hashing import (
     word_token_sql,
 )
 from .functions.severity import attach_severity
-from .operators.parse import regex_parser, regex_parser_native, time_parser
+from .operators.parse import regex_parser, time_parser
 from .operators.router import Route, route_match_once, route_multicast
 from .session import package_zip
 from .sources.render import LINE_PATTERN, render_lines, row_idx_col
@@ -57,12 +57,10 @@ def _lookup_values_sql() -> str:
 
 
 def doc_lookup_df(spark: SparkSession) -> DataFrame:
-    from .datamodel import SOURCE_LOOKUP_SCHEMA
+    from .datamodel import SOURCE_LOOKUP_SCHEMA, local_frame
 
-    return spark.createDataFrame(doc_lookup_rows(), SOURCE_LOOKUP_SCHEMA)
+    return local_frame(spark, doc_lookup_rows(), SOURCE_LOOKUP_SCHEMA)
 
-
-PARSE_NAMES = ["ts_str", "level", "src", "ntok", "seq_id", "head", "tail"]
 
 EPOCH = 1704067200
 MONTH = 30 * 86400
@@ -103,9 +101,8 @@ def _parsed_docs(spark: SparkSession, sf_dir: str, vectorized: bool = False) -> 
     df = render_lines(df, out="line")
     if vectorized:
         ensure_shipped(spark)
-        df = regex_parser(df, LINE_PATTERN, parse_from="line", on_error="send")
-    else:
-        df = regex_parser_native(df, LINE_PATTERN, PARSE_NAMES, parse_from="line")
+    engine = "arrow" if vectorized else "jvm"
+    df = regex_parser(df, LINE_PATTERN, parse_from="line", on_error="send", engine=engine)
     df = time_parser(df, "ts_str", layout="yyyy-MM-dd'T'HH:mm:ssX", parse_to="ts")
     df = attach_severity(df, "level")
     return (
@@ -3978,8 +3975,10 @@ def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _tokens_of_docs(spark, sf_dir).select(
         row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
     )
-    return chunk_documents(
-        toks, "tokens", "doc_id", window=_CHUNK_W, stride=_CHUNK_S
+    chunks = chunk_documents(toks, "tokens", "doc_id", window=_CHUNK_W, stride=_CHUNK_S)
+    # token arrays as comma-joined text, as in the oracle: a comparable scalar
+    return chunks.withColumn(
+        "chunk_tokens", F.array_join(F.col("chunk_tokens").cast("array<string>"), ",")
     ).orderBy("doc_id", "chunk_idx")
 
 
@@ -3995,7 +3994,8 @@ _SQL_CHUNK = _SQL_BASE + f"""
          tokens[(g.i*{_CHUNK_S}+1):(g.i*{_CHUNK_S}+{_CHUNK_W})] AS chunk_tokens
   FROM k, LATERAL (SELECT UNNEST(range(0, nk)) AS i) g
 )
-SELECT CAST(doc_id AS BIGINT) AS doc_id, chunk_idx, chunk_tokens,
+SELECT CAST(doc_id AS BIGINT) AS doc_id, chunk_idx,
+       array_to_string(chunk_tokens, ',') AS chunk_tokens,
        CAST(len(chunk_tokens) AS INT) AS chunk_len
 FROM ex ORDER BY doc_id, chunk_idx
 """

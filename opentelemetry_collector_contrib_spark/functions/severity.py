@@ -6,7 +6,7 @@ severity_builder.go:64-105) over the 24-level enum
 (`pkg/stanza/entry/severity.go:14-52`).
 
 Two implementations, both JVM-side:
-- ``severity_map_df``   : the alias table as a DataFrame → broadcast join
+- ``severity_map_df``   : the alias table as a local relation → broadcast join
   (the scalable path: lookup table may be user-extended).
 - ``severity_number_col``: chained ``when()`` fallback for inline use.
 """
@@ -15,6 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..datamodel import local_frame
 
 # (alias, canonical_text, number) — default mapping of severity_builder.go.
 DEFAULT_ALIASES: list[tuple[str, str, int]] = [
@@ -72,6 +75,15 @@ DEFAULT_ALIASES += [
 ]
 
 
+SEVERITY_MAP_SCHEMA = T.StructType(
+    [
+        T.StructField("alias", T.StringType(), True),
+        T.StructField("severity_text", T.StringType(), True),
+        T.StructField("severity_number", T.IntegerType(), True),
+    ]
+)
+
+
 def severity_map_df(
     spark: SparkSession, custom: list[tuple[str, str, int]] | None = None
 ) -> DataFrame:
@@ -81,9 +93,7 @@ def severity_map_df(
     if custom:
         overridden = {c[0] for c in custom}
         rows = [r for r in rows if r[0] not in overridden] + list(custom)
-    return spark.createDataFrame(
-        rows, "alias string, severity_text string, severity_number int"
-    )
+    return local_frame(spark, rows, SEVERITY_MAP_SCHEMA)
 
 
 def attach_severity(

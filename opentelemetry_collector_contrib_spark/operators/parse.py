@@ -5,32 +5,56 @@ Shared semantics (`pkg/stanza/operator/helper/parser.go:97-190`): read
 ``on_error``: ``send``/``send_quiet`` pass the row through with null parsed
 fields, ``drop``/``drop_quiet`` remove it (`helper/transformer.go:97-110`).
 
-The grok/regex parser is the one parser with no adequate JVM builtin for
-multi-group named captures, so it is a **vectorized pandas UDF** — Arrow
-batches in, one compiled regex, ``pd.Series.str.extract`` (C-loop, no
-per-row Python) — per the north rule. Every other parser maps to a native
-Catalyst expression (from_json / from_csv / str_to_map / parse_url /
-to_timestamp), which whole-stage codegen fuses into the surrounding plan.
+Every parser maps to native Catalyst expressions, which whole-stage codegen
+fuses into the surrounding plan and column pruning trims to what the query
+reads. The regex parser is one ``regexp_extract`` per named group, so a
+query that reads one group runs one extract; json/csv/kv/uri/time map to
+from_json / from_csv / str_to_map / parse_url / to_timestamp. The regex
+parser keeps a vectorized Arrow UDF engine (RE2 over Arrow batches) with
+the same values, for RE2-only patterns.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterable
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 ON_ERROR = ("send", "send_quiet", "drop", "drop_quiet")
 
+# One token of a regex: an escape, a character class, a named or unnamed
+# capturing-group opener, or ``$``; everything else passes through as is.
+_REGEX_TOKEN = re.compile(r"\\.|\[\^?\]?(?:\\.|[^\]\\])*\]|\(\?P<\w+>|\((?!\?)|\$", re.S)
 
-def _group_names(pattern: str) -> list[str]:
-    return list(re.compile(pattern).groupindex.keys())
+
+def _rewrite(pattern: str, token: dict[str, str]) -> str:
+    """Replaces the tokens that ``token`` maps; its key ``"(?P<"`` stands
+    for every named-group opener."""
+
+    def sub(m: re.Match) -> str:
+        t = m.group()
+        key = "(?P<" if t.startswith("(?P<") else t
+        return token.get(key, t)
+
+    return _REGEX_TOKEN.sub(sub, pattern)
+
+
+def _jvm_pattern(pattern: str) -> str:
+    """The pattern for ``java.util.regex`` that matches as RE2 does.
+
+    Named groups become plain groups, since Java group names allow no
+    ``_``; group numbers stay those of ``re.compile(pattern).groupindex``.
+    ``$`` becomes ``\\z``: RE2 matches ``$`` only at the end of the text,
+    Java also before a final line terminator. ``(?d)`` makes ``\\n`` the
+    only line terminator, as in RE2, so ``.`` matches ``\\r``."""
+    if re.compile(pattern).flags & re.MULTILINE:
+        raise ValueError("multi-line (?m) patterns need engine='arrow'")
+    return "(?d)" + _rewrite(pattern, {"(?P<": "(", "$": r"\z"})
 
 
 def regex_parser(
@@ -39,76 +63,64 @@ def regex_parser(
     parse_from: str = "line",
     prefix: str = "",
     on_error: str = "send",
-    engine: str = "arrow",
+    engine: str = "jvm",
 ) -> DataFrame:
     """regex_parser (`parser/regex/parser.go:46-74`): named capture groups →
-    one column each.
+    one string column each.
 
-    engine='arrow' (default): vectorized Arrow UDF over
-    ``pyarrow.compute.extract_regex`` — the regex runs in Arrow's C++ RE2
-    kernel and no per-row Python objects are ever created (Arrow→pandas
-    string conversion materializes a Python str per row, which caps the
-    pandas path at ~100-200k rows/s/task; the Arrow kernel does ~600k/s/core
-    with near-zero transfer overhead).
+    A line that does not match (or is null) gets null in every group; in a
+    matching line a group that matched nothing, or took no part in the
+    match, is ``""``. on_error=send passes failed lines through
+    (`helper/parser.go:103-110`), on_error=drop filters them.
 
-    engine='pandas': ``pd.Series.str.extract`` fallback.
+    engine='jvm' (default): per group ``when(rlike(p), regexp_extract(p,
+    i))`` with ``p = _jvm_pattern(pattern)``. These are plain Catalyst
+    expressions, so the optimizer prunes the groups nobody reads and the
+    rows never leave the JVM.
 
-    Non-matching rows yield null groups (on_error=send passthrough,
-    `helper/parser.go:103-110`); on_error=drop filters them. The reference
-    optionally memoizes raw→parsed with an LRU cache (parser.go:46-51);
-    vectorized execution makes that unnecessary.
+    engine='arrow': one vectorized Arrow UDF over
+    ``pyarrow.compute.extract_regex`` (RE2 in C++, no per-row Python
+    objects). It always extracts every group and crosses into a Python
+    worker; it serves patterns the JVM engine refuses, such as multi-line
+    ``(?m)`` ones.
+
+    The reference optionally memoizes raw→parsed with an LRU cache
+    (parser.go:46-51); vectorized execution makes that unnecessary.
     """
     if on_error not in ON_ERROR:
         raise ValueError(f"on_error must be one of {ON_ERROR}")
-    names = _group_names(pattern)
-    if not names:
+    groups = re.compile(pattern).groupindex
+    if not groups:
         raise ValueError("pattern must use named capture groups (?P<name>...)")
-    out_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+    line = F.col(parse_from)
+    struct_col = f"__parsed_{parse_from}"
 
-    if engine == "arrow":
+    if engine == "jvm":
+        java = _jvm_pattern(pattern)
+        out = df
+        matched = line.rlike(java)
+        cols = {n: F.when(matched, F.regexp_extract(line, java, i)) for n, i in groups.items()}
+
+    elif engine == "arrow":
+        # extract_regex refuses unnamed groups: make them non-capturing
+        re2 = _rewrite(pattern, {"(": "(?:"})
+        out_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in groups])
 
         @arrow_udf(out_schema)
         def extract(arr: pa.Array) -> pa.Array:
-            return pc.extract_regex(arr, pattern)
+            return pc.extract_regex(arr, re2)
 
-    elif engine == "pandas":
-
-        @pandas_udf(out_schema)
-        def extract(s: pd.Series) -> pd.DataFrame:
-            res = s.str.extract(pattern)
-            res.columns = names
-            return res
+        out = df.withColumn(struct_col, extract(line))
+        matched = F.col(struct_col).isNotNull()
+        cols = {n: F.col(struct_col)[n] for n in groups}
 
     else:
         raise ValueError(f"unknown engine {engine!r}")
 
-    struct_col = f"__parsed_{parse_from}"
-    out = df.withColumn(struct_col, extract(F.col(parse_from)))
-    for n in names:
-        out = out.withColumn(prefix + n, F.col(f"{struct_col}.{n}"))
-    out = out.drop(struct_col)
     if on_error.startswith("drop"):
-        # a row failed iff every capture group is null
-        any_ok = F.lit(False)
-        for n in names:
-            any_ok = any_ok | F.col(prefix + n).isNotNull()
-        out = out.filter(any_ok)
-    return out
-
-
-def regex_parser_native(
-    df: DataFrame, pattern: str, names: list[str], parse_from: str = "line", prefix: str = ""
-) -> DataFrame:
-    """JVM-only variant using regexp_extract per group index (for patterns
-    simple enough that running the regex G times beats one Arrow round-trip).
-    Names must align with group order (group i+1). Python named-group
-    syntax ``(?P<n>`` is stripped to plain groups for the JVM regex engine."""
-    jvm_pattern = re.sub(r"\(\?P<[^>]+>", "(", pattern)
-    out = df
-    for i, n in enumerate(names):
-        v = F.regexp_extract(F.col(parse_from), jvm_pattern, i + 1)
-        out = out.withColumn(prefix + n, F.when(v != "", v))
-    return out
+        out = out.filter(matched)
+    out = out.withColumns({prefix + n: c for n, c in cols.items()})
+    return out.drop(struct_col) if engine == "arrow" else out
 
 
 def json_parser(df: DataFrame, schema, parse_from: str, parse_to: str = "parsed") -> DataFrame:
@@ -165,15 +177,18 @@ def jsonarray_parser(
     )
 
 
+# MSG runs to the end of the line; one final line terminator (\n, \r\n or
+# \r), which a line reader may leave on, is not part of it
+_SYSLOG_MSG = r"(?P<msg>.*?)\r?\n?$"
 # RFC3164: "<PRI>MMM dd HH:mm:ss HOST TAG: MSG" — pri = facility*8 + severity
 SYSLOG_3164 = (
     r"^<(?P<pri>\d+)>(?P<ts3164>\w{3}\s+\d+ \d{2}:\d{2}:\d{2}) "
-    r"(?P<host>\S+) (?P<tag>[^:\[]+)(?:\[(?P<pid>\d+)\])?: ?(?P<msg>.*)$"
+    r"(?P<host>\S+) (?P<tag>[^:\[]+)(?:\[(?P<pid>\d+)\])?: ?" + _SYSLOG_MSG
 )
 # RFC5424: "<PRI>1 ISO8601 HOST APP PROCID MSGID SD MSG"
 SYSLOG_5424 = (
     r"^<(?P<pri>\d+)>1 (?P<ts5424>\S+) (?P<host>\S+) (?P<app>\S+) "
-    r"(?P<procid>\S+) (?P<msgid>\S+) (?P<sd>(?:-|\[.*?\])) ?(?P<msg>.*)$"
+    r"(?P<procid>\S+) (?P<msgid>\S+) (?P<sd>(?:-|\[.*?\])) ?" + _SYSLOG_MSG
 )
 
 
@@ -190,9 +205,12 @@ def syslog_parser(
     default stays line-oriented for the line-reader paths."""
     pat = SYSLOG_3164 if protocol == "rfc3164" else SYSLOG_5424
     if multiline_msg and protocol == "rfc5424":
-        pat = pat.replace("(?P<msg>.*)$", "(?P<msg>(?s:.*))$")
-    names = _group_names(pat)
-    out = regex_parser_native(df, pat, names, parse_from=parse_from)
+        pat = pat.replace(_SYSLOG_MSG, "(?P<msg>(?s:.*))$")
+    out = regex_parser(df, pat, parse_from=parse_from)
+    # the syslog parser sets no field for an absent part (an RFC 3164 line
+    # without [pid], an empty MSG): empty groups are null
+    groups = re.compile(pat).groupindex
+    out = out.withColumns({n: F.nullif(F.col(n), F.lit("")) for n in groups})
     pri = F.col("pri").cast("int")
     out = out.withColumn("facility", (pri / 8).cast("int")).withColumn(
         "syslog_severity", F.pmod(pri, F.lit(8)).cast("int")

@@ -28,7 +28,8 @@ Layout under ``out_dir``:
   aggs/chunk=<id>/*.parquet             per-chunk pre-aggregates
   checkpoint/*.parquet                  CHECKPOINT_SCHEMA (run_id, chunk_id,
                                         rows, tokens, wall_ms)
-  lineage/*.parquet                     (run_id, stage, rows_in, rows_out, wall_ms)
+  lineage/*.parquet                     LINEAGE_SCHEMA (run_id, stage, rows_in,
+                                        rows_out, wall_ms)
 
 Readers (``routed()`` / ``aggregates()``) see COMMITTED chunks only: the
 chunk partition column is filtered against the checkpoint table, so a chunk
@@ -43,11 +44,11 @@ import time
 import uuid
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..datamodel import CHECKPOINT_SCHEMA
+from ..datamodel import CHECKPOINT_SCHEMA, LINEAGE_SCHEMA, local_frame
 from .pipeline import aggregate_stage
 
 
@@ -100,12 +101,9 @@ class CheckpointedRunner:
             for r in spark.read.parquet(path).select("chunk_id").distinct().collect()
         }
 
-    def _append(self, spark: SparkSession, sub: str, rows: list[dict], schema) -> None:
-        # a pandas frame becomes a local relation (Arrow is on): one task,
-        # one file, no parallelized RDD to scan
-        spark.createDataFrame(pd.DataFrame(rows), schema).write.mode("append").parquet(
-            f"{self.out_dir}/{sub}"
-        )
+    def _append(self, spark: SparkSession, sub: str, rows: list[dict], schema: T.StructType) -> None:
+        # a local relation: one task, one file, no Python RDD to scan
+        local_frame(spark, rows, schema).write.mode("append").parquet(f"{self.out_dir}/{sub}")
 
     # ------------------------------------------------------------------ run
 
@@ -182,7 +180,7 @@ class CheckpointedRunner:
                         "wall_ms": wall_ms,
                     }
                 ],
-                "run_id string, stage string, rows_in long, rows_out long, wall_ms long",
+                LINEAGE_SCHEMA,
             )
             processed += 1
         return run_id

@@ -3,8 +3,11 @@
 This is the Spark restatement of the reference's collector config
 (filelog receiver → transform/attributes processors → routing connector →
 count connector + exporters). Each stage is declarative; the whole chain up
-to the aggregation is ONE codegen'd scan stage plus one Arrow round-trip for
-the grok UDF — no per-record interpretation anywhere.
+to the aggregation is ONE codegen'd scan stage with no Python on it: the
+grok is one JVM ``regexp_extract`` per named group, so Catalyst keeps only
+the groups a query reads (the aggregates read ``level`` alone), and both
+lookup tables are local relations, whose broadcast builds run no Python
+worker either. No per-record interpretation anywhere.
 
 Scale design (north rule):
 - The enrich dim is broadcast (BroadcastHashJoin — no shuffle of the 10^12-row
@@ -27,7 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..datamodel import SOURCE_LOOKUP_ROWS, SOURCE_LOOKUP_SCHEMA
+from ..datamodel import SOURCE_LOOKUP_ROWS, SOURCE_LOOKUP_SCHEMA, local_frame
 from ..operators.parse import regex_parser, time_parser
 from ..operators.router import Route, route_match_once, route_multicast
 from ..operators.sampler import probabilistic_sample
@@ -36,7 +39,7 @@ from ..sources.render import LINE_PATTERN, render_lines, row_idx_col
 
 
 def source_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SOURCE_LOOKUP_ROWS, SOURCE_LOOKUP_SCHEMA)
+    return local_frame(spark, SOURCE_LOOKUP_ROWS, SOURCE_LOOKUP_SCHEMA)
 
 
 def default_routes() -> list[Route]:
@@ -48,20 +51,10 @@ def default_routes() -> list[Route]:
     ]
 
 
-def parse_stage(df: DataFrame, use_pandas_udf: bool = True) -> DataFrame:
-    """render → grok parse → time parse → severity map.
-
-    use_pandas_udf=True is the north-rule path (vectorized Arrow regex);
-    False swaps in the JVM regexp_extract variant for A/B benchmarking.
-    """
+def parse_stage(df: DataFrame) -> DataFrame:
+    """render → grok parse → time parse → severity map."""
     lined = render_lines(df, out="line")
-    if use_pandas_udf:
-        parsed = regex_parser(lined, LINE_PATTERN, parse_from="line", on_error="send")
-    else:
-        from ..operators.parse import regex_parser_native
-
-        names = ["ts_str", "level", "src", "ntok", "seq_id", "head", "tail"]
-        parsed = regex_parser_native(lined, LINE_PATTERN, names, parse_from="line")
+    parsed = regex_parser(lined, LINE_PATTERN, parse_from="line", on_error="send")
     # X parses the trailing Z as a real UTC offset → instant is correct in
     # any session timezone (a literal-'Z' pattern would read local time)
     parsed = time_parser(parsed, "ts_str", layout="yyyy-MM-dd'T'HH:mm:ssX", parse_to="ts")
@@ -129,12 +122,11 @@ def full_pipeline(
     tokens: DataFrame,
     spark: SparkSession,
     match_once: bool = True,
-    use_pandas_udf: bool = True,
     with_sampling: bool = False,
     salt_buckets: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (routed_rows, per_sink_aggregates)."""
-    parsed = parse_stage(tokens, use_pandas_udf=use_pandas_udf)
+    parsed = parse_stage(tokens)
     enriched = enrich_stage(parsed, spark)
     if with_sampling:
         enriched = sample_stage(enriched)

@@ -3,9 +3,9 @@
 Defaults are sized from the host (local[N] over the CPU affinity set, driver
 heap at most half of physical memory) but every knob is the one you would
 set on a 1000-executor cluster: AQE on (runtime re-plan + skew-join
-splitting), small broadcast threshold raised, Arrow enabled for the
-vectorized pandas-UDF parse stage, shuffle partitions at 2-3× core count so
-AQE can coalesce down.
+splitting), small broadcast threshold raised, Arrow enabled for pandas
+UDFs and for local relations built from pandas frames, shuffle partitions
+at 2-3× core count so AQE can coalesce down.
 """
 
 from __future__ import annotations
@@ -98,9 +98,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # All lookup/enrich tables are small dims → always broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Arrow transfer for pandas UDFs (the vectorized parse stage).
+        # Arrow transfer for pandas UDFs; also makes a pandas frame a local
+        # relation (datamodel.local_frame) rather than a Python RDD.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 100k-row Arrow batches: the grok UDF is ~2× faster than with the
+        # 100k-row Arrow batches: the Arrow grok engine is ~2× faster than with the
         # 10k default (per-batch pipe/serialization overhead amortizes).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         # Local-bench partition sizing: GB-scale inputs must still produce

@@ -16,7 +16,7 @@ Line shape::
 passthrough path of the parser (`pkg/stanza/operator/helper/parser.go:103-110`).
 
 Everything here is JVM-side Column expressions (whole-stage codegen); the
-*parse* direction is the vectorized pandas UDF in operators/parse.py.
+*parse* direction is ``regex_parser`` in operators/parse.py.
 """
 
 from __future__ import annotations

@@ -47,7 +47,7 @@ def streaming_pipeline(
     routes=None,
 ) -> DataFrame:
     """parse → enrich → route, identical code path to batch."""
-    parsed = parse_stage(stream, use_pandas_udf=False)
+    parsed = parse_stage(stream)
     enriched = enrich_stage(parsed, spark, lut=lut)
     return route_stage(enriched, match_once=match_once, routes=routes)
 

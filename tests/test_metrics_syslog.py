@@ -66,6 +66,18 @@ class TestSyslog:
         assert r.msg == "'su root' failed"
         assert str(r.ts) == "2024-10-11 22:14:15"
 
+    def test_rfc3164_absent_parts_are_null(self, spark):
+        """No [pid] and an empty MSG leave those fields null, not ""."""
+        df = spark.createDataFrame(
+            [Row(line="<13>Feb  5 17:32:18 host app: hello"),
+             Row(line="<13>Feb  5 17:32:18 host app:")],
+            "line string",
+        )
+        a, b = syslog_parser(df, protocol="rfc3164").orderBy("msg").collect()
+        assert (a.tag, a.pid, a.msg) == ("app", None, None)
+        assert (b.tag, b.pid, b.msg) == ("app", None, "hello")
+        assert str(b.ts) == "2024-02-05 17:32:18"
+
     def test_rfc5424(self, spark):
         df = spark.createDataFrame(
             [Row(line='<165>1 2024-08-16T20:32:24Z host app 1234 ID47 - hello world')],

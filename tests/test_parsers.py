@@ -1,5 +1,7 @@
 """Unit tests for the parser family (SURVEY §2.2)."""
 
+import re
+
 import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
@@ -10,6 +12,8 @@ from opentelemetry_collector_contrib_spark.operators.grouping import (
     load_balance,
     resource_detection,
 )
+from opentelemetry_collector_contrib_spark.sources.render import LINE_PATTERN, render_lines
+from opentelemetry_collector_contrib_spark.sources.tokengen import tokens_df
 
 
 @pytest.fixture(scope="module")
@@ -69,9 +73,68 @@ def test_regex_parser_drop_mode(spark):
     assert len(sent) == 2 and {r.n for r in sent} == {"5", None}
     dropped = P.regex_parser(df, r"num=(?P<n>\d+)", on_error="drop").collect()
     assert len(dropped) == 1 and dropped[0].n == "5"
-    # pandas engine parity
-    pand = P.regex_parser(df, r"num=(?P<n>\d+)", on_error="send", engine="pandas").collect()
-    assert {r.n for r in pand} == {"5", None}
+
+
+def _parsed(df, pattern, on_error, engine, key):
+    """(key, *named groups) rows of one regex_parser run, ordered by key."""
+    names = list(re.compile(pattern).groupindex)
+    out = P.regex_parser(df, pattern, on_error=on_error, engine=engine)
+    return sorted((tuple(r) for r in out.select(key, *names).collect()), key=lambda r: r[0])
+
+
+def _matched(rows):
+    return [r for r in rows if any(v is not None for v in r[1:])]
+
+
+def test_regex_parser_engines_agree_on_rendered_lines(spark):
+    """The default (JVM) engine and the Arrow engine agree cell by cell on
+    all seven LINE_PATTERN groups, malformed lines included."""
+    lines = render_lines(tokens_df(spark, 2000, num_partitions=4), out="line").cache()
+    malformed = lines.filter(F.col("line").startswith("MALFORMED")).count()
+    assert malformed > 0
+    runs = {}
+    for on_error in ("send", "drop"):
+        for engine in ("jvm", "arrow"):
+            runs[on_error, engine] = _parsed(lines, LINE_PATTERN, on_error, engine, "doc_id")
+        assert runs[on_error, "jvm"] == runs[on_error, "arrow"], on_error
+    lines.unpersist()
+    assert len(runs["send", "jvm"]) == 2000
+    assert runs["drop", "jvm"] == _matched(runs["send", "jvm"])
+    assert len(runs["drop", "jvm"]) == 2000 - malformed
+
+
+# (pattern, line, named groups) where java.util.regex and RE2 could part ways
+REGEX_EDGES = [
+    (r"num=(?P<n>\d+)", "garbage", (None,)),  # no match: every group null
+    (r"num=(?P<n>\d+)", None, (None,)),  # null input
+    (r"num=(?P<n>\d*)", "num=", ("",)),  # a group that matched nothing
+    (r"^(?P<tag>\w+)(?:\[(?P<pid>\d+)\])?:", "su: x", ("su", "")),  # no part in the match
+    (r"^(?P<tag>\w+)(?:\[(?P<pid>\d+)\])?:", "su[12]: x", ("su", "12")),
+    (r"(\w+)=(?P<v>\d+)", "k=5", ("5",)),  # an unnamed group before a named one
+    (r"^x (?P<v>.+)$", "x a\n", (None,)),  # RE2's $ is the end of the text only
+    (r"^x (?P<v>.+)$", "x a", ("a",)),
+    (r"^x (?P<v>.+)$", "x a\r", ("a\r",)),  # . matches \r
+]
+
+
+def test_regex_parser_engines_agree_on_edges(spark):
+    """Both engines give the same cells for every edge pattern over every
+    edge line, in both on_error modes; the cells are pinned per edge."""
+    lines = sorted({e[1] for e in REGEX_EDGES}, key=str)
+    df = spark.createDataFrame(list(enumerate(lines)), "id int, line string")
+    sent = {}
+    for pattern in dict.fromkeys(e[0] for e in REGEX_EDGES):
+        for on_error in ("send", "drop"):
+            jvm = _parsed(df, pattern, on_error, "jvm", "id")
+            assert jvm == _parsed(df, pattern, on_error, "arrow", "id"), (pattern, on_error)
+            sent[pattern, on_error] = jvm
+        assert sent[pattern, "drop"] == _matched(sent[pattern, "send"])
+        assert len(sent[pattern, "send"]) == len(lines)
+    for pattern, line, want in REGEX_EDGES:
+        got = {lines[r[0]]: r[1:] for r in sent[pattern, "send"]}
+        assert got[line] == want, (pattern, line)
+    with pytest.raises(ValueError):
+        P.regex_parser(df, r"(?m)^x (?P<v>.+)$")
 
 
 def test_time_parser_error_modes(spark):

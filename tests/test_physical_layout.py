@@ -50,7 +50,7 @@ def test_partition_pruning_on_route_sinks(spark, tmp_path):
     from opentelemetry_collector_contrib_spark.plans.pipeline import full_pipeline
     from opentelemetry_collector_contrib_spark.operators.router import write_routed
 
-    routed, _ = full_pipeline(tokens_df(spark, 2000, num_partitions=4), spark, use_pandas_udf=False)
+    routed, _ = full_pipeline(tokens_df(spark, 2000, num_partitions=4), spark)
     out = str(tmp_path / "sinks")
     write_routed(routed, out)
 
@@ -68,6 +68,30 @@ def test_partition_pruning_on_route_sinks(spark, tmp_path):
 def _executed_plan(df) -> str:
     df.count()
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pipeline_hot_path_runs_no_python(spark, tmp_path):
+    """The aggregates' plan holds no Python-eval node and keeps only the
+    grok group it reads (level); the routed rows keep all seven. Both
+    lookup tables are local relations, so their broadcast builds start no
+    Python worker."""
+    from opentelemetry_collector_contrib_spark.functions.severity import severity_map_df
+    from opentelemetry_collector_contrib_spark.plans.pipeline import (
+        full_pipeline,
+        source_lookup_df,
+    )
+
+    path = str(tmp_path / "tokens")
+    tokens_df(spark, 2000, num_partitions=4).write.parquet(path)
+    routed, aggs = full_pipeline(spark.read.parquet(path), spark)
+    agg_plan = _executed_plan(aggs)
+    for node in ("ArrowEvalPython", "BatchEvalPython"):
+        assert node not in agg_plan, agg_plan
+    assert agg_plan.count("regexp_extract(") == 1, agg_plan
+    assert _executed_plan(routed).count("regexp_extract(") == 7
+    for lut in (source_lookup_df(spark), severity_map_df(spark)):
+        plan = _executed_plan(lut)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_pair_generation_plans_are_equi_joins(spark):
@@ -113,9 +137,7 @@ def test_write_routed_salt_is_deterministic(spark, tmp_path):
     from opentelemetry_collector_contrib_spark.plans.pipeline import full_pipeline
     from opentelemetry_collector_contrib_spark.operators.router import write_routed
 
-    routed, _ = full_pipeline(
-        tokens_df(spark, 4000, num_partitions=4), spark, use_pandas_udf=False
-    )
+    routed, _ = full_pipeline(tokens_df(spark, 4000, num_partitions=4), spark)
 
     def file_groups(path):
         write_routed(routed, path, files_per_route=3)

@@ -27,12 +27,9 @@ def _routed_sets(df_rows):
 
 
 @pytest.mark.parametrize("match_once", [True, False])
-@pytest.mark.parametrize("use_pandas_udf", [True, False])
-def test_pipeline_matches_oracle(spark, match_once, use_pandas_udf):
+def test_pipeline_matches_oracle(spark, match_once):
     tokens = tokens_df(spark, N, num_partitions=4)
-    routed, aggs = full_pipeline(
-        tokens, spark, match_once=match_once, use_pandas_udf=use_pandas_udf
-    )
+    routed, aggs = full_pipeline(tokens, spark, match_once=match_once)
     got_rows = [r.asDict() for r in routed.collect()]
     got_aggs = {
         (r.route, r.source, r.severity_text): (r.row_count, r.token_count)

@@ -28,9 +28,7 @@ def test_stream_equals_batch(spark, tokens_path, tmp_path):
     run_streaming_to_completion(spark, tokens_path, out)
 
     got = spark.read.option("basePath", f"{out}/data").parquet(f"{out}/data")
-    batch_routed, _ = full_pipeline(
-        spark.read.parquet(tokens_path), spark, use_pandas_udf=False
-    )
+    batch_routed, _ = full_pipeline(spark.read.parquet(tokens_path), spark)
     a = {(r.doc_id, r.route) for r in got.select("doc_id", "route").collect()}
     b = {(r.doc_id, r.route) for r in batch_routed.select("doc_id", "route").collect()}
     assert a == b
@@ -49,9 +47,7 @@ def test_streaming_restart_no_duplicates(spark, tokens_path, tmp_path):
 def test_windowed_counts_batch_semantics(spark, tokens_path):
     """Window aggregation validated on the batch frame (same expression the
     stream uses)."""
-    routed, _ = full_pipeline(
-        spark.read.parquet(tokens_path), spark, use_pandas_udf=False
-    )
+    routed, _ = full_pipeline(spark.read.parquet(tokens_path), spark)
     wc = windowed_counts(routed, window="6 hours").collect()
     # rows without event time (malformed lines) fall outside any window —
     # the count connector on streams only sees time-parseable records
