@@ -50,6 +50,54 @@ LOG_SCHEMA = T.StructType(
     ]
 )
 
+# The repo-wide flat log-record row shape — one OTLP LogRecord with its
+# resource/scope context denormalized on. Every wire-format receiver
+# (loki, splunk HEC, cloudflare, azure, webhook, kafka otlp modes, the
+# fileexporter readers) yields EXACTLY this schema so their outputs
+# union and feed the same downstream operators.
+FLAT_LOG_SCHEMA = T.StructType(
+    [
+        T.StructField("time_unix_nano", T.LongType()),
+        T.StructField("severity_number", T.IntegerType()),
+        T.StructField("severity_text", T.StringType()),
+        T.StructField("body", T.StringType()),
+        T.StructField("attributes", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("resource", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("scope_name", T.StringType()),
+        T.StructField("trace_id", T.StringType()),
+        T.StructField("span_id", T.StringType()),
+    ]
+)
+
+# The record shape of the API-polling receivers (k8s events/objects,
+# MongoDB Atlas): the flat record with its observed time, without scope
+# or trace context.
+OBSERVED_LOG_SCHEMA = T.StructType(
+    [
+        T.StructField("time_unix_nano", T.LongType()),
+        T.StructField("observed_time_unix_nano", T.LongType()),
+        T.StructField("severity_number", T.IntegerType()),
+        T.StructField("severity_text", T.StringType()),
+        T.StructField("body", T.StringType()),
+        T.StructField("attributes", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("resource", T.MapType(T.StringType(), T.StringType())),
+    ]
+)
+
+# One metric datapoint of the line-protocol receivers (carbon, wavefront,
+# collectd): an int or a double value (``is_int`` says which).
+DATAPOINT_SCHEMA = T.StructType(
+    [
+        T.StructField("name", T.StringType()),
+        T.StructField("kind", T.StringType()),
+        T.StructField("is_int", T.BooleanType()),
+        T.StructField("int_value", T.LongType()),
+        T.StructField("double_value", T.DoubleType()),
+        T.StructField("ts_ns", T.LongType()),
+        T.StructField("attrs", T.MapType(T.StringType(), T.StringType())),
+    ]
+)
+
 # Broadcast enrich dimension (k8sattributes / resource processor analog,
 # FIXTURES.md §2). `src-cold-9` is deliberately absent → left-join null path.
 SOURCE_LOOKUP_ROWS = [

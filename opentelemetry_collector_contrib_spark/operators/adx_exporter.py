@@ -14,19 +14,17 @@ helpers `adx_exporter.go:242-253`, `metricsdata_to_adx.go:264-274`):
   non-empty (a scope entry overwrites a record attribute of the same
   name).
 
-Spark shape: zero-shuffle ``mapInPandas``; the 100 TB sink is ADX
+Spark shape: one ``map_records`` pass; the 100 TB sink is ADX
 ingestion over exactly this row shape (the reference streams
 CSV/JSON mappings of the same columns).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from .opensearch_exporter import go_time_rfc3339nano
+from ..functions.gofmt import go_time_rfc3339nano
+from ..functions.records import map_records
 
 __all__ = ["adx_log_rows"]
 
@@ -49,54 +47,37 @@ _SCHEMA = T.StructType(
 )
 
 
+def _nz(v):
+    if v is None or (isinstance(v, float) and v != v):
+        return None
+    return v
+
+
+def _adx_row(row: dict) -> dict:
+    rec = {c: _nz(v) for c, v in row.items()}
+    attrs = {str(k): str(v) for k, v in dict(rec.get("attributes") or {}).items()}
+    if rec.get("scope_name"):
+        attrs["scope.name"] = str(rec["scope_name"])
+    if rec.get("scope_version"):
+        attrs["scope.version"] = str(rec["scope_version"])
+    body = rec.get("body")
+    return {
+        "Timestamp": go_time_rfc3339nano(int(rec.get("time_unix_nano") or 0)),
+        "ObservedTimestamp": go_time_rfc3339nano(
+            int(rec.get("observed_time_unix_nano") or 0)
+        ),
+        "TraceID": str(rec.get("trace_id") or ""),
+        "SpanID": str(rec.get("span_id") or ""),
+        "SeverityText": str(rec.get("severity_text") or ""),
+        "SeverityNumber": int(rec.get("severity_number") or 0),
+        "Body": "" if body is None else str(body),
+        "ResourceAttributes": {
+            str(k): str(v) for k, v in dict(rec.get("resource") or {}).items()
+        },
+        "LogsAttributes": attrs,
+    }
+
+
 def adx_log_rows(df: DataFrame) -> DataFrame:
     """Flat log-record rows → AdxLog rows. Zero-shuffle."""
-
-    def nz(v):
-        if v is None or (isinstance(v, float) and v != v):
-            return None
-        return v
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = {c: nz(row[c]) for c in pdf.columns}
-                attrs = {
-                    str(k): str(v)
-                    for k, v in dict(rec.get("attributes") or {}).items()
-                }
-                if rec.get("scope_name"):
-                    attrs["scope.name"] = str(rec["scope_name"])
-                if rec.get("scope_version"):
-                    attrs["scope.version"] = str(rec["scope_version"])
-                body = rec.get("body")
-                out.append(
-                    {
-                        "Timestamp": go_time_rfc3339nano(
-                            int(rec.get("time_unix_nano") or 0)
-                        ),
-                        "ObservedTimestamp": go_time_rfc3339nano(
-                            int(rec.get("observed_time_unix_nano") or 0)
-                        ),
-                        "TraceID": str(rec.get("trace_id") or ""),
-                        "SpanID": str(rec.get("span_id") or ""),
-                        "SeverityText": str(rec.get("severity_text") or ""),
-                        "SeverityNumber": int(
-                            rec.get("severity_number") or 0
-                        ),
-                        "Body": "" if body is None else str(body),
-                        "ResourceAttributes": {
-                            str(k): str(v)
-                            for k, v in dict(
-                                rec.get("resource") or {}
-                            ).items()
-                        },
-                        "LogsAttributes": attrs,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _SCHEMA.fields]
-            )
-
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(df, lambda rec: [_adx_row(rec)], _SCHEMA)

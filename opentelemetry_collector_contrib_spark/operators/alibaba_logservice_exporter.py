@@ -27,7 +27,7 @@ semantics (empty-body skip, host/service extraction, leftover-
 resource JSON, hex flags, ns→s Time w/ now fallback) — this one
 implementation covers both exporters.
 
-Spark shape: zero-shuffle ``mapInPandas`` (Go-JSON map rendering
+Spark shape: one ``map_records`` pass (Go-JSON map rendering
 needs Python); output is one flat row per record with each content
 key as a column — the natural Spark sink shape, equal to the SLS
 pair list by construction.
@@ -35,12 +35,10 @@ pair list by construction.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from .s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_value
+from ..functions.records import map_records
 
 __all__ = ["sls_log_rows"]
 
@@ -80,13 +78,13 @@ def _sls_row(rec: dict, now_sec: int) -> dict | None:
     return {
         "host": host,
         "service": service,
-        "resource_json": _go_json_value(rest).decode(),
+        "resource_json": go_json_value(rest).decode(),
         "otlp_name": str(rec.get("scope_name") or ""),
         "otlp_version": str(rec.get("scope_version") or ""),
         "time_unix_nano": str(ts),
         "severity_number": str(int(rec.get("severity_number") or 0)),
         "severity_text": str(rec.get("severity_text") or ""),
-        "attribute_json": _go_json_value(attrs).decode(),
+        "attribute_json": go_json_value(attrs).decode(),
         "content": str(rec.get("body")),
         "flags_hex": format(int(rec.get("flags") or 0), "x"),
         "trace_id": str(rec.get("trace_id") or ""),
@@ -99,16 +97,8 @@ def sls_log_rows(df: DataFrame, now_sec: int = 0) -> DataFrame:
     """Flat log-record rows → SLS log contents (one column per content
     key, `logsdata_to_logservice.go:36-190`). Zero-shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = {c: row[c] for c in pdf.columns}
-                r = _sls_row(rec, now_sec)
-                if r is not None:
-                    out.append(r)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _SCHEMA.fields]
-            )
+    def one(rec: dict) -> list[dict]:
+        r = _sls_row(rec, now_sec)
+        return [] if r is None else [r]
 
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(df, one, _SCHEMA)

@@ -29,17 +29,15 @@ helpers `contracts_utils.go:13-70`, `time_utils.go:15-17`):
   this rebuild truncates exactly those (warnings are log-side in the
   reference and carry no data).
 
-Spark shape: zero-shuffle ``mapInPandas``.
+Spark shape: one ``map_records`` pass.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from .opensearch_exporter import go_time_rfc3339nano
+from ..functions.gofmt import go_time_rfc3339nano
+from ..functions.records import map_records
 
 __all__ = ["azuremonitor_envelopes", "log_record_to_envelope"]
 
@@ -143,19 +141,6 @@ def azuremonitor_envelopes(
 ) -> DataFrame:
     """Flat log-record rows → Application Insights Message envelopes.
     Zero-shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    log_record_to_envelope(
-                        {c: row[c] for c in pdf.columns},
-                        sdk_version,
-                        now_ns,
-                    )
-                    for _, row in pdf.iterrows()
-                ],
-                columns=[f.name for f in _SCHEMA.fields],
-            )
-
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(
+        df, lambda rec: [log_record_to_envelope(rec, sdk_version, now_ns)], _SCHEMA
+    )

@@ -23,97 +23,27 @@ Reference behavior
   ``<empty>``;
 - metrics with an empty name are skipped; timestamps truncate ns→s.
 
-Spark shape: zero-shuffle ``mapInPandas`` over flat datapoint rows;
+Spark shape: one ``map_records`` pass over flat datapoint rows;
 one output row per emitted line so the carbon RECEIVER parses the
 result straight back (round-trip pinned in the driver query).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-__all__ = [
-    "build_path",
-    "carbon_lines",
-    "go_format_float_f",
-    "go_format_float_g",
-    "sanitize_tag_key",
-]
+from ..functions.gofmt import go_format_float_f, go_format_float_g
+from ..functions.records import map_records
+
+__all__ = ["build_path", "carbon_lines", "sanitize_tag_key"]
 
 _KEY_BAD = set(";!^=")
 
 
 def sanitize_tag_key(key: str) -> str:
     return "".join("_" if c in _KEY_BAD else c for c in key)
-
-
-def _shortest(f: float) -> tuple[str, str, int]:
-    """(sign, shortest digits, dp) with value = sign 0.<digits> × 10^dp."""
-    s = repr(float(f))
-    sign = ""
-    if s.startswith("-"):
-        sign, s = "-", s[1:]
-    if "e" in s:
-        mant, exp = s.split("e")
-        exp = int(exp)
-    else:
-        mant, exp = s, 0
-    if "." in mant:
-        intp, frac = mant.split(".")
-    else:
-        intp, frac = mant, ""
-    stripped_int = intp.lstrip("0")
-    if stripped_int:
-        dp = len(stripped_int) + exp
-        digits = (stripped_int + frac).rstrip("0") or "0"
-    else:
-        lead = len(frac) - len(frac.lstrip("0"))
-        dp = -lead + exp
-        digits = frac.lstrip("0").rstrip("0") or "0"
-    if digits == "0":
-        dp = 1
-    return sign, digits, dp
-
-
-def go_format_float_f(f: float) -> str:
-    """``strconv.FormatFloat(f, 'f', -1, 64)`` — shortest round-trip
-    digits, never scientific."""
-    f = float(f)
-    if f != f:
-        return "NaN"
-    if f in (float("inf"), float("-inf")):
-        return "+Inf" if f > 0 else "-Inf"
-    sign, digits, dp = _shortest(f)
-    if f == 0:
-        return sign + "0"
-    if dp >= len(digits):
-        return sign + digits + "0" * (dp - len(digits))
-    if dp > 0:
-        return sign + digits[:dp] + "." + digits[dp:]
-    return sign + "0." + "0" * (-dp) + digits
-
-
-def go_format_float_g(f: float) -> str:
-    """``strconv.FormatFloat(f, 'g', -1, 64)`` — scientific when the
-    printed exponent is < −4 or ≥ 6 (Go's shortest-mode eprec)."""
-    f = float(f)
-    if f != f:
-        return "NaN"
-    if f in (float("inf"), float("-inf")):
-        return "+Inf" if f > 0 else "-Inf"
-    if f == 0:
-        return "-0" if repr(f).startswith("-") else "0"
-    sign, digits, dp = _shortest(f)
-    e = dp - 1
-    if e < -4 or e >= 6:
-        mant = digits[0]
-        if len(digits) > 1:
-            mant += "." + digits[1:]
-        return f"{sign}{mant}e{'+' if e >= 0 else '-'}{abs(e):02d}"
-    return go_format_float_f(f)
 
 
 def build_path(name: str, attributes: Optional[dict]) -> str:
@@ -201,12 +131,6 @@ _SCHEMA = T.StructType([T.StructField("line", T.StringType())])
 def carbon_lines(df: DataFrame) -> DataFrame:
     """Flat metric-datapoint rows → Carbon plaintext lines (one row
     per line). Zero-shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines: list[str] = []
-            for _, row in pdf.iterrows():
-                lines.extend(_dp_lines({c: row[c] for c in pdf.columns}))
-            yield pd.DataFrame({"line": lines})
-
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(
+        df, lambda rec: [{"line": line} for line in _dp_lines(rec)], _SCHEMA
+    )

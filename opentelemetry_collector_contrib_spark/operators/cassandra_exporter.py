@@ -17,19 +17,17 @@ Reference behavior (`exporter/cassandraexporter/exporter_logs.go`,
   with ``PRIMARY KEY (SpanId, SeverityNumber)`` and the configured
   compression class — byte-identical rendering.
 
-Spark shape: zero-shuffle ``mapInPandas`` (Go-JSON value rendering);
+Spark shape: one ``map_records`` pass (Go-JSON value rendering);
 the 100 TB sink is the Spark-Cassandra connector over exactly this
 row shape, partitioned by the table's partition key.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from .s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_value
+from ..functions.records import map_records
 
 __all__ = [
     "cassandra_log_rows",
@@ -95,51 +93,33 @@ _SCHEMA = T.StructType(
 )
 
 
+def _marshal_map(m) -> dict:
+    return {str(k): go_json_value(v).decode() for k, v in dict(m or {}).items()}
+
+
+def _nz(v):
+    if v is None or (isinstance(v, float) and v != v):
+        return None
+    return v
+
+
+def _cassandra_row(row: dict) -> dict:
+    rec = {c: _nz(v) for c, v in row.items()}
+    return {
+        "timestamp": int(rec.get("time_unix_nano") or 0),
+        "traceid": str(rec.get("trace_id") or ""),
+        "spanid": str(rec.get("span_id") or ""),
+        "traceflags": int(rec.get("flags") or 0),
+        "severitytext": str(rec.get("severity_text") or ""),
+        "severitynumber": int(rec.get("severity_number") or 0),
+        "body": go_json_value(rec.get("body")).decode(),
+        "resourceattributes": _marshal_map(rec.get("resource")),
+        "logattributes": _marshal_map(rec.get("attributes")),
+    }
+
+
 def cassandra_log_rows(df: DataFrame) -> DataFrame:
     """Flat log-record rows → the 9 CQL bind columns
     (`exporter_logs.go:113-146`) — attribute values and the body in
     their json.Marshal forms. Zero-shuffle."""
-
-    def nz(v):
-        if v is None or (isinstance(v, float) and v != v):
-            return None
-        return v
-
-    def marshal_map(m) -> dict:
-        return {
-            str(k): _go_json_value(v).decode()
-            for k, v in dict(m or {}).items()
-        }
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = {c: nz(row[c]) for c in pdf.columns}
-                body = rec.get("body")
-                out.append(
-                    {
-                        "timestamp": int(rec.get("time_unix_nano") or 0),
-                        "traceid": str(rec.get("trace_id") or ""),
-                        "spanid": str(rec.get("span_id") or ""),
-                        "traceflags": int(rec.get("flags") or 0),
-                        "severitytext": str(
-                            rec.get("severity_text") or ""
-                        ),
-                        "severitynumber": int(
-                            rec.get("severity_number") or 0
-                        ),
-                        "body": _go_json_value(body).decode(),
-                        "resourceattributes": marshal_map(
-                            rec.get("resource")
-                        ),
-                        "logattributes": marshal_map(
-                            rec.get("attributes")
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _SCHEMA.fields]
-            )
-
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(df, lambda rec: [_cassandra_row(rec)], _SCHEMA)

@@ -40,7 +40,7 @@ backs up to the previous character boundary (Go emits the split
 bytes; Spark strings must stay valid UTF-8). ``GeneratedTime`` /
 ``time.Now()`` are caller-supplied for determinism.
 
-Spark shape: marshal is a zero-shuffle ``mapInPandas``; batching is
+Spark shape: marshal is one ``map_records`` pass; batching is
 one exchange keyed by (group, stream) — the per-stream pusher is
 sequential in the reference too, so streams are the parallel unit at
 100 TB — then ``applyInPandas`` replays the sequential batch state
@@ -50,12 +50,13 @@ machine per stream.
 from __future__ import annotations
 
 import json
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_value
+from ..functions.records import map_records
 
 __all__ = [
     "DEFAULT_MAX_BATCH_BYTES",
@@ -89,11 +90,11 @@ def cwlog_body_json(rec: dict) -> str:
         parts.append(b'"' + key.encode() + b'":' + rendered)
 
     if rec.get("body") is not None:
-        put("body", _go_json_value(rec["body"]))
+        put("body", go_json_value(rec["body"]))
     if rec.get("severity_number"):
         put("severity_number", str(int(rec["severity_number"])).encode())
     if rec.get("severity_text"):
-        put("severity_text", _go_json_value(rec["severity_text"]))
+        put("severity_text", go_json_value(rec["severity_text"]))
     if rec.get("dropped_attributes_count"):
         put(
             "dropped_attributes_count",
@@ -102,24 +103,24 @@ def cwlog_body_json(rec: dict) -> str:
     if rec.get("flags"):
         put("flags", str(int(rec["flags"])).encode())
     if rec.get("trace_id"):
-        put("trace_id", _go_json_value(rec["trace_id"]))
+        put("trace_id", go_json_value(rec["trace_id"]))
     if rec.get("span_id"):
-        put("span_id", _go_json_value(rec["span_id"]))
+        put("span_id", go_json_value(rec["span_id"]))
     if rec.get("attributes"):
-        put("attributes", _go_json_value(dict(rec["attributes"])))
+        put("attributes", go_json_value(dict(rec["attributes"])))
     scope_name = rec.get("scope_name") or ""
     if scope_name:
-        sparts: list[bytes] = [b'"name":' + _go_json_value(scope_name)]
+        sparts: list[bytes] = [b'"name":' + go_json_value(scope_name)]
         if rec.get("scope_version"):
-            sparts.append(b'"version":' + _go_json_value(rec["scope_version"]))
+            sparts.append(b'"version":' + go_json_value(rec["scope_version"]))
         if rec.get("scope_attributes"):
             sparts.append(
                 b'"attributes":'
-                + _go_json_value(dict(rec["scope_attributes"]))
+                + go_json_value(dict(rec["scope_attributes"]))
             )
         put("scope", b"{" + b",".join(sparts) + b"}")
     if rec.get("resource"):
-        put("resource", _go_json_value(dict(rec["resource"])))
+        put("resource", go_json_value(dict(rec["resource"])))
     return (b"{" + b",".join(parts) + b"}").decode("utf-8")
 
 
@@ -210,42 +211,32 @@ def cwlog_events(
     ``flags``, ``dropped_attributes_count``, ``time_unix_nano``) —
     missing ones are treated as unset, like pdata zero values."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for _, row in pdf.iterrows():
-                rec = {c: row[c] for c in pdf.columns}
-                ts_ms = int(rec.get("time_unix_nano") or 0) // 1_000_000
-                group, stream = log_group_name, log_stream_name
-                if raw_log:
-                    body = rec.get("body")
-                    body = "" if body is None else str(body)
-                    group, stream = resolve_emf_destination(
-                        body, group, stream
-                    )
-                    message = body
-                else:
-                    message = cwlog_body_json(rec)
-                v = validate_cwlog_event(
-                    message, ts_ms, now_ms, generated_time_ms,
-                    max_event_bytes,
-                )
-                if v is None:
-                    continue
-                out.append(
-                    {
-                        "group_name": group,
-                        "stream_name": stream,
-                        "arrival": int(rec[order_col]),
-                        "timestamp_ms": v[1],
-                        "message": v[0],
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _EVENT_SCHEMA.fields]
-            )
+    def one(rec: dict) -> list[dict]:
+        ts_ms = int(rec.get("time_unix_nano") or 0) // 1_000_000
+        group, stream = log_group_name, log_stream_name
+        if raw_log:
+            body = rec.get("body")
+            body = "" if body is None else str(body)
+            group, stream = resolve_emf_destination(body, group, stream)
+            message = body
+        else:
+            message = cwlog_body_json(rec)
+        v = validate_cwlog_event(
+            message, ts_ms, now_ms, generated_time_ms, max_event_bytes
+        )
+        if v is None:
+            return []
+        return [
+            {
+                "group_name": group,
+                "stream_name": stream,
+                "arrival": int(rec[order_col]),
+                "timestamp_ms": v[1],
+                "message": v[0],
+            }
+        ]
 
-    return df.mapInPandas(gen, _EVENT_SCHEMA)
+    return map_records(df, one, _EVENT_SCHEMA)
 
 
 _BATCHED_SCHEMA = T.StructType(
@@ -277,11 +268,9 @@ def assign_cwlog_batches(
         byte_total = 0
         min_ts = 0
         max_ts = 0
-        for _, row in pdf.iterrows():
-            size = len(str(row["message"]).encode("utf-8")) + (
-                PER_EVENT_HEADER_BYTES
-            )
-            ts = int(row["timestamp_ms"])
+        for message, timestamp_ms in zip(pdf["message"], pdf["timestamp_ms"]):
+            size = len(str(message).encode("utf-8")) + PER_EVENT_HEADER_BYTES
+            ts = int(timestamp_ms)
             active = not (
                 min_ts and max_ts
                 and (ts - min_ts > _DAY_MS or max_ts - ts > _DAY_MS)

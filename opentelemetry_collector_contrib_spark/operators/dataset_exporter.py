@@ -30,19 +30,17 @@ helpers `datasetexporter.go:89-168`, defaults `config.go:21-59`):
   then the exporter's own server host; ``Event.Log`` = "LL",
   ``Event.Thread`` = "TL".
 
-Spark shape: zero-shuffle ``mapInPandas``; flattened attrs render
+Spark shape: one ``map_records`` pass; flattened attrs render
 into the string-typed flat schema via Go-JSON for non-strings
 (documented, same note as the other receivers/exporters).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from .s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_value
+from ..functions.records import map_records
 
 __all__ = [
     "build_dataset_event",
@@ -178,7 +176,7 @@ def build_dataset_event(
         "log_id": "LL",
         "thread_id": "TL",
         "attrs": {
-            k: (v if isinstance(v, str) else _go_json_value(v).decode())
+            k: (v if isinstance(v, str) else go_json_value(v).decode())
             for k, v in attrs.items()
         },
     }
@@ -198,15 +196,4 @@ _SCHEMA = T.StructType(
 
 def dataset_events(df: DataFrame, **opts) -> DataFrame:
     """Flat log-record rows → DataSet events. Zero-shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = {c: row[c] for c in pdf.columns}
-                out.append(build_dataset_event(rec, **opts))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _SCHEMA.fields]
-            )
-
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(df, lambda rec: [build_dataset_event(rec, **opts)], _SCHEMA)

@@ -47,8 +47,8 @@ Divergences, both deliberate:
   reference serializes through structform (`objmodel.go:43`), not
   ``encoding/json``.
 
-The Spark surface is a PURE MAP: one pandas UDF row→bytes, zero
-exchanges, so bulk marshaling composes into any scan stage. Actually
+The Spark surface is a PURE MAP: one ``map_records`` pass row→bytes,
+zero exchanges, so bulk marshaling composes into any scan stage. Actually
 POSTing is one ``foreachPartition`` HTTP loop where a cluster has an ES
 endpoint; the BYTES are the tested surface here (golden tests + a full
 value oracle rebuild the NDJSON in SQL).
@@ -59,8 +59,9 @@ from __future__ import annotations
 import math
 from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from ..functions.records import map_records
 
 __all__ = [
     "encode_log_document",
@@ -484,30 +485,21 @@ def es_bulk_messages(
 
     rec_cols = list(_REC_COLS) + [c for c in _OPT_COLS if c in cols]
 
-    @F.pandas_udf(_BULK_SCHEMA)
-    def marshal(struct: pd.DataFrame) -> pd.DataFrame:
-        idxs, vals = [], []
-        for row in struct.itertuples(index=False):
-            rec = dict(zip(struct.columns, row))
-            rec["attributes"] = dict(rec.get("attributes") or {})
-            rec["resource"] = dict(rec.get("resource") or {})
-            if "scope_attributes" in rec:
-                rec["scope_attributes"] = dict(
-                    rec.get("scope_attributes") or {}
-                )
-            fidx = resolve_index(
-                rec,
-                index=index,
-                dynamic_index=dynamic_index,
-                logstash_format=logstash_format,
-                prefix_separator=prefix_separator,
-                date_format=date_format,
-            )
-            doc = encode_log_document(rec, mode=mode, dedup=dedup, dedot=dedot)
-            idxs.append(fidx)
-            vals.append(bulk_create_action(fidx) + b"\n" + doc + b"\n")
-        return pd.DataFrame({"index": idxs, "value": vals})
+    def one(rec: dict) -> list[dict]:
+        rec["attributes"] = dict(rec.get("attributes") or {})
+        rec["resource"] = dict(rec.get("resource") or {})
+        if "scope_attributes" in rec:
+            rec["scope_attributes"] = dict(rec.get("scope_attributes") or {})
+        fidx = resolve_index(
+            rec,
+            index=index,
+            dynamic_index=dynamic_index,
+            logstash_format=logstash_format,
+            prefix_separator=prefix_separator,
+            date_format=date_format,
+        )
+        doc = encode_log_document(rec, mode=mode, dedup=dedup, dedot=dedot)
+        value = bulk_create_action(fidx) + b"\n" + doc + b"\n"
+        return [{"index": fidx, "value": value}]
 
-    res = marshal(F.struct(*[F.col(c) for c in rec_cols]))
-    return work.select(res.getField("index").alias("index"),
-                       res.getField("value").alias("value"))
+    return map_records(work.select(*rec_cols), one, _BULK_SCHEMA)

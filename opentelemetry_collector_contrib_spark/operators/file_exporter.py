@@ -34,7 +34,9 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..datamodel import FLAT_LOG_SCHEMA
 from ..functions.otlp_proto import decode_logs, encode_logs, frame, unframe
+from ..functions.records import map_records
 
 __all__ = [
     "zstd_compress",
@@ -74,21 +76,6 @@ _MANIFEST_SCHEMA = T.StructType(
         T.StructField("bytes", T.LongType()),
     ]
 )
-
-_FLAT_SCHEMA = T.StructType(
-    [
-        T.StructField("time_unix_nano", T.LongType()),
-        T.StructField("severity_number", T.IntegerType()),
-        T.StructField("severity_text", T.StringType()),
-        T.StructField("body", T.StringType()),
-        T.StructField("attributes", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("resource", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("scope_name", T.StringType()),
-        T.StructField("trace_id", T.StringType()),
-        T.StructField("span_id", T.StringType()),
-    ]
-)
-
 
 def _records_in_order(pdf: pd.DataFrame) -> list[dict]:
     """pandas batch → flat record dicts, INPUT order preserved."""
@@ -466,31 +453,17 @@ def read_otlp_proto(
     on the executor that scanned it."""
     bins = spark.read.format("binaryFile").load(path_glob)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for content in pdf["content"]:
-                for msg in unframe(bytes(content)):
-                    if compression == "zstd":
-                        msg = zstd_decompress(msg)
-                    recs = (
-                        decode_logs(msg) if fmt == "proto"
-                        else _json_doc_records(msg)
-                    )
-                    for rec in recs:
-                        rec.pop("observed_time_unix_nano", None)
-                        rec["body"] = (
-                            None if rec["body"] is None else str(rec["body"])
-                        )
-                        rec["attributes"] = {
-                            k: str(v) for k, v in rec["attributes"].items()
-                        }
-                        rec["resource"] = {
-                            k: str(v) for k, v in rec["resource"].items()
-                        }
-                        rows.append(rec)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        out = []
+        for msg in unframe(bytes(row["content"])):
+            if compression == "zstd":
+                msg = zstd_decompress(msg)
+            recs = decode_logs(msg) if fmt == "proto" else _json_doc_records(msg)
+            for rec in recs:
+                rec["body"] = None if rec["body"] is None else str(rec["body"])
+                rec["attributes"] = {k: str(v) for k, v in rec["attributes"].items()}
+                rec["resource"] = {k: str(v) for k, v in rec["resource"].items()}
+                out.append(rec)
+        return out
 
-    return bins.select("content").mapInPandas(gen, _FLAT_SCHEMA)
+    return map_records(bins.select("content"), one, FLAT_LOG_SCHEMA)

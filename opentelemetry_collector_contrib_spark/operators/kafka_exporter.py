@@ -35,10 +35,11 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.gofmt import go_json_string
 from ..functions.otlp_proto import encode_logs
 from ..sources.readers import otlp_json_lines
 
-__all__ = ["go_json_string", "kafka_messages"]
+__all__ = ["kafka_messages"]
 
 _MSG_SCHEMA = T.StructType(
     [
@@ -47,49 +48,6 @@ _MSG_SCHEMA = T.StructType(
         T.StructField("value", T.BinaryType()),
     ]
 )
-
-
-def go_json_string(s: str) -> bytes:
-    """Bytes of Go's ``json.Marshal`` for a string value.
-
-    Go's encoder (used by the raw marshaler via ``interfaceAsBytes``,
-    `raw_marshaler.go:66-71`) differs from ``json.dumps`` in three ways:
-    it HTML-escapes ``<``, ``>``, ``&`` to ``\\u003c/\\u003e/\\u0026``,
-    escapes U+2028/U+2029, and emits no spaces. Everything else (``\\"``,
-    ``\\\\``, ``\\n/\\r/\\t``, ``\\u00XX`` for other control chars,
-    literal UTF-8 passthrough) matches.
-    """
-    import json
-    import re
-
-    # fast path: C-implemented json.dumps matches Go byte-for-byte except
-    # for Go's extra HTML/U+2028-29 escapes — only escape-loop strings
-    # that actually contain one of those (rare in log bodies)
-    if not re.search("[<>&\u2028\u2029\b\f]", s):
-        return json.dumps(s, ensure_ascii=False).encode("utf-8")
-    out = ["\""]
-    for ch in s:
-        o = ord(ch)
-        if ch == '"':
-            out.append('\\"')
-        elif ch == "\\":
-            out.append("\\\\")
-        elif ch == "\n":
-            out.append("\\n")
-        elif ch == "\r":
-            out.append("\\r")
-        elif ch == "\t":
-            out.append("\\t")
-        elif o < 0x20:
-            out.append(f"\\u{o:04x}")
-        elif ch in "<>&":
-            out.append(f"\\u{o:04x}")
-        elif o in (0x2028, 0x2029):
-            out.append(f"\\u{o:04x}")
-        else:
-            out.append(ch)
-    out.append("\"")
-    return "".join(out).encode("utf-8")
 
 
 def _raw_messages(df: DataFrame, topic: str) -> DataFrame:

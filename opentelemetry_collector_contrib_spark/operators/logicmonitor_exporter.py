@@ -14,17 +14,15 @@ Reference behavior
   ``system.hostname`` (the LM resource-mapping property,
   `logs_exporter.go:26-29,84-90` — both keys end up present).
 
-Spark shape: zero-shuffle ``mapInPandas``.
+Spark shape: one ``map_records`` pass.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from ..sources.k8s_receivers import _go_time_string
+from ..functions.gofmt import go_time_string
+from ..functions.records import map_records
 
 __all__ = ["lm_log_inputs"]
 
@@ -45,38 +43,28 @@ _SCHEMA = T.StructType(
 def lm_log_inputs(df: DataFrame, now_ns: int = 0) -> DataFrame:
     """Flat log-record rows → LM LogInput rows. Zero-shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = {c: row[c] for c in pdf.columns}
-                ts = int(rec.get("time_unix_nano") or 0)
-                if ts == 0:
-                    ts = int(rec.get("observed_time_unix_nano") or 0)
-                if ts == 0:
-                    ts = now_ns
-                resource = {
+    def one(rec: dict) -> list[dict]:
+        ts = int(rec.get("time_unix_nano") or 0)
+        if ts == 0:
+            ts = int(rec.get("observed_time_unix_nano") or 0)
+        if ts == 0:
+            ts = now_ns
+        resource = {
+            str(k): str(v) for k, v in dict(rec.get("resource") or {}).items()
+        }
+        if "hostname" in resource:
+            resource["system.hostname"] = resource["hostname"]
+        body = rec.get("body")
+        return [
+            {
+                "message": "" if body is None else str(body),
+                "timestamp": go_time_string(ts),
+                "resource_map": resource,
+                "metadata": {
                     str(k): str(v)
-                    for k, v in dict(rec.get("resource") or {}).items()
-                }
-                if "hostname" in resource:
-                    resource["system.hostname"] = resource["hostname"]
-                body = rec.get("body")
-                out.append(
-                    {
-                        "message": "" if body is None else str(body),
-                        "timestamp": _go_time_string(ts),
-                        "resource_map": resource,
-                        "metadata": {
-                            str(k): str(v)
-                            for k, v in dict(
-                                rec.get("attributes") or {}
-                            ).items()
-                        },
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _SCHEMA.fields]
-            )
+                    for k, v in dict(rec.get("attributes") or {}).items()
+                },
+            }
+        ]
 
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(df, one, _SCHEMA)

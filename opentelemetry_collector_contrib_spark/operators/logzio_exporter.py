@@ -17,18 +17,17 @@ Reference behavior (`exporter/logzioexporter/jsonlog.go`,
 - the line bytes are Go ``json.Marshal`` of the map — sorted keys +
   HTML escaping — newline-joined per push.
 
-Spark shape: zero-shuffle ``mapInPandas``; the Go-JSON renderer is
-shared with the other marshalers, so the line bytes are parity-exact.
+Spark shape: one ``map_records`` pass; the Go-JSON renderer
+(``functions.gofmt``) is shared with the other marshalers, so the line
+bytes are parity-exact.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from .s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_value
+from ..functions.records import map_records
 
 __all__ = ["logzio_json_log", "logzio_lines", "merge_map_entries"]
 
@@ -74,7 +73,7 @@ def logzio_json_log(rec: dict) -> str:
         out.update(body)
     elif body is not None:
         out["message"] = str(body)
-    return _go_json_value(out).decode("utf-8")
+    return go_json_value(out).decode("utf-8")
 
 
 _SCHEMA = T.StructType([T.StructField("line", T.StringType())])
@@ -82,18 +81,4 @@ _SCHEMA = T.StructType([T.StructField("line", T.StringType())])
 
 def logzio_lines(df: DataFrame) -> DataFrame:
     """Flat log-record rows → one JSON line per record. Zero-shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "line": [
-                        logzio_json_log(
-                            {c: row[c] for c in pdf.columns}
-                        )
-                        for _, row in pdf.iterrows()
-                    ]
-                }
-            )
-
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(df, lambda rec: [{"line": logzio_json_log(rec)}], _SCHEMA)

@@ -44,7 +44,7 @@ emits the (tenant, labels, entries) data surface plus the documented
 Loki JSON push-API stream objects, with entries ts-sorted (the reference
 keeps arrival order — an execution detail a deterministic engine pins).
 
-Spark shape: the entry build is a PURE MAP (one pandas UDF); stream
+Spark shape: the entry build is a PURE MAP (one ``map_records`` pass); stream
 assembly is ONE exchange on (tenant, labels). At 100 TB the label-set
 cardinality bounds the exchange — low by Loki design (labels are an
 index, not data), and a hot stream shards safely because entries within
@@ -54,13 +54,12 @@ a stream are independent rows until the POST boundary.
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .kafka_exporter import go_json_string
-from .s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_string, go_json_value
+from ..functions.records import map_records
 
 __all__ = [
     "severity_level",
@@ -284,7 +283,7 @@ def _encode_json_line(rec: dict, attrs: dict, resource: dict) -> str:
     parts = []
     body = rec.get("body")
     if body is not None:
-        parts.append(b'"body":' + _go_json_value(body))
+        parts.append(b'"body":' + go_json_value(body))
     tid = rec.get("trace_id") or ""
     if tid and set(tid) != {"0"}:
         parts.append(b'"traceid":' + go_json_string(tid))
@@ -298,16 +297,16 @@ def _encode_json_line(rec: dict, attrs: dict, resource: dict) -> str:
     if flags:
         parts.append(b'"flags":' + str(flags).encode())
     if attrs:
-        parts.append(b'"attributes":' + _go_json_value(attrs))
+        parts.append(b'"attributes":' + go_json_value(attrs))
     if resource:
-        parts.append(b'"resources":' + _go_json_value(resource))
+        parts.append(b'"resources":' + go_json_value(resource))
     scope_name = rec.get("scope_name") or ""
     if scope_name:
         sc = [b'"name":' + go_json_string(scope_name)]
         if rec.get("scope_version"):
             sc.append(b'"version":' + go_json_string(str(rec["scope_version"])))
         if rec.get("scope_attributes"):
-            sc.append(b'"attributes":' + _go_json_value(dict(rec["scope_attributes"])))
+            sc.append(b'"attributes":' + go_json_value(dict(rec["scope_attributes"])))
         parts.append(b'"instrumentation_scope":{' + b",".join(sc) + b"}")
     return (b"{" + b",".join(parts) + b"}").decode("utf-8")
 
@@ -490,25 +489,15 @@ def loki_entries(
             )
     cols = list(_REC_COLS) + [c for c in _OPT_COLS if c in df.columns]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                rec = dict(zip(pdf.columns, row))
-                rec["attributes"] = dict(rec.get("attributes") or {})
-                rec["resource"] = dict(rec.get("resource") or {})
-                if "scope_attributes" in rec:
-                    rec["scope_attributes"] = dict(
-                        rec.get("scope_attributes") or {}
-                    )
-                e = log_to_loki_entry(rec, default_labels_enabled)
-                if e is not None:
-                    rows.append(e)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _ENTRY_SCHEMA.fields]
-            )
+    def one(rec: dict) -> list[dict]:
+        rec["attributes"] = dict(rec.get("attributes") or {})
+        rec["resource"] = dict(rec.get("resource") or {})
+        if "scope_attributes" in rec:
+            rec["scope_attributes"] = dict(rec.get("scope_attributes") or {})
+        e = log_to_loki_entry(rec, default_labels_enabled)
+        return [] if e is None else [e]
 
-    return work.select(*cols).mapInPandas(gen, _ENTRY_SCHEMA)
+    return map_records(work.select(*cols), one, _ENTRY_SCHEMA)
 
 
 _STREAM_SCHEMA = T.StructType(

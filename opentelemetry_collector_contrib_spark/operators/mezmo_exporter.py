@@ -32,7 +32,7 @@ ordering of ``log.Attributes().Range`` is replaced by column order
 (deterministic; affects only which duplicate key wins, and duplicate
 keys cannot exist within one attribute map).
 
-Spark shape: line marshal = zero-shuffle ``mapInPandas``; body
+Spark shape: line marshal = one ``map_records`` pass; body
 assembly replays the sequential builder per ``batch_key`` via
 ``applyInPandas`` (batches are the unit the reference POSTs per
 consumer call, so batch keys are the parallel unit).
@@ -40,12 +40,11 @@ consumer call, so batch keys are the parallel unit).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from .s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_value
+from ..functions.records import map_records
 
 __all__ = [
     "MAX_APPNAME_LEN",
@@ -108,11 +107,11 @@ def mezmo_line_json(rec: dict, now_ms: int = 0) -> tuple[int, str]:
 
     line = (
         b'{"timestamp":' + str(ts).encode()
-        + b',"line":' + _go_json_value(truncate_string(body,
+        + b',"line":' + go_json_value(truncate_string(body,
                                                        MAX_MESSAGE_SIZE))
-        + b',"app":' + _go_json_value(truncate_string(app, MAX_APPNAME_LEN))
-        + b',"level":' + _go_json_value(level)
-        + b',"meta":' + _go_json_value(meta)
+        + b',"app":' + go_json_value(truncate_string(app, MAX_APPNAME_LEN))
+        + b',"level":' + go_json_value(level)
+        + b',"meta":' + go_json_value(meta)
         + b"}"
     )
     return ts, line.decode("utf-8")
@@ -136,25 +135,18 @@ def mezmo_lines(
 ) -> DataFrame:
     """Flat log-record rows → marshaled Mezmo lines. Zero-shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = {c: row[c] for c in pdf.columns}
-                ts, line = mezmo_line_json(rec, now_ms)
-                out.append(
-                    {
-                        "batch_key": str(rec.get(batch_key_col, "")),
-                        "arrival": int(rec[order_col]),
-                        "timestamp_ms": ts,
-                        "line_json": line,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _LINE_SCHEMA.fields]
-            )
+    def one(rec: dict) -> list[dict]:
+        ts, line = mezmo_line_json(rec, now_ms)
+        return [
+            {
+                "batch_key": str(rec.get(batch_key_col, "")),
+                "arrival": int(rec[order_col]),
+                "timestamp_ms": ts,
+                "line_json": line,
+            }
+        ]
 
-    return df.mapInPandas(gen, _LINE_SCHEMA)
+    return map_records(df, one, _LINE_SCHEMA)
 
 
 _BODY_SCHEMA = T.StructType(

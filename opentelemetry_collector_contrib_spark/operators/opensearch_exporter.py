@@ -31,26 +31,22 @@ Reference behavior (`exporter/opensearchexporter/`):
   per document (opensearchutil BulkIndexer with configured
   ``bulk_action`` create|index), NDJSON-paired with the document.
 
-Spark shape: zero-shuffle ``mapInPandas``; the bulk NDJSON body is
+Spark shape: one ``map_records`` pass; the bulk NDJSON body is
 two string columns per record (action + document), concatenated at
 the sink boundary like the ES exporter's bulk writer.
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-from typing import Iterator, Optional
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
+from ..functions.gofmt import go_json_value, go_time_rfc3339nano
+from ..functions.records import map_records
 from .es_exporter import _Doc, _Ts
-from .s3_exporter import _go_json_value
 
 __all__ = [
     "encode_log_data_model",
     "get_index_name",
-    "go_time_rfc3339nano",
     "opensearch_bulk_lines",
     "sso_log_record",
 ]
@@ -64,19 +60,6 @@ def get_index_name(
     if logs_index:
         return logs_index
     return "-".join(["ss4o_logs", dataset, namespace])
-
-
-def go_time_rfc3339nano(ns: int) -> str:
-    """Go ``time.Time`` JSON marshaling for a UTC instant: RFC 3339
-    with the fractional second's trailing zeros trimmed (absent when
-    zero)."""
-    sec, frac = divmod(int(ns), 1_000_000_000)
-    dt = datetime.fromtimestamp(sec, tz=timezone.utc)
-    base = dt.strftime("%Y-%m-%dT%H:%M:%S")
-    if frac == 0:
-        return base + "Z"
-    f = f"{frac:09d}".rstrip("0")
-    return f"{base}.{f}Z"
 
 
 def _struct_json(pairs: list[tuple[str, bytes]]) -> bytes:
@@ -107,37 +90,37 @@ def sso_log_record(
 
     pairs: list[tuple[str, bytes]] = []
     if attrs:
-        pairs.append(("attributes", _go_json_value(attrs)))
+        pairs.append(("attributes", go_json_value(attrs)))
     body = rec.get("body")
-    pairs.append(("body", _go_json_value("" if body is None else str(body))))
+    pairs.append(("body", go_json_value("" if body is None else str(body))))
 
     scope_pairs: list[tuple[str, bytes]] = []
     if rec.get("scope_attributes"):
         scope_pairs.append(
-            ("attributes", _go_json_value(dict(rec["scope_attributes"])))
+            ("attributes", go_json_value(dict(rec["scope_attributes"])))
         )
     if rec.get("scope_name"):
-        scope_pairs.append(("name", _go_json_value(rec["scope_name"])))
+        scope_pairs.append(("name", go_json_value(rec["scope_name"])))
     if schema_url:
-        scope_pairs.append(("schemaUrl", _go_json_value(schema_url)))
+        scope_pairs.append(("schemaUrl", go_json_value(schema_url)))
     if rec.get("scope_version"):
-        scope_pairs.append(("version", _go_json_value(rec["scope_version"])))
+        scope_pairs.append(("version", go_json_value(rec["scope_version"])))
     pairs.append(("instrumentationScope", _struct_json(scope_pairs)))
 
     pairs.append(
         (
             "observedTimestamp",
-            _go_json_value(go_time_rfc3339nano(observed_ns)),
+            go_json_value(go_time_rfc3339nano(observed_ns)),
         )
     )
     if rec.get("resource"):
-        pairs.append(("resource", _go_json_value(dict(rec["resource"]))))
+        pairs.append(("resource", go_json_value(dict(rec["resource"]))))
     if schema_url:
-        pairs.append(("schemaUrl", _go_json_value(schema_url)))
+        pairs.append(("schemaUrl", go_json_value(schema_url)))
 
     sev_pairs: list[tuple[str, bytes]] = []
     if rec.get("severity_text"):
-        sev_pairs.append(("text", _go_json_value(rec["severity_text"])))
+        sev_pairs.append(("text", go_json_value(rec["severity_text"])))
     if rec.get("severity_number"):
         sev_pairs.append(
             ("number", str(int(rec["severity_number"])).encode())
@@ -145,11 +128,11 @@ def sso_log_record(
     pairs.append(("severity", _struct_json(sev_pairs)))
 
     if rec.get("span_id"):
-        pairs.append(("spanId", _go_json_value(rec["span_id"])))
+        pairs.append(("spanId", go_json_value(rec["span_id"])))
     ts_ns = int(rec.get("time_unix_nano") or 0)
-    pairs.append(("@timestamp", _go_json_value(go_time_rfc3339nano(ts_ns))))
+    pairs.append(("@timestamp", go_json_value(go_time_rfc3339nano(ts_ns))))
     if rec.get("trace_id"):
-        pairs.append(("traceId", _go_json_value(rec["trace_id"])))
+        pairs.append(("traceId", go_json_value(rec["trace_id"])))
     return _struct_json(pairs).decode("utf-8")
 
 
@@ -224,22 +207,11 @@ def opensearch_bulk_lines(
     ds = dataset if sso else ""
     ns_ = namespace if sso else ""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            docs = []
-            for _, row in pdf.iterrows():
-                rec = {c: row[c] for c in pdf.columns}
-                if sso:
-                    doc = sso_log_record(
-                        rec, ds, ns_, schema_url, observed_ns
-                    )
-                else:
-                    doc = encode_log_data_model(rec, **model_opts)
-                docs.append(
-                    {"index": index, "action_line": action, "document": doc}
-                )
-            yield pd.DataFrame(
-                docs, columns=["index", "action_line", "document"]
-            )
+    def one(rec: dict) -> list[dict]:
+        if sso:
+            doc = sso_log_record(rec, ds, ns_, schema_url, observed_ns)
+        else:
+            doc = encode_log_data_model(rec, **model_opts)
+        return [{"index": index, "action_line": action, "document": doc}]
 
-    return df.mapInPandas(gen, _BULK_SCHEMA)
+    return map_records(df, one, _BULK_SCHEMA)

@@ -29,13 +29,12 @@ from __future__ import annotations
 
 import gzip as _gzip
 import hashlib
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.gofmt import go_time_rfc3339nano
 from ..functions.otlp_proto import encode_logs
-from .opensearch_exporter import go_time_rfc3339nano
 
 __all__ = ["ce_time_attr", "logs_watermark", "pubsub_messages"]
 

@@ -45,15 +45,14 @@ from __future__ import annotations
 import gzip
 import hashlib
 import os
-from datetime import datetime, timezone
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..functions.gofmt import go_json_string, go_json_value, go_time_string
 from ..functions.otlp_proto import encode_logs
+from ..functions.records import map_records
 from .file_exporter import _json_doc_bytes, _records_in_order
-from .kafka_exporter import go_json_string
 
 __all__ = [
     "time_partition_key",
@@ -120,44 +119,6 @@ def s3_object_key(
     return key
 
 
-def _go_ts_string(ns: int) -> str:
-    """pcommon.Timestamp's ``%s`` rendering (`sumo_marshaler.go:127,134`):
-    Go ``time.Time.String()`` in UTC — fraction trimmed of trailing
-    zeros, omitted when zero."""
-    sec, frac = divmod(int(ns), 1_000_000_000)
-    dt = datetime.fromtimestamp(sec, tz=timezone.utc)
-    base = dt.strftime("%Y-%m-%d %H:%M:%S")
-    if frac:
-        base += f".{frac:09d}".rstrip("0")
-    return base + " +0000 UTC"
-
-
-def _go_json_value(v) -> bytes:
-    """Go ``encoding/json`` bytes for the sumo ``fields``/``message``
-    values (`sumo_marshaler.go:62-68,142-154`): map keys sorted, strings
-    HTML-escaped (encoding/json, unlike the structform path the ES
-    exporter takes)."""
-    if v is None:
-        return b"null"
-    if isinstance(v, bool):
-        return b"true" if v else b"false"
-    if isinstance(v, (int, float)):
-        import json
-
-        return json.dumps(v).encode()
-    if isinstance(v, str):
-        return go_json_string(v)
-    if isinstance(v, dict):
-        items = [
-            go_json_string(str(k)) + b":" + _go_json_value(v[k])
-            for k in sorted(v, key=str)
-        ]
-        return b"{" + b",".join(items) + b"}"
-    if isinstance(v, (list, tuple)):
-        return b"[" + b",".join(_go_json_value(e) for e in v) + b"]"
-    return go_json_string(str(v))
-
-
 def sumo_json_line(rec: dict) -> bytes:
     """One sumo_ic log entry (`sumo_marshaler.go:76-140`): the three
     ``_source*`` resource attributes are REQUIRED (error when missing),
@@ -172,15 +133,15 @@ def sumo_json_line(rec: dict) -> bytes:
         raise ValueError(f"{e.args[0]} attribute does not exist") from None
     msg = dict(rec.get("attributes") or {})
     msg["log"] = rec.get("body")
-    date = _go_ts_string(int(rec.get("observed_time_unix_nano")
+    date = go_time_string(int(rec.get("observed_time_unix_nano")
                              or rec.get("time_unix_nano") or 0))
     return (
         b'{"date": ' + go_json_string(date)
         + b',"sourceName":' + go_json_string(str(sn))
         + b',"sourceHost":' + go_json_string(str(sh))
         + b',"sourceCategory":' + go_json_string(str(sc))
-        + b',"fields":' + _go_json_value(res)
-        + b',"message":' + _go_json_value(msg)
+        + b',"fields":' + go_json_value(res)
+        + b',"message":' + go_json_value(msg)
         + b"}\n"
     )
 
@@ -292,6 +253,8 @@ def write_s3_objects(
     return keyed.groupBy(*gcols).applyInPandas(write_group, _MANIFEST_SCHEMA)
 
 
+_SUMO_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
+
 _SUMO_COLS = (
     "time_unix_nano",
     "body",
@@ -311,19 +274,12 @@ def sumo_lines(df: DataFrame) -> DataFrame:
     if "observed_time_unix_nano" in df.columns:
         cols.append("observed_time_unix_nano")
 
-    @F.pandas_udf(T.StringType())
-    def marshal(struct: pd.DataFrame) -> pd.Series:
-        out = []
-        for row in struct.itertuples(index=False):
-            rec = dict(zip(struct.columns, row))
-            rec["attributes"] = dict(rec.get("attributes") or {})
-            rec["resource"] = dict(rec.get("resource") or {})
-            out.append(sumo_json_line(rec).decode("utf-8").rstrip("\n"))
-        return pd.Series(out, dtype=object)
+    def one(rec: dict) -> list[dict]:
+        rec["attributes"] = dict(rec.get("attributes") or {})
+        rec["resource"] = dict(rec.get("resource") or {})
+        return [{"value": sumo_json_line(rec).decode("utf-8").rstrip("\n")}]
 
-    return df.select(
-        marshal(F.struct(*[F.col(c) for c in cols])).alias("value")
-    )
+    return map_records(df.select(*cols), one, _SUMO_SCHEMA)
 
 
 def read_s3_body_objects(spark: SparkSession, bucket_root: str,

@@ -20,18 +20,16 @@ Reference behavior
   LogData is still emitted carrying only the resource/scope tags
   (`:89-92` early return after resource/scope application).
 
-Spark shape: zero-shuffle ``mapInPandas``; the ordered tag list is
+Spark shape: one ``map_records`` pass; the ordered tag list is
 emitted as a JSON array string so order survives the flat schema.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from .s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_value
+from ..functions.records import map_records
 
 __all__ = ["skywalking_log_data", "skywalking_log_rows"]
 
@@ -40,8 +38,8 @@ def _pairs_json(pairs: list[tuple[str, str]]) -> str:
     return (
         b"["
         + b",".join(
-            b'{"key":' + _go_json_value(k) + b',"value":'
-            + _go_json_value(v) + b"}"
+            b'{"key":' + go_json_value(k) + b',"value":'
+            + go_json_value(v) + b"}"
             for k, v in pairs
         )
         + b"]"
@@ -114,15 +112,4 @@ _SCHEMA = T.StructType(
 
 def skywalking_log_rows(df: DataFrame) -> DataFrame:
     """Flat log-record rows → LogData rows. Zero-shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    skywalking_log_data({c: row[c] for c in pdf.columns})
-                    for _, row in pdf.iterrows()
-                ],
-                columns=[f.name for f in _SCHEMA.fields],
-            )
-
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(df, lambda rec: [skywalking_log_data(rec)], _SCHEMA)

@@ -31,7 +31,7 @@ order (a valid serialization of the same event; deterministic reruns
 are a repo invariant). String escaping matches encoding/json/jsoniter
 (HTML escapes on — the kafka module's ``go_json_string``).
 
-Spark shape: PURE MAP (one pandas UDF), zero exchanges; at 100 TB the
+Spark shape: PURE MAP (one ``map_records`` pass), zero exchanges; at 100 TB the
 sink composes into any scan stage, and the reference's
 batchperresourceattr-by-[token, index] splitting (`factory.go:195`) is
 the existing `grouping.batch_per_attr_writes` keyed on
@@ -40,11 +40,10 @@ the existing `grouping.batch_per_attr_writes` keyed on
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .kafka_exporter import go_json_string
-from .s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_string, go_json_value
+from ..functions.records import map_records
 
 __all__ = ["map_record_to_hec_event", "hec_events"]
 
@@ -80,7 +79,7 @@ def _merge_value(fields: dict, key: str, v) -> None:
             fields[key] = list(v)
         else:
             fields[key] = (
-                _go_json_value(list(v)).decode("utf-8")
+                go_json_value(list(v)).decode("utf-8")
             )
     else:
         fields[key] = v
@@ -158,9 +157,9 @@ def marshal_hec_event(ev: dict) -> bytes:
         parts.append(b'"sourcetype":' + go_json_string(str(ev["sourcetype"])))
     if ev["index"]:
         parts.append(b'"index":' + go_json_string(str(ev["index"])))
-    parts.append(b'"event":' + _go_json_value(ev["event"]))
+    parts.append(b'"event":' + go_json_value(ev["event"]))
     if ev["fields"]:
-        parts.append(b'"fields":' + _go_json_value(ev["fields"]))
+        parts.append(b'"fields":' + go_json_value(ev["fields"]))
     return b"{" + b",".join(parts) + b"}"
 
 
@@ -209,28 +208,18 @@ def hec_events(
                 ),
             )
 
-    @F.pandas_udf(_HEC_SCHEMA)
-    def marshal(struct: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for row in struct.itertuples(index=False):
-            rec = dict(zip(struct.columns, row))
-            rec["attributes"] = dict(rec.get("attributes") or {})
-            rec["resource"] = dict(rec.get("resource") or {})
-            ev = map_record_to_hec_event(
-                rec, source=source, sourcetype=sourcetype, index=index
-            )
-            rows.append(
-                {
-                    "index": ev["index"],
-                    "host": ev["host"],
-                    "value": marshal_hec_event(ev).decode("utf-8"),
-                }
-            )
-        return pd.DataFrame(rows, columns=["index", "host", "value"])
+    def one(rec: dict) -> list[dict]:
+        rec["attributes"] = dict(rec.get("attributes") or {})
+        rec["resource"] = dict(rec.get("resource") or {})
+        ev = map_record_to_hec_event(
+            rec, source=source, sourcetype=sourcetype, index=index
+        )
+        return [
+            {
+                "index": ev["index"],
+                "host": ev["host"],
+                "value": marshal_hec_event(ev).decode("utf-8"),
+            }
+        ]
 
-    res = marshal(F.struct(*[F.col(c) for c in _REC_COLS]))
-    return work.select(
-        res.getField("index").alias("index"),
-        res.getField("host").alias("host"),
-        res.getField("value").alias("value"),
-    )
+    return map_records(work.select(*_REC_COLS), one, _HEC_SCHEMA)

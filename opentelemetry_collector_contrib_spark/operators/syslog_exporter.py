@@ -39,8 +39,10 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from ..functions.gofmt import go_time_rfc3339nano
+from ..functions.records import map_records
 
 __all__ = ["format_rfc5424", "format_rfc3164", "syslog_lines"]
 
@@ -52,17 +54,6 @@ _EMPTY = "-"
 def _attr(attrs: dict, name: str, default: str) -> str:
     v = attrs.get(name)
     return default if v is None else str(v)
-
-
-def _rfc3339_nano(ns: int) -> str:
-    """Go ``time.RFC3339Nano`` for a UTC instant: trailing fraction
-    zeros trimmed, whole seconds bare, ``Z`` suffix."""
-    sec, frac = divmod(int(ns), 1_000_000_000)
-    dt = datetime.fromtimestamp(sec, tz=timezone.utc)
-    base = dt.strftime("%Y-%m-%dT%H:%M:%S")
-    if frac:
-        base += ("." + f"{frac:09d}").rstrip("0")
-    return base + "Z"
 
 
 def _structured_data(attrs: dict) -> str:
@@ -92,7 +83,7 @@ def format_rfc5424(rec: dict, octet_counting: bool = False) -> str:
     attrs = dict(rec.get("attributes") or {})
     pri = _attr(attrs, "priority", str(_DEFAULT_PRIORITY))
     ver = _attr(attrs, "version", str(_VERSION_RFC5424))
-    ts = _rfc3339_nano(int(rec.get("time_unix_nano") or 0))
+    ts = go_time_rfc3339nano(int(rec.get("time_unix_nano") or 0))
     host = _attr(attrs, "hostname", _EMPTY)
     app = _attr(attrs, "appname", _EMPTY)
     pid = _attr(attrs, "proc_id", _EMPTY)
@@ -147,22 +138,20 @@ def syslog_lines(
             "attributes", F.lit(None).cast("map<string,string>")
         )
 
-    @F.pandas_udf(T.StringType())
-    def render(struct: pd.DataFrame) -> pd.Series:
-        out = []
-        for row in struct.itertuples(index=False):
-            rec = dict(zip(struct.columns, row))
-            rec["attributes"] = dict(rec.get("attributes") or {})
-            out.append(
-                format_rfc5424(rec, octet_counting)
-                if protocol == "rfc5424"
-                else format_rfc3164(rec)
-            )
-        return pd.Series(out, dtype=object)
+    def one(row: dict) -> list[dict]:
+        rec = {
+            "time_unix_nano": row["time_unix_nano"],
+            "attributes": dict(row["attributes"] or {}),
+        }
+        line = (
+            format_rfc5424(rec, octet_counting)
+            if protocol == "rfc5424"
+            else format_rfc3164(rec)
+        )
+        return [{**{c: row[c] for c in keep}, "value": line}]
 
-    return work.select(
-        *[F.col(c) for c in keep],
-        render(
-            F.struct(F.col("time_unix_nano"), F.col("attributes"))
-        ).alias("value"),
+    schema = T.StructType(
+        [work.schema[c] for c in keep] + [T.StructField("value", T.StringType())]
     )
+    cols = list(dict.fromkeys([*keep, "time_unix_nano", "attributes"]))
+    return map_records(work.select(*cols), one, schema)

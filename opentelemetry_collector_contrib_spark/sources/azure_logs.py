@@ -29,7 +29,7 @@ Divergence note: typed attribute values render to strings — scalars
 verbatim, structured values as Go ``encoding/json`` bytes (this repo's
 flat schema is string-typed, as in ``kafka_receiver``'s json mode).
 
-Spark shape: zero-shuffle ``mapInPandas``; the per-resource regroup is
+Spark shape: one ``map_records`` pass; the per-resource regroup is
 the denormalized resource map on each row, no exchange. Malformed JSON
 raises (the receiver propagates unmarshal errors).
 """
@@ -39,13 +39,12 @@ from __future__ import annotations
 import calendar
 import json
 import re
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame
 
-from ..operators.s3_exporter import _go_json_value
-from .readers import FLAT_LOG_SCHEMA
+from ..datamodel import FLAT_LOG_SCHEMA
+from ..functions.gofmt import go_json_value
+from ..functions.records import as_text, map_records
 
 __all__ = ["azure_log_records", "iso8601_to_ns", "parse_azure_body"]
 
@@ -86,7 +85,7 @@ def iso8601_to_ns(s: str) -> int:
 def _render(v) -> str:
     if isinstance(v, str):
         return v
-    return _go_json_value(v).decode("utf-8")
+    return go_json_value(v).decode("utf-8")
 
 
 def _set_if(attrs: dict, key: str, value) -> None:
@@ -178,22 +177,10 @@ def parse_azure_body(body: str) -> list[dict]:
     return out
 
 
-_FLAT_SCHEMA = FLAT_LOG_SCHEMA  # the repo-wide flat record shape (sources/readers)
-
-
 def azure_log_records(df: DataFrame, value_col: str = "value") -> DataFrame:
     """Azure Event Hub / Blob payloads → flat log records, zero-shuffle."""
     src = df.select(df[value_col].alias("value"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for body in pdf["value"]:
-                if isinstance(body, (bytes, bytearray)):
-                    body = bytes(body).decode("utf-8")
-                rows.extend(parse_azure_body(body))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
-
-    return src.mapInPandas(gen, _FLAT_SCHEMA)
+    return map_records(
+        src, lambda row: parse_azure_body(as_text(row["value"])), FLAT_LOG_SCHEMA
+    )

@@ -26,7 +26,7 @@ Divergence note: Go's ParseInt/ParseFloat reject ``_`` digit
 separators and non-ASCII digits that Python would accept — the parser
 guards both so malformed-line behavior matches.
 
-Spark shape: zero-shuffle ``mapInPandas`` — line-parallel decode, rule
+Spark shape: one ``map_records`` pass — line-parallel decode, rule
 regexes compiled once per executor batch iterator, no exchange.
 Malformed lines are dropped (the transport reporter counts-and-continues).
 """
@@ -35,25 +35,14 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame
+
+from ..datamodel import DATAPOINT_SCHEMA
+from ..functions.gofmt import go_parse_float, go_parse_int
+from ..functions.records import map_records
 
 __all__ = ["RegexRule", "parse_carbon_line", "carbon_datapoints"]
-
-_INT_RE = re.compile(r"^[+-]?[0-9]+$")
-
-
-def _parse_int(s: str) -> int | None:
-    return int(s) if _INT_RE.match(s) else None
-
-
-def _parse_float(s: str) -> float:
-    if "_" in s:
-        raise ValueError(f"invalid float {s!r}")
-    return float(s)
-
 
 class RegexRule:
     """One `regex_parser.go` rule (compiled eagerly, validation parity
@@ -143,16 +132,16 @@ def parse_carbon_line(
     path, value_str, ts_str = parts
     name, attrs, kind = _parse_path(path, rules, name_separator)
 
-    ts_int = _parse_int(ts_str)
+    ts_int = go_parse_int(ts_str)
     if ts_int is not None:
         ts_ns = ts_int * 1_000_000_000
     else:
-        dbl = _parse_float(ts_str)
+        dbl = go_parse_float(ts_str)
         frac, sec = math.modf(dbl)
         ts_ns = int(sec) * 1_000_000_000 + int(frac * 1e9)
 
-    int_val = _parse_int(value_str)
-    dbl_val = None if int_val is not None else _parse_float(value_str)
+    int_val = go_parse_int(value_str)
+    dbl_val = None if int_val is not None else go_parse_float(value_str)
     return {
         "name": name,
         "kind": kind,
@@ -162,19 +151,6 @@ def parse_carbon_line(
         "ts_ns": ts_ns,
         "attrs": attrs,
     }
-
-
-_DP_SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("is_int", T.BooleanType()),
-        T.StructField("int_value", T.LongType()),
-        T.StructField("double_value", T.DoubleType()),
-        T.StructField("ts_ns", T.LongType()),
-        T.StructField("attrs", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
 
 
 def carbon_datapoints(
@@ -188,18 +164,10 @@ def carbon_datapoints(
     Malformed lines are dropped (module docstring)."""
     src = df.select(df[line_col].alias("line"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for line in pdf["line"]:
-                try:
-                    rows.append(
-                        parse_carbon_line(line, rules, name_separator)
-                    )
-                except ValueError:
-                    continue
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _DP_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        try:
+            return [parse_carbon_line(row["line"], rules, name_separator)]
+        except ValueError:
+            return []
 
-    return src.mapInPandas(gen, _DP_SCHEMA)
+    return map_records(src, one, DATAPOINT_SCHEMA)

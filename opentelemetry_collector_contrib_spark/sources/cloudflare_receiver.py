@@ -29,7 +29,7 @@ strings — scalars via Go ``encoding/json`` (bools ``true``/``false``,
 shortest floats), the body as the object's Go-JSON bytes with sorted
 keys — because this repo's flat schema is string-typed.
 
-Spark shape: zero-shuffle ``mapInPandas``.
+Spark shape: one ``map_records`` pass.
 """
 
 from __future__ import annotations
@@ -37,13 +37,12 @@ from __future__ import annotations
 import calendar
 import json
 import re
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame
 
-from ..operators.s3_exporter import _go_json_value
-from .readers import FLAT_LOG_SCHEMA
+from ..datamodel import FLAT_LOG_SCHEMA
+from ..functions.gofmt import go_json_value
+from ..functions.records import as_text, map_records
 
 __all__ = ["cloudflare_log_records", "parse_cloudflare_payload"]
 
@@ -94,7 +93,7 @@ def _severity(v) -> tuple[int, str]:
 def _render(v) -> str:
     if isinstance(v, str):
         return v
-    return _go_json_value(v).decode("utf-8")
+    return go_json_value(v).decode("utf-8")
 
 
 def parse_cloudflare_payload(
@@ -141,7 +140,7 @@ def parse_cloudflare_payload(
                     "time_unix_nano": ns,
                     "severity_number": sev_num,
                     "severity_text": sev_text,
-                    "body": _go_json_value(log).decode("utf-8"),
+                    "body": go_json_value(log).decode("utf-8"),
                     "attributes": attrs,
                     "resource": resource,
                     "scope_name": _SCOPE,
@@ -150,9 +149,6 @@ def parse_cloudflare_payload(
                 }
             )
     return out
-
-
-_FLAT_SCHEMA = FLAT_LOG_SCHEMA  # the repo-wide flat record shape (sources/readers)
 
 
 def cloudflare_log_records(
@@ -165,21 +161,11 @@ def cloudflare_log_records(
     """Logpush payload DataFrame → flat log records, zero-shuffle."""
     src = df.select(df[value_col].alias("value"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for body in pdf["value"]:
-                if isinstance(body, (bytes, bytearray)):
-                    body = bytes(body).decode("utf-8")
-                rows.extend(
-                    parse_cloudflare_payload(
-                        body,
-                        timestamp_field=timestamp_field,
-                        attributes=attributes,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        return parse_cloudflare_payload(
+            as_text(row["value"]),
+            timestamp_field=timestamp_field,
+            attributes=attributes,
+        )
 
-    return src.mapInPandas(gen, _FLAT_SCHEMA)
+    return map_records(src, one, FLAT_LOG_SCHEMA)

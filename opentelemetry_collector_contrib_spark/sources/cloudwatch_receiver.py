@@ -16,17 +16,16 @@ Reference behavior (`receiver/awscloudwatchreceiver/logs.go:230-288`):
   is faithful and the poll loop composes with the repo's
   checkpointed readers like the other API receivers.
 
-Spark shape: zero-shuffle ``mapInPandas`` over event rows
+Spark shape: one ``map_records`` pass over event rows
 (columns: ``timestamp_ms``, ``event_id``, ``message``,
 ``log_stream`` nullable, plus a ``log_group`` column).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from ..functions.records import map_records
 
 __all__ = ["NO_STREAM_NAME", "cloudwatch_log_records"]
 
@@ -43,6 +42,12 @@ _SCHEMA = T.StructType(
 )
 
 
+def _nz(v):
+    if v is None or (isinstance(v, float) and v != v):
+        return None
+    return v
+
+
 def cloudwatch_log_records(
     df: DataFrame,
     region: str,
@@ -51,42 +56,29 @@ def cloudwatch_log_records(
 ) -> DataFrame:
     """FilterLogEvents event rows → flat records. Zero-shuffle."""
 
-    def nz(v):
-        if v is None or (isinstance(v, float) and v != v):
-            return None
-        return v
+    def one(row: dict) -> list[dict]:
+        ts = _nz(row.get("timestamp_ms"))
+        eid = _nz(row.get("event_id"))
+        msg = _nz(row.get("message"))
+        if ts is None or eid is None or msg is None:
+            return []  # nil timestamp/id/message skips the event
+        stream = _nz(row.get("log_stream"))
+        return [
+            {
+                "time_unix_nano": int(ts) * 1_000_000,
+                "observed_time_unix_nano": observed_ns,
+                "body": str(msg),
+                "attributes": {"id": str(eid)},
+                "resource": {
+                    "aws.region": region,
+                    "cloudwatch.log.group.name": str(
+                        _nz(row.get(log_group_col)) or ""
+                    ),
+                    "cloudwatch.log.stream": (
+                        str(stream) if stream is not None else NO_STREAM_NAME
+                    ),
+                },
+            }
+        ]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                ts = nz(row.get("timestamp_ms"))
-                eid = nz(row.get("event_id"))
-                msg = nz(row.get("message"))
-                if ts is None or eid is None or msg is None:
-                    continue  # nil timestamp/id/message skips the event
-                stream = nz(row.get("log_stream"))
-                out.append(
-                    {
-                        "time_unix_nano": int(ts) * 1_000_000,
-                        "observed_time_unix_nano": observed_ns,
-                        "body": str(msg),
-                        "attributes": {"id": str(eid)},
-                        "resource": {
-                            "aws.region": region,
-                            "cloudwatch.log.group.name": str(
-                                nz(row.get(log_group_col)) or ""
-                            ),
-                            "cloudwatch.log.stream": (
-                                str(stream)
-                                if stream is not None
-                                else NO_STREAM_NAME
-                            ),
-                        },
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _SCHEMA.fields]
-            )
-
-    return df.mapInPandas(gen, _SCHEMA)
+    return map_records(df, one, _SCHEMA)

@@ -30,19 +30,19 @@ Reference behavior (`receiver/collectdreceiver/collectd.go`):
   prefix, stripped of it (`receiver.go:145-160`) — the ``default_attrs``
   kwarg here.
 
-Spark shape: zero-shuffle ``mapInPandas``; malformed JSON raises (the
+Spark shape: one ``map_records`` pass; malformed JSON raises (the
 server responds 400 and consumes nothing).
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame
 
-from .carbon_receiver import _INT_RE
+from ..datamodel import DATAPOINT_SCHEMA
+from ..functions.gofmt import go_parse_int
+from ..functions.records import as_text, map_records
 from .wavefront_receiver import labels_from_name
 
 __all__ = ["collectd_datapoints", "parse_collectd_body"]
@@ -117,7 +117,7 @@ def parse_collectd_body(body: str, default_attrs: dict | None = None) -> list[di
             if not used_dsname:
                 _add_if(labels, "dsname", dsnames[i])
             raw = str(values[i])
-            int_val = int(raw) if _INT_RE.match(raw) else None
+            int_val = go_parse_int(raw)
             dbl_val = None if int_val is not None else float(raw)
             kind = (
                 "cumulative"
@@ -138,19 +138,6 @@ def parse_collectd_body(body: str, default_attrs: dict | None = None) -> list[di
     return out
 
 
-_DP_SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("is_int", T.BooleanType()),
-        T.StructField("int_value", T.LongType()),
-        T.StructField("double_value", T.DoubleType()),
-        T.StructField("ts_ns", T.LongType()),
-        T.StructField("attrs", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
-
 def collectd_datapoints(
     df: DataFrame,
     value_col: str = "value",
@@ -160,15 +147,8 @@ def collectd_datapoints(
     """collectd JSON body DataFrame → typed datapoint rows, zero-shuffle."""
     src = df.select(df[value_col].alias("value"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for body in pdf["value"]:
-                if isinstance(body, (bytes, bytearray)):
-                    body = bytes(body).decode("utf-8")
-                rows.extend(parse_collectd_body(body, default_attrs))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _DP_SCHEMA.fields]
-            )
-
-    return src.mapInPandas(gen, _DP_SCHEMA)
+    return map_records(
+        src,
+        lambda row: parse_collectd_body(as_text(row["value"]), default_attrs),
+        DATAPOINT_SCHEMA,
+    )

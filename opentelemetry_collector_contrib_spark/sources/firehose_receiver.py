@@ -42,7 +42,7 @@ Reference behavior:
   ``time.Now()``; this rebuild pins the response timestamp to 0 for
   determinism (same pin as the wavefront receiver's omitted-ts rule).
 
-Spark shape: zero-shuffle ``mapInPandas`` — one input row is one
+Spark shape: one ``map_records`` pass — one input row is one
 Firehose request, fan-out to datapoint rows carries the request_id so
 provenance survives. Error-message texts are concise equivalents, not
 byte-copies of Go's error strings (documented divergence).
@@ -53,10 +53,12 @@ from __future__ import annotations
 import base64
 import binascii
 import json
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from ..functions.records import map_records
 
 __all__ = [
     "firehose_cwmetrics",
@@ -300,12 +302,9 @@ _RESP_SCHEMA = T.StructType(
     ]
 )
 
-_DP_COLS = [f.name for f in _DP_SCHEMA.fields]
-_RESP_COLS = [f.name for f in _RESP_SCHEMA.fields]
-
 
 def _process_request(
-    row: pd.Series,
+    row: dict,
     common_col: Optional[str],
     access_key_col: Optional[str],
     expected_access_key: str,
@@ -336,23 +335,13 @@ def _process_request(
     return dps, resp
 
 
-def _runner(emit_dps: bool, common_col, access_key_col, expected_access_key):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dps: list[dict] = []
-            resps: list[dict] = []
-            for _, row in pdf.iterrows():
-                d, r = _process_request(
-                    row, common_col, access_key_col, expected_access_key
-                )
-                dps.extend(d)
-                resps.append(r)
-            if emit_dps:
-                yield pd.DataFrame(dps, columns=_DP_COLS)
-            else:
-                yield pd.DataFrame(resps, columns=_RESP_COLS)
-
-    return gen
+def _requests(df, request_id_col, body_col, common_col, access_key_col):
+    cols = [df[request_id_col].alias("request_id"), df[body_col].alias("body")]
+    if common_col:
+        cols.append(df[common_col].alias(common_col))
+    if access_key_col:
+        cols.append(df[access_key_col].alias(access_key_col))
+    return df.select(*cols)
 
 
 def firehose_cwmetrics(
@@ -365,14 +354,12 @@ def firehose_cwmetrics(
 ) -> DataFrame:
     """Firehose request rows → flat cwmetrics summary datapoints
     (rejected requests contribute no rows). Zero-shuffle."""
-    cols = [df[request_id_col].alias("request_id"), df[body_col].alias("body")]
-    if common_col:
-        cols.append(df[common_col].alias(common_col))
-    if access_key_col:
-        cols.append(df[access_key_col].alias(access_key_col))
-    return df.select(*cols).mapInPandas(
-        _runner(True, common_col, access_key_col, access_key), _DP_SCHEMA
-    )
+    src = _requests(df, request_id_col, body_col, common_col, access_key_col)
+
+    def one(row: dict) -> list[dict]:
+        return _process_request(row, common_col, access_key_col, access_key)[0]
+
+    return map_records(src, one, _DP_SCHEMA)
 
 
 def firehose_responses(
@@ -385,11 +372,9 @@ def firehose_responses(
 ) -> DataFrame:
     """Per-request Firehose response rows (status_code + errorMessage,
     `receiver.go:228-258`); response timestamp pinned to 0."""
-    cols = [df[request_id_col].alias("request_id"), df[body_col].alias("body")]
-    if common_col:
-        cols.append(df[common_col].alias(common_col))
-    if access_key_col:
-        cols.append(df[access_key_col].alias(access_key_col))
-    return df.select(*cols).mapInPandas(
-        _runner(False, common_col, access_key_col, access_key), _RESP_SCHEMA
-    )
+    src = _requests(df, request_id_col, body_col, common_col, access_key_col)
+
+    def one(row: dict) -> list[dict]:
+        return [_process_request(row, common_col, access_key_col, access_key)[1]]
+
+    return map_records(src, one, _RESP_SCHEMA)

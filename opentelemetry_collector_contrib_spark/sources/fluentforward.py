@@ -32,7 +32,7 @@ Forward Protocol Specification v1 it implements):
   byte-for-byte (`heartbeat.go:16-40`).
 
 The Spark rebuild keeps unmarshaling a pure, socket-free function over
-byte blobs: ``fluent_log_records`` is a zero-shuffle ``mapInPandas``
+byte blobs: ``fluent_log_records`` is one ``map_records`` pass
 over a DataFrame with one EVENT STREAM per row (a connection's bytes, a
 spool file, a kafka message...), so the decode runs message-parallel on
 whichever executor scanned the blob and composes into any downstream
@@ -62,10 +62,10 @@ import gzip
 import io
 import math
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from ..functions.records import map_records
 
 __all__ = [
     "EventTime",
@@ -583,35 +583,26 @@ def fluent_log_records(df: DataFrame, blob_col: str = "value") -> DataFrame:
     """Decode forward-protocol event streams into flat log records: one
     input row = one stream (connection payload / spool file), one output
     row per log record, ``fluent.tag`` folded into attributes like the
-    reference (`conversion.go:211,285,402`). Zero-shuffle mapInPandas —
+    reference (`conversion.go:211,285,402`). Zero-shuffle —
     decoding stays on the scanning executor and composes into any
     downstream parse/route stage without an exchange."""
     src = df.select(blob_col)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf[blob_col]:
-                recs, _acks = decode_event_stream(bytes(blob))
-                for rec in recs:
-                    rows.append(
-                        {
-                            "tag": _stringify(
-                                rec["attributes"][TAG_ATTRIBUTE_KEY]
-                            ),
-                            "time_unix_nano": rec["time_unix_nano"],
-                            "body": _stringify(rec["body"]),
-                            "attributes": {
-                                k: _stringify(v)
-                                for k, v in rec["attributes"].items()
-                            },
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLUENT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        recs, _acks = decode_event_stream(bytes(row[blob_col]))
+        return [
+            {
+                "tag": _stringify(rec["attributes"][TAG_ATTRIBUTE_KEY]),
+                "time_unix_nano": rec["time_unix_nano"],
+                "body": _stringify(rec["body"]),
+                "attributes": {
+                    k: _stringify(v) for k, v in rec["attributes"].items()
+                },
+            }
+            for rec in recs
+        ]
 
-    return src.mapInPandas(gen, _FLUENT_SCHEMA)
+    return map_records(src, one, _FLUENT_SCHEMA)
 
 
 def fluent_spool_listener(

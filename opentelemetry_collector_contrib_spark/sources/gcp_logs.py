@@ -29,19 +29,18 @@ to Go-JSON bytes (string-typed flat schema, as in ``kafka_receiver``'s
 json mode). Field iteration order is a Go map walk in the reference;
 output here is deterministic (input key order).
 
-Spark shape: zero-shuffle ``mapInPandas``; malformed JSON raises.
+Spark shape: one ``map_records`` pass; malformed JSON raises.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from ..operators.s3_exporter import _go_json_value
+from ..functions.gofmt import go_json_value
+from ..functions.records import as_text, map_records
 from .azure_logs import iso8601_to_ns
 
 __all__ = ["gcp_log_records", "parse_log_entry", "to_snake"]
@@ -66,7 +65,7 @@ def to_snake(s: str) -> str:
 def _render(v) -> str:
     if isinstance(v, str):
         return v
-    return _go_json_value(v).decode("utf-8")
+    return go_json_value(v).decode("utf-8")
 
 
 def _trace_id(trace: str) -> str:
@@ -177,15 +176,6 @@ def gcp_log_records(df: DataFrame, value_col: str = "value") -> DataFrame:
     """LogEntry JSON DataFrame → flat log records, zero-shuffle."""
     src = df.select(df[value_col].alias("value"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for body in pdf["value"]:
-                if isinstance(body, (bytes, bytearray)):
-                    body = bytes(body).decode("utf-8")
-                rows.append(parse_log_entry(body))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
-
-    return src.mapInPandas(gen, _FLAT_SCHEMA)
+    return map_records(
+        src, lambda row: [parse_log_entry(as_text(row["value"]))], _FLAT_SCHEMA
+    )

@@ -30,36 +30,24 @@ a Go map whose order is runtime-random, so sorted keys are the only
 deterministic pin; malformed JSON lines are skipped (the watch
 decoder would error the stream).
 
-Spark shape: zero-shuffle ``mapInPandas``.
+Spark shape: one ``map_records`` pass.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame
 
-from ..operators.s3_exporter import _go_json_value
+from ..datamodel import OBSERVED_LOG_SCHEMA
+from ..functions.gofmt import go_json_value, go_time_string
+from ..functions.records import as_text, map_records
 from .azure_logs import iso8601_to_ns
 
 __all__ = ["k8s_event_records", "k8s_object_records"]
 
 _SEVERITY = {"normal": 9, "warning": 13}
-
-_FLAT_SCHEMA = T.StructType(
-    [
-        T.StructField("time_unix_nano", T.LongType()),
-        T.StructField("observed_time_unix_nano", T.LongType()),
-        T.StructField("severity_number", T.IntegerType()),
-        T.StructField("severity_text", T.StringType()),
-        T.StructField("body", T.StringType()),
-        T.StructField("attributes", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("resource", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
 
 def _ts_or_zero(s) -> int:
     if not s or not isinstance(s, str):
@@ -70,20 +58,10 @@ def _ts_or_zero(s) -> int:
         return 0
 
 
-def _go_time_string(ns: int) -> str:
-    """``metav1.Time.String()`` for a UTC instant
-    (``2006-01-02 15:04:05.999999999 -0700 MST`` — zero time renders
-    Go's zero sentinel)."""
-    if ns == 0:
-        return "0001-01-01 00:00:00 +0000 UTC"
-    from datetime import datetime, timezone
-
-    sec, frac = divmod(ns, 1_000_000_000)
-    dt = datetime.fromtimestamp(sec, tz=timezone.utc)
-    base = dt.strftime("%Y-%m-%d %H:%M:%S")
-    if frac:
-        base += ("." + f"{frac:09d}".rstrip("0"))
-    return base + " +0000 UTC"
+def _metav1_string(ns: int) -> str:
+    """``metav1.Time.String()``: ``time.Time.String()``, where a missing
+    timestamp (0 here) is Go's zero time, not the Unix epoch."""
+    return go_time_string(ns) if ns else "0001-01-01 00:00:00 +0000 UTC"
 
 
 def _parse_event(line: str, observed_ns: int) -> Optional[dict]:
@@ -120,7 +98,7 @@ def _parse_event(line: str, observed_ns: int) -> Optional[dict]:
     attrs = {
         "k8s.event.reason": str(ev.get("reason", "") or ""),
         "k8s.event.action": str(ev.get("action", "") or ""),
-        "k8s.event.start_time": _go_time_string(
+        "k8s.event.start_time": _metav1_string(
             _ts_or_zero(meta.get("creationTimestamp"))
         ),
         "k8s.event.name": str(meta.get("name", "") or ""),
@@ -145,22 +123,11 @@ def k8s_event_records(
 ) -> DataFrame:
     """corev1.Event JSON lines → flat records. Zero-shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for line in pdf["value"]:
-                r = _parse_event(
-                    "" if line is None else str(line), observed_ns
-                )
-                if r is not None:
-                    out.append(r)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        r = _parse_event(as_text(row["value"]), observed_ns)
+        return [] if r is None else [r]
 
-    return df.select(df[line_col].alias("value")).mapInPandas(
-        gen, _FLAT_SCHEMA
-    )
+    return map_records(df.select(df[line_col].alias("value")), one, OBSERVED_LOG_SCHEMA)
 
 
 def k8s_object_records(
@@ -178,52 +145,40 @@ def k8s_object_records(
         raise ValueError("mode must be pull or watch")
     is_watch = mode == "watch"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                line = row["value"]
-                try:
-                    obj = json.loads("" if line is None else str(line))
-                except ValueError:
-                    continue
-                if not isinstance(obj, dict):
-                    continue
-                meta = obj.get("metadata") or {}
-                if not isinstance(meta, dict):
-                    continue
-                namespace = str(meta.get("namespace", "") or "")
-                resource = (
-                    {"k8s.namespace.name": namespace} if namespace else {}
-                )
-                attrs = {"k8s.resource.name": resource_name}
-                if is_watch:
-                    name = str(meta.get("name", "") or "")
-                    if name:
-                        attrs["event.domain"] = "k8s"
-                        attrs["event.name"] = name
-                    body_obj = {
-                        "type": str(row[watch_type_col] or ""),
-                        "object": obj,
-                    }
-                else:
-                    body_obj = obj
-                out.append(
-                    {
-                        "time_unix_nano": 0,
-                        "observed_time_unix_nano": observed_ns,
-                        "severity_number": 0,
-                        "severity_text": "",
-                        "body": _go_json_value(body_obj).decode(),
-                        "attributes": attrs,
-                        "resource": resource,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        try:
+            obj = json.loads(as_text(row["value"]))
+        except ValueError:
+            return []
+        if not isinstance(obj, dict):
+            return []
+        meta = obj.get("metadata") or {}
+        if not isinstance(meta, dict):
+            return []
+        namespace = str(meta.get("namespace", "") or "")
+        resource = {"k8s.namespace.name": namespace} if namespace else {}
+        attrs = {"k8s.resource.name": resource_name}
+        if is_watch:
+            name = str(meta.get("name", "") or "")
+            if name:
+                attrs["event.domain"] = "k8s"
+                attrs["event.name"] = name
+            body_obj = {"type": str(row[watch_type_col] or ""), "object": obj}
+        else:
+            body_obj = obj
+        return [
+            {
+                "time_unix_nano": 0,
+                "observed_time_unix_nano": observed_ns,
+                "severity_number": 0,
+                "severity_text": "",
+                "body": go_json_value(body_obj).decode(),
+                "attributes": attrs,
+                "resource": resource,
+            }
+        ]
 
     cols = [df[line_col].alias("value")]
     if is_watch:
         cols.append(df[watch_type_col].alias(watch_type_col))
-    return df.select(*cols).mapInPandas(gen, _FLAT_SCHEMA)
+    return map_records(df.select(*cols), one, OBSERVED_LOG_SCHEMA)

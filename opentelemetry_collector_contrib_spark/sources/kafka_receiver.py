@@ -45,7 +45,7 @@ ObservedTimestamp = time.Now() (`text_unmarshaler.go:34`,
 query outputs everywhere (rerun-stable oracles); observed time is
 therefore omitted, as in ``file_exporter.read_otlp_proto``.
 
-Scale: unmarshaling is a zero-shuffle ``mapInPandas`` — each message
+Scale: unmarshaling is one ``map_records`` pass — each message
 decodes on the executor that consumed it, message-parallel, so the plan
 composes into any downstream pipeline stage without an exchange.
 """
@@ -53,13 +53,13 @@ composes into any downstream pipeline stage without an exchange.
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
+from ..datamodel import FLAT_LOG_SCHEMA
 from ..functions.otlp_proto import decode_logs
-from ..operators.file_exporter import _FLAT_SCHEMA, _json_doc_records
+from ..functions.records import map_records
+from ..operators.file_exporter import _json_doc_records
 
 __all__ = ["kafka_log_records"]
 
@@ -134,64 +134,35 @@ def kafka_log_records(
     cols = ["value"] + (["headers"] if has_headers else [])
     src = df.select(*cols)
     out_schema = {
-        "otlp_proto": _FLAT_SCHEMA,
-        "otlp_json": _FLAT_SCHEMA,
+        "otlp_proto": FLAT_LOG_SCHEMA,
+        "otlp_json": FLAT_LOG_SCHEMA,
         "raw": _RAW_SCHEMA,
         "text": _TEXT_SCHEMA,
         "json": _JSON_SCHEMA,
     }[encoding]
-    out_cols = [f.name for f in out_schema.fields]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            headers = (
-                pdf["headers"] if has_headers else [None] * len(pdf)
-            )
-            for content, hdrs in zip(pdf["value"], headers):
-                buf = bytes(content)
-                res = _header_attrs(hdrs, header_keys)
-                if encoding == "raw":
-                    rows.append({"body": buf, "resource": res})
-                    continue
-                if encoding == "text":
-                    rows.append(
-                        {"body": buf.decode(text_encoding), "resource": res}
-                    )
-                    continue
-                if encoding == "json":
-                    val = json.loads(buf.decode("utf-8"))
-                    if not isinstance(val, dict):
-                        # jsoniter.Unmarshal into map[string]any fails on
-                        # non-objects (json_unmarshaler.go:26-28)
-                        raise ValueError(
-                            "json encoding requires a JSON object payload"
-                        )
-                    rows.append(
-                        {
-                            "body": {k: str(v) for k, v in val.items()},
-                            "resource": res,
-                        }
-                    )
-                    continue
-                recs = (
-                    decode_logs(buf)
-                    if encoding == "otlp_proto"
-                    else _json_doc_records(buf)
-                )
-                for rec in recs:
-                    rec.pop("observed_time_unix_nano", None)
-                    rec["body"] = (
-                        None if rec["body"] is None else str(rec["body"])
-                    )
-                    rec["attributes"] = {
-                        k: str(v) for k, v in rec["attributes"].items()
-                    }
-                    rec["resource"] = {
-                        **{k: str(v) for k, v in rec["resource"].items()},
-                        **res,
-                    }
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=out_cols)
+    def one(row: dict) -> list[dict]:
+        buf = bytes(row["value"])
+        res = _header_attrs(row.get("headers"), header_keys)
+        if encoding == "raw":
+            return [{"body": buf, "resource": res}]
+        if encoding == "text":
+            return [{"body": buf.decode(text_encoding), "resource": res}]
+        if encoding == "json":
+            val = json.loads(buf.decode("utf-8"))
+            if not isinstance(val, dict):
+                # jsoniter.Unmarshal into map[string]any fails on
+                # non-objects (json_unmarshaler.go:26-28)
+                raise ValueError("json encoding requires a JSON object payload")
+            return [{"body": {k: str(v) for k, v in val.items()}, "resource": res}]
+        recs = decode_logs(buf) if encoding == "otlp_proto" else _json_doc_records(buf)
+        for rec in recs:
+            rec["body"] = None if rec["body"] is None else str(rec["body"])
+            rec["attributes"] = {k: str(v) for k, v in rec["attributes"].items()}
+            rec["resource"] = {
+                **{k: str(v) for k, v in rec["resource"].items()},
+                **res,
+            }
+        return recs
 
-    return src.mapInPandas(gen, out_schema)
+    return map_records(src, one, out_schema)

@@ -28,18 +28,17 @@ emits — one row per entry with its stream's ``labels`` string — which is
 exactly the shape iterating the push proto's streams×entries yields, so
 exporter output round-trips through this module by construction.
 
-Scale: unmarshaling is a zero-shuffle ``mapInPandas`` — each entry
+Scale: unmarshaling is one ``map_records`` pass — each entry
 decodes on the executor that received it, entry-parallel, composing into
 any downstream stage without an exchange.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from pyspark.sql import DataFrame
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
-from .readers import FLAT_LOG_SCHEMA
+from ..datamodel import FLAT_LOG_SCHEMA
+from ..functions.records import map_records
 
 __all__ = ["loki_log_records", "parse_label_string"]
 
@@ -144,9 +143,6 @@ def parse_label_string(labels: str) -> dict[str, str]:
     return out
 
 
-_FLAT_SCHEMA = FLAT_LOG_SCHEMA  # the repo-wide flat record shape (sources/readers)
-
-
 def loki_log_records(df: DataFrame, *, keep_timestamp: bool = True) -> DataFrame:
     """Loki push entries (``labels`` string, ``ts_ns`` long, ``line``
     string) → flat log records (`loki_to_otlp.go:19-82`).
@@ -159,42 +155,34 @@ def loki_log_records(df: DataFrame, *, keep_timestamp: bool = True) -> DataFrame
     ResourceLogs/ScopeLogs the translator allocates."""
     src = df.select("labels", "ts_ns", "line")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, dict | None] = {}
-        for pdf in batches:
-            rows: list[dict] = []
-            for labels, ts_ns, line in zip(
-                pdf["labels"], pdf["ts_ns"], pdf["line"]
-            ):
-                if labels not in cache:
-                    try:
-                        parsed = parse_label_string(labels)
-                        cache[labels] = {
-                            k: v
-                            for k, v in parsed.items()
-                            if not k.startswith("__")
-                        }
-                    except ValueError:
-                        cache[labels] = None  # malformed stream: skip
-                attrs = cache[labels]
-                if attrs is None:
-                    continue
-                ns = int(ts_ns) if ts_ns is not None else 0
-                rows.append(
-                    {
-                        "time_unix_nano": ns if keep_timestamp and ns else 0,
-                        "severity_number": 0,
-                        "severity_text": "",
-                        "body": line,
-                        "attributes": attrs,
-                        "resource": {},
-                        "scope_name": "",
-                        "trace_id": "",
-                        "span_id": "",
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    streams: dict[str, dict | None] = {}  # labels → attributes, per task
 
-    return src.mapInPandas(gen, _FLAT_SCHEMA)
+    def one(row: dict) -> list[dict]:
+        labels = row["labels"]
+        if labels not in streams:
+            try:
+                parsed = parse_label_string(labels)
+                streams[labels] = {
+                    k: v for k, v in parsed.items() if not k.startswith("__")
+                }
+            except ValueError:
+                streams[labels] = None  # malformed stream: skip
+        attrs = streams[labels]
+        if attrs is None:
+            return []
+        ns = int(row["ts_ns"]) if row["ts_ns"] is not None else 0
+        return [
+            {
+                "time_unix_nano": ns if keep_timestamp and ns else 0,
+                "severity_number": 0,
+                "severity_text": "",
+                "body": row["line"],
+                "attributes": attrs,
+                "resource": {},
+                "scope_name": "",
+                "trace_id": "",
+                "span_id": "",
+            }
+        ]
+
+    return map_records(src, one, FLAT_LOG_SCHEMA)

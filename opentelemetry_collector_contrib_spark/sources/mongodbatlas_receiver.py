@@ -30,7 +30,7 @@ no portable meaning); non-string attribute values render to Go-JSON
 bytes in the string-typed flat schema (same note as kafka/gcp
 receivers); observed time is a pinned parameter.
 
-Spark shape: zero-shuffle ``mapInPandas``.
+Spark shape: one ``map_records`` pass.
 """
 
 from __future__ import annotations
@@ -38,12 +38,13 @@ from __future__ import annotations
 import json
 import re
 from datetime import datetime
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame
 
-from ..operators.s3_exporter import _go_json_value
+from ..datamodel import OBSERVED_LOG_SCHEMA
+from ..functions.gofmt import go_json_value
+from ..functions.records import as_text, map_records
 
 __all__ = [
     "mongodb_audit_records",
@@ -88,7 +89,7 @@ def parse_atlas_timestamp(date: str, version: str = "4.4") -> int:
 
 
 def _render(v) -> str:
-    return v if isinstance(v, str) else _go_json_value(v).decode()
+    return v if isinstance(v, str) else go_json_value(v).decode()
 
 
 def _parse_json_entry(line: str) -> Optional[dict]:
@@ -135,19 +136,6 @@ def _parse_console_entry(line: str) -> Optional[dict]:
     }
 
 
-_FLAT_SCHEMA = T.StructType(
-    [
-        T.StructField("time_unix_nano", T.LongType()),
-        T.StructField("observed_time_unix_nano", T.LongType()),
-        T.StructField("severity_number", T.IntegerType()),
-        T.StructField("severity_text", T.StringType()),
-        T.StructField("body", T.StringType()),
-        T.StructField("attributes", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("resource", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
-
 def _resource(org, project, cluster, region, provider, hostname) -> dict:
     return {
         "mongodb_atlas.org": org,
@@ -177,46 +165,32 @@ def mongodb_log_records(
     res = _resource(org, project, cluster, region, provider, hostname)
     is_42 = version == "4.2"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for line in pdf["value"]:
-                line = "" if line is None else str(line)
-                e = (
-                    _parse_console_entry(line)
-                    if is_42
-                    else _parse_json_entry(line)
-                )
-                if e is None:
-                    continue
-                sev_num = SEVERITY_MAP.get(e["severity"])
-                attrs = {k: _render(v) for k, v in e["attr"].items()}
-                attrs["message"] = e["message"]
-                attrs["component"] = e["component"]
-                attrs["context"] = e["context"]
-                if not is_42:
-                    attrs["id"] = str(e["id"])
-                attrs["log_name"] = log_name
-                out.append(
-                    {
-                        "time_unix_nano": parse_atlas_timestamp(
-                            e["date"], version
-                        ),
-                        "observed_time_unix_nano": observed_ns,
-                        "severity_number": sev_num or 0,
-                        "severity_text": e["severity"] if sev_num else "",
-                        "body": line,
-                        "attributes": attrs,
-                        "resource": res,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        line = as_text(row["value"])
+        e = _parse_console_entry(line) if is_42 else _parse_json_entry(line)
+        if e is None:
+            return []
+        sev_num = SEVERITY_MAP.get(e["severity"])
+        attrs = {k: _render(v) for k, v in e["attr"].items()}
+        attrs["message"] = e["message"]
+        attrs["component"] = e["component"]
+        attrs["context"] = e["context"]
+        if not is_42:
+            attrs["id"] = str(e["id"])
+        attrs["log_name"] = log_name
+        return [
+            {
+                "time_unix_nano": parse_atlas_timestamp(e["date"], version),
+                "observed_time_unix_nano": observed_ns,
+                "severity_number": sev_num or 0,
+                "severity_text": e["severity"] if sev_num else "",
+                "body": line,
+                "attributes": attrs,
+                "resource": res,
+            }
+        ]
 
-    return df.select(df[line_col].alias("value")).mapInPandas(
-        gen, _FLAT_SCHEMA
-    )
+    return map_records(df.select(df[line_col].alias("value")), one, OBSERVED_LOG_SCHEMA)
 
 
 def mongodb_audit_records(
@@ -236,7 +210,7 @@ def mongodb_audit_records(
     `mongodb_event_to_logdata.go:46-145`)."""
     res = _resource(org, project, cluster, region, provider, hostname)
 
-    def one(line: str) -> Optional[dict]:
+    def record(line: str) -> Optional[dict]:
         try:
             doc = json.loads(line)
         except ValueError:
@@ -271,20 +245,20 @@ def mongodb_audit_records(
         param = doc.get("param") or {}
         if not isinstance(param, dict):
             return None
-        attrs["param"] = _go_json_value(param).decode()
+        attrs["param"] = go_json_value(param).decode()
         users = doc.get("users") or []
         roles = doc.get("roles") or []
         if not all(isinstance(u, dict) for u in users) or not all(
             isinstance(r, dict) for r in roles
         ):
             return None
-        attrs["users"] = _go_json_value(
+        attrs["users"] = go_json_value(
             [
                 {"user": str(u.get("user", "")), "db": str(u.get("db", ""))}
                 for u in users
             ]
         ).decode()
-        attrs["roles"] = _go_json_value(
+        attrs["roles"] = go_json_value(
             [
                 {"role": str(r.get("role", "")), "db": str(r.get("db", ""))}
                 for r in roles
@@ -305,17 +279,8 @@ def mongodb_audit_records(
             "resource": res,
         }
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for line in pdf["value"]:
-                r = one("" if line is None else str(line))
-                if r is not None:
-                    out.append(r)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        r = record(as_text(row["value"]))
+        return [] if r is None else [r]
 
-    return df.select(df[line_col].alias("value")).mapInPandas(
-        gen, _FLAT_SCHEMA
-    )
+    return map_records(df.select(df[line_col].alias("value")), one, OBSERVED_LOG_SCHEMA)

@@ -257,26 +257,6 @@ def read_multiline(
     )
 
 
-# The repo-wide flat log-record row shape — one OTLP LogRecord with its
-# resource/scope context denormalized on. Every wire-format receiver
-# (loki, splunk HEC, cloudflare, azure, webhook, kafka otlp modes, the
-# fileexporter readers) yields EXACTLY this schema so their outputs
-# union and feed the same downstream operators.
-FLAT_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("time_unix_nano", T.LongType()),
-        T.StructField("severity_number", T.IntegerType()),
-        T.StructField("severity_text", T.StringType()),
-        T.StructField("body", T.StringType()),
-        T.StructField("attributes", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("resource", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("scope_name", T.StringType()),
-        T.StructField("trace_id", T.StringType()),
-        T.StructField("span_id", T.StringType()),
-    ]
-)
-
-
 # OTLP/JSON: resourceLogs[].scopeLogs[].logRecords[]
 _OTLP_SCHEMA = T.StructType(
     [

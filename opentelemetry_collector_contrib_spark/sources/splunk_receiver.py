@@ -25,14 +25,13 @@ Documented divergences (both pin wall-clock/float state out of query
 outputs, the repo invariant):
 
 - non-string bodies and non-string field values render to their Go
-  ``encoding/json`` bytes (the ``kafka_exporter.go_json_string`` /
-  ``s3_exporter._go_json_value`` codec) — the reference keeps them as
-  typed pdata values; this repo's flat record schema is string-typed, as
-  in ``kafka_receiver``'s json mode;
+  ``encoding/json`` bytes (``functions.gofmt.go_json_value``) — the
+  reference keeps them as typed pdata values; this repo's flat record
+  schema is string-typed, as in ``kafka_receiver``'s json mode;
 - events the reference rejects per-value (`errCannotConvertValue`) can't
   occur here: every JSON value has a rendering.
 
-Scale: unmarshaling is a zero-shuffle ``mapInPandas`` — each request
+Scale: unmarshaling is one ``map_records`` pass — each request
 body decodes on the executor that received it; the (host, source,
 sourcetype, index) regroup the reference does in-memory per request is
 the denormalized resource map on each row, so no exchange is needed.
@@ -41,13 +40,12 @@ the denormalized resource map on each row, so no exchange is needed.
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame
 
-from ..operators.s3_exporter import _go_json_value
-from .readers import FLAT_LOG_SCHEMA
+from ..datamodel import FLAT_LOG_SCHEMA
+from ..functions.gofmt import go_json_value
+from ..functions.records import as_text, map_records
 
 __all__ = ["hec_log_records", "hec_raw_log_records", "parse_hec_events"]
 
@@ -56,15 +54,12 @@ _SOURCE_KEY = "com.splunk.source"
 _SOURCETYPE_KEY = "com.splunk.sourcetype"
 _INDEX_KEY = "com.splunk.index"
 
-_FLAT_SCHEMA = FLAT_LOG_SCHEMA  # the repo-wide flat record shape (sources/readers)
-
-
 def _render(v) -> str:
     """JSON value → string cell (module docstring: strings raw, anything
     else its Go encoding/json bytes — deterministic, sorted map keys)."""
     if isinstance(v, str):
         return v
-    return _go_json_value(v).decode("utf-8")
+    return go_json_value(v).decode("utf-8")
 
 
 def _event_time_ns(t) -> int:
@@ -149,22 +144,13 @@ def _event_to_record(ev: dict) -> dict:
 def hec_log_records(df: DataFrame, value_col: str = "value") -> DataFrame:
     """HEC event-endpoint bodies (one or more event JSON objects per
     ``value_col`` string) → flat log records (`splunk_to_logdata.go:
-    34-78`). Zero-shuffle mapInPandas; malformed payloads raise."""
+    34-78`). Zero-shuffle; malformed payloads raise."""
     src = df.select(df[value_col].alias("value"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for body in pdf["value"]:
-                if isinstance(body, (bytes, bytearray)):
-                    body = bytes(body).decode("utf-8")
-                for ev in parse_hec_events(body):
-                    rows.append(_event_to_record(ev))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        return [_event_to_record(ev) for ev in parse_hec_events(as_text(row["value"]))]
 
-    return src.mapInPandas(gen, _FLAT_SCHEMA)
+    return map_records(src, one, FLAT_LOG_SCHEMA)
 
 
 def hec_raw_log_records(
@@ -189,33 +175,21 @@ def hec_raw_log_records(
     res = _metadata_resource(host, source, sourcetype, index)
     src = df.select(df[value_col].alias("value"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for body in pdf["value"]:
-                if isinstance(body, (bytes, bytearray)):
-                    body = bytes(body).decode("utf-8")
-                pieces = (
-                    [body]
-                    if splitting == "none"
-                    else body.splitlines()
-                )
-                for piece in pieces:
-                    rows.append(
-                        {
-                            "time_unix_nano": int(timestamp_ns),
-                            "severity_number": 0,
-                            "severity_text": "",
-                            "body": piece,
-                            "attributes": {},
-                            "resource": res,
-                            "scope_name": "",
-                            "trace_id": "",
-                            "span_id": "",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        body = as_text(row["value"])
+        return [
+            {
+                "time_unix_nano": int(timestamp_ns),
+                "severity_number": 0,
+                "severity_text": "",
+                "body": piece,
+                "attributes": {},
+                "resource": res,
+                "scope_name": "",
+                "trace_id": "",
+                "span_id": "",
+            }
+            for piece in ([body] if splitting == "none" else body.splitlines())
+        ]
 
-    return src.mapInPandas(gen, _FLAT_SCHEMA)
+    return map_records(src, one, FLAT_LOG_SCHEMA)

@@ -42,7 +42,7 @@ are wall clock in the reference; here they are the caller's explicit
 invariant). Malformed lines are dropped (the reference's transport
 loop counts the error and keeps consuming).
 
-Spark shape: parse is a zero-shuffle ``mapInPandas``; counters and
+Spark shape: parse is one ``map_records`` pass; counters and
 gauges aggregate JVM-side (one exchange on the canonical group key —
 the gauge base-line window reuses the same hash partitioning as its
 groupBy, so AQE plans a single shuffle); only the weighted-percentile
@@ -53,10 +53,10 @@ not data, exactly like the loki label argument.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
+
+from ..functions.records import map_records
 
 __all__ = ["parse_statsd_line", "statsd_datapoints", "statsd_flush"]
 
@@ -185,28 +185,20 @@ def statsd_datapoints(
     )
     src = df.select(*cols)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for line_id, line, addr in zip(
-                pdf["line_id"], pdf["line"], pdf["addr"]
-            ):
-                try:
-                    p = parse_statsd_line(
-                        line,
-                        enable_metric_type=enable_metric_type,
-                        enable_simple_tags=enable_simple_tags,
-                    )
-                except ValueError:
-                    continue
-                p["line_id"] = int(line_id)
-                p["addr"] = addr
-                rows.append(p)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _DP_SCHEMA.fields]
+    def one(row: dict) -> list[dict]:
+        try:
+            p = parse_statsd_line(
+                row["line"],
+                enable_metric_type=enable_metric_type,
+                enable_simple_tags=enable_simple_tags,
             )
+        except ValueError:
+            return []
+        p["line_id"] = int(row["line_id"])
+        p["addr"] = row["addr"]
+        return [p]
 
-    return src.mapInPandas(gen, _DP_SCHEMA)
+    return map_records(src, one, _DP_SCHEMA)
 
 
 _FLUSH_COLS = [

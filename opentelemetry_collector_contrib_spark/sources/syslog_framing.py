@@ -20,7 +20,7 @@ the one receive-direction piece the repo's line readers don't already
 cover (plain newline-framed syslog TCP is `stream_socket_lines`).
 
 Spark shape: one row in = one connection's byte stream, one row out per
-frame (zero-shuffle ``mapInPandas``); frames feed the existing
+frame (one ``map_records`` pass); frames feed the existing
 ``operators.parse.syslog_parser``. At 100 TB framing composes into the
 scan — per-connection streams are independent.
 """
@@ -28,10 +28,10 @@ scan — per-connection streams are independent.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from ..functions.records import map_records
 
 __all__ = [
     "split_octet_frames",
@@ -118,31 +118,22 @@ def syslog_frame_lines(
     )
     src = df.select(*cols)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            conns, idxs, lines = [], [], []
-            for value, conn in zip(pdf["value"], pdf["conn"]):
-                stream = (
-                    bytes(value)
-                    if isinstance(value, (bytes, bytearray))
-                    else str(value).encode("utf-8")
-                )
-                if framing == "octet_counting":
-                    frames = [
-                        strip_octet_prefix(f)
-                        for f in split_octet_frames(stream)
-                    ]
-                else:
-                    frames = split_nontransparent_frames(
-                        stream, "LF" if framing == "lf" else "NUL"
-                    )
-                for i, f in enumerate(frames):
-                    conns.append(conn)
-                    idxs.append(i)
-                    lines.append(f.decode("utf-8", "replace"))
-            yield pd.DataFrame(
-                {"conn": conns, "frame_idx": idxs, "line": lines},
-                columns=["conn", "frame_idx", "line"],
+    def one(row: dict) -> list[dict]:
+        value = row["value"]
+        stream = (
+            bytes(value)
+            if isinstance(value, (bytes, bytearray))
+            else str(value).encode("utf-8")
+        )
+        if framing == "octet_counting":
+            frames = [strip_octet_prefix(f) for f in split_octet_frames(stream)]
+        else:
+            frames = split_nontransparent_frames(
+                stream, "LF" if framing == "lf" else "NUL"
             )
+        return [
+            {"conn": row["conn"], "frame_idx": i, "line": f.decode("utf-8", "replace")}
+            for i, f in enumerate(frames)
+        ]
 
-    return src.mapInPandas(gen, _OUT_SCHEMA)
+    return map_records(src, one, _OUT_SCHEMA)

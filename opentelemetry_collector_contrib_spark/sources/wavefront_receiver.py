@@ -24,18 +24,17 @@ Reference behavior (`wavefront_parser.go`):
   ORIGINAL name had no ``..`` collapse any ``..`` the removal produced
   (`wavefront_parser.go:116-139`).
 
-Spark shape: zero-shuffle ``mapInPandas``; malformed lines dropped
+Spark shape: one ``map_records`` pass; malformed lines dropped
 (transport counts-and-continues).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from pyspark.sql import DataFrame
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
-
-from .carbon_receiver import _INT_RE, _parse_float
+from ..datamodel import DATAPOINT_SCHEMA
+from ..functions.gofmt import go_parse_float, go_parse_int
+from ..functions.records import map_records
 
 __all__ = ["parse_wavefront_line", "wavefront_datapoints", "labels_from_name"]
 
@@ -138,8 +137,9 @@ def parse_wavefront_line(
     sub = rest.split(" ", 1)
     ts_str = sub[0]
     tags = sub[1] if len(sub) == 2 else ""
-    if _INT_RE.match(ts_str):
-        ts_ns = int(ts_str) * 1_000_000_000
+    ts_int = go_parse_int(ts_str)
+    if ts_int is not None:
+        ts_ns = ts_int * 1_000_000_000
     else:
         if "=" not in ts_str:
             raise ValueError(
@@ -154,8 +154,8 @@ def parse_wavefront_line(
     if extract_collectd_tags:
         name = _inject_collectd(name, attrs)
 
-    int_val = int(value_str) if _INT_RE.match(value_str) else None
-    dbl_val = None if int_val is not None else _parse_float(value_str)
+    int_val = go_parse_int(value_str)
+    dbl_val = None if int_val is not None else go_parse_float(value_str)
     return {
         "name": name,
         "kind": "gauge",
@@ -165,19 +165,6 @@ def parse_wavefront_line(
         "ts_ns": ts_ns,
         "attrs": attrs,
     }
-
-
-_DP_SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("is_int", T.BooleanType()),
-        T.StructField("int_value", T.LongType()),
-        T.StructField("double_value", T.DoubleType()),
-        T.StructField("ts_ns", T.LongType()),
-        T.StructField("attrs", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
 
 
 def wavefront_datapoints(
@@ -190,20 +177,14 @@ def wavefront_datapoints(
     Malformed lines are dropped (module docstring)."""
     src = df.select(df[line_col].alias("line"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for line in pdf["line"]:
-                try:
-                    rows.append(
-                        parse_wavefront_line(
-                            line, extract_collectd_tags=extract_collectd_tags
-                        )
-                    )
-                except ValueError:
-                    continue
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _DP_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        try:
+            return [
+                parse_wavefront_line(
+                    row["line"], extract_collectd_tags=extract_collectd_tags
+                )
+            ]
+        except ValueError:
+            return []
 
-    return src.mapInPandas(gen, _DP_SCHEMA)
+    return map_records(src, one, DATAPOINT_SCHEMA)

@@ -9,22 +9,19 @@ parameters become resource attributes; scope name is
 the record carries only the body (observed time is collector-core
 plumbing outside the converter).
 
-Spark shape: zero-shuffle ``mapInPandas``, body-parallel.
+Spark shape: one ``map_records`` pass, body-parallel.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from pyspark.sql import DataFrame
 
-import pandas as pd
-from pyspark.sql import DataFrame, types as T
-from .readers import FLAT_LOG_SCHEMA
+from ..datamodel import FLAT_LOG_SCHEMA
+from ..functions.records import as_text, map_records
 
 __all__ = ["webhook_log_records"]
 
 _SCOPE = "otlp/webhookevent"
-
-_FLAT_SCHEMA = FLAT_LOG_SCHEMA  # the repo-wide flat record shape (sources/readers)
 
 
 def webhook_log_records(
@@ -39,28 +36,20 @@ def webhook_log_records(
     res = {k: v for k, v in (query or {}).items() if v != ""}
     src = df.select(df[value_col].alias("value"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for body in pdf["value"]:
-                if isinstance(body, (bytes, bytearray)):
-                    body = bytes(body).decode("utf-8")
-                for line in body.splitlines():
-                    rows.append(
-                        {
-                            "time_unix_nano": 0,
-                            "severity_number": 0,
-                            "severity_text": "",
-                            "body": line,
-                            "attributes": {},
-                            "resource": res,
-                            "scope_name": _SCOPE,
-                            "trace_id": "",
-                            "span_id": "",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAT_SCHEMA.fields]
-            )
+    def one(row: dict) -> list[dict]:
+        return [
+            {
+                "time_unix_nano": 0,
+                "severity_number": 0,
+                "severity_text": "",
+                "body": line,
+                "attributes": {},
+                "resource": res,
+                "scope_name": _SCOPE,
+                "trace_id": "",
+                "span_id": "",
+            }
+            for line in as_text(row["value"]).splitlines()
+        ]
 
-    return src.mapInPandas(gen, _FLAT_SCHEMA)
+    return map_records(src, one, FLAT_LOG_SCHEMA)

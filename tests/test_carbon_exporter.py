@@ -6,11 +6,13 @@ Go float value ('f') and label ('g') formats, tag-key-only
 sanitization quirk, empty-name/empty-value skips, receiver
 round-trip."""
 
+from opentelemetry_collector_contrib_spark.functions.gofmt import (
+    go_format_float_f,
+    go_format_float_g,
+)
 from opentelemetry_collector_contrib_spark.operators.carbon_exporter import (
     build_path,
     carbon_lines,
-    go_format_float_f,
-    go_format_float_g,
     sanitize_tag_key,
 )
 

@@ -76,6 +76,16 @@ def test_event_time_preference(spark):
     assert r["time_unix_nano"] == TS_NS + 123456000  # eventTime wins
 
 
+def test_event_without_creation_time_is_go_zero_time(spark):
+    # metav1.Time{}.String(): Go's zero time, not the Unix epoch
+    df = spark.createDataFrame(
+        [(_event(metadata={"name": "e1", "uid": "u"}),)], "value string"
+    )
+    r = k8s_event_records(df).collect()[0]
+    assert r["attributes"]["k8s.event.start_time"] == \
+        "0001-01-01 00:00:00 +0000 UTC"
+
+
 def test_object_records_pull_and_watch(spark):
     obj = {"kind": "ConfigMap",
            "metadata": {"name": "cm1", "namespace": "ns2"},

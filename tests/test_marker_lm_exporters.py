@@ -74,3 +74,6 @@ def test_lm_log_inputs(spark):
     }
     assert r1["metadata"] == {"k": "v"}
     assert rows["b2"]["timestamp"] == "2024-01-01 00:00:01 +0000 UTC"
+    # no timestamp anywhere: pcommon.Timestamp(0).String() is the epoch
+    r0 = lm_log_inputs(df.where("time_unix_nano = 0")).collect()[0]
+    assert r0["timestamp"] == "1970-01-01 00:00:00 +0000 UTC"

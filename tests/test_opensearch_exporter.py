@@ -8,10 +8,13 @@ Go time.Time RFC 3339 nano-trimmed rendering."""
 
 import json
 
+from opentelemetry_collector_contrib_spark.functions.gofmt import (
+    go_time_rfc3339nano,
+    go_time_string,
+)
 from opentelemetry_collector_contrib_spark.operators.opensearch_exporter import (
     encode_log_data_model,
     get_index_name,
-    go_time_rfc3339nano,
     opensearch_bulk_lines,
     sso_log_record,
 )
@@ -24,6 +27,14 @@ def test_go_time_rendering():
     assert go_time_rfc3339nano(TS + 5) == "2024-01-01T00:00:00.000000005Z"
     assert go_time_rfc3339nano(TS + 123000000) == "2024-01-01T00:00:00.123Z"
     assert go_time_rfc3339nano(0) == "1970-01-01T00:00:00Z"
+
+
+def test_go_time_string():
+    assert go_time_string(TS) == "2024-01-01 00:00:00 +0000 UTC"
+    assert go_time_string(TS + 120) == "2024-01-01 00:00:00.00000012 +0000 UTC"
+    # pcommon.Timestamp(0).String() is the Unix epoch (a zero metav1.Time
+    # is Go's zero time instead: test_k8s_receivers)
+    assert go_time_string(0) == "1970-01-01 00:00:00 +0000 UTC"
 
 
 def test_index_name():

@@ -25,8 +25,8 @@ from opentelemetry_collector_contrib_spark.operators.file_exporter import (
     zstd_compress,
     zstd_decompress,
 )
+from opentelemetry_collector_contrib_spark.functions.gofmt import go_json_string
 from opentelemetry_collector_contrib_spark.operators.kafka_exporter import (
-    go_json_string,
     kafka_messages,
 )
 

@@ -66,7 +66,8 @@ def main() -> None:
         "",
         f"Source: driver queries at `{sf_dir}`. Checked properties: join strategy",
         "(broadcast vs sort-merge), shuffle count, Python-eval nodes, scan column",
-        "pruning and filter pushdown.",
+        "pruning and filter pushdown. `full_pipeline`'s aggregate and routed plan",
+        "shapes are pinned by `tests/test_physical_layout.py`.",
         "",
         "| query | broadcast joins | sort-merge joins | nested-loop joins | shuffles | py nodes | scan columns (pruned) |",
         "|---|---|---|---|---|---|---|",

@@ -21,8 +21,8 @@ print("zip ready")
 PY
 
 # Two cluster sizes for the scaling-efficiency gate (N and 4N executors).
-# In this sandbox there is no cluster manager; the pinned local[N] runs in
-# bench.py are the documented stand-in. On a real cluster:
+# Without a cluster manager, perfbench/run.py --trace 1 reports the 1-core vs
+# all-core scaling of one host instead. On a real cluster:
 #
 #   for EXECS in 8 32; do
 #     spark-submit \
