@@ -19,7 +19,7 @@ Layout
 - ``ottl``       : OTTL-subset parser + compiler → pyspark Column expressions
                    (`pkg/ottl/grammar.go`, plan-time compilation instead of
                    per-record closure interpretation)
-- ``plans``      : end-to-end pipeline assembly + checkpoint/lineage/resume
+- ``plans``      : end-to-end pipeline assembly + checkpointed exactly-once resume
 - ``streaming``  : Structured Streaming variants (foreachBatch router)
 """
 

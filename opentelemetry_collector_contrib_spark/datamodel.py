@@ -126,24 +126,18 @@ SOURCE_LOOKUP_SCHEMA = T.StructType(
     ]
 )
 
-# checkpoint and lineage rows, written by plans/checkpoint.py
-# CheckpointedRunner._append
+# The commit row of one chunk of the checkpointed job (plans/checkpoint.py):
+# its checkpoint and its lineage in one row, so one append commits both.
+# ``routed_schema`` is the routed rows' schema as JSON, which readers apply
+# to the committed data instead of inferring it.
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
         T.StructField("chunk_id", T.StringType(), False),
+        T.StructField("rows_in", T.LongType(), False),
         T.StructField("rows", T.LongType(), False),
         T.StructField("tokens", T.LongType(), False),
         T.StructField("wall_ms", T.LongType(), False),
-    ]
-)
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("rows_in", T.LongType(), True),
-        T.StructField("rows_out", T.LongType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
+        T.StructField("routed_schema", T.StringType(), False),
     ]
 )

@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-__all__ = ["as_text", "map_records"]
+__all__ = ["as_text", "map_records", "null_as_none"]
 
 
 def map_records(
@@ -47,6 +47,14 @@ def map_records(
             yield pd.DataFrame(out, columns=names)
 
     return df.mapInPandas(gen, schema)
+
+
+def null_as_none(value):
+    """A cell as ``map_records`` hands it over, with SQL NULL as ``None``:
+    pandas gives a null as ``None``, or as NaN in a numeric column."""
+    if value is None or (isinstance(value, float) and value != value):
+        return None
+    return value
 
 
 def as_text(value) -> str:

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, types as T
 
 from ..functions.gofmt import go_time_rfc3339nano
-from ..functions.records import map_records
+from ..functions.records import map_records, null_as_none
 
 __all__ = ["adx_log_rows"]
 
@@ -47,14 +47,8 @@ _SCHEMA = T.StructType(
 )
 
 
-def _nz(v):
-    if v is None or (isinstance(v, float) and v != v):
-        return None
-    return v
-
-
 def _adx_row(row: dict) -> dict:
-    rec = {c: _nz(v) for c, v in row.items()}
+    rec = {c: null_as_none(v) for c, v in row.items()}
     attrs = {str(k): str(v) for k, v in dict(rec.get("attributes") or {}).items()}
     if rec.get("scope_name"):
         attrs["scope.name"] = str(rec["scope_name"])

@@ -35,7 +35,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, types as T
 
 from ..functions.gofmt import go_format_float_f, go_format_float_g
-from ..functions.records import map_records
+from ..functions.records import map_records, null_as_none
 
 __all__ = ["build_path", "carbon_lines", "sanitize_tag_key"]
 
@@ -58,15 +58,6 @@ def build_path(name: str, attributes: Optional[dict]) -> str:
     return "".join(parts)
 
 
-def _opt(v):
-    """None for SQL NULLs, which pandas renders as None OR float NaN."""
-    if v is None:
-        return None
-    if isinstance(v, float) and v != v:
-        return None
-    return v
-
-
 def _dp_lines(rec: dict) -> list[str]:
     name = str(rec.get("metric_name") or "")
     if not name:
@@ -80,7 +71,7 @@ def _dp_lines(rec: dict) -> list[str]:
         out.append(f"{path} {value} {ts}")
 
     if mtype in ("gauge", "sum"):
-        vi, vd = _opt(rec.get("value_int")), _opt(rec.get("value_double"))
+        vi, vd = null_as_none(rec.get("value_int")), null_as_none(rec.get("value_double"))
         if vi is None and vd is None:
             return []  # empty-valued number point skipped
         value = (
@@ -90,8 +81,8 @@ def _dp_lines(rec: dict) -> list[str]:
         return out
 
     if mtype in ("histogram", "summary"):
-        count = int(_opt(rec.get("count")) or 0)
-        total = float(_opt(rec.get("sum")) or 0.0)
+        count = int(null_as_none(rec.get("count")) or 0)
+        total = float(null_as_none(rec.get("sum")) or 0.0)
         line(build_path(name + ".count", attrs), str(count))
         line(build_path(name, attrs), go_format_float_f(total))
         if mtype == "histogram":

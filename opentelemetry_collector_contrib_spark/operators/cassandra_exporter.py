@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, types as T
 
 from ..functions.gofmt import go_json_value
-from ..functions.records import map_records
+from ..functions.records import map_records, null_as_none
 
 __all__ = [
     "cassandra_log_rows",
@@ -97,14 +97,8 @@ def _marshal_map(m) -> dict:
     return {str(k): go_json_value(v).decode() for k, v in dict(m or {}).items()}
 
 
-def _nz(v):
-    if v is None or (isinstance(v, float) and v != v):
-        return None
-    return v
-
-
 def _cassandra_row(row: dict) -> dict:
-    rec = {c: _nz(v) for c, v in row.items()}
+    rec = {c: null_as_none(v) for c, v in row.items()}
     return {
         "timestamp": int(rec.get("time_unix_nano") or 0),
         "traceid": str(rec.get("trace_id") or ""),

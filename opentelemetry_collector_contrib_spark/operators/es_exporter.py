@@ -68,6 +68,8 @@ __all__ = [
     "bulk_create_action",
     "resolve_index",
     "es_bulk_messages",
+    "Doc",
+    "Ts",
 ]
 
 _NIL = object()  # KindNil — serializes as skipped field / null in arrays
@@ -98,7 +100,7 @@ def _is_empty(v) -> bool:
         return True
     if isinstance(v, list):
         return len(v) == 0
-    if isinstance(v, _Doc):
+    if isinstance(v, Doc):
         return len(v.fields) == 0
     return False
 
@@ -120,18 +122,18 @@ def _ser_value(v) -> str:
         return json.dumps(v)
     if isinstance(v, str):
         return _jstr(v)
-    if isinstance(v, _Ts):
+    if isinstance(v, Ts):
         return _jstr(_fmt_ts(v.ns))
     if isinstance(v, list):
         return "[" + ",".join(_ser_value(e) for e in v) + "]"
-    if isinstance(v, _Doc):
+    if isinstance(v, Doc):
         if not v.fields:
             return "null"  # objmodel.go:479-481
         return v.serialize(dedot=True)
     raise TypeError(f"unsupported document value {type(v)!r}")
 
 
-class _Ts:
+class Ts:
     """KindTimestamp marker (int nanos), formatted at serialize time."""
 
     __slots__ = ("ns",)
@@ -146,12 +148,12 @@ def _convert(v):
     if v is None:
         return _NIL
     if isinstance(v, dict):
-        d = _Doc()
+        d = Doc()
         d.add_attributes("", v)
         return d
     if isinstance(v, (list, tuple)):
         return [_convert(e) for e in v]
-    if isinstance(v, (bool, int, float, str, _Ts)):
+    if isinstance(v, (bool, int, float, str, Ts)):
         return v
     return str(v)
 
@@ -160,7 +162,7 @@ def _flatten_key(path: str, key: str) -> str:
     return key if path == "" else f"{path}.{key}"
 
 
-class _Doc:
+class Doc:
     """objmodel.Document: ordered (dotted-key, value) fields with the
     reference's Sort/Dedup/Serialize semantics."""
 
@@ -181,7 +183,7 @@ class _Doc:
         self.add(key, int(v))
 
     def add_timestamp(self, key: str, ns: int) -> None:
-        self.add(key, _Ts(ns))
+        self.add(key, Ts(ns))
 
     def add_id(self, key: str, hexid: str) -> None:
         """AddTraceID/AddSpanID: skip empty (all-zero) ids
@@ -305,7 +307,7 @@ class _Doc:
 
 
 def _sort_value(v) -> None:
-    if isinstance(v, _Doc):
+    if isinstance(v, Doc):
         v.sort()
     elif isinstance(v, list):
         for e in v:
@@ -313,7 +315,7 @@ def _sort_value(v) -> None:
 
 
 def _dedup_value(v) -> None:
-    if isinstance(v, _Doc):
+    if isinstance(v, Doc):
         v.dedup()
     elif isinstance(v, list):
         for e in v:
@@ -340,7 +342,7 @@ def encode_log_document(
     (time_unix_nano, observed_time_unix_nano?, severity_number,
     severity_text, body, attributes, resource, scope_name,
     scope_version?, scope_attributes?, trace_id, span_id, flags?)."""
-    doc = _Doc()
+    doc = Doc()
     ts = int(rec.get("time_unix_nano") or 0)
     observed = int(rec.get("observed_time_unix_nano") or 0)
     scope_name = rec.get("scope_name") or ""

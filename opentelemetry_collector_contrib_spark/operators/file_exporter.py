@@ -44,6 +44,9 @@ __all__ = [
     "marshal_framed",
     "write_otlp_proto",
     "read_otlp_proto",
+    "json_doc_bytes",
+    "json_doc_records",
+    "records_in_order",
 ]
 
 
@@ -77,7 +80,7 @@ _MANIFEST_SCHEMA = T.StructType(
     ]
 )
 
-def _records_in_order(pdf: pd.DataFrame) -> list[dict]:
+def records_in_order(pdf: pd.DataFrame) -> list[dict]:
     """pandas batch → flat record dicts, INPUT order preserved."""
     recs = []
     for row in pdf.itertuples(index=False):
@@ -99,7 +102,7 @@ def _records_in_order(pdf: pd.DataFrame) -> list[dict]:
 
 
 def _flat_records(pdf: pd.DataFrame) -> list[dict]:
-    recs = _records_in_order(pdf)
+    recs = records_in_order(pdf)
     recs.sort(
         key=lambda r: (
             tuple(sorted(r["resource"].items())), r["scope_name"],
@@ -109,7 +112,7 @@ def _flat_records(pdf: pd.DataFrame) -> list[dict]:
     return recs
 
 
-def _json_doc_bytes(records: list[dict]) -> bytes:
+def json_doc_bytes(records: list[dict]) -> bytes:
     """plog ``JSONMarshaler`` document for a record chunk — the same
     resourceLogs/scopeLogs/logRecords shape ``readers.otlp_json_lines``
     assembles JVM-side (protobuf JSON mapping: uint64 nanos as strings,
@@ -182,7 +185,7 @@ def marshal_framed(
     else:
         chunks = [records] if records else []
     for chunk in chunks:
-        buf = encode_logs(chunk) if fmt == "proto" else _json_doc_bytes(chunk)
+        buf = encode_logs(chunk) if fmt == "proto" else json_doc_bytes(chunk)
         if compression == "zstd":
             buf = zstd_compress(buf)
         msgs.append(buf)
@@ -317,8 +320,8 @@ def write_otlp_proto(
         for pdf in batches:
             if len(pdf):
                 # rows arrive in final order; no per-chunk re-sort (records
-                # within one message keep that order — _records_in_order)
-                w.add(_records_in_order(pdf))
+                # within one message keep that order — records_in_order)
+                w.add(records_in_order(pdf))
         w.close()
         yield w.manifest()
 
@@ -401,15 +404,15 @@ def write_otlp_proto_grouped(
             for s, grp in pdf.groupby("__series", sort=False):
                 if str(s) != w.series:
                     w.open(str(s))
-                w.add(_records_in_order(grp.drop(columns=["__series"])))
+                w.add(records_in_order(grp.drop(columns=["__series"])))
         w.close()
         yield w.manifest()
 
     return staged.mapInPandas(gen, _MANIFEST_SCHEMA)
 
 
-def _json_doc_records(buf: bytes) -> list[dict]:
-    """Inverse of ``_json_doc_bytes``: plog JSON document → flat records
+def json_doc_records(buf: bytes) -> list[dict]:
+    """Inverse of ``json_doc_bytes``: plog JSON document → flat records
     (resource/scope denormalized, nanos back to int)."""
     import json
 
@@ -458,7 +461,7 @@ def read_otlp_proto(
         for msg in unframe(bytes(row["content"])):
             if compression == "zstd":
                 msg = zstd_decompress(msg)
-            recs = decode_logs(msg) if fmt == "proto" else _json_doc_records(msg)
+            recs = decode_logs(msg) if fmt == "proto" else json_doc_records(msg)
             for rec in recs:
                 rec["body"] = None if rec["body"] is None else str(rec["body"])
                 rec["attributes"] = {k: str(v) for k, v in rec["attributes"].items()}

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, types as T
 
 from ..functions.gofmt import go_json_value, go_time_rfc3339nano
 from ..functions.records import map_records
-from .es_exporter import _Doc, _Ts
+from .es_exporter import Doc, Ts
 
 __all__ = [
     "encode_log_data_model",
@@ -147,7 +147,7 @@ def encode_log_data_model(
     """Log Data Model encoding (`encoder.go:103-141`) via the shared
     objmodel document (reused from the ES exporter — upstream both
     import the same `internal/objmodel`)."""
-    doc = _Doc()
+    doc = Doc()
     resource = dict(rec.get("resource") or {})
     if flatten_attributes:
         doc.add_attributes("", resource)
@@ -158,7 +158,7 @@ def encode_log_data_model(
     if unix_time:
         doc.add_int(ts_field, ts_ns // 1_000_000)
     else:
-        doc.add(ts_field, _Ts(ts_ns))
+        doc.add(ts_field, Ts(ts_ns))
     doc.add_id("TraceId", rec.get("trace_id") or "")
     doc.add_id("SpanId", rec.get("span_id") or "")
     doc.add_int("TraceFlags", int(rec.get("flags") or 0))

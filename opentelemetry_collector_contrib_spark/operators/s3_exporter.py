@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from ..functions.gofmt import go_json_string, go_json_value, go_time_string
 from ..functions.otlp_proto import encode_logs
 from ..functions.records import map_records
-from .file_exporter import _json_doc_bytes, _records_in_order
+from .file_exporter import json_doc_bytes, records_in_order
 
 __all__ = [
     "time_partition_key",
@@ -156,7 +156,7 @@ def marshal_log_group(records: list[dict], marshaler: str) -> bytes:
     if marshaler == "sumo_ic":
         return b"".join(sumo_json_line(r) for r in records)
     if marshaler == "otlp_json":
-        return _json_doc_bytes(records)
+        return json_doc_bytes(records)
     if marshaler == "otlp_proto":
         return encode_logs(records)
     raise ValueError(f"unknown marshaler {marshaler!r}")  # marshaler.go:63
@@ -222,7 +222,7 @@ def write_s3_objects(
     def write_group(gkey: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tkey = str(gkey[0])
         shard = int(gkey[1]) if len(gkey) > 1 else 0
-        recs = _records_in_order(pdf.drop(columns=gcols))
+        recs = records_in_order(pdf.drop(columns=gcols))
         recs.sort(
             key=lambda r: (
                 tuple(sorted(r["resource"].items())), r["scope_name"],

@@ -1,23 +1,32 @@
-"""Checkpoint / lineage / exactly-once resume.
+"""Checkpoint / exactly-once resume.
 
 Reference: the filelog receiver persists per-file ``{Fingerprint, Offset}``
 metadata through a storage extension and resumes reading from saved offsets
 (`pkg/stanza/fileconsumer/internal/checkpoint/checkpoint.go:20-45`,
 `internal/reader/reader.go:50-122`). Dataset restatement: the unit of
 progress is a **chunk of input files** (the offset analog at table
-granularity); a chunk is committed by (1) an idempotent overwrite of that
-chunk's output directories, then (2) appending a checkpoint row. A killed
-run re-processes at most the in-flight chunk, whose partial output the
-overwrite replaces — exactly-once output without a custom commit protocol.
+granularity). A chunk is committed by two writes, in this order:
+
+  1. its routed rows, an idempotent overwrite of ``data/chunk=<id>``;
+  2. ONE commit row, a local-relation append to ``checkpoint/``.
+
+The commit row is both the chunk's checkpoint and its lineage: the input rows
+it read, the rows and tokens it routed, its wall time, and the routed schema.
+One row in one file cannot land half-written, so no crash leaves a committed
+chunk without its counts. A killed run re-processes at most the in-flight
+chunk, whose partial output the overwrite replaces — exactly-once output
+without a custom commit protocol.
 
 Each chunk is a single pass over its input: the pipeline runs once, inside
-the routed-rows write. Two ``Observation``s ride on that write, one on the
-chunk's input (``rows_in``) and one on the routed rows (the checkpoint row's
-``rows`` and ``tokens``), so counting costs no extra job. The per-chunk
-pre-aggregates are then built by ``aggregate_stage`` from a column-pruned
-read-back of the rows just written (route, source, severity_text, n_tok), so
-grok and the rest of the pipeline never run twice. The checkpoint and
-lineage rows are written from local relations.
+the routed write. Two ``Observation``s ride on that write, one on the chunk's
+input (``rows_in``) and one on the routed rows (``rows`` and ``tokens``), so
+counting costs no extra job.
+
+The aggregates are computed at read time: ``aggregates()`` is
+``aggregate_stage`` over the committed routed rows, a scan of four pruned
+columns (route, source, severity_text, n_tok). Stored per-chunk
+pre-aggregates would cost every commit a read-back and a write to spare that
+one scan to the one reader that needs it (``run.py`` reads them once a run).
 
 At 10^12-row scale each chunk is itself a fully parallel Spark job over
 hundreds of files; the driver loop adds one scheduling round-trip per chunk
@@ -25,30 +34,30 @@ hundreds of files; the driver loop adds one scheduling round-trip per chunk
 
 Layout under ``out_dir``:
   data/chunk=<id>/route=<r>/*.parquet   routed rows (per-route sinks)
-  aggs/chunk=<id>/*.parquet             per-chunk pre-aggregates
-  checkpoint/*.parquet                  CHECKPOINT_SCHEMA (run_id, chunk_id,
-                                        rows, tokens, wall_ms)
-  lineage/*.parquet                     LINEAGE_SCHEMA (run_id, stage, rows_in,
-                                        rows_out, wall_ms)
+  checkpoint/*.parquet                  one CHECKPOINT_SCHEMA row per chunk
 
 Readers (``routed()`` / ``aggregates()``) see COMMITTED chunks only: the
-chunk partition column is filtered against the checkpoint table, so a chunk
-whose data write landed but whose checkpoint append never did (crash between
-step 1 and step 2) is invisible until a resume re-overwrites and commits it —
-the exactly-once read view holds at all times, not just after resume.
+chunk partition column is filtered against the commit rows, so a chunk whose
+data write landed but whose commit row never did (crash between step 1 and
+step 2) is invisible until a resume re-overwrites and commits it — the
+exactly-once read view holds at all times, not just after resume. They read
+with the schema stored in the commit row, so committed chunks that routed no
+rows (an empty chunk leaves only ``_SUCCESS``) read as empty frames with the
+usual columns, and no file footer is opened to infer a schema.
 """
 
 from __future__ import annotations
 
+import json
 import time
 import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..datamodel import CHECKPOINT_SCHEMA, LINEAGE_SCHEMA, local_frame
+from ..datamodel import CHECKPOINT_SCHEMA, local_frame
 from .pipeline import aggregate_stage
 
 
@@ -56,8 +65,8 @@ class CheckpointedRunner:
     """Runs ``pipeline_fn`` chunk by chunk with exactly-once commits.
 
     ``pipeline_fn(df, spark)`` returns ``(routed, aggs)``; only ``routed`` is
-    evaluated. The committed aggregates are ``aggregate_stage`` over the
-    routed rows as written.
+    evaluated. The aggregates are ``aggregate_stage`` over the committed
+    routed rows.
     """
 
     def __init__(
@@ -72,7 +81,8 @@ class CheckpointedRunner:
 
     # ---------------------------------------------------------------- state
 
-    def completed_chunks(self, spark: SparkSession) -> set[str]:
+    def _commits(self, spark: SparkSession, *cols: str) -> list[Row]:
+        """``cols`` of every commit row; none before the first commit."""
         # Only "checkpoint dir doesn't exist yet" means "no chunks committed".
         # routed()/aggregates() filter on this result, so swallowing a real
         # read error (permissions, storage blip, old-schema dir) would make
@@ -81,7 +91,7 @@ class CheckpointedRunner:
         jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
         fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
         if not fs.exists(jvm_path):
-            return set()
+            return []
         # A dir that exists but holds no committed parquet part (crash after
         # mkdir before the first commit, or a leftover _temporary-only dir)
         # is the same "nothing committed yet" state — resume from zero
@@ -95,15 +105,11 @@ class CheckpointedRunner:
                 has_part = True
                 break
         if not has_part:
-            return set()
-        return {
-            r.chunk_id
-            for r in spark.read.parquet(path).select("chunk_id").distinct().collect()
-        }
+            return []
+        return spark.read.parquet(path).select(*cols).collect()
 
-    def _append(self, spark: SparkSession, sub: str, rows: list[dict], schema: T.StructType) -> None:
-        # a local relation: one task, one file, no Python RDD to scan
-        local_frame(spark, rows, schema).write.mode("append").parquet(f"{self.out_dir}/{sub}")
+    def completed_chunks(self, spark: SparkSession) -> set[str]:
+        return {r.chunk_id for r in self._commits(spark, "chunk_id")}
 
     # ------------------------------------------------------------------ run
 
@@ -141,76 +147,49 @@ class CheckpointedRunner:
                 F.coalesce(F.sum("n_tok"), F.lit(0)).alias("tokens"),
             )
 
-            # (1) idempotent data commit: overwrite THIS chunk's directories;
-            # the aggregates read back only the columns they group and sum
-            data_dir = f"{self.out_dir}/data/chunk={chunk_id}"
-            routed.write.mode("overwrite").partitionBy("route").parquet(data_dir)
-            aggregate_stage(spark.read.schema(routed.schema).parquet(data_dir)).write.mode(
-                "overwrite"
-            ).parquet(f"{self.out_dir}/aggs/chunk={chunk_id}")
-            # both observations were filled by the routed write above
-            rows_in = seen.get["rows"]
-            totals = out.get
-            wall_ms = int((time.time() - t0) * 1000)
-
-            # (2) progress commit: checkpoint row appended AFTER data is down
-            self._append(
-                spark,
-                "checkpoint",
-                [
-                    {
-                        "run_id": run_id,
-                        "chunk_id": chunk_id,
-                        "rows": totals["rows"],
-                        "tokens": totals["tokens"],
-                        "wall_ms": wall_ms,
-                    }
-                ],
-                CHECKPOINT_SCHEMA,
+            # (1) idempotent data commit: overwrite THIS chunk's directory
+            routed.write.mode("overwrite").partitionBy("route").parquet(
+                f"{self.out_dir}/data/chunk={chunk_id}"
             )
-            self._append(
-                spark,
-                "lineage",
-                [
-                    {
-                        "run_id": run_id,
-                        "stage": f"chunk:{chunk_id}",
-                        "rows_in": rows_in,
-                        "rows_out": totals["rows"],
-                        "wall_ms": wall_ms,
-                    }
-                ],
-                LINEAGE_SCHEMA,
+            # (2) the commit row, appended AFTER the data is down; both
+            # observations were filled by the routed write above. A local
+            # relation: one task, one file, no Python RDD to scan.
+            totals = out.get
+            commit = {
+                "run_id": run_id,
+                "chunk_id": chunk_id,
+                "rows_in": seen.get["rows"],
+                "rows": totals["rows"],
+                "tokens": totals["tokens"],
+                "wall_ms": int((time.time() - t0) * 1000),
+                "routed_schema": routed.schema.json(),
+            }
+            local_frame(spark, [commit], CHECKPOINT_SCHEMA).write.mode("append").parquet(
+                f"{self.out_dir}/checkpoint"
             )
             processed += 1
         return run_id
 
     # ------------------------------------------------------------- results
 
-    def _committed(self, spark: SparkSession, sub: str) -> DataFrame:
-        """``sub``'s rows of committed chunks. The root is read (not a
+    def routed(self, spark: SparkSession) -> DataFrame:
+        """Committed chunks' routed rows. The root is read (not a
         ``chunk=*`` glob), so ``chunk`` is a discovered partition column and
         uncommitted chunk directories are pruned before any task reads them."""
-        committed = sorted(int(c) for c in self.completed_chunks(spark))
-        df = spark.read.parquet(f"{self.out_dir}/{sub}")
-        return df.filter(F.col("chunk").cast("int").isin(committed))
-
-    def routed(self, spark: SparkSession) -> DataFrame:
-        """Committed chunks' routed rows."""
-        return self._committed(spark, "data")
-
-    def aggregates(self, spark: SparkSession) -> DataFrame:
-        """Merge per-chunk pre-aggregates (partial-agg pattern: the heavy
-        groupBy ran inside each chunk; this is the cheap final combine).
-        Committed chunks only, like ``routed()``."""
-        per_chunk = self._committed(spark, "aggs")
-        dims = [
-            c for c in per_chunk.columns if c not in ("row_count", "token_count", "chunk")
-        ]
-        return per_chunk.groupBy(*dims).agg(
-            F.sum("row_count").cast("long").alias("row_count"),
-            F.sum("token_count").cast("long").alias("token_count"),
+        commits = self._commits(spark, "chunk_id", "routed_schema")
+        if not commits:
+            raise ValueError(f"no committed chunk under {self.out_dir}")
+        schema = T.StructType.fromJson(json.loads(commits[0].routed_schema))
+        return (
+            spark.read.schema(schema.add("chunk", T.IntegerType()))
+            .parquet(f"{self.out_dir}/data")
+            .filter(F.col("chunk").isin([int(c.chunk_id) for c in commits]))
         )
 
+    def aggregates(self, spark: SparkSession) -> DataFrame:
+        """Per-sink row and token totals of the committed routed rows."""
+        return aggregate_stage(self.routed(spark))
+
     def metrics(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(f"{self.out_dir}/lineage")
+        """The commit rows: one per committed chunk."""
+        return spark.read.parquet(f"{self.out_dir}/checkpoint")

@@ -23,9 +23,11 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="otel-contrib-spark log pipeline")
     ap.add_argument("--input", help="tokens table path (parquet/Iceberg dir)")
     ap.add_argument("--generate-rows", type=int, help="generate a deterministic tokens table of N rows instead of reading --input")
-    ap.add_argument("--out", required=True, help="output root (per-route sinks + checkpoint/lineage)")
-    ap.add_argument("--match-once", action="store_true", default=True)
-    ap.add_argument("--multicast", dest="match_once", action="store_false")
+    ap.add_argument("--out", required=True, help="output root (per-route sinks + checkpoint)")
+    ap.add_argument(
+        "--multicast", action="store_true",
+        help="route a row to every matching sink (default: its first match only)",
+    )
     ap.add_argument("--files-per-chunk", type=int, default=16)
     ap.add_argument(
         "--gen-partitions", type=int, default=None,
@@ -63,7 +65,7 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("either --input or --generate-rows is required")
 
     def pipe(df, s):
-        return full_pipeline(df, s, match_once=args.match_once)
+        return full_pipeline(df, s, match_once=not args.multicast)
 
     runner = CheckpointedRunner(args.out, pipe, files_per_chunk=args.files_per_chunk)
     run_id = runner.run(spark, input_path, run_id=args.run_id)

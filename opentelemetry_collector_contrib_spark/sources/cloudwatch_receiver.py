@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, types as T
 
-from ..functions.records import map_records
+from ..functions.records import map_records, null_as_none
 
 __all__ = ["NO_STREAM_NAME", "cloudwatch_log_records"]
 
@@ -42,12 +42,6 @@ _SCHEMA = T.StructType(
 )
 
 
-def _nz(v):
-    if v is None or (isinstance(v, float) and v != v):
-        return None
-    return v
-
-
 def cloudwatch_log_records(
     df: DataFrame,
     region: str,
@@ -57,12 +51,12 @@ def cloudwatch_log_records(
     """FilterLogEvents event rows → flat records. Zero-shuffle."""
 
     def one(row: dict) -> list[dict]:
-        ts = _nz(row.get("timestamp_ms"))
-        eid = _nz(row.get("event_id"))
-        msg = _nz(row.get("message"))
+        ts = null_as_none(row.get("timestamp_ms"))
+        eid = null_as_none(row.get("event_id"))
+        msg = null_as_none(row.get("message"))
         if ts is None or eid is None or msg is None:
             return []  # nil timestamp/id/message skips the event
-        stream = _nz(row.get("log_stream"))
+        stream = null_as_none(row.get("log_stream"))
         return [
             {
                 "time_unix_nano": int(ts) * 1_000_000,
@@ -72,7 +66,7 @@ def cloudwatch_log_records(
                 "resource": {
                     "aws.region": region,
                     "cloudwatch.log.group.name": str(
-                        _nz(row.get(log_group_col)) or ""
+                        null_as_none(row.get(log_group_col)) or ""
                     ),
                     "cloudwatch.log.stream": (
                         str(stream) if stream is not None else NO_STREAM_NAME

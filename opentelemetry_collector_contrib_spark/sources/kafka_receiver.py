@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, types as T
 from ..datamodel import FLAT_LOG_SCHEMA
 from ..functions.otlp_proto import decode_logs
 from ..functions.records import map_records
-from ..operators.file_exporter import _json_doc_records
+from ..operators.file_exporter import json_doc_records
 
 __all__ = ["kafka_log_records"]
 
@@ -155,7 +155,7 @@ def kafka_log_records(
                 # non-objects (json_unmarshaler.go:26-28)
                 raise ValueError("json encoding requires a JSON object payload")
             return [{"body": {k: str(v) for k, v in val.items()}, "resource": res}]
-        recs = decode_logs(buf) if encoding == "otlp_proto" else _json_doc_records(buf)
+        recs = decode_logs(buf) if encoding == "otlp_proto" else json_doc_records(buf)
         for rec in recs:
             rec["body"] = None if rec["body"] is None else str(rec["body"])
             rec["attributes"] = {k: str(v) for k, v in rec["attributes"].items()}

@@ -52,11 +52,13 @@ def test_resume_exactly_once(spark, tokens_path, tmp_path):
     b = {tuple(x) for x in ref.aggregates(spark).collect()}
     assert a == b
 
-    # lineage recorded one row per chunk
+    # one commit row per chunk
     assert r.metrics(spark).count() == len(r.completed_chunks(spark))
 
 
 def test_rerun_is_noop(spark, tokens_path, tmp_path):
+    import os
+
     out = str(tmp_path / "out_c")
     r = CheckpointedRunner(out, _pipeline, files_per_chunk=4)
     r.run(spark, tokens_path)
@@ -65,6 +67,10 @@ def test_rerun_is_noop(spark, tokens_path, tmp_path):
     r.run(spark, tokens_path)  # everything committed → no-op
     assert r.routed(spark).count() == n1
     assert len(r.completed_chunks(spark)) == ck1
+    # the whole output: routed rows plus one commit-row file per chunk
+    assert sorted(os.listdir(out)) == ["checkpoint", "data"]
+    commits = [f for f in os.listdir(f"{out}/checkpoint") if f.endswith(".parquet")]
+    assert len(commits) == ck1 == len(r.plan_chunks(spark, tokens_path))
 
 
 def test_empty_checkpoint_dir_resumes_from_zero(spark, tokens_path, tmp_path):
@@ -100,11 +106,9 @@ def test_uncommitted_chunk_invisible(spark, tokens_path, tmp_path):
     agg_committed = r.aggregates(spark).agg(F.sum("token_count")).collect()[0][0]
 
     # simulate the torn commit: copy a committed chunk's data dir to a new
-    # chunk id WITHOUT a checkpoint row (same bytes a crashed step-1 leaves)
+    # chunk id WITHOUT a commit row (same bytes a crashed step-1 leaves)
     src = sorted(glob.glob(f"{out}/data/chunk=*"))[0]
     shutil.copytree(src, f"{out}/data/chunk=99999")
-    src_a = sorted(glob.glob(f"{out}/aggs/chunk=*"))[0]
-    shutil.copytree(src_a, f"{out}/aggs/chunk=99999")
 
     assert r.routed(spark).count() == n_committed
     assert r.aggregates(spark).agg(F.sum("token_count")).collect()[0][0] == agg_committed
@@ -112,28 +116,25 @@ def test_uncommitted_chunk_invisible(spark, tokens_path, tmp_path):
 
     # cleanup so the directory doesn't poison later reads
     shutil.rmtree(f"{out}/data/chunk=99999")
-    shutil.rmtree(f"{out}/aggs/chunk=99999")
 
 
 def _check_commit_accounting(spark, r, input_path):
-    """Each chunk's checkpoint row sums that chunk's aggs/, and its lineage
-    row's rows_in is the chunk's input row count. Returns Σ rows_out."""
+    """Each chunk's commit row counts that chunk's input (rows_in) and sums
+    the routed rows under its data/chunk=<id> (rows, tokens). Returns Σ rows."""
     from pyspark.sql import functions as F
 
-    ckpt = {x.chunk_id: x for x in spark.read.parquet(f"{r.out_dir}/checkpoint").collect()}
-    lineage = {x.stage: x for x in r.metrics(spark).collect()}
+    commits = {x.chunk_id: x for x in r.metrics(spark).collect()}
     chunks = r.plan_chunks(spark, input_path)
-    assert set(ckpt) == {c for c, _ in chunks}
+    assert set(commits) == {c for c, _ in chunks}
     for chunk_id, files in chunks:
         rows, tokens = (
-            spark.read.parquet(f"{r.out_dir}/aggs/chunk={chunk_id}")
-            .agg(F.sum("row_count"), F.sum("token_count"))
+            spark.read.parquet(f"{r.out_dir}/data/chunk={chunk_id}")
+            .agg(F.count(F.lit(1)), F.sum("n_tok"))
             .first()
         )
-        assert (ckpt[chunk_id].rows, ckpt[chunk_id].tokens) == (rows, tokens)
-        line = lineage[f"chunk:{chunk_id}"]
-        assert (line.rows_in, line.rows_out) == (spark.read.parquet(*files).count(), rows)
-    return sum(x.rows_out for x in lineage.values())
+        c = commits[chunk_id]
+        assert (c.rows_in, c.rows, c.tokens) == (spark.read.parquet(*files).count(), rows, tokens)
+    return sum(x.rows for x in commits.values())
 
 
 @pytest.mark.parametrize(
@@ -186,8 +187,40 @@ def test_empty_chunk_commits_zero(spark, tokens_path, tmp_path):
     out = str(tmp_path / "out")
     r = CheckpointedRunner(out, _pipeline)
     r.run(spark, src)
-    (ck,) = spark.read.parquet(f"{out}/checkpoint").collect()
-    assert (ck.rows, ck.tokens) == (0, 0)
-    (line,) = r.metrics(spark).collect()
-    assert (line.rows_in, line.rows_out) == (0, 0)
-    assert r.aggregates(spark).count() == 0
+    (ck,) = r.metrics(spark).collect()
+    assert (ck.rows_in, ck.rows, ck.tokens) == (0, 0, 0)
+    assert r.routed(spark).count() == 0
+    aggs = r.aggregates(spark)
+    assert aggs.columns == ["route", "source", "severity_text", "row_count", "token_count"]
+    assert aggs.count() == 0
+
+
+def test_torn_commit_resumes_whole(spark, tokens_path, tmp_path, monkeypatch):
+    """A crash inside a chunk's commit leaves no committed chunk without its
+    counts: the resume redoes whatever did not commit, and every planned
+    chunk ends with exactly one commit row carrying rows_in."""
+    from opentelemetry_collector_contrib_spark.plans import checkpoint
+
+    real, calls = checkpoint.local_frame, []
+
+    def crash_on_second(*args):
+        calls.append(args)
+        if len(calls) == 2:
+            raise RuntimeError("killed mid-commit")
+        return real(*args)
+
+    monkeypatch.setattr(checkpoint, "local_frame", crash_on_second)
+    r = CheckpointedRunner(str(tmp_path / "out"), _pipeline, files_per_chunk=4)
+    with pytest.raises(RuntimeError, match="killed mid-commit"):
+        r.run(spark, tokens_path)
+    monkeypatch.setattr(checkpoint, "local_frame", real)
+    r.run(spark, tokens_path)
+
+    commits = r.metrics(spark).collect()
+    planned = [c for c, _ in r.plan_chunks(spark, tokens_path)]
+    assert sorted(c.chunk_id for c in commits) == planned
+    assert all(c.rows_in > 0 for c in commits)
+    assert r.metrics(spark).count() == len(r.completed_chunks(spark))
+    ids = r.routed(spark).groupBy("doc_id").count()
+    assert ids.count() == N
+    assert ids.filter("count != 1").count() == 0

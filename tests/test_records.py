@@ -7,6 +7,7 @@ from pyspark.sql import types as T
 from opentelemetry_collector_contrib_spark.functions.records import (
     as_text,
     map_records,
+    null_as_none,
 )
 
 _INT_SCHEMA = T.StructType(
@@ -77,3 +78,11 @@ def test_as_text():
     assert as_text(bytearray(b"x")) == "x"
     assert as_text("s") == "s"
     assert as_text(None) == ""
+
+
+def test_null_as_none():
+    assert null_as_none(None) is None
+    assert null_as_none(float("nan")) is None
+    # falsy values are values, not nulls
+    assert null_as_none(0.0) == 0.0
+    assert null_as_none("") == ""

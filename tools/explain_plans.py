@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 
 def _distinct_exchanges(plan: str) -> int:
@@ -91,7 +93,7 @@ def main() -> None:
     spark.stop()
 
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write(out)
     print(out)
 
