@@ -10,20 +10,8 @@ pipeline touches repeatedly is a real column; truly dynamic residue lives in a
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-
-def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
-    """Driver-side rows (tuples in schema order, or dicts by field name) as
-    a DataFrame that plans as a ``LocalTableScan``.
-
-    ``createDataFrame`` over a Python list builds a Python RDD: every job
-    that scans it, a broadcast build included, runs Python-worker tasks
-    just to unpickle constants. A pandas frame under Arrow (on in
-    ``session.get_spark``) becomes a local relation held in the plan."""
-    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
 # The north-rule input table: pre-tokenized training sequences.
 TOKENS_SCHEMA = T.StructType(
@@ -98,8 +86,9 @@ DATAPOINT_SCHEMA = T.StructType(
     ]
 )
 
-# Broadcast enrich dimension (k8sattributes / resource processor analog,
-# FIXTURES.md §2). `src-cold-9` is deliberately absent → left-join null path.
+# Enrich dimension (k8sattributes / resource processor analog, FIXTURES.md
+# §2), a literal map in the pipeline's plan (plans/pipeline.enrich_stage).
+# `src-cold-9` is deliberately absent → the lookup-miss null path.
 SOURCE_LOOKUP_ROWS = [
     # (source, team, region, tier, sample_pct)
     ("src-hot", "core", "us", "prod", 100.0),

@@ -27,6 +27,7 @@ from .functions.hashing import (
 from .functions.severity import attach_severity
 from .operators.parse import regex_parser, time_parser
 from .operators.router import Route, route_match_once, route_multicast
+from .plans.pipeline import enrich_stage
 from .session import package_zip
 from .sources.render import LINE_PATTERN, render_lines, row_idx_col
 from .sources.tokenizer import tokenize_documents
@@ -54,12 +55,6 @@ def _lookup_values_sql() -> str:
         f"('{s}', '{t}', '{r}', '{ti}', {p})" for s, t, r, ti, p in doc_lookup_rows()
     )
     return f"(VALUES {vals}) AS l(source, team, region, tier, sample_pct)"
-
-
-def doc_lookup_df(spark: SparkSession) -> DataFrame:
-    from .datamodel import SOURCE_LOOKUP_SCHEMA, local_frame
-
-    return local_frame(spark, doc_lookup_rows(), SOURCE_LOOKUP_SCHEMA)
 
 
 EPOCH = 1704067200
@@ -113,7 +108,7 @@ def _parsed_docs(spark: SparkSession, sf_dir: str, vectorized: bool = False) -> 
 
 def _enriched_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _parsed_docs(spark, sf_dir)
-    return df.join(F.broadcast(doc_lookup_df(spark)), on="source", how="left")
+    return enrich_stage(df, spark, lut=doc_lookup_rows())
 
 
 # shared oracle CTE prefix (DuckDB)
@@ -2253,7 +2248,7 @@ def _q_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks.write.mode("overwrite").parquet(f"{work}/in")
     run_streaming_to_completion(
         spark, f"{work}/in", f"{work}/out",
-        lut=doc_lookup_df(spark), routes=doc_routes(),
+        lut=doc_lookup_rows(), routes=doc_routes(),
     )
     routed = spark.read.option("basePath", f"{work}/out/data").parquet(
         f"{work}/out/data"

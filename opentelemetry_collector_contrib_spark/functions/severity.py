@@ -5,19 +5,20 @@ aliases plus HTTP-status buckets 2xx→INFO, 3xx→INFO2(10)… 5xx→ERROR per
 severity_builder.go:64-105) over the 24-level enum
 (`pkg/stanza/entry/severity.go:14-52`).
 
-Two implementations, both JVM-side:
-- ``severity_map_df``   : the alias table as a local relation → broadcast join
-  (the scalable path: lookup table may be user-extended).
-- ``severity_number_col``: chained ``when()`` fallback for inline use.
+One implementation, a Column expression: the lower-cased text looks up a
+literal map of the 35 text aliases plus any custom entries; a text that
+misses and is a three-digit HTTP status 200-599 takes its bucket's
+severity; anything else is default(0). The map is a constant of the plan,
+so severity costs no join, no broadcast and no extra job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..datamodel import local_frame
+from .exprs import literal_map, per_jvm
 
 # (alias, canonical_text, number) — default mapping of severity_builder.go.
 DEFAULT_ALIASES: list[tuple[str, str, int]] = [
@@ -61,77 +62,45 @@ DEFAULT_ALIASES: list[tuple[str, str, int]] = [
 
 # severity_builder.go:192-210 expands each "Nxx" bucket into the literal
 # status codes N00..N99 in the alias map — a pipeline parsing real HTTP
-# statuses ("204", "503") must resolve them, not fall to default(0).
+# statuses ("204", "503") must resolve them, not fall to default(0). Here a
+# status that no alias names falls back to its bucket, keyed by its first
+# digit, instead of 400 more map entries for every plan to analyse.
 _HTTP_BUCKETS: list[tuple[int, str, int]] = [
     (2, "info", 9),
     (3, "info2", 10),
     (4, "warn", 13),
     (5, "error", 17),
 ]
-DEFAULT_ALIASES += [
-    (str(code), canon, num)
-    for hundred, canon, num in _HTTP_BUCKETS
-    for code in range(hundred * 100, hundred * 100 + 100)
-]
-
-
-SEVERITY_MAP_SCHEMA = T.StructType(
-    [
-        T.StructField("alias", T.StringType(), True),
-        T.StructField("severity_text", T.StringType(), True),
-        T.StructField("severity_number", T.IntegerType(), True),
-    ]
-)
-
-
-def severity_map_df(
-    spark: SparkSession, custom: list[tuple[str, str, int]] | None = None
-) -> DataFrame:
-    """Default alias table, optionally extended/overridden by user mappings
-    (severity_builder.go `mapping:` config: user aliases take precedence)."""
-    rows = list(DEFAULT_ALIASES)
-    if custom:
-        overridden = {c[0] for c in custom}
-        rows = [r for r in rows if r[0] not in overridden] + list(custom)
-    return local_frame(spark, rows, SEVERITY_MAP_SCHEMA)
+# \z, not $: Java's $ also matches before a final line terminator
+_HTTP_STATUS = r"^[2-5][0-9][0-9]\z"
 
 
 def attach_severity(
     df: DataFrame,
     text_col: str,
-    spark: SparkSession | None = None,
     custom: list[tuple[str, str, int]] | None = None,
 ) -> DataFrame:
-    """Broadcast-join the alias table; unknown text → default(0).
+    """Adds ``severity_text`` and ``severity_number`` for the alias in
+    ``text_col`` (matched lower-cased); unknown text → default(0).
 
-    The join side is ~36 rows → always a BroadcastHashJoin, no shuffle.
-    """
-    spark = spark or df.sparkSession
-    lut = severity_map_df(spark, custom).withColumnRenamed("alias", "__sev_alias")
-    out = df.join(
-        F.broadcast(lut),
-        F.lower(F.col(text_col)) == F.col("__sev_alias"),
-        "left",
-    ).drop("__sev_alias")
-    return out.withColumn(
-        "severity_text", F.coalesce(F.col("severity_text"), F.lit("default"))
-    ).withColumn(
-        "severity_number", F.coalesce(F.col("severity_number"), F.lit(0))
-    )
+    ``custom`` entries (alias, text, number) extend the table and override
+    a default alias or an HTTP status of the same name (severity_builder.go
+    `mapping:` config: user aliases take precedence); when ``custom`` names
+    one alias twice, the later entry wins."""
+    text, number = _severity_cols(text_col, tuple(map(tuple, custom or ())))
+    return df.withColumns({"severity_text": text, "severity_number": number})
 
 
-def severity_number_col(text: Column) -> Column:
-    """Inline when-chain variant (no join) for use inside expressions.
-    HTTP status codes resolve via a range test (one expression, not 400
-    whens); text aliases via the chain."""
-    http = None
-    for hundred, _canon, num in _HTTP_BUCKETS:
-        cond = text.rlike(f"^{hundred}[0-9][0-9]$")
-        http = F.when(cond, num) if http is None else http.when(cond, num)
-    expr = http
-    for alias, _canon, num in DEFAULT_ALIASES:
-        if alias.isdigit():
-            continue  # covered by the range test
-        cond = F.lower(text) == alias
-        expr = F.when(cond, num) if expr is None else expr.when(cond, num)
-    return expr.otherwise(F.lit(0)) if expr is not None else F.lit(0)
+@per_jvm
+def _severity_cols(text_col: str, custom: tuple[tuple[str, str, int], ...]) -> tuple[Column, Column]:
+    table = {alias: (text, number) for alias, text, number in DEFAULT_ALIASES + list(custom)}
+    key = F.lower(F.col(text_col))
+    status = key.rlike(_HTTP_STATUS)
+    digit = F.substring(key, 1, 1)
+
+    def lookup(i: int, value_type: T.DataType, default) -> Column:
+        by_alias = literal_map(list(table), [v[i] for v in table.values()], value_type)
+        by_bucket = literal_map([str(b[0]) for b in _HTTP_BUCKETS], [b[i + 1] for b in _HTTP_BUCKETS], value_type)
+        return F.coalesce(by_alias[key], F.when(status, by_bucket[digit]), F.lit(default))
+
+    return lookup(0, T.StringType(), "default"), lookup(1, T.IntegerType(), 0)

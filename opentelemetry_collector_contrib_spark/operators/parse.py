@@ -20,10 +20,12 @@ import re
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
+
+from ..functions.exprs import per_jvm
 
 ON_ERROR = ("send", "send_quiet", "drop", "drop_quiet")
 
@@ -92,14 +94,11 @@ def regex_parser(
     groups = re.compile(pattern).groupindex
     if not groups:
         raise ValueError("pattern must use named capture groups (?P<name>...)")
-    line = F.col(parse_from)
     struct_col = f"__parsed_{parse_from}"
 
     if engine == "jvm":
-        java = _jvm_pattern(pattern)
         out = df
-        matched = line.rlike(java)
-        cols = {n: F.when(matched, F.regexp_extract(line, java, i)) for n, i in groups.items()}
+        matched, cols = _jvm_group_cols(pattern, parse_from)
 
     elif engine == "arrow":
         # extract_regex refuses unnamed groups: make them non-capturing
@@ -110,17 +109,27 @@ def regex_parser(
         def extract(arr: pa.Array) -> pa.Array:
             return pc.extract_regex(arr, re2)
 
-        out = df.withColumn(struct_col, extract(line))
+        out = df.withColumn(struct_col, extract(F.col(parse_from)))
         matched = F.col(struct_col).isNotNull()
-        cols = {n: F.col(struct_col)[n] for n in groups}
+        cols = tuple((n, F.col(struct_col)[n]) for n in groups)
 
     else:
         raise ValueError(f"unknown engine {engine!r}")
 
     if on_error.startswith("drop"):
         out = out.filter(matched)
-    out = out.withColumns({prefix + n: c for n, c in cols.items()})
+    out = out.withColumns({prefix + n: c for n, c in cols})
     return out.drop(struct_col) if engine == "arrow" else out
+
+
+@per_jvm
+def _jvm_group_cols(pattern: str, parse_from: str) -> tuple[Column, tuple[tuple[str, Column], ...]]:
+    """The jvm engine's match test and its (name, column) per named group."""
+    java = _jvm_pattern(pattern)
+    line = F.col(parse_from)
+    matched = line.rlike(java)
+    groups = re.compile(pattern).groupindex
+    return matched, tuple((n, F.when(matched, F.regexp_extract(line, java, i))) for n, i in groups.items())
 
 
 def json_parser(df: DataFrame, schema, parse_from: str, parse_to: str = "parsed") -> DataFrame:
@@ -320,30 +329,33 @@ def time_parser(
     (try_to_timestamp; Spark 4 ANSI would otherwise fail the task, which is
     exactly ErrorMode=propagate — pass on_error='propagate' for that).
     """
+    return df.withColumn(parse_to, _time_col(parse_from, layout, layout_type, on_error))
+
+
+@per_jvm
+def _time_col(parse_from: str, layout: str | None, layout_type: str, on_error: str) -> Column:
     col = F.col(parse_from)
     if layout_type == "epoch":
         unit = layout or "s"
         if unit == "s":
-            ts = F.timestamp_seconds(col.cast("double"))
-        elif unit == "ms":
-            ts = F.timestamp_millis(col.cast("long"))
-        elif unit == "us":
-            ts = F.timestamp_micros(col.cast("long"))
-        elif unit == "ns":
-            ts = F.timestamp_micros((col.cast("long") / 1000).cast("long"))
-        else:
-            raise ValueError(f"unknown epoch unit {unit}")
-        return df.withColumn(parse_to, ts)
+            return F.timestamp_seconds(col.cast("double"))
+        if unit == "ms":
+            return F.timestamp_millis(col.cast("long"))
+        if unit == "us":
+            return F.timestamp_micros(col.cast("long"))
+        if unit == "ns":
+            return F.timestamp_micros((col.cast("long") / 1000).cast("long"))
+        raise ValueError(f"unknown epoch unit {unit}")
     fn = F.to_timestamp if on_error == "propagate" else F.try_to_timestamp
     if layout is None:
-        return df.withColumn(parse_to, fn(col))
+        return fn(col)
     if layout_type == "gotime":
         layout = gotime_to_spark(layout)
     elif layout_type == "strptime" and "%" in layout:
         from ..ottl.compiler import _strptime_to_spark
 
         layout = _strptime_to_spark(layout)
-    return df.withColumn(parse_to, fn(col, F.lit(layout)))
+    return fn(col, F.lit(layout))
 
 
 def trace_parser(df: DataFrame, trace_from: str = "trace_id_hex", span_from: str | None = "span_id_hex") -> DataFrame:

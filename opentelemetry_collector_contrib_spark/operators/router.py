@@ -69,15 +69,7 @@ def route_match_once(
     configured (`connector/routingconnector/logs.go:95-98`): unmatched rows
     are DROPPED instead of tagged — here a plain filter, so Catalyst pushes
     it into the scan."""
-    expr = None
-    for r in routes:
-        cond = F.coalesce(r.condition, F.lit(False))
-        expr = F.when(cond, r.name) if expr is None else expr.when(cond, r.name)
-    if expr is None:
-        tag = F.lit(default_route) if default_route is not None else F.lit(None).cast("string")
-    else:
-        tag = expr.otherwise(F.lit(default_route)) if default_route is not None else expr
-    tagged = df.withColumn(out, tag)
+    tagged = df.withColumn(out, match_once_col(routes, default_route))
     if default_route is None:
         tagged = tagged.filter(F.col(out).isNotNull())
     return tagged
@@ -93,6 +85,24 @@ def route_multicast(
     a row matching k routes appears k times (`logs.go:84-98` copy-per-match).
     default_route=None drops unmatched rows (no default_pipelines,
     `logs.go:95-98`): explode of an empty array emits nothing."""
+    return df.withColumn(out, multicast_col(routes, default_route))
+
+
+def match_once_col(routes: list[Route], default_route: str | None = DEFAULT_ROUTE) -> Column:
+    """The name of the first route whose condition holds, else
+    ``default_route`` (null when that is None)."""
+    expr = None
+    for r in routes:
+        cond = F.coalesce(r.condition, F.lit(False))
+        expr = F.when(cond, r.name) if expr is None else expr.when(cond, r.name)
+    if expr is None:
+        return F.lit(default_route) if default_route is not None else F.lit(None).cast("string")
+    return expr.otherwise(F.lit(default_route)) if default_route is not None else expr
+
+
+def multicast_col(routes: list[Route], default_route: str | None = DEFAULT_ROUTE) -> Column:
+    """One output row per route whose condition holds (``explode``), or
+    one ``default_route`` row when none does (none when that is None)."""
     matched = F.filter(
         F.array(
             *[
@@ -108,7 +118,7 @@ def route_multicast(
         )
     else:
         arr = matched
-    return df.withColumn(out, F.explode(arr))
+    return F.explode(arr)
 
 
 def lakehouse_format(spark) -> str:

@@ -8,19 +8,25 @@ progress is a **chunk of input files** (the offset analog at table
 granularity). A chunk is committed by two writes, in this order:
 
   1. its routed rows, an idempotent overwrite of ``data/chunk=<id>``;
-  2. ONE commit row, a local-relation append to ``checkpoint/``.
+  2. ONE commit row, a one-row parquet file that the driver writes under a
+     ``_``-prefixed name (which every reader skips) and then renames to
+     ``checkpoint/part-<chunk>-<run>.parquet``.
 
 The commit row is both the chunk's checkpoint and its lineage: the input rows
 it read, the rows and tokens it routed, its wall time, and the routed schema.
-One row in one file cannot land half-written, so no crash leaves a committed
-chunk without its counts. A killed run re-processes at most the in-flight
-chunk, whose partial output the overwrite replaces — exactly-once output
-without a custom commit protocol.
+The rename publishes the whole file or nothing (atomic on HDFS and local
+disks), so no crash leaves a committed chunk without its counts. A killed
+run re-processes at most the in-flight chunk, whose partial output the
+overwrite replaces — exactly-once output without a custom commit protocol.
 
-Each chunk is a single pass over its input: the pipeline runs once, inside
-the routed write. Two ``Observation``s ride on that write, one on the chunk's
-input (``rows_in``) and one on the routed rows (``rows`` and ``tokens``), so
-counting costs no extra job.
+Each chunk is ONE Spark job, the routed write, and a single pass over its
+input: the pipeline runs once, inside that write. Two ``Observation``s ride
+on it, one on the chunk's input (``rows_in``) and one on the routed rows
+(``rows`` and ``tokens``), so counting costs no extra job. The input schema
+is read once a run, when the chunks are planned, and every chunk reads its
+files with it, so no chunk runs a schema-inference job; the commit row is
+written from the driver (pyarrow bytes through the Hadoop file system), so
+committing runs no job either.
 
 The aggregates are computed at read time: ``aggregates()`` is
 ``aggregate_stage`` over the committed routed rows, a scan of four pruned
@@ -34,7 +40,7 @@ hundreds of files; the driver loop adds one scheduling round-trip per chunk
 
 Layout under ``out_dir``:
   data/chunk=<id>/route=<r>/*.parquet   routed rows (per-route sinks)
-  checkpoint/*.parquet                  one CHECKPOINT_SCHEMA row per chunk
+  checkpoint/part-<id>-<run>.parquet    one CHECKPOINT_SCHEMA row per chunk
 
 Readers (``routed()`` / ``aggregates()``) see COMMITTED chunks only: the
 chunk partition column is filtered against the commit rows, so a chunk whose
@@ -53,12 +59,35 @@ import time
 import uuid
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..datamodel import CHECKPOINT_SCHEMA, local_frame
+from ..datamodel import CHECKPOINT_SCHEMA
 from .pipeline import aggregate_stage
+
+
+def write_commit_row(spark: SparkSession, path: str, row: dict) -> None:
+    """``row`` (CHECKPOINT_SCHEMA fields) as a one-row parquet file at
+    ``path``, written from the driver: no Spark job. The bytes go to a
+    ``_``-prefixed sibling first, which readers skip, and a rename
+    publishes them whole."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist([row], schema=to_arrow_schema(CHECKPOINT_SCHEMA)), buf)
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    final = hadoop_path(path)
+    tmp = hadoop_path(final.getParent(), "_" + final.getName())
+    fs = final.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = fs.create(tmp, True)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not rename {tmp} to {final}")
 
 
 class CheckpointedRunner:
@@ -106,7 +135,7 @@ class CheckpointedRunner:
                 break
         if not has_part:
             return []
-        return spark.read.parquet(path).select(*cols).collect()
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path).select(*cols).collect()
 
     def completed_chunks(self, spark: SparkSession) -> set[str]:
         return {r.chunk_id for r in self._commits(spark, "chunk_id")}
@@ -114,12 +143,19 @@ class CheckpointedRunner:
     # ------------------------------------------------------------------ run
 
     def plan_chunks(self, spark: SparkSession, input_path: str) -> list[tuple[str, list[str]]]:
-        files = sorted(spark.read.parquet(input_path).inputFiles())
+        return self._plan(spark, input_path)[0]
+
+    def _plan(
+        self, spark: SparkSession, input_path: str
+    ) -> tuple[list[tuple[str, list[str]]], T.StructType]:
+        """The chunks, and the input schema every chunk is read with."""
+        source = spark.read.parquet(input_path)
+        files = sorted(source.inputFiles())
         chunks = []
         for i in range(0, len(files), self.files_per_chunk):
             group = files[i : i + self.files_per_chunk]
             chunks.append((f"{i // self.files_per_chunk:05d}", group))
-        return chunks
+        return chunks, source.schema
 
     def run(
         self,
@@ -132,15 +168,18 @@ class CheckpointedRunner:
         (used by the kill/resume test to simulate a mid-run crash)."""
         run_id = run_id or uuid.uuid4().hex[:12]
         done = self.completed_chunks(spark)
+        chunks, schema = self._plan(spark, input_path)
         processed = 0
-        for chunk_id, files in self.plan_chunks(spark, input_path):
+        for chunk_id, files in chunks:
             if chunk_id in done:
                 continue
             if max_chunks is not None and processed >= max_chunks:
                 break
             t0 = time.time()
             seen, out = Observation(), Observation()
-            df = spark.read.parquet(*files).observe(seen, F.count(F.lit(1)).alias("rows"))
+            df = spark.read.schema(schema).parquet(*files).observe(
+                seen, F.count(F.lit(1)).alias("rows")
+            )
             routed = self.pipeline_fn(df, spark)[0].observe(
                 out,
                 F.count(F.lit(1)).alias("rows"),
@@ -151,9 +190,8 @@ class CheckpointedRunner:
             routed.write.mode("overwrite").partitionBy("route").parquet(
                 f"{self.out_dir}/data/chunk={chunk_id}"
             )
-            # (2) the commit row, appended AFTER the data is down; both
-            # observations were filled by the routed write above. A local
-            # relation: one task, one file, no Python RDD to scan.
+            # (2) the commit row, written AFTER the data is down; both
+            # observations were filled by the routed write above
             totals = out.get
             commit = {
                 "run_id": run_id,
@@ -164,8 +202,8 @@ class CheckpointedRunner:
                 "wall_ms": int((time.time() - t0) * 1000),
                 "routed_schema": routed.schema.json(),
             }
-            local_frame(spark, [commit], CHECKPOINT_SCHEMA).write.mode("append").parquet(
-                f"{self.out_dir}/checkpoint"
+            write_commit_row(
+                spark, f"{self.out_dir}/checkpoint/part-{chunk_id}-{run_id}.parquet", commit
             )
             processed += 1
         return run_id
@@ -192,4 +230,4 @@ class CheckpointedRunner:
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         """The commit rows: one per committed chunk."""
-        return spark.read.parquet(f"{self.out_dir}/checkpoint")
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(f"{self.out_dir}/checkpoint")

@@ -6,49 +6,51 @@ count connector + exporters). Each stage is declarative; the whole chain up
 to the aggregation is ONE codegen'd scan stage with no Python on it: the
 grok is one JVM ``regexp_extract`` per named group, so Catalyst keeps only
 the groups a query reads (the aggregates read ``level`` alone), and both
-lookup tables are local relations, whose broadcast builds run no Python
-worker either. No per-record interpretation anywhere.
+lookup tables (severity aliases, the enrich dim) are literal maps, so the
+plan has no join and no broadcast job. No per-record interpretation
+anywhere.
+
+Each stage builds its Column expressions once per JVM
+(``functions.exprs.per_jvm``), so building the pipeline again for the next
+query or chunk costs the driver a few dozen py4j calls, not hundreds.
 
 Scale design (north rule):
-- The enrich dim is broadcast (BroadcastHashJoin — no shuffle of the 10^12-row
-  fact side; mirrors the k8sattributes in-memory lookup,
-  `processor/k8sattributesprocessor/processor.go:110-176`).
+- The enrich dim is a literal map looked up per row (no shuffle of the
+  10^12-row fact side, no broadcast build per query; mirrors the
+  k8sattributes in-memory lookup,
+  `processor/k8sattributesprocessor/processor.go:110-176`). A dim too large
+  for a plan constant would go back to a broadcast join, as the streaming
+  ``dynamic_enrich`` does for its changing table.
 - The only shuffle in the whole plan is the final groupBy, which Catalyst
   executes as partial (map-side) + final aggregation; its key set is tiny
   (route × source × severity) so the shuffle carries pre-aggregated rows.
 - Hot ``source`` keys (src-hot ≈ 45 %) would skew that shuffle; the
   aggregate therefore supports two-phase salting: groupBy(salt, dims) →
   groupBy(dims), turning one hot reducer into ``salt_buckets`` parallel ones.
-  AQE skew-join handling covers the join side if the dim ever exceeds
-  broadcast size.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..datamodel import SOURCE_LOOKUP_ROWS, SOURCE_LOOKUP_SCHEMA, local_frame
-from ..operators.parse import regex_parser, time_parser
-from ..operators.router import Route, route_match_once, route_multicast
-from ..operators.sampler import probabilistic_sample
+from ..datamodel import SOURCE_LOOKUP_ROWS, SOURCE_LOOKUP_SCHEMA
+from ..functions.exprs import literal_map, per_jvm
+from ..functions.hashing import sampler_keep_col
 from ..functions.severity import attach_severity
+from ..operators.parse import regex_parser, time_parser
+from ..operators.router import Route, match_once_col, multicast_col, route_match_once, route_multicast
 from ..sources.render import LINE_PATTERN, render_lines, row_idx_col
 
 
-def source_lookup_df(spark: SparkSession) -> DataFrame:
-    return local_frame(spark, SOURCE_LOOKUP_ROWS, SOURCE_LOOKUP_SCHEMA)
-
-
-def default_routes() -> list[Route]:
+@per_jvm
+def default_routes() -> tuple[Route, ...]:
     """FIXTURES.md §3 — mirrors routingconnector/testdata/config_logs.yaml:
     acme: tier == prod; globex: region == eu AND n_tok > 128; else default."""
-    return [
+    return (
         Route("acme", F.col("tier") == "prod"),
         Route("globex", (F.col("region") == "eu") & (F.col("n_tok") > 128)),
-    ]
+    )
 
 
 def parse_stage(df: DataFrame) -> DataFrame:
@@ -62,29 +64,58 @@ def parse_stage(df: DataFrame) -> DataFrame:
     return parsed.drop("line")
 
 
-def enrich_stage(df: DataFrame, spark: SparkSession, lut: DataFrame | None = None) -> DataFrame:
-    """Broadcast left join on source; missing key → null enrich columns
-    (GetPod-miss analog). No shuffle of the fact side."""
-    lut = lut if lut is not None else source_lookup_df(spark)
-    return df.join(F.broadcast(lut), on="source", how="left")
+def enrich_stage(df: DataFrame, spark: SparkSession, lut: list[tuple] | None = None) -> DataFrame:
+    """Left lookup on source; a missing key → null enrich columns
+    (GetPod-miss analog). ``lut`` holds SOURCE_LOOKUP_SCHEMA rows (default
+    SOURCE_LOOKUP_ROWS); of two rows for one source the later wins.
+
+    The table is a literal map in the plan, so the lookup is a map access
+    inside the scan's codegen stage: no join, no broadcast job, no shuffle
+    of the fact side. The columns come out as a left join ``on="source"``
+    orders them: source, the other input columns, then the table's.
+    ``spark`` is unused and kept for existing callers."""
+    return df.select(*_enrich_cols(tuple(map(tuple, SOURCE_LOOKUP_ROWS if lut is None else lut))))
+
+
+@per_jvm
+def _enrich_cols(rows: tuple[tuple, ...]) -> tuple[Column, ...]:
+    table = {r[0]: r[1:] for r in rows}
+    source = F.col("source")
+    looked_up = [
+        literal_map(list(table), [v[i] for v in table.values()], f.dataType)[source].alias(f.name)
+        for i, f in enumerate(SOURCE_LOOKUP_SCHEMA.fields[1:])
+    ]
+    # every input column but source, in input order (a regex over names)
+    rest = SparkSession.active().range(0).colRegex("`(?!source$).+`")
+    return (source, rest, *looked_up)
 
 
 def sample_stage(df: DataFrame) -> DataFrame:
     """Per-source deterministic sampling (sample_pct from the enrich dim;
     null → 100%). Key is the numeric doc index so DuckDB oracles can
     reproduce the decision exactly."""
-    return probabilistic_sample(
-        df,
-        key=row_idx_col(F.col("doc_id")),
-        pct=F.coalesce(F.col("sample_pct"), F.lit(100.0)),
+    return df.filter(_sample_keep())
+
+
+@per_jvm
+def _sample_keep() -> Column:
+    return sampler_keep_col(
+        row_idx_col(F.col("doc_id")), F.coalesce(F.col("sample_pct"), F.lit(100.0))
     )
 
 
 def route_stage(
     df: DataFrame, match_once: bool = True, routes: list[Route] | None = None
 ) -> DataFrame:
-    routes = routes if routes is not None else default_routes()
+    if routes is None:
+        return df.withColumn("route", _default_route_col(match_once))
     return route_match_once(df, routes) if match_once else route_multicast(df, routes)
+
+
+@per_jvm
+def _default_route_col(match_once: bool) -> Column:
+    routes = list(default_routes())
+    return match_once_col(routes) if match_once else multicast_col(routes)
 
 
 def aggregate_stage(df: DataFrame, salt_buckets: int = 0) -> DataFrame:
@@ -95,7 +126,7 @@ def aggregate_stage(df: DataFrame, salt_buckets: int = 0) -> DataFrame:
     merges the partials. With AQE this matters once per-key partial rows
     exceed a single reducer's budget (10^12-row scale), not at test scale.
     """
-    dims = ["route", "source", "severity_text"]
+    dims, aggs = _aggregate_cols()
     if salt_buckets > 0:
         salt = (row_idx_col(F.col("doc_id")) % salt_buckets).alias("__salt")
         partial = (
@@ -112,10 +143,17 @@ def aggregate_stage(df: DataFrame, salt_buckets: int = 0) -> DataFrame:
                 F.sum("__tc").cast("long").alias("token_count"),
             )
         )
-    return df.groupBy(*dims).agg(
+    return df.groupBy(*dims).agg(*aggs)
+
+
+@per_jvm
+def _aggregate_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    dims = tuple(F.col(c) for c in ("route", "source", "severity_text"))
+    aggs = (
         F.count(F.lit(1)).alias("row_count"),
         F.sum("n_tok").cast("long").alias("token_count"),
     )
+    return dims, aggs
 
 
 def full_pipeline(

@@ -99,7 +99,7 @@ def get_spark(
         # All lookup/enrich tables are small dims → always broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Arrow transfer for pandas UDFs; also makes a pandas frame a local
-        # relation (datamodel.local_frame) rather than a Python RDD.
+        # relation rather than a Python RDD.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 100k-row Arrow batches: the Arrow grok engine is ~2× faster than with the
         # 10k default (per-batch pipe/serialization overhead amortizes).

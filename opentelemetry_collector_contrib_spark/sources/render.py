@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exprs import per_jvm
+
 # index into tokens[0] % 7 → level text. Numbers are the OTel severity enum
 # (`pkg/stanza/entry/severity.go:14-52`): trace=1 debug=5 info=9 info2=10
 # warn=13 error=17 fatal=21.
@@ -53,7 +55,13 @@ def ts_col(doc_id: Column) -> Column:
 
 
 def render_lines(df: DataFrame, out: str = "line") -> DataFrame:
-    """tokens row → text line column, fully JVM-side.
+    """tokens row → text line column, fully JVM-side."""
+    return df.withColumn(out, line_col())
+
+
+@per_jvm
+def line_col() -> Column:
+    """The rendered line of a tokens row.
 
     concat() instead of format_string(): format_string goes through
     java.util.Formatter per row (~5µs/row); concat of pre-cast strings stays
@@ -80,7 +88,7 @@ def render_lines(df: DataFrame, out: str = "line") -> DataFrame:
         F.lit("MALFORMED "), F.col("doc_id"), F.lit(" x="),
         F.element_at(tokens, 1).cast("string"),
     )
-    return df.withColumn(out, F.when(is_malformed_col(tokens), bad).otherwise(good))
+    return F.when(is_malformed_col(tokens), bad).otherwise(good)
 
 
 # The grok pattern that inverts render_lines (named capture groups →

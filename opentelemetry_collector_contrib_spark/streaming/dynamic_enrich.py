@@ -7,7 +7,8 @@ resolves against whatever the store holds at that moment
 (`processor/k8sattributesprocessor/internal/kube/client.go:373` — the
 WatchClient mutates `c.Pods` under mutex; `processor.go`'s processLogs
 reads it per batch). The batch rebuild's `plans/pipeline.enrich_stage` is
-a STATIC broadcast LUT; this module is the streaming upgrade:
+a STATIC LUT, a literal map fixed in the plan; this module is the
+streaming upgrade:
 
 - ``foreachBatch`` is the natural per-micro-batch hook — inside it the
   lookup PROVIDER is re-evaluated, so each batch broadcast-joins a fresh
@@ -17,8 +18,8 @@ a STATIC broadcast LUT; this module is the streaming upgrade:
   the watch-fed store: whatever upstream wrote the table last wins
   (``REFRESH``-style freshness without restarting the query);
 - scale shape: the fact stream never shuffles for the join (broadcast
-  left join), identical to the batch `enrich_stage`; the LUT re-read is
-  a dim-table scan per micro-batch, amortized over the batch.
+  left join, the same columns as the batch `enrich_stage`); the LUT
+  re-read is a dim-table scan per micro-batch, amortized over the batch.
 
 Exactly-once interplay: the engine checkpoints offsets per batch, so a
 replayed batch after failure re-joins against the CURRENT store — the

@@ -43,10 +43,11 @@ def streaming_pipeline(
     stream: DataFrame,
     spark: SparkSession,
     match_once: bool = True,
-    lut: DataFrame | None = None,
+    lut: list[tuple] | None = None,
     routes=None,
 ) -> DataFrame:
-    """parse → enrich → route, identical code path to batch."""
+    """parse → enrich → route, identical code path to batch; ``lut`` is
+    ``enrich_stage``'s lookup rows."""
     parsed = parse_stage(stream)
     enriched = enrich_stage(parsed, spark, lut=lut)
     return route_stage(enriched, match_once=match_once, routes=routes)
@@ -104,7 +105,7 @@ def run_streaming_to_completion(
     input_path: str,
     out_dir: str,
     match_once: bool = True,
-    lut: DataFrame | None = None,
+    lut: list[tuple] | None = None,
     routes=None,
 ) -> None:
     """Drain all currently-available files (availableNow trigger) through the

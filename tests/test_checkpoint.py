@@ -198,22 +198,31 @@ def test_empty_chunk_commits_zero(spark, tokens_path, tmp_path):
 def test_torn_commit_resumes_whole(spark, tokens_path, tmp_path, monkeypatch):
     """A crash inside a chunk's commit leaves no committed chunk without its
     counts: the resume redoes whatever did not commit, and every planned
-    chunk ends with exactly one commit row carrying rows_in."""
+    chunk ends with exactly one commit row carrying rows_in. The crash
+    leaves a half-written ``_``-prefixed commit file behind, which no
+    reader sees."""
+    import os
+
     from opentelemetry_collector_contrib_spark.plans import checkpoint
 
-    real, calls = checkpoint.local_frame, []
+    real, calls = checkpoint.write_commit_row, []
 
-    def crash_on_second(*args):
-        calls.append(args)
+    def crash_on_second(spark, path, row):
+        calls.append(path)
         if len(calls) == 2:
+            head, name = os.path.split(path)
+            with open(os.path.join(head, "_" + name), "wb") as torn:
+                torn.write(b"PAR1")
             raise RuntimeError("killed mid-commit")
-        return real(*args)
+        return real(spark, path, row)
 
-    monkeypatch.setattr(checkpoint, "local_frame", crash_on_second)
-    r = CheckpointedRunner(str(tmp_path / "out"), _pipeline, files_per_chunk=4)
+    monkeypatch.setattr(checkpoint, "write_commit_row", crash_on_second)
+    out = str(tmp_path / "out")
+    r = CheckpointedRunner(out, _pipeline, files_per_chunk=4)
     with pytest.raises(RuntimeError, match="killed mid-commit"):
         r.run(spark, tokens_path)
-    monkeypatch.setattr(checkpoint, "local_frame", real)
+    assert len(r.completed_chunks(spark)) == 1
+    monkeypatch.setattr(checkpoint, "write_commit_row", real)
     r.run(spark, tokens_path)
 
     commits = r.metrics(spark).collect()
@@ -224,3 +233,22 @@ def test_torn_commit_resumes_whole(spark, tokens_path, tmp_path, monkeypatch):
     ids = r.routed(spark).groupBy("doc_id").count()
     assert ids.count() == N
     assert ids.filter("count != 1").count() == 0
+
+
+def test_chunk_is_one_spark_job(spark, tokens_path, tmp_path):
+    """A run starts at most one Spark job per chunk, its routed write, plus
+    one for the whole run, which reads the input schema while planning:
+    no chunk infers a schema, broadcasts a lookup table or writes its
+    commit row through Spark."""
+    r = CheckpointedRunner(str(tmp_path / "out"), _pipeline, files_per_chunk=4)
+    chunks = r.plan_chunks(spark, tokens_path)
+    assert len(chunks) == 2
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-jobs", "one run")
+    try:
+        r.run(spark, tokens_path)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("checkpoint-jobs")
+    assert len(jobs) <= len(chunks) + 1, len(jobs)
+    assert r.routed(spark).count() == N

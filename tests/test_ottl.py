@@ -236,29 +236,35 @@ def test_type_predicate_requires_schema_or_literal(df):
 
 def test_severity_http_range_expansion(spark):
     """severity_builder.go:192-210 — literal status codes resolve through
-    the expanded Nxx buckets ("204"→info(9), "503"→error(17))."""
-    from opentelemetry_collector_contrib_spark.functions.severity import (
-        attach_severity,
-        severity_number_col,
-    )
+    the expanded Nxx buckets ("204"→info(9), "503"→error(17)); a custom
+    alias for one status overrides its bucket and leaves its neighbours."""
+    from opentelemetry_collector_contrib_spark.functions.severity import attach_severity
 
     df = spark.createDataFrame(
-        [("204",), ("301",), ("404",), ("503",), ("2xx",), ("warn",), ("999",)],
+        [("204",), ("301",), ("404",), ("405",), ("503",), ("2xx",), ("warn",), ("999",),
+         ("204\n",), (None,)],
         "level string",
     )
     out = {r.level: (r.severity_text, r.severity_number)
            for r in attach_severity(df, "level").collect()}
-    assert out["204"] == ("info", 9)
-    assert out["301"] == ("info2", 10)
-    assert out["404"] == ("warn", 13)
-    assert out["503"] == ("error", 17)
-    assert out["2xx"] == ("info", 9)
-    assert out["warn"] == ("warn", 13)
-    assert out["999"] == ("default", 0)
+    assert out == {
+        "204": ("info", 9),
+        "301": ("info2", 10),
+        "404": ("warn", 13),
+        "405": ("warn", 13),
+        "503": ("error", 17),
+        "2xx": ("info", 9),
+        "warn": ("warn", 13),
+        "999": ("default", 0),
+        "204\n": ("default", 0),
+        None: ("default", 0),
+    }
 
-    nums = {r.level: r.n for r in df.select(
-        "level", severity_number_col(F.col("level")).alias("n")).collect()}
-    assert nums == {"204": 9, "301": 10, "404": 13, "503": 17, "2xx": 9, "warn": 13, "999": 0}
+    custom = attach_severity(df, "level", custom=[("404", "fatal", 21)])
+    got = {r.level: (r.severity_text, r.severity_number) for r in custom.collect()}
+    assert got["404"] == ("fatal", 21)
+    assert got["405"] == ("warn", 13)
+    assert got["503"] == ("error", 17)
 
 
 def test_enum_literals(df):

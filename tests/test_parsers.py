@@ -157,6 +157,17 @@ def test_severity_custom_mapping(spark):
     assert got["warn"] == ("warn", 13)
 
 
+def test_severity_custom_alias_listed_twice(spark):
+    """An alias that ``custom`` names twice takes its later entry, and
+    every input row stays one output row."""
+    from opentelemetry_collector_contrib_spark.functions.severity import attach_severity
+
+    df = spark.createDataFrame([Row(level="oops"), Row(level="OOPS")], "level string")
+    out = attach_severity(df, "level", custom=[("oops", "error2", 18), ("oops", "fatal", 21)])
+    got = [(r.level, r.severity_text, r.severity_number) for r in out.collect()]
+    assert sorted(got) == [("OOPS", "fatal", 21), ("oops", "fatal", 21)]
+
+
 def test_grouping_ops(spark):
     df = spark.createDataFrame(
         [Row(id=i, attributes={"host": f"h{i % 3}"}) for i in range(30)],

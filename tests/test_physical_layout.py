@@ -72,14 +72,10 @@ def _executed_plan(df) -> str:
 
 def test_pipeline_hot_path_runs_no_python(spark, tmp_path):
     """The aggregates' plan holds no Python-eval node and keeps only the
-    grok group it reads (level); the routed rows keep all seven. Both
-    lookup tables are local relations, so their broadcast builds start no
-    Python worker."""
-    from opentelemetry_collector_contrib_spark.functions.severity import severity_map_df
-    from opentelemetry_collector_contrib_spark.plans.pipeline import (
-        full_pipeline,
-        source_lookup_df,
-    )
+    grok group it reads (level); the routed rows keep all seven. The
+    severity and enrich lookups are literal maps, so neither frame plans a
+    join or a broadcast."""
+    from opentelemetry_collector_contrib_spark.plans.pipeline import full_pipeline
 
     path = str(tmp_path / "tokens")
     tokens_df(spark, 2000, num_partitions=4).write.parquet(path)
@@ -88,10 +84,32 @@ def test_pipeline_hot_path_runs_no_python(spark, tmp_path):
     for node in ("ArrowEvalPython", "BatchEvalPython"):
         assert node not in agg_plan, agg_plan
     assert agg_plan.count("regexp_extract(") == 1, agg_plan
-    assert _executed_plan(routed).count("regexp_extract(") == 7
-    for lut in (source_lookup_df(spark), severity_map_df(spark)):
-        plan = _executed_plan(lut)
-        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    routed_plan = _executed_plan(routed)
+    assert routed_plan.count("regexp_extract(") == 7
+    for plan in (agg_plan, routed_plan):
+        assert "BroadcastExchange" not in plan and "Join" not in plan, plan
+
+
+def test_warm_pipeline_build_is_cheap_on_py4j(spark, monkeypatch):
+    """Once the operators' expressions are built, building full_pipeline
+    again crosses py4j at most 200 times (about 900-1300 when every build
+    rebuilt them)."""
+    from py4j.java_gateway import GatewayClient
+
+    from opentelemetry_collector_contrib_spark.plans.pipeline import full_pipeline
+
+    tokens = tokens_df(spark, 100, num_partitions=1)
+    full_pipeline(tokens, spark)
+    real, calls = GatewayClient.send_command, []
+
+    def counted(self, *args, **kwargs):
+        calls.append(args[0])
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    full_pipeline(tokens, spark)
+    monkeypatch.undo()
+    assert len(calls) <= 200, len(calls)
 
 
 def test_pair_generation_plans_are_equi_joins(spark):

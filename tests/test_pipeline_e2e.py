@@ -85,3 +85,44 @@ def test_salted_aggregate_equivalence(spark):
     a = {tuple(r) for r in plain.collect()}
     b = {tuple(r) for r in salted.collect()}
     assert a == b
+
+
+def test_enrich_stage_lookup_rows(spark):
+    """enrich_stage over caller rows: the columns come out in left-join
+    order (source first, the table's last, nullable), a missing source and
+    a null table value read as null, and a source listed twice takes its
+    later row."""
+    from pyspark.sql import types as T
+
+    from opentelemetry_collector_contrib_spark.plans.pipeline import enrich_stage
+
+    df = spark.createDataFrame(
+        [("d1", "a", 1), ("d2", "b", 2), ("d3", "zzz", 3)],
+        T.StructType(
+            [
+                T.StructField("doc_id", T.StringType(), False),
+                T.StructField("source", T.StringType(), False),
+                T.StructField("n_tok", T.IntegerType(), False),
+            ]
+        ),
+    )
+    lut = [
+        ("a", "t1", "eu", "prod", 50.0),
+        ("b", "t2", "us", "dev", None),
+        ("a", "t3", "ap", "dev", 25.0),
+    ]
+    out = enrich_stage(df, spark, lut=lut)
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields] == [
+        ("source", "string", False),
+        ("doc_id", "string", False),
+        ("n_tok", "int", False),
+        ("team", "string", True),
+        ("region", "string", True),
+        ("tier", "string", True),
+        ("sample_pct", "double", True),
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("a", "d1", 1, "t3", "ap", "dev", 25.0),
+        ("b", "d2", 2, "t2", "us", "dev", None),
+        ("zzz", "d3", 3, None, None, None, None),
+    ]
