@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from .functions.hashing import (
     SAMPLER_BUCKETS,
-    VOCAB,
     sampler_bucket_sql,
     word_token_sql,
 )
@@ -726,117 +725,7 @@ FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
 """
 
 
-# --- training-data pipeline operators (dedup / similarity / textstats) -----
-
-def _q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import minhash_signature
-
-    toks = _tokens_of_docs(spark, sf_dir)
-    sig = minhash_signature(toks, "tokens", num_perms=4)
-    return sig.select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"),
-        *[F.col(f"mh{i}").alias(f"mh{i}") for i in range(4)],
-    )
-
-
-def _minhash_sql_cte() -> str:
-    from .operators.dedup import MERSENNE, PERM_A, PERM_B
-
-    cols = ", ".join(
-        f"list_min(list_transform(tokens, t -> (CAST(t AS BIGINT)*{PERM_A[i]} + {PERM_B[i]}) % {MERSENNE})) AS mh{i}"
-        for i in range(4)
-    )
-    return f", sig AS (SELECT doc_id, {cols} FROM base)"
-
-
-_SQL_MINHASH = _SQL_BASE + _minhash_sql_cte() + """
-SELECT CAST(doc_id AS BIGINT) AS doc_id, mh0, mh1, mh2, mh3 FROM sig
-"""
-
-
-def _q_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate pairs via the SCALABLE path — explode bands → bucket
-    equi-join on (band, raw band values) (operators/dedup.lsh_candidate_pairs).
-    The checked query IS the 100 TB operator: the physical plan is a shuffled
-    equi-join keyed on band buckets, never a BroadcastNestedLoopJoin (asserted
-    in tests/test_physical_layout.py)."""
-    from .operators.dedup import lsh_candidate_pairs, minhash_signature
-
-    toks = _tokens_of_docs(spark, sf_dir)
-    sig = minhash_signature(toks, "tokens", num_perms=4).withColumn(
-        "doc_idx", row_idx_col(F.col("doc_id"))
-    )
-    return lsh_candidate_pairs(sig, "doc_idx", num_perms=4, rows_per_band=2).select(
-        F.col("doc_a"), F.col("doc_b")
-    )
-
-
-# oracle = the same banded equi-join (UNION ALL of per-band buckets); pair
-# set is provably identical to the old OR-of-bands self-join, but both
-# engines now run the plan that survives 100× scale.
-_SQL_MINHASH_PAIRS = _SQL_BASE + _minhash_sql_cte() + """
-, bands AS (
-  SELECT doc_id, 0 AS band, mh0 AS v0, mh1 AS v1 FROM sig
-  UNION ALL
-  SELECT doc_id, 1 AS band, mh2 AS v0, mh3 AS v1 FROM sig
-)
-SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS doc_a, CAST(b.doc_id AS BIGINT) AS doc_b
-FROM bands a JOIN bands b
-  ON a.band = b.band AND a.v0 = b.v0 AND a.v1 = b.v1 AND a.doc_id < b.doc_id
-"""
-
-
-def _q_shingle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import ngram_shingles
-
-    toks = _tokens_of_docs(spark, sf_dir)
-    sh = ngram_shingles(toks, "tokens", 3)
-    return sh.select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"),
-        F.size("shingles").alias("n_shingles"),
-        F.array_min("shingles").alias("min_shingle"),
-        F.array_max("shingles").alias("max_shingle"),
-    )
-
-
-_SQL_SHINGLES = _SQL_BASE + """
-, sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(tokens)-1),
-           i -> CAST(tokens[i] AS BIGINT)*2525766049 + CAST(tokens[i+1] AS BIGINT)*50257 + tokens[i+2])) AS shingles
-  FROM base
-)
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(len(shingles) AS INT) AS n_shingles,
-       list_min(shingles) AS min_shingle,
-       list_max(shingles) AS max_shingle
-FROM sh
-"""
-
-
-def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import simhash
-
-    toks = _tokens_of_docs(spark, sf_dir)
-    return simhash(toks, "tokens", bits=16).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), F.col("simhash")
-    )
-
-
-def _simhash_sql() -> str:
-    K = 2654435761
-    bits = []
-    for j in range(16):
-        pow2 = 1 << j
-        bits.append(
-            f"CASE WHEN CAST(list_sum(list_transform(tokens, t -> CASE WHEN (CAST(t AS BIGINT)*{K} // {pow2}) % 2 = 1 THEN 1 ELSE -1 END)) AS BIGINT) >= 0 THEN {pow2} ELSE 0 END"
-        )
-    return " + ".join(bits)
-
-
-_SQL_SIMHASH = _SQL_BASE + f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST({_simhash_sql()} AS BIGINT) AS simhash FROM base
-"""
+# --- recombine, OTTL, windows, joins, sketches, streaming, tail sampling ---
 
 
 def _q_recombine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,841 +821,6 @@ SELECT source, CAST(seg_id AS VARCHAR) AS segment_id,
        COUNT(*) AS n_lines,
        string_agg(line, ' ' ORDER BY doc_id) AS combined
 FROM seg GROUP BY source, seg_id
-"""
-
-
-def _q_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs at hamming ≤ 2 via pigeonhole banding (k+1
-    bit-slices → bucket equi-join → popcount verify) — the scale path is
-    the checked path; the oracle verifies against a naive all-pairs compare
-    (oracles may be naive; the engine may not)."""
-    from .operators.dedup import simhash, simhash_near_pairs
-
-    toks = _tokens_of_docs(spark, sf_dir)
-    sh = simhash(toks, "tokens", bits=16).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "simhash"
-    )
-    return simhash_near_pairs(sh, "doc_id", "simhash", bits=16, k=2)
-
-
-_SQL_SIMHASH_NEAR = _SQL_BASE + f"""
-, sh AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST({_simhash_sql()} AS BIGINT) AS simhash
-  FROM base
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
-"""
-
-
-def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import exact_dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return exact_dedup(docs, ["text"], "doc_id").select("doc_id")
-
-
-_SQL_DEDUP_EXACT = """
-SELECT CAST(doc_id AS BIGINT) AS doc_id FROM (
-  SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-  FROM documents
-) WHERE rn = 1
-"""
-
-
-def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import LANG_STOPWORDS, words_col
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    w = words_col(F.col("text"))
-    en = F.array(*[F.lit(s) for s in LANG_STOPWORDS["en"]])
-    return docs.select(
-        "doc_id",
-        F.size(w).alias("n_words"),
-        F.length("text").cast("int").alias("n_chars_meas"),
-        F.size(F.filter(w, lambda x: F.array_contains(en, x))).alias("stop_hits"),
-    )
-
-
-_SQL_TEXT_STATS = """
-SELECT doc_id,
-       CAST(len(list_filter(str_split_regex(lower(text), '\\s+'), w -> length(w) > 0)) AS INT) AS n_words,
-       CAST(length(text) AS INT) AS n_chars_meas,
-       CAST(len(list_filter(str_split_regex(lower(text), '\\s+'),
-            w -> list_contains(['the','and','of','to','in','is','that','it','was','for'], w))) AS INT) AS stop_hits
-FROM documents
-"""
-
-
-def _q_rep_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition signals (integer-exact): per doc, for n in
-    {2,3}: n-gram position count, max n-gram multiplicity, positions covered
-    by duplicated n-grams. Spark computes them with a zero-shuffle per-row
-    sort+fold; the oracle uses explode+GROUP BY — same counts exactly."""
-    from .operators.textstats import repetition_stats
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    return repetition_stats(toks, "tokens", ns=(2, 3)).drop("tokens")
-
-
-def _rep_stats_sql() -> str:
-    v = 50257
-    parts = []
-    for n in (2, 3):
-        gram = " + ".join(
-            f"tokens[i+{k}]*{v ** (n - 1 - k)}::BIGINT" for k in range(n)
-        )
-        parts.append(f"""
-, e{n} AS (
-  SELECT doc_id, UNNEST(list_transform(range(1, len(tokens) - {n - 2}),
-                                       i -> {gram})) AS gm
-  FROM base WHERE len(tokens) >= {n}
-), c{n} AS (
-  SELECT doc_id, gm, COUNT(*) AS c FROM e{n} GROUP BY doc_id, gm
-), s{n} AS (
-  SELECT doc_id, MAX(c) AS top_{n},
-         COALESCE(SUM(c) FILTER (WHERE c > 1), 0) AS dup_{n}
-  FROM c{n} GROUP BY doc_id
-)""")
-    return _SQL_BASE + "".join(parts) + """
-SELECT b.doc_id,
-       CAST(GREATEST(b.n_tok - 1, 0) AS BIGINT) AS npos_2,
-       CAST(COALESCE(s2.top_2, 0) AS BIGINT) AS top_2,
-       CAST(COALESCE(s2.dup_2, 0) AS BIGINT) AS dup_2,
-       CAST(GREATEST(b.n_tok - 2, 0) AS BIGINT) AS npos_3,
-       CAST(COALESCE(s3.top_3, 0) AS BIGINT) AS top_3,
-       CAST(COALESCE(s3.dup_3, 0) AS BIGINT) AS dup_3
-FROM base b LEFT JOIN s2 USING (doc_id) LEFT JOIN s3 USING (doc_id)
-"""
-
-
-_SQL_REP_STATS = _rep_stats_sql()
-
-
-_MIX_WEIGHTS = {"src0": 0.4, "src1": 0.2, "src2": 0.2, "src3": 0.1, "src4": 0.1}
-_MIX_TARGET = 100
-
-
-def _q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-mixture downsampling: per-source keep rates derived from
-    target weights × target_total / source count (capped at 1), applied via
-    the deterministic sampler bucket. src0's rate caps at 100%; unweighted
-    sources drop entirely."""
-    from .operators.sampler import mixture_sample
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
-    return mixture_sample(
-        docs, "source", F.col("doc_id"), _MIX_WEIGHTS, _MIX_TARGET, seed=3
-    )
-
-
-def _mixture_sql() -> str:
-    w_case = (
-        "CASE source "
-        + " ".join(f"WHEN '{k}' THEN {v}" for k, v in _MIX_WEIGHTS.items())
-        + " ELSE 0.0 END"
-    )
-    rate = f"LEAST(100.0, (({w_case}) * {float(_MIX_TARGET)}) / (COUNT(*) OVER (PARTITION BY source)) * 100.0)"
-    return f"""
-SELECT source, doc_id FROM (
-  SELECT doc_id, source,
-         {sampler_bucket_sql('doc_id', seed=3)} AS bkt,
-         {rate} AS rate_pct
-  FROM documents
-) WHERE bkt < rate_pct * {SAMPLER_BUCKETS} / 100.0
-"""
-
-
-_SQL_MIXTURE = _mixture_sql()
-
-
-_SHUF_SHARDS = 8
-
-
-def _q_det_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global shuffle: pseudo-random shard + stable in-shard
-    position for every document, identical across engines/reruns."""
-    from .operators.packing import deterministic_shuffle
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return deterministic_shuffle(docs, F.col("doc_id"), _SHUF_SHARDS, seed=11)
-
-
-def _det_shuffle_sql() -> str:
-    from .functions.hashing import mix32_sql
-
-    mix = mix32_sql("doc_id", seed=11)
-    return f"""
-SELECT doc_id, CAST({mix} % {_SHUF_SHARDS} AS INT) AS shard_id,
-       CAST(ROW_NUMBER() OVER (PARTITION BY {mix} % {_SHUF_SHARDS}
-                               ORDER BY {mix}, doc_id) - 1 AS BIGINT) AS pos
-FROM documents
-"""
-
-
-_SQL_DET_SHUFFLE = _det_shuffle_sql()
-
-
-_LINE_WORDS = 5
-
-
-def _q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style corpus-level line dedup: documents re-lined into
-    {_LINE_WORDS}-word lines (the synthetic corpus has no newlines), then
-    every exact duplicate line across the corpus keeps only its
-    (doc_id, pos)-first occurrence and docs are reassembled in order."""
-    from .operators.dedup import line_dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    words = F.filter(F.split(F.col("text"), r"\s+"), lambda w: F.length(w) > 0)
-    nlines = F.ceil(F.size(words) / _LINE_WORDS).cast("int")
-    lined = docs.select(
-        "doc_id",
-        F.when(
-            nlines > 0,
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.sequence(F.lit(0), nlines - 1),
-                    lambda j: F.concat_ws(
-                        " ", F.slice(words, j * _LINE_WORDS + 1, _LINE_WORDS)
-                    ),
-                ),
-            ),
-        ).otherwise(F.lit("")).alias("lined_text"),
-    )
-    return line_dedup(lined, "doc_id", "lined_text")
-
-
-_SQL_LINE_DEDUP = f"""
-WITH words AS (
-  SELECT doc_id, list_filter(str_split_regex(text, '\\s+'), w -> length(w) > 0) AS ws
-  FROM documents
-), lines AS (
-  SELECT doc_id, g.i AS pos,
-         array_to_string(ws[(g.i*{_LINE_WORDS}+1):(g.i*{_LINE_WORDS}+{_LINE_WORDS})], ' ') AS line
-  FROM words,
-       LATERAL (SELECT UNNEST(range(0, greatest(CAST(ceil(len(ws)/{_LINE_WORDS}.0) AS INT), 1))) AS i) g
-), ranked AS (
-  SELECT doc_id, pos, line,
-         ROW_NUMBER() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rk
-  FROM lines
-)
-SELECT doc_id,
-       COUNT(*) AS n_lines,
-       CAST(COALESCE(SUM(CASE WHEN rk = 1 THEN 1 END), 0) AS BIGINT) AS n_kept,
-       COALESCE(string_agg(CASE WHEN rk = 1 THEN line END, chr(10) ORDER BY pos), '')
-         AS dedup_text
-FROM ranked GROUP BY doc_id
-"""
-
-
-def _q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplication signal (Lee et al. 2021 analog): per doc,
-    the count of 4-token window positions whose exact 4-gram occurs in ≥2
-    distinct documents. Inverted index shuffles packed longs only.
-    passes=2 exercises the scratch-bounding hash-range iteration (the
-    100 TB path) under the driver's value oracle — pass-count-invariant
-    by construction, so the oracle is unchanged."""
-    from .operators.dedup import duplicated_spans
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    return duplicated_spans(toks, "doc_id", "tokens", n=4, min_docs=2, passes=2)
-
-
-def _dup_spans_sql() -> str:
-    v = 50257
-    gram = " + ".join(f"tokens[i+{k}]*{v ** (3 - k)}::BIGINT" for k in range(4))
-    return _SQL_BASE + f"""
-, w AS (
-  SELECT doc_id, UNNEST(list_transform(range(1, len(tokens) - 2), i -> {gram})) AS gm
-  FROM base WHERE len(tokens) >= 4
-), dup AS (
-  SELECT gm FROM w GROUP BY gm HAVING COUNT(DISTINCT doc_id) >= 2
-), cnt AS (
-  SELECT w.doc_id, COUNT(*) AS dup_pos FROM w JOIN dup USING (gm) GROUP BY w.doc_id
-)
-SELECT b.doc_id,
-       CAST(GREATEST(b.n_tok - 3, 0) AS BIGINT) AS npos,
-       CAST(COALESCE(cnt.dup_pos, 0) AS BIGINT) AS dup_pos
-FROM base b LEFT JOIN cnt ON b.doc_id = cnt.doc_id
-"""
-
-
-_SQL_DUP_SPANS = _dup_spans_sql()
-
-
-_FREQ_TOP_K = 100
-
-
-def _q_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus unigram head: global token counts, top 100 with deterministic
-    (count desc, token asc) dense rank. One shuffle of (int, long) partial
-    counts; the top-k runs over the ≤|vocab|-row aggregate."""
-    from .operators.textstats import token_frequencies
-
-    toks = _tokens_of_docs(spark, sf_dir).select("tokens")
-    return token_frequencies(toks, "tokens", top_k=_FREQ_TOP_K)
-
-
-_SQL_TOKEN_FREQ = _SQL_BASE + f"""
-, flat AS (
-  SELECT UNNEST(tokens) AS token FROM base
-), freq AS (
-  SELECT token, COUNT(*) AS cnt FROM flat GROUP BY token
-)
-SELECT token, cnt,
-       CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, token ASC) AS INT) AS rank
-FROM freq QUALIFY rank <= {_FREQ_TOP_K}
-"""
-
-
-_CURATE_WEIGHTS = {"src0": 0.3, "src1": 0.25, "src2": 0.25, "src3": 0.2}
-_CURATE_TARGET = 120
-_CURATE_SHARDS = 4
-_CURATE_SEED = 7
-
-
-def _q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full training-data curation chain as ONE plan: exact dedup →
-    Gopher-style quality gate (length + top-bigram repetition) → domain
-    mixture downsample → deterministic shuffle into (shard, pos). Every
-    stage deterministic in (content, seed); 3 exchanges total."""
-    from .plans.curate import curate_corpus
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens", "source"
-    )
-    out = curate_corpus(
-        toks,
-        "doc_id",
-        "tokens",
-        "source",
-        _CURATE_WEIGHTS,
-        _CURATE_TARGET,
-        _CURATE_SHARDS,
-        seed=_CURATE_SEED,
-    )
-    return out.select(
-        "doc_id",
-        "source",
-        "shard_id",
-        "pos",
-        F.concat_ws("-", F.transform("tokens", lambda t: t.cast("string"))).alias(
-            "toks_str"
-        ),
-    )
-
-
-def _curate_sql() -> str:
-    from .functions.hashing import mix32_sql
-
-    v = 50257
-    w_case = (
-        "CASE source "
-        + " ".join(f"WHEN '{k}' THEN {v_}" for k, v_ in _CURATE_WEIGHTS.items())
-        + " ELSE 0.0 END"
-    )
-    rate = (
-        f"LEAST(100.0, (({w_case}) * {float(_CURATE_TARGET)}) / "
-        f"(COUNT(*) OVER (PARTITION BY source)) * 100.0)"
-    )
-    mix = mix32_sql("doc_id", seed=_CURATE_SEED + 1)
-    return _SQL_BASE + f"""
-, dd AS (
-  SELECT doc_id, tokens, n_tok, source,
-         ROW_NUMBER() OVER (PARTITION BY array_to_string(tokens, '-')
-                            ORDER BY doc_id) AS rn
-  FROM base
-), surv AS (
-  SELECT doc_id, tokens, n_tok, source FROM dd WHERE rn = 1
-), e2 AS (
-  SELECT doc_id, UNNEST(list_transform(range(1, len(tokens)),
-                 i -> tokens[i]*{v}::BIGINT + tokens[i+1])) AS gm
-  FROM surv WHERE len(tokens) >= 2
-), c2 AS (
-  SELECT doc_id, gm, COUNT(*) AS c FROM e2 GROUP BY doc_id, gm
-), s2 AS (
-  SELECT doc_id, MAX(c) AS top_2 FROM c2 GROUP BY doc_id
-), gated AS (
-  SELECT s.doc_id, s.tokens, s.source
-  FROM surv s LEFT JOIN s2 USING (doc_id)
-  WHERE s.n_tok >= 3 AND s.n_tok <= 1000000
-    AND NOT (GREATEST(s.n_tok - 1, 0) > 0
-             AND COALESCE(s2.top_2, 0) * 100 > 50 * GREATEST(s.n_tok - 1, 0))
-), kept AS (
-  SELECT doc_id, source, tokens FROM (
-    SELECT doc_id, source, tokens,
-           {sampler_bucket_sql('doc_id', seed=_CURATE_SEED)} AS bkt,
-           {rate} AS rate_pct
-    FROM gated
-  ) WHERE bkt < rate_pct * {SAMPLER_BUCKETS} / 100.0
-)
-SELECT doc_id, source,
-       CAST({mix} % {_CURATE_SHARDS} AS INT) AS shard_id,
-       CAST(ROW_NUMBER() OVER (PARTITION BY {mix} % {_CURATE_SHARDS}
-                               ORDER BY {mix}, doc_id) - 1 AS BIGINT) AS pos,
-       array_to_string(tokens, '-') AS toks_str
-FROM kept
-"""
-
-
-_SQL_CURATE = _curate_sql()
-
-
-def _q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import language_id
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return language_id(docs, "text").select("doc_id", "lang_pred")
-
-
-def _langid_sql() -> str:
-    from .operators.textstats import LANG_STOPWORDS
-
-    structs = []
-    for lang, stops in LANG_STOPWORDS.items():
-        lst = ", ".join(f"'{s}'" for s in stops)
-        hits = (
-            f"CAST(len(list_filter(str_split_regex(lower(text), '\\s+'), "
-            f"w -> list_contains([{lst}], w))) AS INT)"
-        )
-        structs.append(f"struct_pack(hits := {hits}, lang := '{lang}')")
-    best = f"list_max([{', '.join(structs)}])"
-    return f"""
-SELECT doc_id,
-       CASE WHEN ({best}).hits > 0 THEN ({best}).lang ELSE 'und' END AS lang_pred
-FROM documents
-"""
-
-
-def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import fingerprint
-
-    toks = _tokens_of_docs(spark, sf_dir)
-    return fingerprint(toks, "tokens").select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), F.col("fp")
-    )
-
-
-_SQL_FINGERPRINT = _SQL_BASE + """
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(tokens, t -> CAST(t AS BIGINT))),
-                   (a, b) -> (a*31 + b) % 2147483647) AS fp
-FROM base
-"""
-
-
-def _q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import brute_force_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3)
-    out = brute_force_topk(emb, queries, id_col="vec_id", vec_col="embedding", k=5, metric="qdot")
-    return out.select(
-        "query_id", "vec_id", F.col("score").alias("qdot"), F.col("rank").cast("int").alias("rank")
-    )
-
-
-_SQL_EMB_TOPK = """
-WITH scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-         CAST(list_sum(list_transform(range(1, len(q.embedding)+1),
-           i -> CAST(round(CAST(q.embedding[i] AS DOUBLE)*1000) AS BIGINT)
-              * CAST(round(CAST(c.embedding[i] AS DOUBLE)*1000) AS BIGINT))) AS BIGINT) AS qdot
-  FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-  WHERE q.vec_id < 3
-), ranked AS (
-  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) AS INT) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, qdot, rank FROM ranked WHERE rank <= 5
-"""
-
-
-def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n-gram Jaccard near-dup pairs via inverted-index join (integer
-    |∩|/|∪| outputs for exact cross-engine equality)."""
-    from .operators.dedup import jaccard_pairs
-
-    toks = _tokens_of_docs(spark, sf_dir).withColumn(
-        "doc_idx", row_idx_col(F.col("doc_id"))
-    ).drop("doc_id").withColumnRenamed("doc_idx", "doc_id")
-    out = jaccard_pairs(toks, "doc_id", "tokens", n=3, threshold=0.4)
-    return out.select("doc_a", "doc_b", "common", "union_size")
-
-
-_SQL_JACCARD = _SQL_BASE + """
-, sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(tokens)-1),
-           i -> CAST(tokens[i] AS BIGINT)*2525766049 + CAST(tokens[i+1] AS BIGINT)*50257 + tokens[i+2])) AS shingles
-  FROM base
-), inv AS (
-  SELECT doc_id, len(shingles) AS set_size, unnest(shingles) AS sg FROM sh
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.set_size AS sa, b.set_size AS sb, COUNT(*) AS common
-  FROM inv a JOIN inv b ON a.sg = b.sg AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4
-)
-SELECT CAST(doc_a AS BIGINT) AS doc_a, CAST(doc_b AS BIGINT) AS doc_b,
-       common, (sa + sb - common) AS union_size
-FROM inter
-WHERE common * 1.0 / (sa + sb - common) >= 0.4
-"""
-
-
-def _q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine-threshold near-dup pairs (cos ≥ 0.4), integer-exact AND
-    LSH-bucket-pruned: quantized random-hyperplane buckets → bucket
-    equi-join → quantized re-rank (operators/similarity.
-    embedding_near_dups_quantized). The checked query is the scalable
-    operator itself — the plan is a shuffled equi-join on bucket, never a
-    BroadcastNestedLoopJoin (asserted in tests/test_physical_layout.py).
-    cos(a,b) ≥ 2/5 ⟺ qdot>0 ∧ 25·qdot² ≥ 4·qn_a·qn_b over round(x*1000)
-    longs — no floats cross the engine boundary; the oracle reproduces the
-    buckets from the same inlined integer hyperplanes."""
-    from .operators.similarity import embedding_near_dups_quantized
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return embedding_near_dups_quantized(
-        emb, "vec_id", "embedding", dim=64, num_planes=_NEARDUP_PLANES, seed=42,
-        threshold_num=2, threshold_den=5,
-    )
-
-
-_NEARDUP_PLANES = 4
-
-
-def _emb_neardup_sql() -> str:
-    """Oracle with the hyperplane constants inlined — same integer math,
-    same bucket assignment, same re-rank filter as the Spark operator."""
-    from .operators.similarity import quantized_hyperplanes
-
-    planes = quantized_hyperplanes(64, _NEARDUP_PLANES, seed=42)
-    bits = " + ".join(
-        f"(CASE WHEN list_sum(list_transform(range(1, 65), i -> qe[i] * ({plane}::BIGINT[])[i])) >= 0 "
-        f"THEN {1 << p} ELSE 0 END)"
-        for p, plane in enumerate(planes)
-    )
-    return f"""
-WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qe
-  FROM embeddings
-), qb AS (
-  SELECT vec_id, qe,
-         CAST(list_sum(list_transform(qe, x -> x*x)) AS BIGINT) AS qn,
-         ({bits}) AS bucket
-  FROM q
-), p AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.qn AS qn_a, b.qn AS qn_b,
-         CAST(list_sum(list_transform(range(1, 65), i -> a.qe[i] * b.qe[i])) AS BIGINT) AS qdot
-  FROM qb a JOIN qb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-)
-SELECT vec_a, vec_b, qdot FROM p
-WHERE qdot > 0 AND qdot*qdot*25 >= qn_a*qn_b*4
-"""
-
-
-_SQL_EMB_NEARDUP = _emb_neardup_sql()
-
-
-_IVF_CELLS, _IVF_SEED, _IVF_NPROBE = 8, 7, 2
-_LSHQ_PLANES, _LSHQ_SEED, _LSHQ_TABLES = 4, 11, 2
-
-
-def _ivf_centroids_q() -> list[list[int]]:
-    from .operators.similarity import quantized_hyperplanes
-
-    return quantized_hyperplanes(64, _IVF_CELLS, seed=_IVF_SEED)
-
-
-def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate nearest neighbors, value-checked end to end: INTEGER
-    coarse-quantizer centroids (fixed seeded vectors — quantizer quality is
-    covered by the pytest n_probe=K ≡ brute-force equivalence on the
-    k-means path), integer-exact cell argmax, candidates shuffle once by
-    cell, query probes broadcast, integer-qdot re-rank. The DuckDB oracle
-    re-derives cells/probes/ranks from a VALUES table of the same
-    centroids (`ivf_topk_quantized` docstring has the determinism
-    argument)."""
-    from .operators.similarity import ivf_topk_quantized
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 5)
-    return ivf_topk_quantized(
-        emb, qs, _ivf_centroids_q(), k=10, n_probe=_IVF_NPROBE
-    ).select("query_id", "vec_id", "qdot", F.col("rank").cast("int").alias("rank"), "cell")
-
-
-def _ivf_topk_sql() -> str:
-    import math
-
-    rows = []
-    for c, row in enumerate(_ivf_centroids_q()):
-        norm = repr(math.sqrt(sum(v * v for v in row)))
-        rows.append(f"({c}, {row}::BIGINT[], {norm})")
-    values = ",\n    ".join(rows)
-    return f"""
-WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qe
-  FROM embeddings
-), cents(cell, cv, cnorm) AS (
-  VALUES {values}
-), cell_scores AS (
-  SELECT q.vec_id, c.cell,
-         CAST(CAST(list_sum(list_transform(range(1, 65), i -> q.qe[i] * c.cv[i])) AS BIGINT) AS DOUBLE) / c.cnorm AS s,
-         ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY CAST(CAST(list_sum(list_transform(range(1, 65), i -> q.qe[i] * c.cv[i])) AS BIGINT) AS DOUBLE) / c.cnorm DESC, c.cell) AS rn
-  FROM q CROSS JOIN cents c
-), assign AS (
-  SELECT vec_id, cell FROM cell_scores WHERE rn = 1
-), probes AS (
-  SELECT vec_id AS query_id, cell FROM cell_scores
-  WHERE vec_id < 5 AND rn <= {_IVF_NPROBE}
-), cand AS (
-  SELECT p.query_id, a.vec_id, a.cell
-  FROM assign a JOIN probes p ON a.cell = p.cell AND a.vec_id != p.query_id
-), scored AS (
-  SELECT cand.query_id, cand.vec_id, cand.cell,
-         CAST(list_sum(list_transform(range(1, 65), i -> cq.qe[i] * qq.qe[i])) AS BIGINT) AS qdot
-  FROM cand
-  JOIN q cq ON cq.vec_id = cand.vec_id
-  JOIN q qq ON qq.vec_id = cand.query_id
-), ranked AS (
-  SELECT query_id, vec_id, qdot,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) AS INT) AS rank,
-         cell
-  FROM scored
-)
-SELECT query_id, vec_id, qdot, rank, cell FROM ranked WHERE rank <= 10
-"""
-
-
-_SQL_IVF_TOPK = _ivf_topk_sql()
-
-
-def _q_lsh_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table hyperplane-LSH top-k, value-checked end to end: 2
-    independent QUANTIZED plane tables (seed 11/12), per-table bucket
-    equi-join, cross-table dedup, integer-qdot re-rank. Same physical plan
-    as the float path (explode tables → one bucket-keyed shuffle, query
-    side broadcast); the oracle re-derives both tables' buckets from the
-    inlined integer planes."""
-    from .operators.similarity import lsh_topk_quantized
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 5)
-    return lsh_topk_quantized(
-        emb, qs, k=10, dim=64,
-        num_planes=_LSHQ_PLANES, seed=_LSHQ_SEED, num_tables=_LSHQ_TABLES,
-    ).select("query_id", "vec_id", "qdot", F.col("rank").cast("int").alias("rank"))
-
-
-def _lsh_topk_multi_sql() -> str:
-    from .operators.similarity import quantized_hyperplanes
-
-    table_selects = []
-    for t in range(_LSHQ_TABLES):
-        planes = quantized_hyperplanes(64, _LSHQ_PLANES, seed=_LSHQ_SEED + t)
-        bits = " + ".join(
-            f"(CASE WHEN list_sum(list_transform(range(1, 65), i -> qe[i] * ({plane}::BIGINT[])[i])) >= 0 "
-            f"THEN {1 << p} ELSE 0 END)"
-            for p, plane in enumerate(planes)
-        )
-        table_selects.append(f"SELECT vec_id, qe, {t} AS tbl, ({bits}) AS bucket FROM q")
-    tb = "\n  UNION ALL\n  ".join(table_selects)
-    return f"""
-WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qe
-  FROM embeddings
-), tb AS (
-  {tb}
-), cand AS (
-  SELECT DISTINCT qt.vec_id AS query_id, ct.vec_id AS vec_id,
-         CAST(list_sum(list_transform(range(1, 65), i -> ct.qe[i] * qt.qe[i])) AS BIGINT) AS qdot
-  FROM tb ct JOIN tb qt ON ct.tbl = qt.tbl AND ct.bucket = qt.bucket
-  WHERE qt.vec_id < 5 AND ct.vec_id != qt.vec_id
-), ranked AS (
-  SELECT query_id, vec_id, qdot,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) AS INT) AS rank
-  FROM cand
-)
-SELECT query_id, vec_id, qdot, rank FROM ranked WHERE rank <= 10
-"""
-
-
-_SQL_LSH_TOPK_MULTI = _lsh_topk_multi_sql()
-
-
-def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed REAL-codec round-trip with a full value oracle: token-
-    derived PGM images / WAV audio encoded AND decoded inside mapInPandas
-    (operators/multimodal.media_features_from_tokens), integer stats of the
-    decoded pixel/sample domain. The oracle re-derives every stat from the
-    tokens alone — the decode path is correct iff the round-trip is the
-    identity (weighted sums pin order/offset)."""
-    from .operators.multimodal import media_features_from_tokens
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    return media_features_from_tokens(toks).select(
-        "media_id", "kind", "width", "height", "sample_rate",
-        "duration_ms", "pix_sum", "pix_wsum", "samp_sum", "samp_wsum",
-    )
-
-
-_SQL_MEDIA_FEATURES = _SQL_BASE + """
-, img AS (
-  SELECT doc_id AS media_id, 'image' AS kind, 8 AS width, 8 AS height,
-         CAST(NULL AS INT) AS sample_rate, CAST(NULL AS INT) AS duration_ms,
-         CAST(list_sum(list_transform(range(1, 65),
-           j -> CASE WHEN j <= len(tokens) THEN tokens[j] % 256 ELSE 0 END)) AS BIGINT) AS pix_sum,
-         CAST(list_sum(list_transform(range(1, 65),
-           j -> CASE WHEN j <= len(tokens) THEN (tokens[j] % 256) * j ELSE 0 END)) AS BIGINT) AS pix_wsum,
-         CAST(NULL AS BIGINT) AS samp_sum, CAST(NULL AS BIGINT) AS samp_wsum
-  FROM base WHERE doc_id % 2 = 0
-), aud AS (
-  SELECT doc_id AS media_id, 'audio' AS kind, CAST(NULL AS INT) AS width,
-         CAST(NULL AS INT) AS height, 8000 AS sample_rate,
-         CAST(len(tokens) // 8 AS INT) AS duration_ms,
-         CAST(NULL AS BIGINT) AS pix_sum, CAST(NULL AS BIGINT) AS pix_wsum,
-         CAST(COALESCE(list_sum(list_transform(tokens, x -> (x*37) % 20000 - 10000)), 0) AS BIGINT) AS samp_sum,
-         CAST(COALESCE(list_sum(list_transform(range(1, len(tokens)+1),
-           j -> ((tokens[j]*37) % 20000 - 10000) * j)), 0) AS BIGINT) AS samp_wsum
-  FROM base WHERE doc_id % 2 = 1
-)
-SELECT * FROM img UNION ALL SELECT * FROM aud
-"""
-
-
-def _q_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed REAL PNG round-trip (stdlib zlib + numpy, no PIL; cf.
-    reference exporter/fileexporter binary payload handling): token-derived
-    rasters (even doc → 8×8 gray, odd → 4×8 RGB) are ENCODED to genuine
-    PNG bytes with per-scanline filters cycling (row+doc)%5 — so Sub/Up/
-    Average/Paeth all occur in the corpus — then DECODED back inside the
-    same mapInPandas pass. PNG filtering is lossless, so the integer pixel
-    stats are re-derivable from the tokens alone: the decode is correct iff
-    the round-trip is the identity (pix_wsum pins byte order). The
-    compressed size column is excluded (not oracle-derivable)."""
-    from .operators.multimodal import png_features_from_tokens
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    return png_features_from_tokens(toks).select(
-        "media_id", "color", "width", "height", "pix_sum", "pix_wsum"
-    )
-
-
-_SQL_PNG_FEATURES = _SQL_BASE + """
-, gray AS (
-  SELECT doc_id AS media_id, 'gray' AS color, 8 AS width, 8 AS height,
-         CAST(list_sum(list_transform(range(1, 65),
-           j -> CASE WHEN j <= len(tokens) THEN tokens[j] % 256 ELSE 0 END)) AS BIGINT) AS pix_sum,
-         CAST(list_sum(list_transform(range(1, 65),
-           j -> CASE WHEN j <= len(tokens) THEN (tokens[j] % 256) * j ELSE 0 END)) AS BIGINT) AS pix_wsum
-  FROM base WHERE doc_id % 2 = 0
-), rgb AS (
-  SELECT doc_id AS media_id, 'rgb' AS color, 8 AS width, 4 AS height,
-         CAST(list_sum(list_transform(range(1, 97),
-           j -> CASE WHEN j <= len(tokens) THEN tokens[j] % 256 ELSE 0 END)) AS BIGINT) AS pix_sum,
-         CAST(list_sum(list_transform(range(1, 97),
-           j -> CASE WHEN j <= len(tokens) THEN (tokens[j] % 256) * j ELSE 0 END)) AS BIGINT) AS pix_wsum
-  FROM base WHERE doc_id % 2 = 1
-)
-SELECT * FROM gray UNION ALL SELECT * FROM rgb
-"""
-
-
-def _q_flac_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed REAL FLAC round-trip (`operators/flac.py`: frames,
-    CRC-8/16, rice residuals, CONSTANT/VERBATIM/FIXED/LPC subframes —
-    pure python+numpy): token-derived int16 samples encode to genuine
-    multi-frame FLAC (even docs FIXED path, odd docs LPC path) and decode
-    back in the same mapInPandas pass. Lossless → the sample stats are
-    re-derivable from the tokens alone; samp_wsum pins frame order.
-    Compressed size excluded (not oracle-derivable)."""
-    from .operators.multimodal import flac_features_from_tokens
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    return flac_features_from_tokens(toks).select(
-        "media_id", "lpc", "n_samples", "n_frames", "samp_sum", "samp_wsum"
-    )
-
-
-_SQL_FLAC_FEATURES = _SQL_BASE + """
-, s AS (
-  SELECT doc_id AS media_id, (doc_id % 2 = 1) AS lpc,
-         CAST(len(tokens) AS INT) AS n_samples,
-         CAST((len(tokens) + 63) // 64 AS INT) AS n_frames,
-         CAST(list_sum(list_transform(range(1, len(tokens)+1),
-           j -> (tokens[j]*53) % 30000 - 15000)) AS BIGINT) AS samp_sum,
-         CAST(list_sum(list_transform(range(1, len(tokens)+1),
-           j -> ((tokens[j]*53) % 30000 - 15000) * j)) AS BIGINT) AS samp_wsum
-  FROM base
-)
-SELECT media_id, lpc, n_samples, n_frames,
-       COALESCE(samp_sum, 0) AS samp_sum, COALESCE(samp_wsum, 0) AS samp_wsum
-FROM s
-"""
-
-
-def _q_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed REAL GIF round-trip (`operators/gif.py`: pure-python
-    variable-width LZW, palettes, Appendix-E interlace — no PIL): even docs
-    encode an 8×8 grayscale GIF, odd docs a 4×8 16-color INTERLACED GIF
-    with a formula palette, both decoded back in the same mapInPandas pass.
-    The LZW index stream is lossless, so the decoded-RGB integer stats are
-    re-derivable from the tokens alone; pix_wsum over the flat [r,g,b,...]
-    order pins both the de-interlace row order and the channel layout."""
-    from .operators.multimodal import gif_features_from_tokens
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    return gif_features_from_tokens(toks).select(
-        "media_id", "mode", "width", "height", "pix_sum", "pix_wsum"
-    )
-
-
-_SQL_GIF_FEATURES = _SQL_BASE + """
-, gray AS (
-  SELECT doc_id AS media_id, 'gray256' AS mode, 8 AS width, 8 AS height,
-         CAST(list_sum(list_transform(range(1, 65),
-           j -> 3 * (CASE WHEN j <= len(tokens) THEN tokens[j] % 256 ELSE 0 END))) AS BIGINT) AS pix_sum,
-         CAST(list_sum(list_transform(range(1, 65),
-           j -> (CASE WHEN j <= len(tokens) THEN tokens[j] % 256 ELSE 0 END) * (9*j - 3))) AS BIGINT) AS pix_wsum
-  FROM base WHERE doc_id % 2 = 0
-), pal AS (
-  SELECT doc_id AS media_id, 'pal16i' AS mode, 8 AS width, 4 AS height,
-         CAST(list_sum(list_transform(range(1, 33),
-           j -> 255 + ((CASE WHEN j <= len(tokens) THEN tokens[j] % 16 ELSE 0 END)
-                       * (CASE WHEN j <= len(tokens) THEN tokens[j] % 16 ELSE 0 END) * 7) % 256)) AS BIGINT) AS pix_sum,
-         CAST(list_sum(list_transform(range(1, 33),
-           j -> (CASE WHEN j <= len(tokens) THEN tokens[j] % 16 ELSE 0 END) * 17 * (3*j - 2)
-              + (255 - (CASE WHEN j <= len(tokens) THEN tokens[j] % 16 ELSE 0 END) * 17) * (3*j - 1)
-              + (((CASE WHEN j <= len(tokens) THEN tokens[j] % 16 ELSE 0 END)
-                  * (CASE WHEN j <= len(tokens) THEN tokens[j] % 16 ELSE 0 END) * 7) % 256) * (3*j))) AS BIGINT) AS pix_wsum
-  FROM base WHERE doc_id % 2 = 1
-)
-SELECT * FROM gray UNION ALL SELECT * FROM pal
 """
 
 
@@ -1875,157 +929,6 @@ SELECT event_type,
        COUNT(*) AS le_inf,
        CAST(round(SUM(value)*100) AS BIGINT) AS sum_cents
 FROM events GROUP BY event_type
-"""
-
-
-def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: flag corpus docs sharing any 4-gram with
-    the held-out set (docs with id % 37 == 0 stand in for the benchmark).
-    Corpus inverted index shuffles by small shingle longs once; the
-    benchmark's distinct shingle set broadcasts."""
-    from .operators.dedup import decontaminate
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    bench = toks.filter(F.col("doc_id") % 37 == 0)
-    return decontaminate(toks, bench, "doc_id", "tokens", n=4)
-
-
-def _decontaminate_sql() -> str:
-    v = 50257
-    c1, c2, c3 = v, v * v, v * v * v
-    return _SQL_BASE + f"""
-, sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(tokens) - 2),
-           i -> tokens[i]*{c3}::BIGINT + tokens[i+1]*{c2}::BIGINT
-              + tokens[i+2]*{c1}::BIGINT + tokens[i+3])) AS shingles
-  FROM base
-), bsh AS (
-  SELECT DISTINCT UNNEST(shingles) AS sg FROM sh WHERE doc_id % 37 = 0
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS sg FROM sh
-)
-SELECT inv.doc_id, CAST(COUNT(*) AS BIGINT) AS contaminated_ngrams
-FROM inv JOIN bsh USING (sg)
-GROUP BY inv.doc_id
-"""
-
-
-_SQL_DECONTAMINATE = _decontaminate_sql()
-
-
-def _q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-gated decontamination — the 100 TB shape: corpus shingles pass
-    a bits-only membership test against a literal KB-sized bitmap (no join,
-    no shuffle; fused into the scan) and only the survivors join the exact
-    broadcast benchmark set, which removes the false positives. Output
-    includes the bloom hit count per doc, so the oracle verifies the bloom
-    bit math itself (DuckDB rebuilds the identical bitmap with bit_or),
-    not just the exact survivor set."""
-    from .operators.dedup import decontaminate_bloom
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    bench = toks.filter(F.col("doc_id") % 37 == 0)
-    return decontaminate_bloom(toks, bench, "doc_id", "tokens", n=4)
-
-
-def _decontaminate_bloom_sql() -> str:
-    from .functions.hashing import mix32_sql
-    from .operators.dedup import BLOOM_BITS, BLOOM_K
-
-    v = 50257
-    c1, c2, c3 = v, v * v, v * v * v
-    m32 = 1 << 32
-    pw = "[" + ", ".join(str(1 << p) for p in range(32)) + "]"
-
-    def fold(sg: str) -> str:
-        return f"((({sg}) // {m32} + ({sg}) % {m32}) % {m32})"
-
-    def bit(sg: str, seed: int) -> str:
-        return f"({mix32_sql(fold(sg), seed=seed)} % {BLOOM_BITS})"
-
-    bench_bits = ", ".join(bit("sg", i) for i in range(1, BLOOM_K + 1))
-    passes = " AND ".join(
-        f"((bm.bm[({bit('inv.sg', i)}) // 32 + 1] // ({pw}[({bit('inv.sg', i)}) % 32 + 1])) % 2 = 1)"
-        for i in range(1, BLOOM_K + 1)
-    )
-    return _SQL_BASE + f"""
-, sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(tokens) - 2),
-           i -> tokens[i]*{c3}::BIGINT + tokens[i+1]*{c2}::BIGINT
-              + tokens[i+2]*{c1}::BIGINT + tokens[i+3])) AS shingles
-  FROM base
-), bsh AS (
-  SELECT DISTINCT UNNEST(shingles) AS sg FROM sh WHERE doc_id % 37 = 0
-), bbits AS (
-  SELECT UNNEST([{bench_bits}]) AS b FROM bsh
-), words AS (
-  SELECT r.range AS w_idx, COALESCE(bit_or(CAST({pw}[CAST(b % 32 AS INT) + 1] AS BIGINT)), 0) AS w
-  FROM range({BLOOM_BITS // 32}) r LEFT JOIN bbits ON bbits.b // 32 = r.range
-  GROUP BY r.range
-), bm AS (
-  SELECT list(w ORDER BY w_idx) AS bm FROM words
-), inv AS (
-  SELECT doc_id, UNNEST(shingles) AS sg FROM sh
-), surv AS (
-  SELECT inv.doc_id, inv.sg FROM inv CROSS JOIN bm WHERE {passes}
-)
-SELECT surv.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS bloom_ngrams,
-       CAST(COUNT(bsh.sg) AS BIGINT) AS contaminated_ngrams
-FROM surv LEFT JOIN bsh ON surv.sg = bsh.sg
-GROUP BY surv.doc_id
-"""
-
-
-_SQL_DECONTAMINATE_BLOOM = _decontaminate_bloom_sql()
-
-
-_PACK_LEN = 512
-
-
-def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style sequence packing: per-source token streams cut into
-    fixed-length training chunks (documents concatenated in doc_id order,
-    spanning chunk boundaries — no padding). Tokens shuffle exactly once,
-    by (source, chunk); the offset window sorts doc-count rows only.
-    Output hashes the packed arrays as '-'-joined strings for exact
-    cross-engine equality."""
-    from .operators.packing import pack_sequences
-
-    toks = _tokens_of_docs(spark, sf_dir).select("source", "doc_id", "tokens")
-    out = pack_sequences(toks, "source", "doc_id", "tokens", seq_len=_PACK_LEN)
-    return out.select(
-        "source",
-        "chunk_id",
-        "n_tokens",
-        F.concat_ws("-", F.transform("tokens", lambda t: t.cast("string"))).alias(
-            "toks_str"
-        ),
-    )
-
-
-_SQL_PACK = _SQL_BASE + f"""
-, g AS (
-  SELECT source, flatten(list(tokens ORDER BY doc_id)) AS all_toks
-  FROM base GROUP BY source
-), chunks AS (
-  SELECT source, all_toks,
-         UNNEST(range(0, CAST(ceil(len(all_toks) / {_PACK_LEN}.0) AS BIGINT))) AS chunk_id
-  FROM g
-), sliced AS (
-  SELECT source, chunk_id,
-         list_slice(all_toks, chunk_id * {_PACK_LEN} + 1, (chunk_id + 1) * {_PACK_LEN}) AS toks
-  FROM chunks
-)
-SELECT source, chunk_id, CAST(len(toks) AS INT) AS n_tokens,
-       array_to_string(toks, '-') AS toks_str
-FROM sliced
 """
 
 
@@ -2528,172 +1431,6 @@ FROM dec
 """.format(bucket=sampler_bucket_sql("trace_key", 7))
 
 
-_PQ_CELLS, _PQ_CELL_SEED, _PQ_CELL_SCALE = 8, 7, 125
-_PQ_M, _PQ_KSUB, _PQ_BOOK_SEED, _PQ_BOOK_SCALE = 8, 16, 13, 100
-_PQ_NPROBE, _PQ_K = 2, 10
-
-
-def _pq_cents_q() -> list[list[int]]:
-    from .operators.similarity import quantized_pq_codebooks
-
-    # one "subspace" spanning the full dim = a plain centroid table, scaled
-    # to the corpus's quantized vector norm (scale 125 ≈ data norm / √dim)
-    return quantized_pq_codebooks(
-        64, 1, _PQ_CELLS, seed=_PQ_CELL_SEED, scale=_PQ_CELL_SCALE
-    )[0]
-
-
-def _pq_books_q() -> list[list[list[int]]]:
-    from .operators.similarity import quantized_pq_codebooks
-
-    return quantized_pq_codebooks(
-        64, _PQ_M, _PQ_KSUB, seed=_PQ_BOOK_SEED, scale=_PQ_BOOK_SCALE
-    )
-
-
-def _q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ (faiss IVFADC) approximate top-k, value-checked end to end:
-    integer coarse cells, residual PQ codes (m=8 codes replace 64 floats —
-    32× shuffle/IO compression, the 10^12-row ANN memory plan), query-side
-    ADC distance tables, one cell-keyed exchange. Fixed seeded integer
-    codebooks keep every value int64 for the DuckDB replay; k-means-trained
-    codebook QUALITY is covered in pytest (`pq_train_codebooks` beats the
-    seeded books on ADC error over the same corpus)."""
-    from .operators.similarity import ivfpq_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 5)
-    return ivfpq_topk(
-        emb, qs, _pq_cents_q(), _pq_books_q(), k=_PQ_K, n_probe=_PQ_NPROBE
-    ).select(
-        "query_id", "vec_id", "adist", F.col("rank").cast("int").alias("rank"), "cell"
-    )
-
-
-def _ivfpq_sql() -> str:
-    import math
-
-    cents = _pq_cents_q()
-    books = _pq_books_q()
-    dsub = 64 // _PQ_M
-    cent_rows = ",\n    ".join(
-        f"({c}, {row}::BIGINT[], {repr(math.sqrt(sum(v * v for v in row)))})"
-        for c, row in enumerate(cents)
-    )
-    book_rows = ",\n    ".join(
-        f"({j}, {c}, {books[j][c]}::BIGINT[])"
-        for j in range(_PQ_M)
-        for c in range(_PQ_KSUB)
-    )
-    sub_d = (
-        f"list_sum(list_transform(range(1, {dsub + 1}), "
-        f"i -> (r.r[b.j*{dsub}+i] - b.bv[i]) * (r.r[b.j*{dsub}+i] - b.bv[i])))"
-    )
-    q_sub_d = (
-        f"list_sum(list_transform(range(1, {dsub + 1}), "
-        f"i -> (qr.r[cd.j*{dsub}+i] - b.bv[i]) * (qr.r[cd.j*{dsub}+i] - b.bv[i])))"
-    )
-    return f"""
-WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qe
-  FROM embeddings
-), cents(cell, cv, cnorm) AS (
-  VALUES {cent_rows}
-), books(j, code, bv) AS (
-  VALUES {book_rows}
-), cell_scores AS (
-  SELECT q.vec_id, c.cell,
-         ROW_NUMBER() OVER (PARTITION BY q.vec_id
-           ORDER BY CAST(CAST(list_sum(list_transform(range(1, 65), i -> q.qe[i] * c.cv[i])) AS BIGINT) AS DOUBLE) / c.cnorm DESC, c.cell) AS rn
-  FROM q CROSS JOIN cents c
-), res AS (
-  SELECT q.vec_id, cs.cell,
-         list_transform(range(1, 65), i -> q.qe[i] - c.cv[i]) AS r
-  FROM q
-  JOIN cell_scores cs ON cs.vec_id = q.vec_id AND cs.rn = 1
-  JOIN cents c ON c.cell = cs.cell
-), enc AS (
-  SELECT r.vec_id, r.cell, b.j, b.code,
-         ROW_NUMBER() OVER (PARTITION BY r.vec_id, b.j
-                            ORDER BY {sub_d}, b.code) AS rn
-  FROM res r CROSS JOIN books b
-), codes AS (
-  SELECT vec_id, cell, j, code FROM enc WHERE rn = 1
-), qres AS (
-  SELECT cs.vec_id AS query_id, cs.cell,
-         list_transform(range(1, 65), i -> q.qe[i] - c.cv[i]) AS r
-  FROM cell_scores cs
-  JOIN q ON q.vec_id = cs.vec_id
-  JOIN cents c ON c.cell = cs.cell
-  WHERE cs.vec_id < 5 AND cs.rn <= {_PQ_NPROBE}
-), scored AS (
-  SELECT qr.query_id, cd.vec_id, cd.cell,
-         CAST(SUM({q_sub_d}) AS BIGINT) AS adist
-  FROM qres qr
-  JOIN codes cd ON cd.cell = qr.cell AND cd.vec_id != qr.query_id
-  JOIN books b ON b.j = cd.j AND b.code = cd.code
-  GROUP BY qr.query_id, cd.vec_id, cd.cell
-)
-SELECT query_id, vec_id, adist,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS INT) AS rank,
-       cell
-FROM scored
-QUALIFY rank <= {_PQ_K}
-"""
-
-
-_SQL_IVFPQ_TOPK = _ivfpq_sql()
-
-
-_CLS_POS_SOURCES = ("src0", "src1", "src2", "src3", "src4")
-_CLS_THRESHOLD = 260_000
-
-
-def _q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-3-style quality-classifier gate, trained AND scored distributed:
-    label = doc comes from a designated high-quality source set, features =
-    the doc's tokens, weights = fixed-point Laplace-smoothed P(hq | token)
-    (integer floor division — both engines replay training bit-exactly).
-    Training is one vocab-bounded shuffle; scoring broadcast-joins the
-    weight table and re-aggregates per doc."""
-    from .operators.classifier import score_documents, train_token_classifier
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens", "source"
-    )
-    labeled = toks.withColumn(
-        "label", F.col("source").isin(*_CLS_POS_SOURCES).cast("int")
-    )
-    w = train_token_classifier(labeled, "tokens", "label")
-    return score_documents(
-        labeled, w, "tokens", "doc_id", threshold=_CLS_THRESHOLD
-    ).select("doc_id", "n_tok", "score_sum", "score_mean", "keep")
-
-
-_SQL_QUALITY_CLS = _SQL_BASE + f"""
-, lab AS (
-  SELECT doc_id, tokens,
-         CASE WHEN source IN {_CLS_POS_SOURCES} THEN 1 ELSE 0 END AS y
-  FROM tok
-), ex AS (
-  SELECT doc_id, y, UNNEST(tokens) AS token FROM lab
-), w AS (
-  SELECT token, (SUM(y) + 1) * 1000000 // (COUNT(*) + 2) AS weight
-  FROM ex GROUP BY token
-), sc AS (
-  SELECT e.doc_id,
-         CAST(COUNT(*) AS INT) AS n_tok,
-         CAST(SUM(w.weight) AS BIGINT) AS score_sum
-  FROM ex e JOIN w USING (token) GROUP BY e.doc_id
-)
-SELECT CAST(doc_id AS BIGINT) AS doc_id, n_tok, score_sum,
-       CAST(score_sum // n_tok AS BIGINT) AS score_mean,
-       (score_sum // n_tok) >= {_CLS_THRESHOLD} AS keep
-FROM sc
-"""
-
-
 _RJ_BIN_S = 120  # range-join bin width (seconds)
 
 
@@ -2863,362 +1600,6 @@ FROM cnt
 _SQL_PII_SCRUB = _pii_sql()
 
 
-def _q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplication REMOVAL (Lee et al. 2021 §4 ExactSubstr
-    policy): every token position covered by a 4-gram occurring in ≥2
-    distinct docs is cut; docs reassemble surviving tokens in order. Same
-    packed-int64 inverted index as dup_spans plus one id-keyed shuffle of
-    (id, window starts) — token payloads never enter the index shuffles."""
-    from .operators.dedup import remove_dup_spans
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    out = remove_dup_spans(toks, "doc_id", "tokens", n=4, min_docs=2, passes=2)
-    return out.select(
-        "doc_id",
-        F.concat_ws(",", F.transform(F.col("tokens_clean"), lambda x: x.cast("string")))
-        .alias("tokens_str"),
-        "n_tok",
-        "n_removed",
-    )
-
-
-def _dup_span_removal_sql() -> str:
-    v = 50257
-    gram = " + ".join(f"tokens[i+{k}]*{v ** (3 - k)}::BIGINT" for k in range(4))
-    return _SQL_BASE + f"""
-, w AS (
-  SELECT doc_id, g.i AS pos, {gram} AS gm
-  FROM base, LATERAL (SELECT UNNEST(range(1, len(tokens) - 2)) AS i) g(i)
-  WHERE len(tokens) >= 4
-), dup AS (
-  SELECT gm FROM w GROUP BY gm HAVING COUNT(DISTINCT doc_id) >= 2
-), starts AS (
-  SELECT w.doc_id, list_sort(list(w.pos)) AS ss
-  FROM w JOIN dup USING (gm) GROUP BY w.doc_id
-), cleaned AS (
-  SELECT b.doc_id, b.n_tok,
-         list_filter(list_transform(range(1, b.n_tok + 1),
-             j -> CASE WHEN len(list_filter(COALESCE(s.ss, []), st -> st <= j AND j < st + 4)) > 0
-                       THEN NULL ELSE b.tokens[j] END),
-             x -> x IS NOT NULL) AS kept
-  FROM base b LEFT JOIN starts s ON b.doc_id = s.doc_id
-)
-SELECT doc_id, COALESCE(array_to_string(kept, ','), '') AS tokens_str,
-       CAST(n_tok AS BIGINT) AS n_tok,
-       CAST(n_tok - len(kept) AS BIGINT) AS n_removed
-FROM cleaned
-"""
-
-
-_SQL_DUP_SPAN_REMOVAL = _dup_span_removal_sql()
-
-
-_SEM_CELLS, _SEM_SEED = 8, 13
-_SEM_NUM, _SEM_DEN = 1, 2
-
-
-def _sem_centroids_q() -> list[list[int]]:
-    from .operators.similarity import quantized_hyperplanes
-
-    return quantized_hyperplanes(64, _SEM_CELLS, seed=_SEM_SEED)
-
-
-def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): integer coarse-quantizer cells bound
-    the pairwise cosine work; within each cell a row is dropped iff a
-    smaller-id near-dup (cos ≥ {num}/{den}, integer-exact quantized test)
-    exists. The oracle replays cells, pairs, and verdicts from a VALUES
-    table of the same centroids (the ivf_topk determinism recipe)."""
-    from .operators.similarity import semdedup_quantized
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return semdedup_quantized(
-        emb, _sem_centroids_q(), id_col="vec_id", vec_col="embedding",
-        threshold_num=_SEM_NUM, threshold_den=_SEM_DEN,
-    ).select("vec_id", "cell", "n_dups", "kept")
-
-
-def _semdedup_sql() -> str:
-    import math
-
-    rows = []
-    for c, row in enumerate(_sem_centroids_q()):
-        norm = repr(math.sqrt(sum(v * v for v in row)))
-        rows.append(f"({c}, {row}::BIGINT[], {norm})")
-    values = ",\n    ".join(rows)
-    num2, den2 = _SEM_NUM * _SEM_NUM, _SEM_DEN * _SEM_DEN
-    return f"""
-WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qe
-  FROM embeddings
-), cents(cell, cv, cnorm) AS (
-  VALUES {values}
-), cell_scores AS (
-  SELECT q.vec_id, c.cell,
-         ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY CAST(CAST(list_sum(list_transform(range(1, 65), i -> q.qe[i] * c.cv[i])) AS BIGINT) AS DOUBLE) / c.cnorm DESC, c.cell) AS rn
-  FROM q CROSS JOIN cents c
-), assign AS (
-  SELECT cs.vec_id, cs.cell, q.qe,
-         CAST(list_sum(list_transform(q.qe, x -> x*x)) AS BIGINT) AS qn
-  FROM cell_scores cs JOIN q ON q.vec_id = cs.vec_id WHERE cs.rn = 1
-), pairs AS (
-  SELECT a.vec_id AS ida,
-         CAST(list_sum(list_transform(range(1, 65), i -> a.qe[i] * b.qe[i])) AS BIGINT) AS qd,
-         a.qn AS na, b.qn AS nb
-  FROM assign a JOIN assign b ON a.cell = b.cell AND b.vec_id < a.vec_id
-), dups AS (
-  SELECT ida, COUNT(*) AS n_dups FROM pairs
-  WHERE qd >= 0 AND qd*qd*{den2} >= na*nb*{num2}
-  GROUP BY ida
-)
-SELECT a.vec_id, a.cell,
-       CAST(COALESCE(d.n_dups, 0) AS BIGINT) AS n_dups,
-       COALESCE(d.n_dups, 0) = 0 AS kept
-FROM assign a LEFT JOIN dups d ON a.vec_id = d.ida
-"""
-
-
-_SQL_SEMDEDUP = _semdedup_sql()
-
-
-_BM25_K = 10
-
-
-def _q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranked keyword retrieval (Okapi BM25, fixed-point integer scores):
-    query = the distinct first-5 tokens of doc 0 (contamination-forensics
-    shape: "which docs look like this doc's opening"). Postings prefilter
-    to the query terms before any exchange; ranking is orderBy+limit
-    (TakeOrderedAndProject)."""
-    from .operators.search import bm25_topk
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    first = toks.filter(F.col("doc_id") == 0).select(
-        F.slice("tokens", 1, 5).alias("t")
-    ).collect()
-    terms = sorted(set(first[0]["t"])) if first else []
-    return bm25_topk(toks, terms, id_col="doc_id", tokens_col="tokens", k=_BM25_K)
-
-
-def _bm25_sql() -> str:
-    from .operators.search import BD, BN, K1D, K1N, SCORE_SCALE
-
-    c_num = (K1N + K1D) * BD   # tf·(k1+1) numerator multiplier
-    c_tf = K1D * BD            # tf denominator multiplier
-    c_const = K1N * (BD - BN)  # k1(1-b) · DL
-    c_dl = K1N * BN            # k1·b · dl·N
-    return _SQL_BASE + f"""
-, terms AS (
-  SELECT DISTINCT UNNEST(tokens[1:5]) AS term FROM base WHERE doc_id = 0
-), stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS total_len FROM base
-), postings AS (
-  SELECT b.doc_id, CAST(b.n_tok AS BIGINT) AS dl, g.tok AS term
-  FROM base b, LATERAL (SELECT UNNEST(b.tokens) AS tok) g(tok)
-  WHERE g.tok IN (SELECT term FROM terms)
-), tf AS (
-  SELECT doc_id, term, dl, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM postings GROUP BY doc_id, term, dl
-), dfreq AS (
-  SELECT term, CAST(COUNT(*) AS BIGINT) AS df_t FROM tf GROUP BY term
-), scores AS (
-  SELECT tf.doc_id,
-         CAST(floor(
-           (CAST(2*(s.n_docs - d.df_t) + 1 AS DOUBLE) / CAST(2*d.df_t + 1 AS DOUBLE))
-           * (CAST(tf.tf * {c_num} * s.total_len AS DOUBLE)
-              / CAST(tf.tf * {c_tf} * s.total_len + {c_const} * s.total_len + {c_dl} * tf.dl * s.n_docs AS DOUBLE))
-           * {float(SCORE_SCALE)}) AS BIGINT) AS term_score
-  FROM tf JOIN dfreq d USING (term) CROSS JOIN stats s
-), per_doc AS (
-  SELECT doc_id, CAST(SUM(term_score) AS BIGINT) AS score_q,
-         CAST(COUNT(*) AS INT) AS n_terms
-  FROM scores GROUP BY doc_id
-)
-SELECT doc_id, score_q, n_terms,
-       CAST(ROW_NUMBER() OVER (ORDER BY score_q DESC, doc_id) AS INT) AS rank
-FROM per_doc ORDER BY score_q DESC, doc_id LIMIT {_BM25_K}
-"""
-
-
-_SQL_BM25 = _bm25_sql()
-
-
-_LM_TRAIN_SOURCE = "src0"   # CCNet's "target domain" split (Wikipedia analog)
-_LM_HEAD_MIN = 60           # fixed-point mean-weight bucket cuts (scale 2^20)
-_LM_TAIL_MAX = 35
-
-
-def _q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style LM fluency gate (Wenzek et al. 2020 §4.3): train an
-    add-one-smoothed bigram model on the in-domain source, score every
-    doc with fixed-point integer transition weights, bucket head/middle/
-    tail. Training = one vocab-bounded exchange; scoring = two broadcast
-    joins + a doc-count exchange; zero Python."""
-    from .operators.lm import SCALE, bigram_counts, context_counts, lm_score
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens", "source"
-    )
-    train = toks.filter(F.col("source") == _LM_TRAIN_SOURCE)
-    bg = bigram_counts(train, "tokens", vocab=VOCAB)
-    cx = context_counts(bg, vocab=VOCAB)
-    return lm_score(
-        toks, bg, cx, tokens_col="tokens", id_col="doc_id", vocab=VOCAB,
-        scale=SCALE, head_min=_LM_HEAD_MIN, tail_max=_LM_TAIL_MAX,
-    )
-
-
-def _lm_sql() -> str:
-    from .operators.lm import SCALE
-
-    v = VOCAB
-    return _SQL_BASE + f"""
-, lm_train AS (
-  SELECT tokens FROM base WHERE source = '{_LM_TRAIN_SOURCE}' AND len(tokens) >= 2
-), lm_bg AS (
-  SELECT g, CAST(COUNT(*) AS BIGINT) AS c_ab FROM (
-    SELECT UNNEST(list_transform(range(1, len(tokens)),
-                                 i -> CAST(tokens[i] AS BIGINT) * {v} + tokens[i+1])) AS g
-    FROM lm_train) GROUP BY g
-), lm_cx AS (
-  SELECT g // {v} AS a, CAST(SUM(c_ab) AS BIGINT) AS c_a FROM lm_bg GROUP BY 1
-), lm_ex AS (
-  SELECT doc_id, UNNEST(list_transform(range(1, len(tokens)),
-                                       i -> CAST(tokens[i] AS BIGINT) * {v} + tokens[i+1])) AS g
-  FROM base WHERE len(tokens) >= 2
-), lm_scored AS (
-  SELECT e.doc_id,
-         (COALESCE(b.c_ab, 0) + 1) * CAST({SCALE} AS BIGINT)
-           // (COALESCE(c.c_a, 0) + {v}) AS w
-  FROM lm_ex e LEFT JOIN lm_bg b USING (g)
-               LEFT JOIN lm_cx c ON e.g // {v} = c.a
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_big,
-       CAST(SUM(w) AS BIGINT) AS score_sum,
-       CAST(SUM(w) // COUNT(*) AS BIGINT) AS score_mean,
-       CASE WHEN SUM(w) // COUNT(*) >= {_LM_HEAD_MIN} THEN 'head'
-            WHEN SUM(w) // COUNT(*) <= {_LM_TAIL_MAX} THEN 'tail'
-            ELSE 'middle' END AS bucket
-FROM lm_scored GROUP BY doc_id
-"""
-
-
-_SQL_LM_SCORE = _lm_sql()
-
-
-_BPE_K = 6
-
-
-def _q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer training (Sennrich et al. 2016 §3.2):
-    K most-frequent-adjacent-pair merges learned over the whole corpus —
-    per step one vocab-bounded pair-count exchange + a pure-JVM greedy
-    rewrite fold. Deterministic tie-break (cnt desc, a, b), so the oracle
-    replays the identical merge chain with K unrolled SQL iterations."""
-    from .operators.bpe import bpe_learn
-
-    toks = _tokens_of_docs(spark, sf_dir).select("doc_id", "tokens")
-    merges, _ = bpe_learn(toks, "tokens", num_merges=_BPE_K, new_id_start=VOCAB)
-    return spark.createDataFrame(
-        [(m["step"], m["a"], m["b"], m["new_id"], m["cnt"]) for m in merges],
-        "step int, a int, b int, new_id int, cnt bigint",
-    )
-
-
-def _bpe_sql() -> str:
-    k = _BPE_K
-    parts = [", s0 AS MATERIALIZED (SELECT doc_id, tokens AS toks FROM base)"]
-    for i in range(k):
-        nid = VOCAB + i
-        parts.append(f"""
-, p{i} AS MATERIALIZED (
-  SELECT p.a AS a, p.b AS b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-    SELECT UNNEST(list_transform(range(1, len(toks)),
-             j -> struct_pack(a := toks[j], b := toks[j+1]))) AS p
-    FROM s{i} WHERE len(toks) >= 2)
-  GROUP BY p.a, p.b
-), m{i} AS MATERIALIZED (
-  SELECT CAST({i} AS INT) AS step, CAST(a AS INT) AS a, CAST(b AS INT) AS b,
-         CAST({nid} AS INT) AS new_id, cnt
-  FROM p{i} ORDER BY cnt DESC, a, b LIMIT 1
-), v{i} AS MATERIALIZED (
-  SELECT doc_id, pos, tok,
-         COALESCE(tok = (SELECT a FROM m{i})
-           AND LEAD(tok) OVER w{i} = (SELECT b FROM m{i})
-           AND ((SELECT a FROM m{i}) <> (SELECT b FROM m{i})
-                OR (pos - COALESCE(MAX(CASE WHEN tok <> (SELECT a FROM m{i}) THEN pos END)
-                      OVER w{i}, 0) - 1) % 2 = 0), FALSE) AS valid
-  FROM (
-    SELECT doc_id, u.pos AS pos, u.tok AS tok FROM (
-      SELECT doc_id, UNNEST(list_transform(range(1, len(toks) + 1),
-               j -> struct_pack(pos := j, tok := toks[j]))) AS u
-      FROM s{i}))
-  WINDOW w{i} AS (PARTITION BY doc_id ORDER BY pos)
-), s{i + 1} AS MATERIALIZED (
-  SELECT doc_id,
-         list(CASE WHEN valid THEN (SELECT new_id FROM m{i}) ELSE tok END
-              ORDER BY pos) AS toks
-  FROM (SELECT doc_id, pos, tok, valid,
-               COALESCE(LAG(valid) OVER (PARTITION BY doc_id ORDER BY pos),
-                        FALSE) AS pv
-        FROM v{i})
-  WHERE NOT pv GROUP BY doc_id
-)""")
-    union = " UNION ALL ".join(f"SELECT * FROM m{i}" for i in range(k))
-    return (
-        _SQL_BASE
-        + "".join(parts)
-        + f"\nSELECT step, a, b, new_id, cnt FROM ({union}) ORDER BY step"
-    )
-
-
-_SQL_BPE = _bpe_sql()
-
-
-def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply the learned BPE merge table to re-encode the corpus — the
-    companion to bpe_learn (a tokenizer is trained once, then APPLIED to
-    every shard). K greedy-leftmost rewrite folds, all JVM, map-only per
-    step; per-doc output carries the full re-encoded token string so the
-    oracle pins every merged position, plus the compression ratio
-    (n_before/n_after) training jobs budget by."""
-    from .operators.bpe import bpe_learn
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    ).withColumn("n_before", F.size("tokens").cast("int"))
-    _, enc = bpe_learn(toks, "tokens", num_merges=_BPE_K, new_id_start=VOCAB)
-    return enc.select(
-        "doc_id",
-        "n_before",
-        F.size("tokens").cast("int").alias("n_after"),
-        F.concat_ws(" ", F.transform("tokens", lambda x: x.cast("string"))).alias(
-            "tok_str"
-        ),
-    )
-
-
-def _bpe_encode_sql() -> str:
-    k = _BPE_K
-    # same unrolled merge-replay chain as _bpe_sql, different final SELECT
-    body = _bpe_sql()
-    chain_end = body.rindex("\nSELECT step,")
-    return body[:chain_end] + f"""
-SELECT s0.doc_id AS doc_id, CAST(len(s0.toks) AS INT) AS n_before,
-       CAST(len(s{k}.toks) AS INT) AS n_after,
-       array_to_string(s{k}.toks, ' ') AS tok_str
-FROM s0 JOIN s{k} USING (doc_id)
-"""
-
-
-_SQL_BPE_ENC = _bpe_encode_sql()
-
-
 def _q_hll_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic HyperLogLog distinct-token estimate per source:
     rotate-multiply mixed registers (integer CASE bit-length, no floats),
@@ -3285,111 +1666,6 @@ FROM hll_raw
 _SQL_HLL = _hll_sql()
 
 
-def _q_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed REAL VIDEO round-trip (`operators/video.py`: AVI/RIFF
-    container, pure python+numpy — no ffmpeg): each doc encodes a genuine
-    multi-frame AVI (3 + doc%4 grayscale DIB frames built from its
-    tokens), decodes it with the RIFF parser, frame-samples every 250 ms
-    from the DECODED header timing (10 fps → every other frame), and
-    emits integer stats of the sampled DECODED pixels. DIB is lossless,
-    so the stats are re-derivable from the tokens alone; sam_wsum pins
-    frame order and the bottom-up/row-pad raster reconstruction. The
-    container byte size is excluded (evidence, not oracle)."""
-    from .operators.video import video_features_from_tokens
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    return video_features_from_tokens(toks).select(
-        "media_id", "n_frames", "n_sampled", "width", "height",
-        "sam_sum", "sam_wsum",
-    )
-
-
-_SQL_VIDEO_FEATURES = _SQL_BASE + """
-, vid AS (
-  SELECT doc_id AS media_id, CAST(doc_id % 4 + 3 AS INT) AS n_frames, tokens
-  FROM base
-)
-SELECT media_id, n_frames, CAST((n_frames + 1) // 2 AS INT) AS n_sampled,
-       8 AS width, 8 AS height,
-       CAST(list_sum(flatten(list_transform(range(0, n_frames, 2), f ->
-         list_transform(range(1, 65), j ->
-           ((CASE WHEN j <= len(tokens) THEN tokens[j] ELSE 0 END) + f) % 256))))
-         AS BIGINT) AS sam_sum,
-       CAST(list_sum(flatten(list_transform(range(0, n_frames, 2), f ->
-         list_transform(range(1, 65), j ->
-           (((CASE WHEN j <= len(tokens) THEN tokens[j] ELSE 0 END) + f) % 256)
-           * ((f // 2) * 64 + j)))))
-         AS BIGINT) AS sam_wsum
-FROM vid
-"""
-
-
-def _q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming MinHash-LSH near-dup suppression: stateful band-bucket
-    cache (applyInPandasWithState, first-arrival wins), drained
-    availableNow in ONE micro-batch over one input file — arrival order
-    is then the deterministic in-batch sort, so the per-doc verdicts
-    equal the batch rule 'first = min doc_id per occupied bucket', which
-    the SQL oracle replays exactly from the signature formula."""
-    import tempfile
-
-    from .streaming.stream_neardup import neardup_verdicts, streaming_neardup_bands
-
-    ensure_shipped(spark)
-    work = tempfile.mkdtemp(prefix="stream_nd_")
-    toks = _tokens_of_docs(spark, sf_dir).select("doc_id", "tokens")
-    toks.coalesce(1).write.mode("overwrite").parquet(f"{work}/in")
-    stream = spark.readStream.schema("doc_id string, tokens array<int>").parquet(
-        f"{work}/in"
-    )
-    q = (
-        streaming_neardup_bands(stream, ttl_ms=None)
-        .writeStream.format("parquet")
-        .option("path", f"{work}/bands")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    v = neardup_verdicts(spark.read.parquet(f"{work}/bands"))
-    return v.select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"),
-        "n_bands",
-        "is_dup",
-        row_idx_col(F.col("dup_of")).alias("dup_of"),
-    )
-
-
-def _stream_neardup_sql() -> str:
-    from .operators.dedup import MERSENNE, PERM_A, PERM_B
-
-    cols = ", ".join(
-        f"list_min(list_transform(tokens, t -> (CAST(t AS BIGINT)*{PERM_A[i]}"
-        f" + {PERM_B[i]}) % {MERSENNE})) AS mh{i}"
-        for i in range(8)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, mh{2 * b} AS s0, mh{2 * b + 1} AS s1 FROM nsig"
-        for b in range(4)
-    )
-    return _SQL_BASE + f"""
-, nsig AS (SELECT doc_id, {cols} FROM base WHERE len(tokens) >= 1)
-, nband AS ({band_rows})
-, nfirst AS (
-  SELECT band, s0, s1, MIN(doc_id) AS first FROM nband GROUP BY band, s0, s1)
-SELECT b.doc_id AS doc_id, CAST(COUNT(*) AS INT) AS n_bands,
-       MAX(f.first < b.doc_id) AS is_dup,
-       MIN(CASE WHEN f.first < b.doc_id THEN f.first END) AS dup_of
-FROM nband b JOIN nfirst f USING (band, s0, s1)
-GROUP BY b.doc_id
-"""
-
-
-_SQL_STREAM_NEARDUP = _stream_neardup_sql()
-
-
 def _q_expo_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OTel exponential histogram (scale 0, base-2) of token counts per
     severity: bucket k = bit_length(v-1)-1, integer-exact (no libm log2),
@@ -3416,716 +1692,6 @@ FROM parsed GROUP BY severity_text, bucket_idx
 
 
 _SQL_EXPO_HIST = _expo_hist_sql()
-
-
-_CUR_SHARDS = 4
-
-
-def _q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-curriculum training order: CCNet-style LM buckets
-    (head/middle/tail) composed with the deterministic per-bucket
-    shuffle — global order = (bucket, shard, pos), no global sort, one
-    exchange + per-(bucket, shard) local ranks. The whole chain (LM
-    train → score → bucket → order) is one composed plan."""
-    from .operators.lm import SCALE, bigram_counts, context_counts, lm_score
-    from .operators.selection import curriculum_order
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens", "source"
-    )
-    train = toks.filter(F.col("source") == _LM_TRAIN_SOURCE)
-    bg = bigram_counts(train, "tokens", vocab=VOCAB)
-    cx = context_counts(bg, vocab=VOCAB)
-    scored = lm_score(
-        toks, bg, cx, tokens_col="tokens", id_col="doc_id", vocab=VOCAB,
-        scale=SCALE, head_min=_LM_HEAD_MIN, tail_max=_LM_TAIL_MAX,
-    )
-    out = curriculum_order(scored, "bucket", "doc_id", num_shards=_CUR_SHARDS)
-    return out.select("doc_id", "bucket", "shard_id", "pos")
-
-
-def _curriculum_sql() -> str:
-    from .functions.hashing import mix32_sql
-
-    body = _lm_sql()
-    idx = body.rindex("\nSELECT doc_id,")
-    head, final = body[:idx], body[idx:]
-    mix = mix32_sql("doc_id", seed=19)
-    return head + f"""
-, lm_docs AS ({final})
-SELECT doc_id, bucket, CAST({mix} % {_CUR_SHARDS} AS INT) AS shard_id,
-       CAST(ROW_NUMBER() OVER (PARTITION BY bucket, {mix} % {_CUR_SHARDS}
-                               ORDER BY {mix}, doc_id) - 1 AS BIGINT) AS pos
-FROM lm_docs
-"""
-
-
-_SQL_CURRICULUM = _curriculum_sql()
-
-
-_WDS_SHARDS = 8
-
-
-def _q_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebDataset tar shard sink: write the corpus as reproducible tar
-    shards (one exchange on the mix32 shard id, one tar per shard task),
-    then READ THE TARS BACK and aggregate — so the checked values prove
-    the round trip, not just the assignment. The oracle replays shard =
-    mix32(doc_id) % K and the per-shard doc/token sums from the tokens
-    alone; tar byte sizes are evidence (manifest), not oracle."""
-    import tempfile
-
-    from .operators.webdataset import read_webdataset, write_webdataset_shards
-
-    ensure_shipped(spark)
-    work = tempfile.mkdtemp(prefix="wds_q_")
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens", "source"
-    )
-    write_webdataset_shards(toks, work, num_shards=_WDS_SHARDS).collect()
-    back = read_webdataset(spark, work)
-    return (
-        back.groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_samples"),
-            F.sum(F.size("tokens")).cast("long").alias("n_tokens"),
-            F.sum("doc_id").cast("long").alias("sum_doc_id"),
-        )
-        .orderBy("shard_id")
-    )
-
-
-def _webdataset_sql() -> str:
-    from .functions.hashing import mix32_sql
-
-    mix = mix32_sql("doc_id", seed=17)
-    return _SQL_BASE + f"""
-SELECT CAST({mix} % {_WDS_SHARDS} AS INT) AS shard_id,
-       CAST(COUNT(*) AS BIGINT) AS n_samples,
-       CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id
-FROM base GROUP BY shard_id ORDER BY shard_id
-"""
-
-
-_SQL_WEBDATASET = _webdataset_sql()
-
-
-_DSIR_K = 200
-
-
-def _q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR data selection (Xie et al. 2023): hashed-bigram bag models
-    for the target domain (the in-domain source) and the raw pool,
-    fixed-point likelihood-ratio importance scores, deterministic top-k.
-    One bucket-bounded corpus exchange + a broadcast model join + a
-    doc-bounded re-aggregate + TakeOrderedAndProject — zero Python."""
-    from .operators.selection import (
-        dsir_feature_counts,
-        dsir_scores,
-        dsir_select,
-    )
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens", "source"
-    )
-    feats = dsir_feature_counts(
-        toks, "tokens", is_target=F.col("source") == _LM_TRAIN_SOURCE, vocab=VOCAB
-    )
-    scores = dsir_scores(toks, feats, "tokens", "doc_id", vocab=VOCAB)
-    return dsir_select(scores, _DSIR_K, "doc_id")
-
-
-def _dsir_sql() -> str:
-    from .functions.hashing import mix32_sql
-    from .operators.selection import DSIR_BUCKETS, DSIR_SCALE
-
-    v = VOCAB
-    div = (1 << 32) // DSIR_BUCKETS
-    mix = mix32_sql("g", seed=7)
-    return _SQL_BASE + f"""
-, ds_ex AS (
-  SELECT doc_id,
-         UNNEST(list_transform(range(1, len(tokens)),
-                i -> CAST(tokens[i] AS BIGINT) * {v} + tokens[i+1])) AS g,
-         source = '{_LM_TRAIN_SOURCE}' AS t
-  FROM base WHERE len(tokens) >= 2
-), ds_b AS (
-  SELECT doc_id, CAST({mix} // {div} AS INT) AS bucket, t FROM ds_ex
-), ds_f AS (
-  SELECT bucket, CAST(SUM(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS c_t,
-         CAST(COUNT(*) AS BIGINT) AS c_r
-  FROM ds_b GROUP BY bucket
-), ds_tot AS (
-  SELECT CAST(SUM(c_t) AS BIGINT) AS tt, CAST(SUM(c_r) AS BIGINT) AS rr FROM ds_f
-), ds_s AS (
-  SELECT b.doc_id AS doc_id, CAST(COUNT(*) AS INT) AS n_feat,
-         CAST(SUM((({DSIR_SCALE} * (COALESCE(f.c_t, 0) + 1))
-                   // (COALESCE(f.c_r, 0) + 1)) * ds_tot.rr // ds_tot.tt)
-              AS BIGINT) AS score
-  FROM ds_b b LEFT JOIN ds_f f USING (bucket) CROSS JOIN ds_tot
-  GROUP BY b.doc_id)
-SELECT doc_id, n_feat, score FROM ds_s
-ORDER BY score DESC, doc_id LIMIT {_DSIR_K}
-"""
-
-
-_SQL_DSIR = _dsir_sql()
-
-_TOKEN_BUDGET = 2000
-
-
-def _q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token budget ('epoching' caps, Pile/LLaMA mixture
-    tables): keep each source's docs in deterministic mix32 order until
-    the budget fills. One hash exchange on source + the per-source
-    window scan; kept is a pure function of the rows, so the SQL window
-    replays it exactly."""
-    from .operators.selection import token_budget_cap
-
-    docs = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"),
-        F.size("tokens").cast("int").alias("n_tok"),
-        "source",
-    )
-    out = token_budget_cap(docs, _TOKEN_BUDGET, "doc_id", "n_tok", "source")
-    return out.select("doc_id", "source", "n_tok", "cum_before", "kept")
-
-
-def _token_budget_sql() -> str:
-    from .functions.hashing import mix32_sql
-
-    mix = mix32_sql("doc_id", seed=11)
-    return _SQL_BASE + f"""
-SELECT doc_id, source, n_tok,
-       CAST(COALESCE(SUM(n_tok) OVER (
-           PARTITION BY source ORDER BY {mix}, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         AS cum_before,
-       COALESCE(SUM(n_tok) OVER (
-           PARTITION BY source ORDER BY {mix}, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         < {_TOKEN_BUDGET} AS kept
-FROM base
-"""
-
-
-_SQL_TOKEN_BUDGET = _token_budget_sql()
-
-
-def _q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified train/val/test split (90/5/5 from the
-    HIGH bits of mix32 — membership is a pure row function, so shards
-    are resumable and cluster-size-independent). Output is the per-cell
-    audit: doc/token counts plus a doc_id checksum pinning membership."""
-    from .operators.selection import stratified_split
-
-    docs = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"),
-        F.size("tokens").cast("int").alias("n_tok"),
-        "source",
-    )
-    out = stratified_split(docs, "doc_id")
-    return (
-        out.groupBy("source", "split")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_tok").cast("long").alias("sum_tok"),
-            F.sum("doc_id").cast("long").alias("sum_doc_id"),
-        )
-        .orderBy("source", "split")
-    )
-
-
-def _stratified_sql() -> str:
-    from .functions.hashing import mix32_sql
-
-    mix = mix32_sql("doc_id", seed=13)
-    return _SQL_BASE + f"""
-, sp AS (
-  SELECT doc_id, n_tok, source,
-         CASE WHEN ({mix} // 65536) % 100 < 90 THEN 'train'
-              WHEN ({mix} // 65536) % 100 < 95 THEN 'val'
-              ELSE 'test' END AS split
-  FROM base)
-SELECT source, split, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_tok) AS BIGINT) AS sum_tok,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id
-FROM sp GROUP BY source, split ORDER BY source, split
-"""
-
-
-_SQL_STRATIFIED = _stratified_sql()
-
-
-def _q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed full-corpus Lloyd k-means (the SemDeDup/IVF centroid
-    trainer without a sample cap): integer-quantized vectors, deterministic
-    smallest-(mix32,id) seeds, engine-exact argmax assignment, floor-div
-    integer centroid updates. The DuckDB oracle replays every iteration as
-    unrolled CTEs (the `bpe_learn` discipline) — seeds, per-iteration
-    assignment, per-cell floored means, final assignment."""
-    from .operators.similarity import kmeans_train_quantized
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assignments, _ = kmeans_train_quantized(
-        emb, k=_KMEANS_K, iters=_KMEANS_ITERS, seed=_KMEANS_SEED
-    )
-    return assignments.orderBy("vec_id")
-
-
-_KMEANS_K = 8
-_KMEANS_ITERS = 3
-_KMEANS_SEED = 7
-
-
-def _kmeans_score_sql(qe: str, cv: str, dim: int = 64) -> str:
-    """Engine-exact argmax score: int64 qdot / sqrt(max(‖c‖²,1)) as DOUBLEs."""
-    rng = f"range(1, {dim + 1})"
-    qd = (f"CAST(CAST(list_sum(list_transform({rng}, j -> {qe}[j] * {cv}[j]))"
-          " AS BIGINT) AS DOUBLE)")
-    ss = (f"greatest(CAST(list_sum(list_transform({rng}, j -> {cv}[j] * {cv}[j]))"
-          " AS BIGINT), 1)")
-    return f"{qd} / sqrt(CAST({ss} AS DOUBLE))"
-
-
-def _kmeans_ctes(k: int = _KMEANS_K, iters: int = _KMEANS_ITERS,
-                 seed: int = _KMEANS_SEED, dim: int = 64) -> str:
-    """The unrolled Lloyd replay: WITH q, seeds c0, then per iteration the
-    assignment a{i}, floored-mean m{i}, and carried centroids c{i} (empty
-    cells keep the previous centroid). Ends at c{iters} — callers append
-    their own final SELECT (plain assignment, or the SemDeDup prune)."""
-    from .functions.hashing import mix32_sql
-
-    mix = mix32_sql("vec_id", seed=seed)
-    rng = f"range(1, {dim + 1})"
-    s = _kmeans_score_sql("q.qe", "c.cv", dim)
-    parts = [f"""
-WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qe
-  FROM embeddings
-), c0 AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY {mix}, vec_id) - 1 AS INT) AS cell, qe AS cv
-  FROM q ORDER BY {mix}, vec_id LIMIT {k}
-)"""]
-    for i in range(1, iters + 1):
-        parts.append(f""", a{i} AS (
-  SELECT vec_id, qe, cell FROM (
-    SELECT q.vec_id, q.qe, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY {s} DESC, c.cell) AS rn
-    FROM q CROSS JOIN c{i - 1} c) t WHERE rn = 1
-), m{i} AS (
-  SELECT cell, list(CAST(s AS BIGINT) ORDER BY d) AS cv FROM (
-    SELECT a.cell, t.d,
-           (SUM(a.qe[t.d]) - ((SUM(a.qe[t.d]) % COUNT(*)) + COUNT(*)) % COUNT(*)) // COUNT(*) AS s
-    FROM a{i} a CROSS JOIN {rng} t(d) GROUP BY a.cell, t.d) g GROUP BY cell
-), c{i} AS (
-  SELECT p.cell, COALESCE(m.cv, p.cv) AS cv
-  FROM c{i - 1} p LEFT JOIN m{i} m ON m.cell = p.cell
-)""")
-    return "".join(parts)
-
-
-def _kmeans_sql(k: int = _KMEANS_K, iters: int = _KMEANS_ITERS,
-                seed: int = _KMEANS_SEED, dim: int = 64) -> str:
-    s = _kmeans_score_sql("q.qe", "c.cv", dim)
-    return _kmeans_ctes(k, iters, seed, dim) + f"""
-SELECT vec_id, cell FROM (
-    SELECT q.vec_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY {s} DESC, c.cell) AS rn
-    FROM q CROSS JOIN c{iters} c) t WHERE rn = 1 ORDER BY vec_id
-"""
-
-
-_SQL_KMEANS = _kmeans_sql()
-
-
-def _q_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SemDeDup paper pipeline END TO END (Abbas et al. 2023 §3:
-    "cluster the embedding space with k-means, then prune within-cluster
-    near-duplicates"): distributed k-means trains the centroids on the full
-    corpus, and semantic dedup prunes within the trained cells — one
-    composed job, every stage engine-exact. The oracle replays the whole
-    thing: the unrolled Lloyd iterations FEED the prune CTEs, so a wrong
-    centroid anywhere surfaces as a value mismatch."""
-    from .operators.similarity import kmeans_train_quantized, semdedup_quantized
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _, cents = kmeans_train_quantized(
-        emb, k=_KMEANS_K, iters=_KMEANS_ITERS, seed=_KMEANS_SEED
-    )
-    return semdedup_quantized(
-        emb, cents, id_col="vec_id", vec_col="embedding",
-        threshold_num=_SEM_NUM, threshold_den=_SEM_DEN,
-    ).select("vec_id", "cell", "n_dups", "kept")
-
-
-def _semdedup_trained_sql() -> str:
-    # semdedup_quantized assigns cells by qdot/sqrt(‖c‖²) (no max-1 guard —
-    # trained centroids are floored means of real vectors, never all-zero
-    # in practice; the guard exists only inside the trainer's own loop).
-    num2, den2 = _SEM_NUM * _SEM_NUM, _SEM_DEN * _SEM_DEN
-    sd_score = (
-        "CAST(CAST(list_sum(list_transform(range(1, 65), i -> q.qe[i] * c.cv[i]))"
-        " AS BIGINT) AS DOUBLE)"
-        " / sqrt(CAST(CAST(list_sum(list_transform(range(1, 65), i -> c.cv[i] * c.cv[i]))"
-        " AS BIGINT) AS DOUBLE))"
-    )
-    return _kmeans_ctes() + f""", sd_cells AS (
-  SELECT q.vec_id, c.cell,
-         ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY {sd_score} DESC, c.cell) AS rn
-  FROM q CROSS JOIN c{_KMEANS_ITERS} c
-), assign AS (
-  SELECT cs.vec_id, cs.cell, q.qe,
-         CAST(list_sum(list_transform(q.qe, x -> x*x)) AS BIGINT) AS qn
-  FROM sd_cells cs JOIN q ON q.vec_id = cs.vec_id WHERE cs.rn = 1
-), pairs AS (
-  SELECT a.vec_id AS ida,
-         CAST(list_sum(list_transform(range(1, 65), i -> a.qe[i] * b.qe[i])) AS BIGINT) AS qd,
-         a.qn AS na, b.qn AS nb
-  FROM assign a JOIN assign b ON a.cell = b.cell AND b.vec_id < a.vec_id
-), dups AS (
-  SELECT ida, COUNT(*) AS n_dups FROM pairs
-  WHERE qd >= 0 AND qd*qd*{den2} >= na*nb*{num2}
-  GROUP BY ida
-)
-SELECT a.vec_id, a.cell,
-       CAST(COALESCE(d.n_dups, 0) AS BIGINT) AS n_dups,
-       COALESCE(d.n_dups, 0) = 0 AS kept
-FROM assign a LEFT JOIN dups d ON a.vec_id = d.ida
-"""
-
-
-_SQL_SEMDEDUP_TRAINED = _semdedup_trained_sql()
-
-
-def _q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source n-gram contamination matrix (the source×source
-    generalization of decontaminate): exact shingle-set |∩|/|∪| per source
-    pair, built around ONE corpus-scale exchange (groupBy shingle →
-    distinct source set → local pair expansion)."""
-    from .operators.dedup import source_overlap
-
-    docs = _tokens_of_docs(spark, sf_dir)
-    return source_overlap(docs, "source", "tokens", n=3).orderBy("src_a", "src_b")
-
-
-_SQL_SOURCE_OVERLAP = _SQL_BASE + """
-, sh AS (
-  SELECT source,
-         list_distinct(list_transform(range(1, len(tokens)-1),
-           i -> CAST(tokens[i] AS BIGINT)*2525766049 + CAST(tokens[i+1] AS BIGINT)*50257 + tokens[i+2])) AS shingles
-  FROM base
-), ssg AS (
-  SELECT DISTINCT source, unnest(shingles) AS sg FROM sh
-), sizes AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS set_size FROM ssg GROUP BY source
-), inter AS (
-  SELECT a.source AS src_a, b.source AS src_b, CAST(COUNT(*) AS BIGINT) AS inter_size
-  FROM ssg a JOIN ssg b ON a.sg = b.sg AND a.source < b.source
-  GROUP BY 1, 2
-)
-SELECT i.src_a, i.src_b, i.inter_size,
-       sa.set_size + sb.set_size - i.inter_size AS union_size,
-       sa.set_size AS size_a, sb.set_size AS size_b
-FROM inter i
-JOIN sizes sa ON sa.source = i.src_a
-JOIN sizes sb ON sb.source = i.src_b
-ORDER BY src_a, src_b
-"""
-
-
-def _q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source boilerplate line removal (RefinedWeb §3.2 family): lines
-    appearing in ≥2 docs AND ≥1/20 of a source's documents are stripped
-    from every document of that source (nav/banner/footer semantics);
-    docs reassembled in order with audit counts."""
-    from .operators.dedup import boilerplate_strip
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "source"
-    )
-    words = F.filter(F.split(F.col("text"), r"\s+"), lambda w: F.length(w) > 0)
-    nlines = F.ceil(F.size(words) / _LINE_WORDS).cast("int")
-    lined = docs.select(
-        "doc_id", "source",
-        F.when(
-            nlines > 0,
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.sequence(F.lit(0), nlines - 1),
-                    lambda j: F.concat_ws(
-                        " ", F.slice(words, j * _LINE_WORDS + 1, _LINE_WORDS)
-                    ),
-                ),
-            ),
-        ).otherwise(F.lit("")).alias("lined_text"),
-    )
-    return boilerplate_strip(
-        lined, "doc_id", "lined_text", "source", frac_num=1, frac_den=20, min_docs=2
-    )
-
-
-_SQL_BOILERPLATE = f"""
-WITH words AS (
-  SELECT doc_id, source,
-         list_filter(str_split_regex(text, '\\s+'), w -> length(w) > 0) AS ws
-  FROM documents
-), lines AS (
-  SELECT doc_id, source, g.i AS pos,
-         array_to_string(ws[(g.i*{_LINE_WORDS}+1):(g.i*{_LINE_WORDS}+{_LINE_WORDS})], ' ') AS line
-  FROM words,
-       LATERAL (SELECT UNNEST(range(0, greatest(CAST(ceil(len(ws)/{_LINE_WORDS}.0) AS INT), 1))) AS i) g
-), df_docs AS (
-  SELECT source, line, COUNT(DISTINCT doc_id) AS dfd FROM lines GROUP BY 1, 2
-), src_docs AS (
-  SELECT source, COUNT(*) AS docs FROM documents GROUP BY source
-), bl AS (
-  SELECT d.source, d.line
-  FROM df_docs d JOIN src_docs s ON s.source = d.source
-  WHERE d.dfd >= 2 AND d.dfd * 20 >= s.docs * 1
-), marked AS (
-  SELECT l.doc_id, l.pos, l.line, (b.line IS NULL) AS keep
-  FROM lines l LEFT JOIN bl b ON b.source = l.source AND b.line = l.line
-)
-SELECT doc_id,
-       COUNT(*) AS n_lines,
-       CAST(COALESCE(SUM(CASE WHEN keep THEN 1 END), 0) AS BIGINT) AS n_kept,
-       COALESCE(string_agg(CASE WHEN keep THEN line END, chr(10) ORDER BY pos), '')
-         AS clean_text
-FROM marked GROUP BY doc_id
-"""
-
-
-def _q_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Policy-based near-dup removal: per MinHash-LSH connected cluster keep
-    the LONGEST member (score = token count, ties → smaller id) — the
-    production representative policy, vs minhash_dedup's min-id. The DuckDB
-    oracle replays the ENTIRE iterative pipeline: signatures, band pairs,
-    connected components as a RECURSIVE transitive-closure CTE
-    (data-dependent depth — the one iterative shape the unrolled-CTE
-    discipline can't cover), then the per-cluster argmax."""
-    from .operators.dedup import dedup_keep_best
-
-    toks = _tokens_of_docs(spark, sf_dir).withColumn(
-        "doc_idx", row_idx_col(F.col("doc_id"))
-    ).drop("doc_id").withColumnRenamed("doc_idx", "doc_id")
-    kept = dedup_keep_best(
-        toks, "tokens", "doc_id", F.size("tokens"), num_perms=4, rows_per_band=4
-    )
-    return kept.select(
-        "doc_id", F.size("tokens").cast("int").alias("n_tok")
-    ).orderBy("doc_id")
-
-
-def _dedup_keep_longest_sql() -> str:
-    sql = _SQL_BASE + _minhash_sql_cte() + """
-, prs AS (
-  SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS doc_a, CAST(b.doc_id AS BIGINT) AS doc_b
-  FROM sig a JOIN sig b
-    ON a.mh0 = b.mh0 AND a.mh1 = b.mh1 AND a.mh2 = b.mh2 AND a.mh3 = b.mh3
-       AND a.doc_id < b.doc_id
-), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM prs
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM prs
-), reach(a, b) AS (
-  SELECT DISTINCT a, a FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON e.a = r.b
-), comp AS (
-  SELECT a AS node, MIN(b) AS component FROM reach GROUP BY a
-), member AS (
-  SELECT c.node, c.component, CAST(len(b.tokens) AS INT) AS n_tok
-  FROM comp c JOIN base b ON CAST(b.doc_id AS BIGINT) = c.node
-), losers AS (
-  SELECT node FROM (
-    SELECT node, ROW_NUMBER() OVER (PARTITION BY component
-                                    ORDER BY n_tok DESC, node ASC) AS rn
-    FROM member) t WHERE rn > 1
-)
-SELECT CAST(b.doc_id AS BIGINT) AS doc_id, CAST(len(b.tokens) AS INT) AS n_tok
-FROM base b
-WHERE CAST(b.doc_id AS BIGINT) NOT IN (SELECT node FROM losers)
-ORDER BY doc_id
-"""
-    # the closure CTE needs the RECURSIVE keyword on the WITH chain
-    return sql.replace("WITH tok AS", "WITH RECURSIVE tok AS", 1)
-
-
-_SQL_DEDUP_KEEP_LONGEST = _dedup_keep_longest_sql()
-
-
-_CHUNK_W, _CHUNK_S = 64, 48
-
-
-def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAG/long-context sliding-window chunking: {_CHUNK_W}-token chunks
-    every {_CHUNK_S} tokens with provenance (doc_id, chunk_idx), tail
-    kept. Zero-shuffle per-row arrays; chunk token values hash-checked."""
-    from .operators.packing import chunk_documents
-
-    toks = _tokens_of_docs(spark, sf_dir).select(
-        row_idx_col(F.col("doc_id")).alias("doc_id"), "tokens"
-    )
-    chunks = chunk_documents(toks, "tokens", "doc_id", window=_CHUNK_W, stride=_CHUNK_S)
-    # token arrays as comma-joined text, as in the oracle: a comparable scalar
-    return chunks.withColumn(
-        "chunk_tokens", F.array_join(F.col("chunk_tokens").cast("array<string>"), ",")
-    ).orderBy("doc_id", "chunk_idx")
-
-
-_SQL_CHUNK = _SQL_BASE + f"""
-, k AS (
-  SELECT doc_id, tokens,
-         CASE WHEN len(tokens) <= {_CHUNK_W} THEN 1
-              ELSE CAST((len(tokens) - {_CHUNK_W} + {_CHUNK_S} - 1) // {_CHUNK_S} AS INT) + 1
-         END AS nk
-  FROM base WHERE len(tokens) > 0
-), ex AS (
-  SELECT doc_id, CAST(g.i AS INT) AS chunk_idx,
-         tokens[(g.i*{_CHUNK_S}+1):(g.i*{_CHUNK_S}+{_CHUNK_W})] AS chunk_tokens
-  FROM k, LATERAL (SELECT UNNEST(range(0, nk)) AS i) g
-)
-SELECT CAST(doc_id AS BIGINT) AS doc_id, chunk_idx,
-       array_to_string(chunk_tokens, ',') AS chunk_tokens,
-       CAST(len(chunk_tokens) AS INT) AS chunk_len
-FROM ex ORDER BY doc_id, chunk_idx
-"""
-
-
-_INCR_SPLIT = 250
-
-
-def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental (delta) dedup — the production crawl-ingest pattern:
-    the 'new dump' (doc_id ≥ {split}) dedups within itself AND against the
-    hash table accumulated from the already-ingested half, without
-    touching prior payloads. The oracle checks the same result by content
-    equality (hash collisions are the documented n²/2¹²⁹ bound)."""
-    from .operators.dedup import incremental_dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    _, seen_h = incremental_dedup(
-        docs.filter(F.col("doc_id") < _INCR_SPLIT), None, ["text"], "doc_id"
-    )
-    kept, _ = incremental_dedup(
-        docs.filter(F.col("doc_id") >= _INCR_SPLIT), seen_h, ["text"], "doc_id"
-    )
-    return kept.select("doc_id").orderBy("doc_id")
-
-
-_SQL_INCREMENTAL = f"""
-WITH seen AS (
-  SELECT DISTINCT text FROM documents WHERE doc_id < {_INCR_SPLIT}
-), firsts AS (
-  SELECT MIN(doc_id) AS doc_id FROM documents WHERE doc_id >= {_INCR_SPLIT} GROUP BY text
-)
-SELECT CAST(d.doc_id AS BIGINT) AS doc_id
-FROM documents d
-WHERE d.doc_id IN (SELECT doc_id FROM firsts)
-  AND d.text NOT IN (SELECT text FROM seen)
-ORDER BY doc_id
-"""
-
-
-_TEMP_TARGET = 150
-_TEMP_SEED = 5
-
-
-def _q_temp_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """α=1/2 temperature-scaled domain mixture (q_d ∝ √n_d — the XLM-R
-    exponential-smoothing recipe, fixed at the engine-exact α): integer
-    floor(√n) weights, order-free integer normalizer, deterministic
-    sampler-bucket keep. Oracle recomputes rates entirely in SQL."""
-    from .operators.sampler import temperature_mixture_sample
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
-    return temperature_mixture_sample(
-        docs, "source", F.col("doc_id"), _TEMP_TARGET, seed=_TEMP_SEED
-    ).select("source", "doc_id").orderBy("source", "doc_id")
-
-
-def _temp_mixture_sql() -> str:
-    from .functions.hashing import SAMPLER_BUCKETS, sampler_bucket_sql
-
-    return f"""
-WITH counts AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY source
-), sc AS (
-  SELECT source, n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS s FROM counts
-), rated AS (
-  SELECT source,
-         LEAST(100.0,
-               CAST(s * {_TEMP_TARGET} AS DOUBLE) * 100.0
-               / (CAST(SUM(s) OVER () AS DOUBLE) * CAST(n AS DOUBLE))) AS rate_pct
-  FROM sc
-)
-SELECT d.source, d.doc_id
-FROM documents d JOIN rated r ON r.source = d.source
-WHERE {sampler_bucket_sql('d.doc_id', seed=_TEMP_SEED)} < r.rate_pct * {SAMPLER_BUCKETS} / 100.0
-ORDER BY d.source, d.doc_id
-"""
-
-
-_SQL_TEMP_MIXTURE = _temp_mixture_sql()
-
-
-def _q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing (MOSS) fingerprint near-dup candidates: positional
-    n-gram hashes → per-window minima (the local-minimum selection with
-    the shared-substring coverage guarantee) → inverted-index pair join.
-    The positional/substring-robust complement to MinHash and SimHash."""
-    from .operators.dedup import winnow_pairs
-
-    toks = _tokens_of_docs(spark, sf_dir).withColumn(
-        "doc_idx", row_idx_col(F.col("doc_id"))
-    ).drop("doc_id").withColumnRenamed("doc_idx", "doc_id")
-    return winnow_pairs(
-        toks, "doc_id", "tokens", n=3, w=_WINNOW_W, min_shared=1
-    ).orderBy("doc_a", "doc_b")
-
-
-_WINNOW_W = 4
-
-
-def _winnow_sql(w: int = _WINNOW_W) -> str:
-    from .functions.hashing import mix32_sql
-
-    packed = ("CAST(tokens[i] AS BIGINT)*2525766049"
-              " + CAST(tokens[i+1] AS BIGINT)*50257 + tokens[i+2]")
-    mix = mix32_sql(packed)
-    return _SQL_BASE + f"""
-, hs AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         list_transform(range(1, len(tokens)-1), i -> {mix}) AS hashes
-  FROM base
-), fp AS (
-  SELECT doc_id,
-         CASE WHEN len(hashes) >= {w} THEN
-           list_sort(list_distinct(list_transform(range(1, len(hashes)-{w - 2}),
-             i -> list_min(list_slice(hashes, i, i+{w - 1})))))
-         ELSE [] END AS fps
-  FROM hs
-), inv AS (
-  SELECT doc_id, len(fps) AS fp_size, unnest(fps) AS fpv FROM fp
-), shared AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.fp_size AS fp_a, b.fp_size AS fp_b,
-         CAST(COUNT(*) AS BIGINT) AS shared_fp
-  FROM inv a JOIN inv b ON a.fpv = b.fpv AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4
-)
-SELECT doc_a, doc_b, shared_fp, CAST(fp_a AS INT) AS fp_a, CAST(fp_b AS INT) AS fp_b
-FROM shared WHERE shared_fp >= 1 ORDER BY doc_a, doc_b
-"""
-
-
-_SQL_WINNOW = _winnow_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -7025,78 +4591,6 @@ FROM events
 """
 
 
-def _q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher heuristic quality filters (Rae et al. 2021, Appendix A)
-    over the documents table — all seven published rules evaluated in
-    exact integer arithmetic (no float thresholds), pure whole-stage
-    codegen. Oracle recomputes every count and the pass flag with
-    DuckDB list functions over the same whitespace split."""
-    from .operators.textstats import gopher_rules
-
-    ensure_shipped(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return gopher_rules(docs, "text").select(
-        "doc_id",
-        "n_words",
-        "sum_word_len",
-        "n_symbols",
-        "n_lines",
-        "ellipsis_lines",
-        "bullet_lines",
-        "alpha_words",
-        "stopword_hits",
-        "gopher_pass",
-    )
-
-
-_SQL_GOPHER = """
-WITH w AS (
-  SELECT doc_id, text,
-         list_filter(str_split_regex(lower(text), '\\s+'),
-                     x -> length(x) > 0) AS words,
-         str_split(text, chr(10)) AS lines
-  FROM documents
-), c AS (
-  SELECT doc_id,
-         CAST(len(words) AS BIGINT) AS n_words,
-         CAST(coalesce(list_aggregate(list_transform(words,
-                                                     x -> length(x)),
-                                      'sum'), 0) AS BIGINT)
-           AS sum_word_len,
-         CAST(length(text) - length(replace(text, '#', ''))
-              + (length(text) - length(replace(text, '...', ''))) // 3
-              + length(text) - length(replace(text, chr(8230), ''))
-              AS BIGINT) AS n_symbols,
-         CAST(len(lines) AS BIGINT) AS n_lines,
-         CAST(len(list_filter(lines,
-                              l -> rtrim(l) LIKE '%...'
-                                   OR rtrim(l) LIKE '%' || chr(8230)))
-              AS BIGINT) AS ellipsis_lines,
-         CAST(len(list_filter(lines,
-                              l -> list_contains(
-                                     [chr(8226), chr(8227), '-', '*'],
-                                     substr(ltrim(l), 1, 1))))
-              AS BIGINT) AS bullet_lines,
-         CAST(len(list_filter(words, x -> regexp_matches(x, '[a-z]')))
-              AS BIGINT) AS alpha_words,
-         CAST(len(list_filter(['the','be','to','of','and','that',
-                               'have','with'],
-                              s -> list_contains(words, s))) AS INT)
-           AS stopword_hits
-  FROM w
-)
-SELECT *,
-       (n_words >= 50 AND n_words <= 100000
-        AND sum_word_len >= 3 * n_words AND sum_word_len <= 10 * n_words
-        AND n_symbols * 10 <= n_words
-        AND ellipsis_lines * 10 <= 3 * n_lines
-        AND bullet_lines * 10 <= 9 * n_lines
-        AND alpha_words * 5 >= 4 * n_words
-        AND stopword_hits >= 2) AS gopher_pass
-FROM c
-"""
-
-
 def _q_carbon_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     """carbonexporter (`metricdata_to_plaintext.go:82-290`): typed
     datapoints from the events table → Carbon plaintext lines — int
@@ -7756,57 +5250,23 @@ WHERE event_id % 17 <> 0 AND event_id % 19 <> 0
 
 
 REGISTRY: list[Query] = [
-    # --- Registry order = driver-sweep order (driver checks REGISTRY[:50]).
-    # Block 1: the 41 queries with no driver-side correctness row through r04
-    # (each was green in the round-4 judge's independent check_oracles.py sweep).
-    # Block 2 (below the marker): round-5 additions, then the 57 queries already
-    # driver-green in CORRECTNESS_r01..r04, in their historical order.
-    # FROZEN at round-5 start: append new queries ONLY at the block-2 marker;
-    # never reorder after the driver sweep so correctness rows accumulate.
-    Query("pack_sequences", _q_pack_sequences, _SQL_PACK),
-    Query("decontaminate", _q_decontaminate, _SQL_DECONTAMINATE),
-    Query("rep_stats", _q_rep_stats, _SQL_REP_STATS),
-    Query("mixture_sample", _q_mixture_sample, _SQL_MIXTURE),
-    Query("det_shuffle", _q_det_shuffle, _SQL_DET_SHUFFLE),
-    Query("line_dedup", _q_line_dedup, _SQL_LINE_DEDUP),
-    Query("dup_spans", _q_dup_spans, _SQL_DUP_SPANS),
-    Query("token_freq", _q_token_freq, _SQL_TOKEN_FREQ),
-    Query("curate_pipeline", _q_curate, _SQL_CURATE),
+    # --- Registry order = driver-sweep order: the driver checks the first 50
+    # entries, tools/check_oracles.py checks all 94. Three blocks, each in
+    # the order its queries were added:
+    #   1. 6 processor and sketch queries (tail sampling to expo histogram);
+    #   2. 48 receiver decodes and exporter marshals (below the marker);
+    #   3. 40 pipeline, relational, parser and streaming queries (from
+    #      `tokenize`), driver-green in CORRECTNESS_r01..r04.
+    # Append new queries at the end of block 2; never reorder, so a query's
+    # correctness rows stay comparable from one driver sweep to the next.
     Query("tail_sample", _q_tail_sample, _SQL_TAIL_SAMPLE),
     Query("pii_scrub", _q_pii_scrub, _SQL_PII_SCRUB),
-    Query("ivfpq_topk", _q_ivfpq_topk, _SQL_IVFPQ_TOPK),
-    Query("quality_classifier", _q_quality_classifier, _SQL_QUALITY_CLS),
-    Query("gif_features", _q_gif_features, _SQL_GIF_FEATURES),
-    Query("decontaminate_bloom", _q_decontaminate_bloom, _SQL_DECONTAMINATE_BLOOM),
     Query("range_join", _q_range_join, _SQL_RANGE_JOIN),
     Query("cms_counts", _q_cms_counts, _SQL_CMS),
-    Query("dup_span_removal", _q_dup_span_removal, _SQL_DUP_SPAN_REMOVAL),
-    Query("semdedup", _q_semdedup, _SQL_SEMDEDUP),
-    Query("bm25_topk", _q_bm25_topk, _SQL_BM25),
-    Query("lm_score", _q_lm_score, _SQL_LM_SCORE),
-    Query("bpe_learn", _q_bpe_learn, _SQL_BPE),
     Query("hll_counts", _q_hll_counts, _SQL_HLL),
-    Query("bpe_encode", _q_bpe_encode, _SQL_BPE_ENC),
-    Query("dsir_select", _q_dsir_select, _SQL_DSIR),
-    Query("token_budget", _q_token_budget, _SQL_TOKEN_BUDGET),
-    Query("stratified_split", _q_stratified_split, _SQL_STRATIFIED),
-    Query("video_features", _q_video_features, _SQL_VIDEO_FEATURES),
-    Query("stream_neardup", _q_stream_neardup, _SQL_STREAM_NEARDUP),
-    Query("webdataset_sink", _q_webdataset, _SQL_WEBDATASET),
     Query("expo_histogram", _q_expo_histogram, _SQL_EXPO_HIST),
-    Query("curriculum_order", _q_curriculum_order, _SQL_CURRICULUM),
-    Query("kmeans_train", _q_kmeans_train, _SQL_KMEANS),
-    Query("semdedup_trained", _q_semdedup_trained, _SQL_SEMDEDUP_TRAINED),
-    Query("source_overlap", _q_source_overlap, _SQL_SOURCE_OVERLAP),
-    Query("winnow_pairs", _q_winnow_pairs, _SQL_WINNOW),
-    Query("boilerplate_strip", _q_boilerplate, _SQL_BOILERPLATE),
-    Query("temp_mixture", _q_temp_mixture, _SQL_TEMP_MIXTURE),
-    Query("dedup_keep_longest", _q_dedup_keep_longest, _SQL_DEDUP_KEEP_LONGEST),
-    Query("incremental_dedup", _q_incremental_dedup, _SQL_INCREMENTAL),
-    Query("chunk_documents", _q_chunk_documents, _SQL_CHUNK),
-    # --- round-5 additions go here (the driver sweeps REGISTRY[:50]; the
-    # first 50 slots are full, so entries below position 50 rely on the
-    # independent tools/check_oracles.py sweep for correctness evidence) ---
+    # --- block 2: receivers and exporters (entries past position 50 rely on
+    # the tools/check_oracles.py sweep for correctness evidence) ---
     Query("kafka_raw_marshal", _q_kafka_raw_marshal, _SQL_KAFKA_RAW),
     Query("file_proto_roundtrip", _q_file_proto_roundtrip, _SQL_FILE_PROTO),
     Query(
@@ -7871,7 +5331,6 @@ REGISTRY: list[Query] = [
     Query("k8s_events_parse", _q_k8s_events_parse, _SQL_K8S_EVENTS),
     Query("dataset_events", _q_dataset_events, _SQL_DATASET),
     Query("logzio_lines", _q_logzio_lines, _SQL_LOGZIO),
-    Query("gopher_rules", _q_gopher_rules, _SQL_GOPHER),
     Query("carbon_render", _q_carbon_render, _SQL_CARBON_RENDER),
     Query(
         "azuremonitor_envelopes",
@@ -7886,7 +5345,7 @@ REGISTRY: list[Query] = [
     Query(
         "cloudwatch_logs_parse", _q_cloudwatch_logs_parse, _SQL_CLOUDWATCH
     ),
-    # --- driver-green through r04 ---
+    # --- block 3: driver-green through r04 ---
     Query("tokenize", _q_tokenize, _SQL_TOKENIZE),
     Query("parse_severity", _q_parse, _SQL_PARSE),
     Query("parse_severity_vectorized", _q_parse_vectorized, _SQL_PARSE),
@@ -7905,36 +5364,19 @@ REGISTRY: list[Query] = [
     Query("topk_orders", _q_topk_orders, _SQL_TOPK),
     Query("tpch_q3", _q_tpch_q3, _SQL_TPCH_Q3),
     Query("tpch_q5", _q_tpch_q5, _SQL_TPCH_Q5),
-    Query("minhash_sig", _q_minhash_sig, _SQL_MINHASH),
-    Query("minhash_band_pairs", _q_minhash_band_pairs, _SQL_MINHASH_PAIRS),
-    Query("shingle_stats", _q_shingle_stats, _SQL_SHINGLES),
-    Query("simhash", _q_simhash, _SQL_SIMHASH),
     Query("recombine", _q_recombine, _SQL_RECOMBINE),
     Query("recombine_last", _q_recombine_last, _SQL_RECOMBINE_LAST),
     Query("recombine_skew", _q_recombine_skew, _SQL_RECOMBINE_LAST),
-    Query("simhash_near", _q_simhash_near, _SQL_SIMHASH_NEAR),
     Query("ottl_types", _q_ottl_types, _SQL_OTTL_TYPES),
     Query("syslog_parse", _q_syslog_parse, _SQL_SYSLOG),
     Query("journald_parse", _q_journald_parse, _SQL_JOURNALD),
     Query("wineventlog_parse", _q_wineventlog_parse, _SQL_WINEVENTLOG),
     Query("kv_csv_uri_parse", _q_kv_csv_uri_parse, _SQL_KV_CSV_URI),
     Query("xml_parse", _q_xml_parse, _SQL_XML),
-    Query("dedup_exact", _q_dedup_exact, _SQL_DEDUP_EXACT),
-    Query("text_stats", _q_text_stats, _SQL_TEXT_STATS),
-    Query("langid", _q_langid, _langid_sql()),
-    Query("fingerprint", _q_fingerprint, _SQL_FINGERPRINT),
-    Query("embedding_topk", _q_embedding_topk, _SQL_EMB_TOPK),
-    Query("ivf_topk", _q_ivf_topk, _SQL_IVF_TOPK),
-    Query("lsh_topk_multi", _q_lsh_topk_multi, _SQL_LSH_TOPK_MULTI),
-    Query("media_features", _q_media_features, _SQL_MEDIA_FEATURES),
-    Query("png_features", _q_png_features, _SQL_PNG_FEATURES),
-    Query("flac_features", _q_flac_features, _SQL_FLAC_FEATURES),
     Query("ottl_transform", _q_ottl_transform, _SQL_OTTL_TRANSFORM),
     Query("lag_delta", _q_lag_delta, _SQL_LAG_DELTA),
     Query("interval_last", _q_interval_last, _SQL_INTERVAL_LAST),
     Query("histogram", _q_histogram, _SQL_HISTOGRAM),
-    Query("jaccard_pairs", _q_jaccard_pairs, _SQL_JACCARD),
-    Query("embedding_neardup", _q_embedding_neardup, _SQL_EMB_NEARDUP),
     Query("stream_pipeline", _q_stream_pipeline, _SQL_ROUTE_ONCE),
     Query("stream_window_agg", _q_stream_window_agg, _SQL_STREAM_WINDOW),
     Query("sessionize", _q_sessionize, _SQL_SESSIONIZE),

@@ -9,8 +9,8 @@
   row always samples the same way on any cluster size — is the property the
   reference guarantees and tests.
 
-- ``word_token_col`` / ``WORD_TOKEN_SQL``: shared word→token-id function used
-  by the tokenizer so Spark output and DuckDB oracle agree exactly
+- ``word_token_sql``: the word→token-id function the tokenizer's DuckDB
+  oracle uses, so Spark output and the oracle agree exactly
   (ascii/reverse/length are identical in both engines).
 """
 
@@ -49,6 +49,14 @@ def mix32_sql(key_sql: str, seed: int = 0) -> str:
     return f"(({lo} * {_KNUTH} + ({hi} * {_KNUTH} % {_M16}) * {_M16}) % {_M32})"
 
 
+def mix32_py(h: int, seed: int = 0) -> int:
+    """Python replica of ``mix32_col`` (same split-multiply modular mix —
+    keep the three in sync: Column, SQL, Python)."""
+    h = (h + seed) % _M32
+    lo, hi = h % _M16, h // _M16
+    return (lo * _KNUTH + (hi * _KNUTH % _M16) * _M16) % _M32
+
+
 def sampler_bucket_col(key: Column, seed: int = 0) -> Column:
     """14-bit deterministic bucket of a long key (JVM-side arithmetic).
 
@@ -82,13 +90,6 @@ def sampler_bucket_sql(key_sql: str, seed: int = 0) -> str:
 # word → token id, identical in Spark and DuckDB (both define ascii() as the
 # codepoint of the first char, reverse() on strings, length()).
 _A, _B, _C, VOCAB = 1000003, 4999, 97, 50257
-
-
-def word_token_col(w: Column) -> Column:
-    return (
-        (F.ascii(w) * F.lit(_A) + F.ascii(F.reverse(w)) * F.lit(_B) + F.length(w) * F.lit(_C))
-        % F.lit(VOCAB)
-    ).cast("int")
 
 
 def word_token_sql(w_sql: str) -> str:

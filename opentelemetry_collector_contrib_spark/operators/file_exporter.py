@@ -297,8 +297,7 @@ def write_otlp_proto(
     batches into parts — per-task memory is one marshal chunk, never the
     partition (the bounded-memory discipline of the other sinks) — so the
     bytes are a pure function of the task's row set. ``out_dir`` must be
-    a shared filesystem on a real cluster (same contract as the
-    webdataset sink).
+    a shared filesystem on a real cluster.
     """
     os.makedirs(out_dir, exist_ok=True)
     if "scope_name" not in df.columns:

@@ -1,9 +1,9 @@
 """Count-min sketch over token streams — bounded-memory frequency
-estimates for vocab audits at corpus scale.
+estimates over log fields at any scale.
 
-The exact `textstats.token_frequencies` aggregate is vocab-bounded, which
-is fine for BPE vocabs; a CMS bounds state at d×w counters REGARDLESS of
-key cardinality (URLs, n-grams, user ids) — the standard heavy-hitter
+An exact per-key count is bounded only by the key cardinality; a CMS
+bounds state at d×w counters REGARDLESS of key cardinality (URLs,
+n-grams, user ids) — the standard heavy-hitter
 sketch (Cormode & Muthukrishnan 2005). Unlike most sketches, CMS is
 DETERMINISTIC given its hash functions: est(x) = min_r counts[r][h_r(x)],
 every value an int64 — so the dual-engine oracle replays the whole sketch

@@ -49,7 +49,9 @@ step 2) is invisible until a resume re-overwrites and commits it — the
 exactly-once read view holds at all times, not just after resume. They read
 with the schema stored in the commit row, so committed chunks that routed no
 rows (an empty chunk leaves only ``_SUCCESS``) read as empty frames with the
-usual columns, and no file footer is opened to infer a schema.
+usual columns, and no file footer is opened to infer a schema. The commit
+rows are read on the driver, like they are written, so building a reader
+(or asking for ``completed_chunks()``) starts no Spark job.
 """
 
 from __future__ import annotations
@@ -61,7 +63,7 @@ from typing import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -110,35 +112,37 @@ class CheckpointedRunner:
 
     # ---------------------------------------------------------------- state
 
-    def _commits(self, spark: SparkSession, *cols: str) -> list[Row]:
-        """``cols`` of every commit row; none before the first commit."""
+    def _commits(self, spark: SparkSession, *cols: str) -> list[dict]:
+        """``cols`` of every commit row; none before the first commit. The
+        rows are read on the driver, the way ``write_commit_row`` writes
+        them (pyarrow over the Hadoop file system): no Spark job."""
         # Only "checkpoint dir doesn't exist yet" means "no chunks committed".
         # routed()/aggregates() filter on this result, so swallowing a real
         # read error (permissions, storage blip, old-schema dir) would make
         # readers silently return 0 rows; those must propagate.
-        path = f"{self.out_dir}/checkpoint"
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jvm_path):
+        path = spark._jvm.org.apache.hadoop.fs.Path(f"{self.out_dir}/checkpoint")
+        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(path):
             return []
         # A dir that exists but holds no committed parquet part (crash after
         # mkdir before the first commit, or a leftover _temporary-only dir)
-        # is the same "nothing committed yet" state — resume from zero
-        # instead of raising AnalysisException on an unreadable listing.
-        # Genuine IO/permission errors still propagate from the listing.
-        it = fs.listFiles(jvm_path, True)
-        has_part = False
-        while it.hasNext():
-            name = it.next().getPath().getName()
-            if name.endswith(".parquet") and not name.startswith(("_", ".")):
-                has_part = True
-                break
-        if not has_part:
-            return []
-        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path).select(*cols).collect()
+        # is the same "nothing committed yet" state. ``_``-prefixed files
+        # (a commit row not yet renamed into place) are not committed.
+        tables = []
+        for status in fs.listStatus(path):
+            part = status.getPath()
+            name = part.getName()
+            if status.isFile() and name.endswith(".parquet") and not name.startswith(("_", ".")):
+                stream = fs.open(part)
+                try:
+                    data = stream.readAllBytes()
+                finally:
+                    stream.close()
+                tables.append(pq.read_table(pa.BufferReader(data), columns=list(cols)))
+        return pa.concat_tables(tables).to_pylist() if tables else []
 
     def completed_chunks(self, spark: SparkSession) -> set[str]:
-        return {r.chunk_id for r in self._commits(spark, "chunk_id")}
+        return {r["chunk_id"] for r in self._commits(spark, "chunk_id")}
 
     # ------------------------------------------------------------------ run
 
@@ -217,11 +221,11 @@ class CheckpointedRunner:
         commits = self._commits(spark, "chunk_id", "routed_schema")
         if not commits:
             raise ValueError(f"no committed chunk under {self.out_dir}")
-        schema = T.StructType.fromJson(json.loads(commits[0].routed_schema))
+        schema = T.StructType.fromJson(json.loads(commits[0]["routed_schema"]))
         return (
             spark.read.schema(schema.add("chunk", T.IntegerType()))
             .parquet(f"{self.out_dir}/data")
-            .filter(F.col("chunk").isin([int(c.chunk_id) for c in commits]))
+            .filter(F.col("chunk").isin([int(c["chunk_id"]) for c in commits]))
         )
 
     def aggregates(self, spark: SparkSession) -> DataFrame:

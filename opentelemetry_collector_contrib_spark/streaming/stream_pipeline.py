@@ -123,12 +123,11 @@ def streaming_dedup(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Streaming exact dedup: drop re-deliveries of the same key within the
-    watermark horizon (``dropDuplicatesWithinWatermark``). This is the
-    streaming face of ``operators.dedup.exact_dedup`` — state is bounded by
-    the watermark (keys older than the horizon are evicted), so it runs
-    indefinitely at firehose rates; the batch operator remains the
-    whole-corpus pass. Mirrors the at-least-once receiver semantics of the
-    reference (re-delivered log entries collapse to one)."""
+    watermark horizon (``dropDuplicatesWithinWatermark``). State is
+    bounded by the watermark (keys older than the horizon are evicted), so
+    it runs indefinitely at firehose rates. Mirrors the at-least-once
+    receiver semantics of the reference (re-delivered log entries collapse
+    to one)."""
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         key_cols
     )

@@ -252,3 +252,24 @@ def test_chunk_is_one_spark_job(spark, tokens_path, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("checkpoint-jobs")
     assert len(jobs) <= len(chunks) + 1, len(jobs)
     assert r.routed(spark).count() == N
+
+
+def test_readers_start_no_job(spark, tokens_path, tmp_path):
+    """The commit rows are read on the driver: finding the committed chunks
+    and building the routed and aggregate readers start no Spark job
+    before an action."""
+    r = CheckpointedRunner(str(tmp_path / "out"), _pipeline, files_per_chunk=4)
+    r.run(spark, tokens_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-readers", "reader builds")
+    try:
+        done = r.completed_chunks(spark)
+        routed = r.routed(spark)
+        aggs = r.aggregates(spark)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("checkpoint-readers")
+    assert len(jobs) == 0, jobs
+    assert len(done) == 2
+    assert routed.count() == N
+    assert aggs.groupBy().sum("row_count").first()[0] == N

@@ -61,7 +61,7 @@ def test_range_join_plan_is_equi_join(spark):
 def test_cms_overestimates_and_replays(spark):
     import collections
 
-    from opentelemetry_collector_contrib_spark.operators.dedup import _mix32_py
+    from opentelemetry_collector_contrib_spark.functions.hashing import mix32_py
 
     stream_vals = [i % 37 for i in range(500)] + [7] * 50 + [11] * 200
     stream = spark.createDataFrame([(v,) for v in stream_vals], "token int")
@@ -73,14 +73,14 @@ def test_cms_overestimates_and_replays(spark):
     counters = collections.Counter()
     for v in stream_vals:
         for r in range(depth):
-            counters[(r, _mix32_py(v, r + 1) % width)] += 1
+            counters[(r, mix32_py(v, r + 1) % width)] += 1
     assert {(r.r, r.bucket): r.cnt for r in srows} == dict(counters)
 
     keys = spark.createDataFrame([(t,) for t in range(40)], "token int")
     est = {r.token: r.est for r in cms_estimate(keys, sketch, "token", depth, width).collect()}
     true = collections.Counter(stream_vals)
     for t in range(40):
-        want = min(counters[(r, _mix32_py(t, r + 1) % width)] for r in range(depth))
+        want = min(counters[(r, mix32_py(t, r + 1) % width)] for r in range(depth))
         assert est[t] == want
         assert est[t] >= true[t]
     # the heavy hitter dominates its buckets

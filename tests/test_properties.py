@@ -113,57 +113,3 @@ def test_gotime_layout_roundtrip(dt):
 
     back = _dt.datetime.strptime(rendered, "%Y-%m-%d %H:%M:%S")
     assert back == dt.replace(microsecond=0)
-
-
-@given(
-    st.integers(min_value=1, max_value=12),
-    st.integers(min_value=1, max_value=12),
-    st.booleans(),
-    st.integers(min_value=0, max_value=2**31),
-)
-@settings(max_examples=100, deadline=None)
-def test_netpbm_roundtrip_property(h, w, rgb, seed):
-    """encode∘decode is identity for every image shape and content."""
-    from opentelemetry_collector_contrib_spark.operators import multimodal as mm
-
-    rng = np.random.default_rng(seed)
-    if rgb:
-        px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert (mm.decode_netpbm(mm.encode_ppm(px)) == px).all()
-    else:
-        px = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-        assert (mm.decode_netpbm(mm.encode_pgm(px)) == px).all()
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**16 - 1),
-                min_size=2, max_size=24, unique=True),
-       st.integers(min_value=1, max_value=4))
-@settings(max_examples=60, deadline=None)
-def test_simhash_banding_pigeonhole(fps, k):
-    """Pure-math mirror of simhash_near_pairs' pigeonhole: any two 16-bit
-    values within hamming k agree exactly on at least one of the k+1
-    slices the operator uses."""
-    slices = k + 1
-    base_w, rem = divmod(16, slices)
-    widths = [base_w + (1 if i < rem else 0) for i in range(slices)]
-    offs = [sum(widths[:i]) for i in range(slices)]
-
-    def slice_vals(v):
-        return [(v >> offs[i]) & ((1 << widths[i]) - 1) for i in range(slices)]
-
-    for i, a in enumerate(fps):
-        for b in fps[i + 1:]:
-            if bin(a ^ b).count("1") <= k:
-                assert any(x == y for x, y in zip(slice_vals(a), slice_vals(b)))
-
-
-def test_netpbm_16bit_rejected():
-    """A valid 16-bit PGM (maxval 65535) must fail loudly instead of being
-    silently misdecoded as uint8."""
-    import pytest
-
-    from opentelemetry_collector_contrib_spark.operators.multimodal import decode_netpbm
-
-    payload = b"P5\n2 2\n65535\n" + bytes(8)
-    with pytest.raises(ValueError, match="maxval"):
-        decode_netpbm(payload)
