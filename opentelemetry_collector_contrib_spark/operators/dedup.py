@@ -566,16 +566,6 @@ BLOOM_K = 4
 _BLOOM_M32 = 1 << 32
 
 
-def _mix32_py(h: int, seed: int) -> int:
-    """Driver-side replica of ``hashing.mix32_col`` (same split-multiply
-    modular mix — keep the three in sync: Column, SQL, python)."""
-    from ..functions.hashing import _KNUTH, _M16, _M32
-
-    h = (h + seed) % _M32
-    lo, hi = h % _M16, h // _M16
-    return (lo * _KNUTH + (hi * _KNUTH % _M16) * _M16) % _M32
-
-
 def _bloom_fold_col(key):
     """Fold a non-negative int64 key to 32 bits, overflow-free and
     engine-agnostic: high32 + low32 mod 2^32."""
@@ -589,11 +579,13 @@ def bloom_bitmap(keys, n_bits: int = BLOOM_BITS, k: int = BLOOM_K) -> list[int]:
     """Bloom bitmap (32-bit words) over int64 keys, built driver-side —
     the benchmark side of decontamination is small by definition, like the
     faiss-style quantizer training sample."""
+    from ..functions.hashing import mix32_py
+
     words = [0] * (n_bits // 32)
     for key in keys:
         f = (key // _BLOOM_M32 + key % _BLOOM_M32) % _BLOOM_M32
         for i in range(1, k + 1):
-            b = _mix32_py(f, i) % n_bits
+            b = mix32_py(f, i) % n_bits
             words[b // 32] |= 1 << (b % 32)
     return words
 

@@ -33,3 +33,103 @@ def probabilistic_sample(
         eff = F.coalesce(priority_pct, eff)
     return df.filter(sampler_keep_col(key, eff, seed=seed))
 
+
+def mixture_sample(
+    df: DataFrame,
+    domain_col: str,
+    key: Column,
+    weights: dict[str, float],
+    target_total: int,
+    seed: int = 0,
+) -> DataFrame:
+    """Domain-mixture downsampling for training-data curation: keep a
+    deterministic subset so each domain contributes ≈ weights[d] ×
+    target_total rows (rate capped at 1 — a domain smaller than its target
+    keeps everything; the classic data-mixture recipe, e.g. The Pile /
+    GPT-3 mixture tables).
+
+    Physical shape: per-domain counts are a tiny partial-aggregated groupBy
+    broadcast back onto the corpus (no driver collect), then the keep
+    decision is the same whole-stage-codegen bucket hash the probabilistic
+    sampler uses — deterministic in (key, seed), so reruns and other
+    engines agree row-for-row. Domains absent from `weights` get weight 0
+    (dropped)."""
+    w_map = F.create_map(
+        *[x for k, v in weights.items() for x in (F.lit(k), F.lit(float(v)))]
+    )
+    counts = df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("__dom_cnt"))
+    rate_pct = F.least(
+        F.lit(100.0),
+        F.coalesce(w_map[F.col(domain_col)], F.lit(0.0))
+        * F.lit(float(target_total))
+        / F.col("__dom_cnt")
+        * 100.0,
+    )
+    return (
+        df.join(F.broadcast(counts), on=domain_col)
+        .filter(sampler_keep_col(key, rate_pct, seed=seed))
+        .drop("__dom_cnt")
+    )
+
+
+def _rates_schema(df: DataFrame, domain_col: str):
+    from pyspark.sql import types as T
+
+    return T.StructType([df.schema[domain_col], T.StructField("__rate", T.DoubleType())])
+
+
+def temperature_mixture_sample(
+    df: DataFrame,
+    domain_col: str,
+    key: Column,
+    target_total: int,
+    seed: int = 0,
+) -> DataFrame:
+    """Temperature-scaled domain mixture at α = 1/2 (the multilingual
+    exponential-smoothing recipe — XLM-R/mBERT sample domains ∝ p_d^α with
+    α < 1 to upweight low-resource domains; α = 1/2 is the classic choice):
+    domain d keeps ≈ target_total · q_d rows where q_d ∝ √n_d.
+
+    α is FIXED at 1/2 because that makes the whole computation engine-exact:
+    √ of an int64 count is a correctly-rounded IEEE double in every engine
+    (general p^α via pow() is not correctly rounded and may differ in the
+    last ulp → boundary rows flip), floor(√n) is exact for n < 2^52, the
+    normalizer Σ_d floor(√n_d) is an order-free integer sum, and the final
+    rate divides exact integers as identically-ordered double ops. The keep
+    decision is the deterministic 14-bit sampler bucket.
+
+    Physical shape: ONE tiny per-domain count aggregate, collected once
+    (|domains| rows — the ``dsir_scores`` bounded-state pattern; a
+    constant-key join back would constant-fold into the
+    BroadcastNestedLoopJoin the plan discipline bans, and an unpartitioned
+    window warns). The per-domain rates are computed driver-side with the
+    SAME IEEE double ops the SQL oracle performs (exact ints < 2^53 →
+    identical doubles) and re-enter as a broadcast literal table, so the
+    corpus is scanned exactly once more for the codegen'd filter."""
+    import math
+
+    rows = df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("__n")).collect()
+    # exact: floor(sqrt(double n)) == isqrt(n) for n < 2^52
+    sq = {r[domain_col]: math.isqrt(r["__n"]) for r in rows}
+    norm = sum(sq.values())
+    if norm == 0:
+        raise ValueError("temperature_mixture_sample: empty input")
+    rates = df.sparkSession.createDataFrame(
+        [
+            (
+                r[domain_col],
+                min(
+                    100.0,
+                    float(sq[r[domain_col]] * int(target_total)) * 100.0
+                    / (float(norm) * float(r["__n"])),
+                ),
+            )
+            for r in rows
+        ],
+        _rates_schema(df, domain_col),
+    )
+    return (
+        df.join(F.broadcast(rates), on=domain_col)
+        .filter(sampler_keep_col(key, F.col("__rate"), seed=seed))
+        .drop("__rate")
+    )

@@ -1,4 +1,4 @@
-"""Dedup / similarity / textstats / multimodal operator tests."""
+"""Dedup / similarity / textstats operator tests."""
 
 import numpy as np
 import pytest
@@ -7,7 +7,6 @@ from pyspark.sql import Row, functions as F
 from opentelemetry_collector_contrib_spark.operators import dedup as dd
 from opentelemetry_collector_contrib_spark.operators import similarity as sim
 from opentelemetry_collector_contrib_spark.operators import textstats as ts
-from opentelemetry_collector_contrib_spark.operators import multimodal as mm
 
 
 @pytest.fixture(scope="module")
@@ -173,29 +172,6 @@ class TestTextStats:
         assert out[0] != out[1]
 
 
-class TestMultimodal:
-    def test_plumbing_end_to_end(self, spark):
-        media = mm.synthetic_media_df(spark, 50, partitions=4)
-        feats = mm.decode_and_featurize(media, fake=True)
-        rows = feats.collect()
-        assert len(rows) == 50
-        assert all(r.n_bytes == 64 and len(r.feature) == 16 for r in rows)
-        # deterministic: same id → same feature
-        again = {r.media_id: list(r.feature) for r in mm.decode_and_featurize(media, fake=True).collect()}
-        assert all(list(r.feature) == again[r.media_id] for r in rows)
-
-    def test_real_decode_is_stubbed(self, spark):
-        media = mm.synthetic_media_df(spark, 5, partitions=1)
-        with pytest.raises(Exception):  # NotImplementedError inside task
-            mm.decode_and_featurize(media, fake=False).collect()
-
-    def test_frame_sample(self, spark):
-        media = mm.synthetic_media_df(spark, 5, partitions=1)
-        out = mm.frame_sample(media, every_ms=1000)
-        per = out.groupBy("media_id").count().collect()
-        assert all(r["count"] >= 2 for r in per)
-
-
 def test_jaccard_hot_shingle_cap(spark):
     """max_shingle_freq drops stop-shingles from the inverted index: pairs
     sharing only hot shingles disappear, everything else is a lower bound
@@ -245,13 +221,12 @@ class TestBloomDecontaminate:
     def test_mix32_python_replica_matches_column(self, spark):
         from pyspark.sql import functions as F
 
-        from opentelemetry_collector_contrib_spark.functions.hashing import mix32_col
-        from opentelemetry_collector_contrib_spark.operators.dedup import _mix32_py
+        from opentelemetry_collector_contrib_spark.functions.hashing import mix32_col, mix32_py
 
         keys = [0, 1, 97, 65535, 65536, 4294967295, 1234567890]
         df = spark.createDataFrame([(k,) for k in keys], "k long")
         got = {r.k: r.m for r in df.select("k", mix32_col(F.col("k"), seed=3).alias("m")).collect()}
-        assert got == {k: _mix32_py(k % (1 << 32), 3) for k in keys}
+        assert got == {k: mix32_py(k % (1 << 32), 3) for k in keys}
 
     def test_bloom_exact_counts_match_plain_decontaminate(self, spark):
         from pyspark.sql import functions as F
@@ -362,199 +337,6 @@ class TestIVFPQ:
         row = enc.select("code").first()
         assert len(row.code) == 4
         assert all(0 <= c < 8 for c in row.code)
-
-
-class TestRealCodecs:
-    def test_gif_roundtrip_gray_palette_interlace(self):
-        from opentelemetry_collector_contrib_spark.operators.gif import (
-            decode_gif,
-            encode_gif,
-        )
-
-        rng = np.random.default_rng(3)
-        for shape in [(1, 1), (8, 8), (13, 27), (100, 311)]:
-            px = rng.integers(0, 256, size=shape, dtype=np.uint8)
-            rgb = decode_gif(encode_gif(px))
-            assert rgb.shape == shape + (3,)
-            assert (rgb == np.stack([px] * 3, axis=2)).all()
-        # small palette: decoded RGB maps through it exactly
-        pal = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 255], [9, 9, 9]],
-                       dtype=np.uint8)
-        px = rng.integers(0, 4, size=(17, 23), dtype=np.uint8)
-        assert (decode_gif(encode_gif(px, palette=pal)) == pal[px]).all()
-        # Appendix-E interlace is a row permutation — identity after decode
-        px = rng.integers(0, 256, size=(37, 19), dtype=np.uint8)
-        assert (decode_gif(encode_gif(px, interlace=True))[:, :, 0] == px).all()
-
-    def test_gif_lzw_dictionary_reset_and_extensions(self):
-        from opentelemetry_collector_contrib_spark.operators.gif import (
-            decode_gif,
-            encode_gif,
-        )
-
-        rng = np.random.default_rng(5)
-        # long repetitive and long random streams both cross the 4096-entry
-        # dictionary reset; all must round-trip bit-exactly
-        for px in [
-            np.tile(np.arange(256, dtype=np.uint8), 300).reshape(300, 256),
-            rng.integers(0, 256, size=(200, 400), dtype=np.uint8),
-            np.zeros((500, 100), dtype=np.uint8),
-        ]:
-            assert (decode_gif(encode_gif(px))[:, :, 0] == px).all()
-        # decoder skips extension blocks (e.g. a spliced-in GCE)
-        base = np.arange(64, dtype=np.uint8).reshape(8, 8)
-        enc = bytearray(encode_gif(base))
-        idx = enc.index(0x2C, 13 + 768)
-        gce = bytes([0x21, 0xF9, 4, 0, 0, 0, 0, 0])
-        spliced = bytes(enc[:idx]) + gce + bytes(enc[idx:])
-        assert (decode_gif(spliced)[:, :, 0] == base).all()
-        with pytest.raises(ValueError):
-            decode_gif(b"NOTAGIF")
-
-    def test_netpbm_roundtrip_all_variants(self):
-        """Pure-python PGM/PPM decode: binary round-trip + ASCII forms +
-        comments in the header."""
-        from opentelemetry_collector_contrib_spark.operators import multimodal as mm
-
-        px = ((np.add.outer(np.arange(5), np.arange(7)) * 9) % 256).astype(np.uint8)
-        assert (mm.decode_netpbm(mm.encode_pgm(px)) == px).all()
-        rgb = np.stack([px, px // 2, px // 3], axis=2).astype(np.uint8)
-        assert (mm.decode_netpbm(mm.encode_ppm(rgb)) == rgb).all()
-        ascii_pgm = b"P2\n# a comment\n3 2\n255\n0 10 20\n30 40 50\n"
-        assert (mm.decode_netpbm(ascii_pgm) ==
-                np.array([[0, 10, 20], [30, 40, 50]], dtype=np.uint8)).all()
-        with pytest.raises(ValueError):
-            mm.decode_netpbm(b"JFIF....")
-
-    def test_png_roundtrip_every_filter(self):
-        """stdlib-zlib PNG codec: encode with each single filter type and
-        with the cycling default; decode must reproduce pixels exactly for
-        gray and RGB (filtering is lossless)."""
-        from opentelemetry_collector_contrib_spark.operators import multimodal as mm
-
-        rng = np.random.default_rng(7)
-        gray = rng.integers(0, 256, size=(11, 13), dtype=np.uint8)
-        rgb = rng.integers(0, 256, size=(9, 5, 3), dtype=np.uint8)
-        for px in (gray, rgb):
-            h = px.shape[0]
-            for f in range(5):  # force one filter type for ALL scanlines
-                payload = mm.encode_png(px, filters=[f] * h)
-                assert (mm.decode_png(payload) == px).all(), f"filter {f}"
-            assert (mm.decode_png(mm.encode_png(px)) == px).all()  # cycling
-
-    def test_png_rejects_corrupt_and_unsupported(self):
-        from opentelemetry_collector_contrib_spark.operators import multimodal as mm
-
-        px = np.arange(64, dtype=np.uint8).reshape(8, 8)
-        payload = bytearray(mm.encode_png(px))
-        with pytest.raises(ValueError, match="not a PNG"):
-            mm.decode_png(b"JFIF" + bytes(payload))
-        payload[40] ^= 0xFF  # flip a byte inside IDAT → CRC mismatch
-        with pytest.raises(ValueError, match="CRC"):
-            mm.decode_png(bytes(payload))
-        # 16-bit / palette PNGs are out of the supported subset
-        ihdr = (8).to_bytes(4, "big") + (8).to_bytes(4, "big") + bytes([16, 0, 0, 0, 0])
-        bad = mm._PNG_SIG + mm._png_chunk(b"IHDR", ihdr) + mm._png_chunk(b"IEND", b"")
-        with pytest.raises(ValueError, match="not supported"):
-            mm.decode_png(bad)
-
-    def test_png_features_distributed(self, spark):
-        """png_features_from_tokens builds a genuine PNG per doc inside
-        mapInPandas and re-decodes it; stats equal the token-derived pixels
-        (hand-recomputed here), proving the distributed round-trip is the
-        identity."""
-        from opentelemetry_collector_contrib_spark.operators import multimodal as mm
-
-        data = [
-            (0, [300, 1, 2, 255]),          # even → 8x8 gray, zero-padded
-            (1, list(range(200))),          # odd → 4x8 RGB (96 bytes)
-            (2, []),                        # empty doc → all-zero raster
-            (3, [97] * 500),                # odd, truncated at 96
-        ]
-        df = spark.createDataFrame(data, "doc_id long, tokens array<long>")
-        rows = {r.media_id: r for r in mm.png_features_from_tokens(df).collect()}
-        assert len(rows) == 4
-        for mid, toks in data:
-            n = 64 if mid % 2 == 0 else 96
-            buf = [(t % 256) for t in toks[:n]] + [0] * max(0, n - len(toks))
-            r = rows[mid]
-            assert r.color == ("gray" if mid % 2 == 0 else "rgb")
-            assert (r.width, r.height) == ((8, 8) if mid % 2 == 0 else (8, 4))
-            assert r.pix_sum == sum(buf)
-            assert r.pix_wsum == sum(v * (j + 1) for j, v in enumerate(buf))
-            assert r.n_png_bytes > len(mm._PNG_SIG)
-
-    def test_wav_roundtrip(self):
-        from opentelemetry_collector_contrib_spark.operators import multimodal as mm
-
-        t = np.arange(1600)
-        samples = (np.sin(2 * np.pi * 200 * t / 8000.0) * 20000).astype(np.int16)
-        decoded, rate = mm.decode_wav(mm.encode_wav(samples, 8000))
-        assert rate == 8000 and len(decoded) == 1600
-        assert np.allclose(decoded, samples / 32768.0, atol=1e-6)
-
-    def test_distributed_real_decode(self, spark):
-        """Genuine PGM/WAV bytes decoded inside mapInPandas; features come
-        from the decoded pixel/sample domain (not the raw bytes)."""
-        from opentelemetry_collector_contrib_spark.operators import multimodal as mm
-
-        media = mm.synthetic_real_media_df(spark, 40, partitions=4)
-        out = mm.decode_and_featurize_real(media).collect()
-        rows = {r.media_id: r for r in out}
-        assert len(rows) == 40
-        img = rows[0]
-        assert img.kind == "image" and (img.width, img.height) == (8, 8)
-        assert len(img.feature) == 16 and all(0.0 <= v <= 1.0 for v in img.feature)
-        aud = rows[1]
-        assert aud.kind == "audio" and aud.sample_rate == 8000
-        assert aud.duration_ms == 100
-        assert max(aud.feature) > 0.1  # sine energy present
-        jpg = rows[4]  # ids ≡4 mod 8 are genuine baseline JPEG bytes
-        assert jpg.kind == "image" and (jpg.width, jpg.height) == (8, 8)
-        assert len(jpg.feature) == 16
-        # unknown mime still raises (the honest stub boundary)
-        bad = media.withColumn("mime", F.lit("video/mp4"))
-        with pytest.raises(Exception, match="NotImplementedError|no pure-Python codec"):
-            mm.decode_and_featurize_real(bad).collect()
-
-    def test_jpeg_roundtrip_quality_ladder(self):
-        """Baseline JPEG codec (pure numpy): lossy round-trip error shrinks
-        as quality rises; smooth gradients reconstruct exactly at q≥95;
-        deterministic bytes; gray and RGB 4:4:4 paths both real."""
-        from opentelemetry_collector_contrib_spark.operators.jpeg import (
-            decode_jpeg, encode_jpeg,
-        )
-
-        gray = np.add.outer(np.arange(24) * 3, np.arange(40) * 2).astype(np.uint8)
-        rmses = []
-        for q in (25, 50, 75, 95):
-            dec = decode_jpeg(encode_jpeg(gray, q)).astype(int)
-            rmses.append(float(np.sqrt(((dec - gray.astype(int)) ** 2).mean())))
-        assert rmses == sorted(rmses, reverse=True)  # quality ladder
-        assert rmses[-1] == 0.0                      # q95 exact on gradient
-
-        rgb = np.zeros((17, 23, 3), np.uint8)
-        rgb[..., 0] = np.add.outer(np.arange(17) * 5, np.arange(23) * 3) % 256
-        rgb[..., 1] = 100
-        rgb[..., 2] = (np.arange(23)[None, :] * 7) % 256
-        dec = decode_jpeg(encode_jpeg(rgb, 90))
-        assert dec.shape == rgb.shape
-        assert np.abs(dec.astype(int) - rgb.astype(int)).max() <= 4
-        assert encode_jpeg(rgb, 90) == encode_jpeg(rgb, 90)  # deterministic
-
-    def test_jpeg_rejects_out_of_scope_streams(self):
-        from opentelemetry_collector_contrib_spark.operators.jpeg import (
-            decode_jpeg, encode_jpeg,
-        )
-
-        with pytest.raises(ValueError, match="not a JPEG"):
-            decode_jpeg(b"\x89PNG....")
-        px = np.arange(64, dtype=np.uint8).reshape(8, 8)
-        payload = bytearray(encode_jpeg(px, 75))
-        sof = payload.index(b"\xff\xc0")
-        payload[sof + 1] = 0xC2  # rewrite SOF0 → SOF2 (progressive)
-        with pytest.raises(ValueError, match="non-baseline"):
-            decode_jpeg(bytes(payload))
 
 
 def test_lsh_multi_table_recall(spark, emb):
@@ -1405,57 +1187,3 @@ class TestChunkDocuments:
             toks = {t for _, c in chs for t in c}
             assert toks == set(dict(rows[d].asDict())["tokens"]) or d == 1
 
-
-class TestFlacCodec:
-    """FLAC codec (operators/flac.py): exact round-trips across subframe
-    types, determinism, CRC corruption detection."""
-
-    def test_roundtrips_exact(self, spark):
-        from opentelemetry_collector_contrib_spark.operators import flac
-
-        rng = np.random.RandomState(7)
-        cases = {
-            "random": rng.randint(-20000, 20000, 1000).astype(np.int16),
-            "constant": np.full(300, -123, dtype=np.int16),   # CONSTANT subframe
-            "ramp": np.arange(-500, 500, dtype=np.int16),     # FIXED order 2
-            "sine": (10000 * np.sin(np.arange(777) / 10.0)).astype(np.int16),
-            "one": np.array([5], dtype=np.int16),
-            "empty": np.array([], dtype=np.int16),
-            "extremes": np.array([32767, -32768, 0, 1, -1] * 20, dtype=np.int16),
-        }
-        for name, x in cases.items():
-            for lpc in (False, True):
-                enc = flac.encode_flac(x, 8000, block=64, use_lpc=lpc)
-                dec, rate = flac.decode_flac(enc)
-                assert rate == 8000 and np.array_equal(dec, x), (name, lpc)
-                # byte-determinism (WebDataset shard reproducibility relies on it)
-                assert enc == flac.encode_flac(x, 8000, block=64, use_lpc=lpc)
-
-    def test_crc_detects_corruption(self, spark):
-        from opentelemetry_collector_contrib_spark.operators import flac
-
-        x = np.arange(-300, 300, dtype=np.int16)
-        enc = bytearray(flac.encode_flac(x, 8000))
-        enc[len(enc) // 2] ^= 0xFF
-        with pytest.raises(Exception):
-            flac.decode_flac(bytes(enc))
-
-    def test_distributed_roundtrip(self, spark):
-        from opentelemetry_collector_contrib_spark.operators.multimodal import (
-            flac_features_from_tokens,
-        )
-
-        df = spark.createDataFrame(
-            [(i, [(i * 11 + d) % 50257 for d in range(1 + (i * 29) % 150)])
-             for i in range(40)],
-            "doc_id long, tokens array<int>",
-        ).repartition(4)
-        rows = {r.media_id: r for r in flac_features_from_tokens(df).collect()}
-        assert len(rows) == 40
-        for i, r in rows.items():
-            toks = [(i * 11 + d) % 50257 for d in range(1 + (i * 29) % 150)]
-            s = [((t * 53) % 30000) - 15000 for t in toks]
-            assert r.n_samples == len(s)
-            assert r.samp_sum == sum(s)
-            assert r.samp_wsum == sum(v * (j + 1) for j, v in enumerate(s))
-            assert r.lpc == (i % 2 == 1)

@@ -113,3 +113,25 @@ def test_gotime_layout_roundtrip(dt):
 
     back = _dt.datetime.strptime(rendered, "%Y-%m-%d %H:%M:%S")
     assert back == dt.replace(microsecond=0)
+
+
+@given(st.lists(st.integers(min_value=0, max_value=2**16 - 1),
+                min_size=2, max_size=24, unique=True),
+       st.integers(min_value=1, max_value=4))
+@settings(max_examples=60, deadline=None)
+def test_simhash_banding_pigeonhole(fps, k):
+    """Pure-math mirror of simhash_near_pairs' pigeonhole: any two 16-bit
+    values within hamming k agree exactly on at least one of the k+1
+    slices the operator uses."""
+    slices = k + 1
+    base_w, rem = divmod(16, slices)
+    widths = [base_w + (1 if i < rem else 0) for i in range(slices)]
+    offs = [sum(widths[:i]) for i in range(slices)]
+
+    def slice_vals(v):
+        return [(v >> offs[i]) & ((1 << widths[i]) - 1) for i in range(slices)]
+
+    for i, a in enumerate(fps):
+        for b in fps[i + 1:]:
+            if bin(a ^ b).count("1") <= k:
+                assert any(x == y for x, y in zip(slice_vals(a), slice_vals(b)))
