@@ -5,7 +5,7 @@ aggregate), designed for trillion-row Iceberg/parquet token tables.
 This is NOT a port of the Go reference (reakaleek/opentelemetry-collector-contrib).
 The reference interprets closures per record; here every stage is a Spark
 DataFrame transformation so Catalyst/Tungsten (whole-stage codegen, AQE,
-broadcast joins, partition pruning) do the physical planning.
+partition pruning) do the physical planning.
 
 Layout
 ------

@@ -23,21 +23,6 @@ TOKENS_SCHEMA = T.StructType(
     ]
 )
 
-# Envelope of a parsed log record (stanza Entry / plog.LogRecord analog).
-LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("ts", T.TimestampType(), True),  # event time (time parser)
-        T.StructField("observed_ts", T.TimestampType(), True),  # ingest time
-        T.StructField("severity_text", T.StringType(), True),
-        T.StructField("severity_number", T.IntegerType(), True),
-        T.StructField("body", T.StringType(), True),
-        T.StructField("attributes", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("resource", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("trace_id", T.StringType(), True),
-        T.StructField("span_id", T.StringType(), True),
-    ]
-)
-
 # The repo-wide flat log-record row shape — one OTLP LogRecord with its
 # resource/scope context denormalized on. Every wire-format receiver
 # (loki, splunk HEC, cloudflare, azure, webhook, kafka otlp modes, the

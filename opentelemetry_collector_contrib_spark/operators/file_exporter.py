@@ -101,17 +101,6 @@ def records_in_order(pdf: pd.DataFrame) -> list[dict]:
     return recs
 
 
-def _flat_records(pdf: pd.DataFrame) -> list[dict]:
-    recs = records_in_order(pdf)
-    recs.sort(
-        key=lambda r: (
-            tuple(sorted(r["resource"].items())), r["scope_name"],
-            r["trace_id"], r["span_id"], r["time_unix_nano"], str(r["body"]),
-        )
-    )
-    return recs
-
-
 def json_doc_bytes(records: list[dict]) -> bytes:
     """plog ``JSONMarshaler`` document for a record chunk — the same
     resourceLogs/scopeLogs/logRecords shape ``readers.otlp_json_lines``

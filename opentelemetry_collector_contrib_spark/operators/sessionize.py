@@ -54,11 +54,3 @@ def session_aggregate(
         F.max(ts_col).alias("session_end"),
         ((F.max(mic) - F.min(mic)) / 1_000_000).cast("long").alias("duration_s"),
     )
-
-
-def streaming_session_window(df: DataFrame, key_cols: list[str], ts_col: str, gap: str):
-    """Streaming form: native session_window with watermark handled by the
-    caller (`F.session_window` — dynamic gap windows merged by the engine)."""
-    return df.groupBy(F.session_window(F.col(ts_col), gap), *key_cols).agg(
-        F.count(F.lit(1)).alias("n_events")
-    )

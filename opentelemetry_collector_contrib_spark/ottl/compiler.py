@@ -165,13 +165,6 @@ def _extract_patterns(target: Column, pattern: str) -> Column:
 CONVERTERS: dict[str, Callable[..., Column]] = {}
 
 
-def register_converter(name: str):
-    def deco(fn):
-        CONVERTERS[name] = fn
-        return fn
-    return deco
-
-
 def _build_converters() -> None:
     C = CONVERTERS
     C["Base64Decode"] = lambda x: F.unbase64(_as_col(x)).cast("string")

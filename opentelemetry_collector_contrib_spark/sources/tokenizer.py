@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import _A, _B, _C, VOCAB, word_token_sql
+from ..functions.hashing import _A, _B, _C, VOCAB
 
 
 def tokenize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -43,16 +43,3 @@ def pre_tokenize(df: DataFrame, text_col: str = "text", out: str = "pieces") -> 
     return df.withColumn(
         out, F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(PRETOKEN_RE), 0)
     )
-
-
-def tokenize_oracle_sql() -> str:
-    """DuckDB equivalent (same word→id formula)."""
-    tok = word_token_sql("w")
-    return f"""
-    SELECT
-      'doc-' || lpad(CAST(doc_id AS VARCHAR), 12, '0') AS doc_id,
-      list_transform(list_filter(str_split_regex(text, '\\s+'), w -> length(w) > 0), w -> {tok}) AS tokens,
-      CAST(len(list_filter(str_split_regex(text, '\\s+'), w -> length(w) > 0)) AS INT) AS n_tok,
-      source
-    FROM documents
-    """

@@ -58,6 +58,15 @@ def test_range_join_plan_is_equi_join(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_mix32_python_replica_matches_column(spark):
+    from opentelemetry_collector_contrib_spark.functions.hashing import mix32_col, mix32_py
+
+    keys = [0, 1, 97, 65535, 65536, 4294967295, 1234567890]
+    df = spark.createDataFrame([(k,) for k in keys], "k long")
+    got = {r.k: r.m for r in df.select("k", mix32_col(F.col("k"), seed=3).alias("m")).collect()}
+    assert got == {k: mix32_py(k % (1 << 32), 3) for k in keys}
+
+
 def test_cms_overestimates_and_replays(spark):
     import collections
 
