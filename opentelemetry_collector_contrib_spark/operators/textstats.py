@@ -11,6 +11,9 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# token ids are < VOCAB, so an n-gram packs into one long as base-VOCAB digits
+VOCAB = 50257
+
 # tiny per-language stopword lists for the n-gram/stopword-hit heuristic
 LANG_STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"],
@@ -97,14 +100,12 @@ def repetition_stats(
     engine reproduces them exactly; callers derive ratios.
 
     Physical shape: ZERO shuffle and zero Python. Grams pack into longs
-    (same base-VOCAB packing as dedup.ngram_shingles), are array_sort'ed
+    (base-VOCAB, the GPT-2 vocabulary size), are array_sort'ed
     per row, and a single O(L) higher-order fold over the sorted array
     extracts max-run-length and duplicated-position counts — per-row
     whole-stage-codegen work, no explode, no groupBy. The SQL oracle uses
     the explode+GROUP BY formulation; both count gram multiplicity, so
     they agree exactly."""
-    from .dedup import VOCAB
-
     t = F.col(tokens_col)
     ln = F.size(t)
     out = df
