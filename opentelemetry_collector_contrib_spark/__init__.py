@@ -20,7 +20,7 @@ Layout
                    (`pkg/ottl/grammar.go`, plan-time compilation instead of
                    per-record closure interpretation)
 - ``plans``      : end-to-end pipeline assembly + checkpointed exactly-once resume
-- ``streaming``  : Structured Streaming variants (foreachBatch router)
+- ``streaming``  : Structured Streaming variants (per-route file sink)
 """
 
 __version__ = "0.1.0"

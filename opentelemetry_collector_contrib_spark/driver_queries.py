@@ -11,6 +11,9 @@ never produce spurious hash mismatches.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable
 
@@ -82,6 +85,14 @@ def ensure_utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _work_dir(prefix: str) -> str:
+    """A new temp directory for a query's files. The query's frame reads
+    them lazily, so the directory is removed when the process exits."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    return work
+
+
 # ---------------------------------------------------------------------------
 # Spark-side pipeline over documents (uses the real operators)
 
@@ -89,14 +100,11 @@ def _tokens_of_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenize_documents(spark, sf_dir)
 
 
-def _parsed_docs(spark: SparkSession, sf_dir: str, vectorized: bool = False) -> DataFrame:
+def _parsed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     df = _tokens_of_docs(spark, sf_dir)
     df = render_lines(df, out="line")
-    if vectorized:
-        ensure_shipped(spark)
-    engine = "arrow" if vectorized else "jvm"
-    df = regex_parser(df, LINE_PATTERN, parse_from="line", on_error="send", engine=engine)
+    df = regex_parser(df, LINE_PATTERN, parse_from="line", on_error="send")
     df = time_parser(df, "ts_str", layout="yyyy-MM-dd'T'HH:mm:ssX", parse_to="ts")
     df = attach_severity(df, "level")
     return (
@@ -176,18 +184,6 @@ FROM base
 
 def _q_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _parsed_docs(spark, sf_dir)
-    return df.select(
-        F.col("doc_idx").alias("doc_id"),
-        "severity_text",
-        "severity_number",
-        "ts_unix",
-        "source",
-        "n_tok",
-    )
-
-
-def _q_parse_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _parsed_docs(spark, sf_dir, vectorized=True)
     return df.select(
         F.col("doc_idx").alias("doc_id"),
         "severity_text",
@@ -958,17 +954,14 @@ FROM sess GROUP BY user_id, session_id
 
 
 def _q_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured-Streaming pipeline (availableNow drain through
-    foreachBatch per-route sinks), result read back as a DataFrame.
+    """Structured-Streaming pipeline (availableNow drain through the
+    per-route parquet file sink), result read back as a DataFrame.
     Oracle-SQL-expressible result, so the oracle asserts stream ≡ batch."""
-    import tempfile
-
-    from .sources.tokengen import tokens_df
     from .streaming.stream_pipeline import run_streaming_to_completion
 
     ensure_utc(spark)
     ensure_shipped(spark)
-    work = tempfile.mkdtemp(prefix="stream_q_")
+    work = _work_dir("stream_q_")
     toks = _tokens_of_docs(spark, sf_dir)
     toks.write.mode("overwrite").parquet(f"{work}/in")
     run_streaming_to_completion(
@@ -993,10 +986,8 @@ def _q_stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode's closed-window-only emission is exercised separately in
     tests). Mirrors the collector's interval/aggregation processors in the
     streaming regime (SURVEY §2.8)."""
-    import tempfile
-
     ensure_utc(spark)
-    work = tempfile.mkdtemp(prefix="streamwin_q_")
+    work = _work_dir("streamwin_q_")
     # watermarks require TIMESTAMP (with tz); parquet ts is NTZ — with the
     # session pinned UTC the cast is value-identical.
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
@@ -1601,18 +1592,18 @@ def _q_file_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``max_backups`` is explicitly unbounded — pruning DELETES data by
     design (lumberjack retention), and a round-trip oracle must keep
     every part at any scale factor."""
-    import tempfile
-
     from .operators.file_exporter import read_otlp_proto, write_otlp_proto
 
     ensure_shipped(spark)
-    work = tempfile.mkdtemp(prefix="proto_sink_q_")
+    work = _work_dir("proto_sink_q_")
     flat = _flat_log_records(spark, sf_dir).drop("event_id").repartition(4)
     write_otlp_proto(
         flat, work, compression="zstd", batch_records=512,
         max_bytes=64 * 1024, max_backups=10**9,
     ).collect()
-    back = read_otlp_proto(spark, f"{work}/*.proto.*", compression="zstd")
+    # the directory, not a glob: Spark's check for a streaming-sink log
+    # under a glob path logs a FileNotFoundException; only parts are in it
+    back = read_otlp_proto(spark, work, compression="zstd")
     return back.select(
         "time_unix_nano",
         "severity_number",
@@ -1800,12 +1791,10 @@ def _q_k8s_dynamic_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2, per row. foreachBatch re-reads + re-broadcasts the store every
     micro-batch (`streaming/dynamic_enrich.py`); the engine checkpoint
     makes drain 2 process only the new files (exactly-once resume)."""
-    import tempfile
-
     from .streaming.dynamic_enrich import run_dynamic_enrich
 
     ensure_utc(spark)
-    work = tempfile.mkdtemp(prefix="k8s_dyn_q_")
+    work = _work_dir("k8s_dyn_q_")
     inp, lut, out = f"{work}/in", f"{work}/lut", f"{work}/out"
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id",
@@ -1979,12 +1968,10 @@ def _q_s3_body_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     then read the objects BACK and re-derive the time-partition levels
     from the key — the oracle recomputes both from the events table, so
     layout AND content must round-trip."""
-    import tempfile
-
     from .operators.s3_exporter import read_s3_body_objects, write_s3_objects
 
     ensure_shipped(spark)
-    work = tempfile.mkdtemp(prefix="s3_sink_q_")
+    work = _work_dir("s3_sink_q_")
     flat = _flat_log_records(spark, sf_dir).drop("event_id")
     write_s3_objects(flat, work, marshaler="body").collect()
     return read_s3_body_objects(spark, work)
@@ -5073,11 +5060,11 @@ WHERE event_id % 17 <> 0 AND event_id % 19 <> 0
 
 REGISTRY: list[Query] = [
     # --- Registry order = driver-sweep order: the driver checks the first 50
-    # entries, tools/check_oracles.py checks all 88. Three blocks, each in
+    # entries, tools/check_oracles.py checks all 87. Three blocks, each in
     # the order its queries were added:
     #   1. 6 processor and sketch queries (tail sampling to expo histogram);
     #   2. 48 receiver decodes and exporter marshals (below the marker);
-    #   3. 34 pipeline, relational, parser and streaming queries (from
+    #   3. 33 pipeline, relational, parser and streaming queries (from
     #      `tokenize`), driver-green in CORRECTNESS_r01..r04.
     # Append new queries at the end of block 2; never reorder, so a query's
     # correctness rows stay comparable from one driver sweep to the next.
@@ -5170,7 +5157,6 @@ REGISTRY: list[Query] = [
     # --- block 3: driver-green through r04 ---
     Query("tokenize", _q_tokenize, _SQL_TOKENIZE),
     Query("parse_severity", _q_parse, _SQL_PARSE),
-    Query("parse_severity_vectorized", _q_parse_vectorized, _SQL_PARSE),
     Query("enrich_lookup", _q_enrich, _SQL_ENRICH),
     Query("route_match_once", _q_route_match_once, _SQL_ROUTE_ONCE),
     Query("route_multicast", _q_route_multicast, _SQL_ROUTE_MULTI),

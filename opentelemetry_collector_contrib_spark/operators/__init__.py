@@ -19,7 +19,7 @@ from .parse import (  # noqa: F401
     time_parser,
     uri_parser,
 )
-from .recombine import recombine, recombine_pandas  # noqa: F401
+from .recombine import recombine  # noqa: F401
 from .router import Route, route_match_once, route_multicast, routes_from_ottl, write_routed  # noqa: F401
 from .sampler import probabilistic_sample  # noqa: F401
 from .sessionize import session_aggregate, sessionize  # noqa: F401

@@ -9,21 +9,15 @@ Every parser maps to native Catalyst expressions, which whole-stage codegen
 fuses into the surrounding plan and column pruning trims to what the query
 reads. The regex parser is one ``regexp_extract`` per named group, so a
 query that reads one group runs one extract; json/csv/kv/uri/time map to
-from_json / from_csv / str_to_map / parse_url / to_timestamp. The regex
-parser keeps a vectorized Arrow UDF engine (RE2 over Arrow batches) with
-the same values, for RE2-only patterns.
+from_json / from_csv / str_to_map / parse_url / to_timestamp.
 """
 
 from __future__ import annotations
 
 import re
 
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import arrow_udf
 
 from ..functions.exprs import per_jvm
 
@@ -55,7 +49,7 @@ def _jvm_pattern(pattern: str) -> str:
     Java also before a final line terminator. ``(?d)`` makes ``\\n`` the
     only line terminator, as in RE2, so ``.`` matches ``\\r``."""
     if re.compile(pattern).flags & re.MULTILINE:
-        raise ValueError("multi-line (?m) patterns need engine='arrow'")
+        raise ValueError("multi-line (?m) patterns are not supported")
     return "(?d)" + _rewrite(pattern, {"(?P<": "(", "$": r"\z"})
 
 
@@ -65,7 +59,6 @@ def regex_parser(
     parse_from: str = "line",
     prefix: str = "",
     on_error: str = "send",
-    engine: str = "jvm",
 ) -> DataFrame:
     """regex_parser (`parser/regex/parser.go:46-74`): named capture groups →
     one string column each.
@@ -75,56 +68,27 @@ def regex_parser(
     match, is ``""``. on_error=send passes failed lines through
     (`helper/parser.go:103-110`), on_error=drop filters them.
 
-    engine='jvm' (default): per group ``when(rlike(p), regexp_extract(p,
-    i))`` with ``p = _jvm_pattern(pattern)``. These are plain Catalyst
-    expressions, so the optimizer prunes the groups nobody reads and the
-    rows never leave the JVM.
-
-    engine='arrow': one vectorized Arrow UDF over
-    ``pyarrow.compute.extract_regex`` (RE2 in C++, no per-row Python
-    objects). It always extracts every group and crosses into a Python
-    worker; it serves patterns the JVM engine refuses, such as multi-line
-    ``(?m)`` ones.
+    Each group is ``when(rlike(p), regexp_extract(p, i))`` with ``p =
+    _jvm_pattern(pattern)``. These are plain Catalyst expressions, so the
+    optimizer prunes the groups nobody reads and the rows never leave the
+    JVM.
 
     The reference optionally memoizes raw→parsed with an LRU cache
     (parser.go:46-51); vectorized execution makes that unnecessary.
     """
     if on_error not in ON_ERROR:
         raise ValueError(f"on_error must be one of {ON_ERROR}")
-    groups = re.compile(pattern).groupindex
-    if not groups:
+    if not re.compile(pattern).groupindex:
         raise ValueError("pattern must use named capture groups (?P<name>...)")
-    struct_col = f"__parsed_{parse_from}"
-
-    if engine == "jvm":
-        out = df
-        matched, cols = _jvm_group_cols(pattern, parse_from)
-
-    elif engine == "arrow":
-        # extract_regex refuses unnamed groups: make them non-capturing
-        re2 = _rewrite(pattern, {"(": "(?:"})
-        out_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in groups])
-
-        @arrow_udf(out_schema)
-        def extract(arr: pa.Array) -> pa.Array:
-            return pc.extract_regex(arr, re2)
-
-        out = df.withColumn(struct_col, extract(F.col(parse_from)))
-        matched = F.col(struct_col).isNotNull()
-        cols = tuple((n, F.col(struct_col)[n]) for n in groups)
-
-    else:
-        raise ValueError(f"unknown engine {engine!r}")
-
+    matched, cols = _jvm_group_cols(pattern, parse_from)
     if on_error.startswith("drop"):
-        out = out.filter(matched)
-    out = out.withColumns({prefix + n: c for n, c in cols})
-    return out.drop(struct_col) if engine == "arrow" else out
+        df = df.filter(matched)
+    return df.withColumns({prefix + n: c for n, c in cols})
 
 
 @per_jvm
 def _jvm_group_cols(pattern: str, parse_from: str) -> tuple[Column, tuple[tuple[str, Column], ...]]:
-    """The jvm engine's match test and its (name, column) per named group."""
+    """The match test and the (name, column) per named group."""
     java = _jvm_pattern(pattern)
     line = F.col(parse_from)
     matched = line.rlike(java)

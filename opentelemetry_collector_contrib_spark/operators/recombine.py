@@ -7,14 +7,9 @@ max_batch_size / max_log_size / force_flush_timeout.
 
 Batch restatement: within each source, order rows by a monotonic column
 (file offset analog), assign a segment id = running count of boundary
-matches, then group by (source, segment). Two implementations:
-
-- ``recombine`` — pure DataFrame: window running-sum + groupBy. The window
-  shuffles by source once and sorts within partitions; Catalyst handles
-  spill. Preferred at scale (no Python).
-- ``recombine_pandas`` — applyInPandas segmentation, demonstrating the
-  custom-stateful-operator escape hatch (and honoring max_batch_size which
-  the window form also supports via batch splitting).
+matches, then group by (source, segment). It is a window running-sum +
+groupBy: the window shuffles by source once and sorts within partitions,
+Catalyst handles spill, and no row crosses into Python.
 
 Processing-time flush semantics (force_flush_timeout, ticker at timeout/5 —
 transformer.go:58-81) only exist in streaming; see streaming/ for the
@@ -23,9 +18,6 @@ session-window analog.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -152,38 +144,3 @@ def recombine(
         )
     )
 
-
-def recombine_pandas(
-    df: DataFrame,
-    source_col: str,
-    order_col: str,
-    combine_col: str,
-    is_first_regex: str,
-    combine_with: str = "\n",
-) -> DataFrame:
-    """applyInPandas variant — per-source segmentation in one pass (the
-    stateful-operator escape hatch for semantics a window can't express)."""
-    import re
-
-    out_schema = (
-        f"{source_col} string, segment_id string, n_lines long, combined string"
-    )
-
-    def seg(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        pat = re.compile(is_first_regex)
-        seg_ids = pdf[combine_col].map(lambda s: 1 if pat.search(str(s)) else 0).cumsum()
-        grouped = pdf.groupby(seg_ids)
-        rows = []
-        for sid, g in grouped:
-            rows.append(
-                {
-                    source_col: key[0],
-                    "segment_id": str(sid),
-                    "n_lines": len(g),
-                    "combined": combine_with.join(g[combine_col].astype(str)),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return df.groupBy(source_col).applyInPandas(seg, schema=out_schema)

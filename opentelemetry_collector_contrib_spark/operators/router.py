@@ -137,41 +137,14 @@ def lakehouse_format(spark) -> str:
         return "parquet"
 
 
-def write_routed(
-    df: DataFrame,
-    path: str,
-    route_col: str = "route",
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-    files_per_route: int = 0,
-    salt_cols: list[str] | None = None,
-) -> None:
+def write_routed(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     """One write job fans out to per-route directories (Iceberg-table analog;
     `partitionBy` plays `exporter/fileexporter` group_by —
     grouping_file_exporter.go — and pkg/batchperresourceattr).
 
-    files_per_route > 0 repartitions on (route, salt) first: with match_once
-    routing a hot route can hold ~half the dataset, and without salting the
-    dynamic-partition writer funnels it through few tasks. The salt spreads
-    each route over N writer tasks — the explicit skew handling of the
-    write path (north rule).
-
-    The salt hashes STABLE row content (salt_cols, default: every non-route
-    column) — never monotonically_increasing_id(): a nondeterministic
-    repartition key re-deals rows differently when a map task is recomputed
-    (stage retry / speculative execution), duplicating or dropping rows.
-    Deterministic salt ⇒ identical output partitioning across retries and
-    across runs."""
+    The write runs in the scan's own tasks, with no repartition: each task
+    writes one file per route it holds, so a hot route spreads over every
+    task that read it. An existing output at ``path`` is overwritten."""
     if fmt == "auto":
         fmt = lakehouse_format(df.sparkSession)
-    out = df
-    if files_per_route > 0:
-        basis = salt_cols or [c for c in df.columns if c != route_col]
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in basis]), F.lit(files_per_route))
-        out = df.repartition(F.col(route_col), salt)
-    (
-        out.write.format(fmt)
-        .mode(mode)
-        .partitionBy(route_col)
-        .save(path)
-    )
+    df.write.format(fmt).mode("overwrite").partitionBy("route").save(path)

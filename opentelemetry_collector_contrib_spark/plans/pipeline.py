@@ -23,10 +23,8 @@ Scale design (north rule):
   ``dynamic_enrich`` does for its changing table.
 - The only shuffle in the whole plan is the final groupBy, which Catalyst
   executes as partial (map-side) + final aggregation; its key set is tiny
-  (route × source × severity) so the shuffle carries pre-aggregated rows.
-- Hot ``source`` keys (src-hot ≈ 45 %) would skew that shuffle; the
-  aggregate therefore supports two-phase salting: groupBy(salt, dims) →
-  groupBy(dims), turning one hot reducer into ``salt_buckets`` parallel ones.
+  (route × source × severity), so each map task sends at most one row per
+  key and a hot ``source`` (src-hot ≈ 45 %) cannot skew the shuffle.
 """
 
 from __future__ import annotations
@@ -118,31 +116,9 @@ def _default_route_col(match_once: bool) -> Column:
     return match_once_col(routes) if match_once else multicast_col(routes)
 
 
-def aggregate_stage(df: DataFrame, salt_buckets: int = 0) -> DataFrame:
-    """Per-sink counts + token totals (count connector + BASELINE metric).
-
-    salt_buckets > 0 → two-phase aggregation: a deterministic salt spreads
-    the hot source key across N reducers, then a second (tiny) aggregation
-    merges the partials. With AQE this matters once per-key partial rows
-    exceed a single reducer's budget (10^12-row scale), not at test scale.
-    """
+def aggregate_stage(df: DataFrame) -> DataFrame:
+    """Per-sink counts + token totals (count connector + BASELINE metric)."""
     dims, aggs = _aggregate_cols()
-    if salt_buckets > 0:
-        salt = (row_idx_col(F.col("doc_id")) % salt_buckets).alias("__salt")
-        partial = (
-            df.groupBy(salt, *dims)
-            .agg(
-                F.count(F.lit(1)).alias("__rc"),
-                F.sum("n_tok").alias("__tc"),
-            )
-        )
-        return (
-            partial.groupBy(*dims)
-            .agg(
-                F.sum("__rc").cast("long").alias("row_count"),
-                F.sum("__tc").cast("long").alias("token_count"),
-            )
-        )
     return df.groupBy(*dims).agg(*aggs)
 
 
@@ -161,7 +137,6 @@ def full_pipeline(
     spark: SparkSession,
     match_once: bool = True,
     with_sampling: bool = False,
-    salt_buckets: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (routed_rows, per_sink_aggregates)."""
     parsed = parse_stage(tokens)
@@ -169,5 +144,5 @@ def full_pipeline(
     if with_sampling:
         enriched = sample_stage(enriched)
     routed = route_stage(enriched, match_once=match_once)
-    aggs = aggregate_stage(routed, salt_buckets=salt_buckets)
+    aggs = aggregate_stage(routed)
     return routed, aggs

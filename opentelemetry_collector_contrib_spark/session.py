@@ -10,7 +10,9 @@ at 2-3× core count so AQE can coalesce down.
 
 from __future__ import annotations
 
+import atexit
 import os
+import pathlib
 import tempfile
 import zipfile
 
@@ -22,11 +24,13 @@ _pkg_zip_path: str | None = None
 
 def package_zip() -> str:
     """Zip this package for shipping to executors — the local-mode analog of
-    ``spark-submit --py-files pkg.zip`` (cached per process)."""
+    ``spark-submit --py-files pkg.zip`` (cached per process, and removed
+    when the process exits)."""
     global _pkg_zip_path
     if _pkg_zip_path is None or not os.path.exists(_pkg_zip_path):
         fd, path = tempfile.mkstemp(suffix=".zip", prefix="otel_spark_pkg_")
         os.close(fd)
+        atexit.register(pathlib.Path(path).unlink, missing_ok=True)
         pkg_name = os.path.basename(_PKG_DIR)
         with zipfile.ZipFile(path, "w") as zf:
             for root, _dirs, files in os.walk(_PKG_DIR):
@@ -91,7 +95,7 @@ def get_spark(
         .appName(app_name)
         # AQE: runtime coalescing of small shuffle partitions + automatic
         # skew-join splitting (the north rule's explicit skew handling rides
-        # on this plus salting in plans/pipeline.py).
+        # on this plus map-side partial aggregation in plans/pipeline.py).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -101,8 +105,9 @@ def get_spark(
         # Arrow transfer for pandas UDFs; also makes a pandas frame a local
         # relation rather than a Python RDD.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 100k-row Arrow batches: the Arrow grok engine is ~2× faster than with the
-        # 10k default (per-batch pipe/serialization overhead amortizes).
+        # 100k-row Arrow batches for pandas/Arrow UDFs and record maps:
+        # fewer, larger batches amortize the per-batch pipe and
+        # serialization overhead of the 10k default.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         # Local-bench partition sizing: GB-scale inputs must still produce
         # ≥2× core-count scan partitions or local[32] idles. On a real

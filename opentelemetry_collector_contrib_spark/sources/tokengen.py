@@ -8,8 +8,8 @@ the pure-Python oracle and the distributed Spark generator agree bit-for-bit,
 and that makes re-generation on resume idempotent.
 
 Source distribution is skewed per FIXTURES.md §1: ``src-hot`` ≈ 45 %,
-``src-warm`` ≈ 20 %, ten ``src-cold-*`` uniform — this exercises the salted
-repartition / AQE skew path in plans/pipeline.py.
+``src-warm`` ≈ 20 %, ten ``src-cold-*`` uniform — a hot key for the
+aggregate's map-side partial aggregation in plans/pipeline.py.
 
 Scale note: generation is ``spark.range(n) → mapInPandas`` — embarrassingly
 parallel, no shuffle, no driver data; at 10^12 rows you simply raise

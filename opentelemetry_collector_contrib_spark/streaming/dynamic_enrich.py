@@ -57,14 +57,14 @@ def dynamic_enrich_sink(
     out_dir: str,
     checkpoint_dir: str,
     on: str = "source",
-    available_now: bool = True,
 ) -> DataStreamWriter:
     """Streaming enrich where the LUT refreshes per micro-batch.
 
     Each batch: re-resolve the lookup via ``lut_provider``, broadcast
     left join (missing key → null enrich columns, the GetPod-miss
     analog), append to the sink with a ``_batch_id`` lineage column so
-    the store version each row saw is auditable."""
+    the store version each row saw is auditable. The trigger is
+    ``availableNow``: the query drains what is there and stops."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -76,12 +76,11 @@ def dynamic_enrich_sink(
             .parquet(f"{out_dir}/data")
         )
 
-    w = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w
 
 
 def run_dynamic_enrich(

@@ -10,9 +10,12 @@ restatement:
   `pkg/stanza/fileconsumer/file.go:83-143`)
 - the SAME batch transformations (parse/enrich/route) apply unchanged —
   DataFrame code is trigger-agnostic
-- sink: ``foreachBatch`` fans each micro-batch out to per-route tables
-  (routingconnector flush-per-consumer, `connector/routingconnector/
-  logs.go:99-102`); engine checkpointing gives exactly-once per batch
+- sink: Spark's parquet file sink, partitioned by route, fans each
+  micro-batch out to per-route directories (routingconnector
+  flush-per-consumer, `connector/routingconnector/logs.go:99-102`). The
+  sink commits each batch in its ``_spark_metadata`` log and skips a batch
+  it already committed, so a batch replayed after a crash between the
+  write and the checkpoint's commit adds no rows: exactly-once output
 - windowed counts: event-time tumbling window + watermark — the count
   connector under late data (the reference flushes on processing-time
   timers; watermarks are the event-time upgrade, documented in SURVEY §2.8)
@@ -58,19 +61,14 @@ def route_sink(
     out_dir: str,
     checkpoint_dir: str,
 ) -> DataStreamWriter:
-    """foreachBatch fan-out: one write job per micro-batch, partitioned by
-    route — per-route directories accumulate across batches (append), with
-    engine-managed exactly-once via the stream checkpoint."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("append")
-            .partitionBy("route")
-            .parquet(f"{out_dir}/data")
-        )
-
+    """Parquet file sink under ``{out_dir}/data``, partitioned by route:
+    per-route directories accumulate across batches. Exactly-once: readers
+    of ``data/`` see only the files of batches committed in its
+    ``_spark_metadata`` log, and a replayed batch is skipped."""
     return (
-        routed.writeStream.foreachBatch(write_batch)
+        routed.writeStream.format("parquet")
+        .partitionBy("route")
+        .option("path", f"{out_dir}/data")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
     )

@@ -2,6 +2,8 @@
 
 import re
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
@@ -75,32 +77,47 @@ def test_regex_parser_drop_mode(spark):
     assert len(dropped) == 1 and dropped[0].n == "5"
 
 
-def _parsed(df, pattern, on_error, engine, key):
+def _parsed(df, pattern, on_error, key):
     """(key, *named groups) rows of one regex_parser run, ordered by key."""
     names = list(re.compile(pattern).groupindex)
-    out = P.regex_parser(df, pattern, on_error=on_error, engine=engine)
+    out = P.regex_parser(df, pattern, on_error=on_error)
     return sorted((tuple(r) for r in out.select(key, *names).collect()), key=lambda r: r[0])
+
+
+def _re2_parsed(df, pattern, on_error, key):
+    """The same rows computed on the driver by RE2 (``pc.extract_regex``),
+    the reference the JVM groups must equal; extract_regex refuses unnamed
+    groups, so they are made non-capturing."""
+    rows = df.select(key, "line").collect()
+    re2 = P._rewrite(pattern, {"(": "(?:"})
+    got = pc.extract_regex(pa.array([r[1] for r in rows], pa.string()), re2)
+    names = list(re.compile(pattern).groupindex)
+    out = [
+        (r[0], *(None if g is None else g[n] for n in names))
+        for r, g in zip(rows, got.to_pylist())
+        if g is not None or not on_error.startswith("drop")
+    ]
+    return sorted(out, key=lambda r: r[0])
 
 
 def _matched(rows):
     return [r for r in rows if any(v is not None for v in r[1:])]
 
 
-def test_regex_parser_engines_agree_on_rendered_lines(spark):
-    """The default (JVM) engine and the Arrow engine agree cell by cell on
-    all seven LINE_PATTERN groups, malformed lines included."""
+def test_regex_parser_jvm_matches_re2_on_rendered_lines(spark):
+    """The JVM groups equal RE2's cell by cell on all seven LINE_PATTERN
+    groups, malformed lines included."""
     lines = render_lines(tokens_df(spark, 2000, num_partitions=4), out="line").cache()
     malformed = lines.filter(F.col("line").startswith("MALFORMED")).count()
     assert malformed > 0
     runs = {}
     for on_error in ("send", "drop"):
-        for engine in ("jvm", "arrow"):
-            runs[on_error, engine] = _parsed(lines, LINE_PATTERN, on_error, engine, "doc_id")
-        assert runs[on_error, "jvm"] == runs[on_error, "arrow"], on_error
+        runs[on_error] = _parsed(lines, LINE_PATTERN, on_error, "doc_id")
+        assert runs[on_error] == _re2_parsed(lines, LINE_PATTERN, on_error, "doc_id"), on_error
     lines.unpersist()
-    assert len(runs["send", "jvm"]) == 2000
-    assert runs["drop", "jvm"] == _matched(runs["send", "jvm"])
-    assert len(runs["drop", "jvm"]) == 2000 - malformed
+    assert len(runs["send"]) == 2000
+    assert runs["drop"] == _matched(runs["send"])
+    assert len(runs["drop"]) == 2000 - malformed
 
 
 # (pattern, line, named groups) where java.util.regex and RE2 could part ways
@@ -117,16 +134,16 @@ REGEX_EDGES = [
 ]
 
 
-def test_regex_parser_engines_agree_on_edges(spark):
-    """Both engines give the same cells for every edge pattern over every
-    edge line, in both on_error modes; the cells are pinned per edge."""
+def test_regex_parser_jvm_matches_re2_on_edges(spark):
+    """The JVM groups equal RE2's for every edge pattern over every edge
+    line, in both on_error modes; the cells are pinned per edge."""
     lines = sorted({e[1] for e in REGEX_EDGES}, key=str)
     df = spark.createDataFrame(list(enumerate(lines)), "id int, line string")
     sent = {}
     for pattern in dict.fromkeys(e[0] for e in REGEX_EDGES):
         for on_error in ("send", "drop"):
-            jvm = _parsed(df, pattern, on_error, "jvm", "id")
-            assert jvm == _parsed(df, pattern, on_error, "arrow", "id"), (pattern, on_error)
+            jvm = _parsed(df, pattern, on_error, "id")
+            assert jvm == _re2_parsed(df, pattern, on_error, "id"), (pattern, on_error)
             sent[pattern, on_error] = jvm
         assert sent[pattern, "drop"] == _matched(sent[pattern, "send"])
         assert len(sent[pattern, "send"]) == len(lines)

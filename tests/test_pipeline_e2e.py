@@ -78,15 +78,6 @@ def test_sampling_deterministic(spark):
     assert 0 < len(ids1) < N  # sampling actually dropped something
 
 
-def test_salted_aggregate_equivalence(spark):
-    tokens = tokens_df(spark, N, num_partitions=4)
-    _, plain = full_pipeline(tokens, spark, salt_buckets=0)
-    _, salted = full_pipeline(tokens, spark, salt_buckets=8)
-    a = {tuple(r) for r in plain.collect()}
-    b = {tuple(r) for r in salted.collect()}
-    assert a == b
-
-
 def test_enrich_stage_lookup_rows(spark):
     """enrich_stage over caller rows: the columns come out in left-join
     order (source first, the table's last, nullable), a missing source and

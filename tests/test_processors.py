@@ -9,10 +9,7 @@ from opentelemetry_collector_contrib_spark.operators.filter_processor import (
     filter_logs_legacy,
     filter_logs_ottl,
 )
-from opentelemetry_collector_contrib_spark.operators.recombine import (
-    recombine,
-    recombine_pandas,
-)
+from opentelemetry_collector_contrib_spark.operators.recombine import recombine
 from opentelemetry_collector_contrib_spark.operators.redaction import (
     allow_keys,
     deny_keys,
@@ -172,13 +169,20 @@ class TestRecombine:
         return spark.createDataFrame(rows, "source string, offset long, line string")
 
     def test_window_and_pandas_agree(self, lines):
+        """Each source's ten lines fall into the segments 0-3, 4-7 and 8-9,
+        each opened by its START line."""
         a = recombine(lines, "source", "offset", "line", r"^START")
-        b = recombine_pandas(lines, "source", "offset", "line", r"^START")
-        sa = {(r.source, r.n_lines, r.combined) for r in a.collect()}
-        sb = {(r.source, r.n_lines, r.combined) for r in b.collect()}
-        assert sa == sb
-        assert len(sa) == 6  # 3 segments per source
-        assert any(c.startswith("START msg 0\ncont 1") for _, _, c in sa)
+        got = sorted((r.source, r.n_lines, r.combined) for r in a.collect())
+        want = sorted(
+            (src, n, combined)
+            for src in ("a", "b")
+            for n, combined in (
+                (4, "START msg 0\ncont 1\ncont 2\ncont 3"),
+                (4, "START msg 4\ncont 5\ncont 6\ncont 7"),
+                (2, "START msg 8\ncont 9"),
+            )
+        )
+        assert got == want
 
     def test_max_batch_size(self, lines):
         out = recombine(lines, "source", "offset", "line", r"^START", max_batch_size=2)

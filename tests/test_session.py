@@ -2,6 +2,8 @@
 
 import os
 import re
+import subprocess
+import sys
 import types
 
 import pytest
@@ -55,3 +57,16 @@ def test_env_overrides_sizing(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1500m")
     assert session.default_parallelism() == 3
     assert session.default_driver_memory() == "1500m"
+
+
+def test_package_zip_is_removed_at_exit(tmp_path):
+    """A process that zips the package leaves no zip behind when it exits."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from opentelemetry_collector_contrib_spark import session\n"
+        "assert os.path.exists(session.package_zip())\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    subprocess.run([sys.executable, "-c", code], cwd=repo, env=env, check=True)
+    assert not list(tmp_path.glob("otel_spark_pkg_*.zip"))

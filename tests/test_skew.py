@@ -1,10 +1,9 @@
-"""Skew handling: salted aggregation and AQE skew-join splitting.
+"""Skew handling: AQE skew-join splitting and a salted repartition.
 
 North-rule requirement: hot-source skew handled explicitly. The enrich dim
 normally broadcasts (no skew exposure); this test forces the sort-merge
-path with a big dim to show AQE splits the skewed partitions, plus the
-salted two-phase aggregate equivalence at the operator level (the e2e salt
-test lives in test_pipeline_e2e.py).
+path with a big dim to show AQE splits the skewed partitions, and shows
+that a salted repartition spreads a hot key over several partitions.
 """
 
 import pytest

@@ -44,6 +44,24 @@ def test_streaming_restart_no_duplicates(spark, tokens_path, tmp_path):
     assert n == N
 
 
+def test_streaming_replayed_batch_adds_no_rows(spark, tokens_path, tmp_path):
+    """A batch whose output landed but whose commit did not (a crash between
+    the two) runs again on restart; the sink must skip it, not append its
+    rows a second time."""
+    import os
+
+    out = str(tmp_path / "routed3")
+    run_streaming_to_completion(spark, tokens_path, out)
+    commits = f"{out}/_checkpoint/commits"
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last > 0  # more than one batch, so the replay is the last of several
+    os.remove(f"{commits}/{last}")
+    os.remove(f"{commits}/.{last}.crc")
+    run_streaming_to_completion(spark, tokens_path, out)
+    ids = [r.doc_id for r in spark.read.parquet(f"{out}/data").select("doc_id").collect()]
+    assert len(ids) == len(set(ids)) == N
+
+
 def test_windowed_counts_batch_semantics(spark, tokens_path):
     """Window aggregation validated on the batch frame (same expression the
     stream uses)."""
